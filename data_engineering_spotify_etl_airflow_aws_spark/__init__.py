@@ -49,7 +49,8 @@ AUDIT_WINDOW = 50
 # closure (r14 verdict ask #1) touched 132 queries - every Spark-side
 # decimal-sourced .cast("double") now takes .cast("string") first, and
 # every oracle CAST(<HUGEINT/DECIMAL> AS DOUBLE) takes the VARCHAR hop
-# (tools/apply_string_hop_r15.py; measurement basis
+# (one-shot rewrite tool apply_string_hop_r15.py, in git history at
+# a552ed4; measurement basis
 # evidence/decimal_double_rounding_probe.json: DuckDB native wide casts
 # diverge from the correctly-rounded hop above 2^53, Spark's agree
 # everywhere, double round-trips exactly - so the rewrite is

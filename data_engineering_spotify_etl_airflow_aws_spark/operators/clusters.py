@@ -224,13 +224,14 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PageRank power iteration over the customer<->supplier trade graph -
 # the general iterative-numeric-algorithm shape (beyond the min-label CC
 # above): a rank VECTOR refined by repeated sparse matrix-vector
-# products. Each iteration is contributions = rank/outdeg joined to
-# edges on src + one groupBy(dst) - both keyed by high-entropy node
-# ids, no broadcast HINTS and no driver collection of anything O(nodes)
-# (stats may still broadcast the |nodes|-row weight relation at small
-# scale; at 100 TB every loop join is a node-id shuffle), so the
-# per-iteration cost is exactly one pass over the edge list (the 100 TB
-# shape; GraphX's Pregel does the same joins under the hood). Fixed
+# products. Each iteration is the previous ranks joined to the
+# degree-carrying edges on src + one groupBy(dst) - both keyed by
+# high-entropy node ids, no broadcast HINTS and no driver collection of
+# anything O(nodes) (stats may still broadcast the |nodes|-row rank
+# relation at small scale; at 100 TB every loop join is a node-id
+# shuffle), so the per-iteration cost is exactly one pass over the edge
+# list (the 100 TB shape; GraphX's Pregel does the same joins under the
+# hood). Fixed
 # ITERS=3 keeps the registered query deterministic and lets the oracle
 # unroll the recurrence as chained CTEs.
 #
@@ -347,70 +348,60 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with a reversed row never (src < offset <= dst on every forward
     # edge), so the union is duplicate-free by construction - one full
     # edge-list shuffle saved. (The oracle's UNION dedups the same
-    # already-unique set.) Lineage truncates once at the edge relation
-    # (same rationale as connected_components).
+    # already-unique set.)
     und = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    return _pr_iterate(und)
+
+
+def _pr_iterate(und: DataFrame) -> DataFrame:
+    """Top-25 supplier ranks from the undirected edge list ``und``
+    (src, dst). Takes ``und`` as-is so a reference iteration can be
+    swapped in against the same input (test_llm_ops)."""
+    # Each edge carries its source's out-degree, attached once; lineage
+    # truncates once at that relation (same rationale as
+    # connected_components). No node-side left join per round: `und`
+    # holds both orientations of every edge, so every node is some
+    # edge's dst and gets a (non-null) contribution sum every round.
+    e = und.withColumn(
+        "outdeg", F.count("*").over(W.partitionBy("src"))
     ).localCheckpoint()
+    n_edges, n_nodes = e.agg(F.count("*"), F.count_distinct("src")).first()
     # Size the iteration shuffles by the edge frame, not the session
     # default (same rationale + floor as connected_components above):
     # every loop relation is O(edges) or O(nodes), tiny next to the
     # session width tuned for full-table scans; a 100 TB edge list
     # still gets session width via the min().
-    spark = edges.sparkSession
-    n_edges = und.count()
+    spark = e.sparkSession
     prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
     narrowed = min(int(prev_sp), max(8, n_edges // 50_000 + 1))
     spark.conf.set("spark.sql.shuffle.partitions", str(narrowed))
     try:
-        result = _pr_iterate(und)
+        base = _PR_RESID / n_nodes
+        rank, edge_ranks = F.lit(1.0 / n_nodes), e  # r0 is uniform: no join
+        for i in range(_PR_ITERS):
+            if i:  # the round's one edge-sized join
+                edge_ranks = e.join(ranks, e.src == ranks.node)
+                rank = F.col("rank")
+            # micro(rank/outdeg) depends on the source only: every
+            # out-edge of a node carries the same long micro-unit, and
+            # the long sum is exact in any order
+            c_u = _pr_spark_micro(rank / F.col("outdeg"))
+            # exact-int64 narrowing: native long->double is correctly
+            # rounded and the value is < 2^53 (magnitude proof above),
+            # so no string hop
+            s_u = F.sum(c_u).cast("double") / F.lit(1e12)
+            ranks = (
+                edge_ranks.groupBy("dst")
+                .agg((F.lit(base) + F.lit(_PR_DAMP) * s_u).alias("rank"))
+                .withColumnRenamed("dst", "node")
+                # each iteration's result is small (O(nodes)); checkpoint
+                # to keep the loop's analyzed plan linear, as in CC above
+                .localCheckpoint()
+            )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-    return result
-
-
-def _pr_iterate(und: DataFrame) -> DataFrame:
-    deg = und.groupBy("src").agg(F.count("*").alias("outdeg"))
-    nodes = deg.select(F.col("src").alias("node"))
-    n_nodes = nodes.count()  # one scalar to the driver, O(1) bytes
-
-    ranks = nodes.select("node", F.lit(1.0 / n_nodes).alias("rank"))
-    base = _PR_RESID / n_nodes
-    for _ in range(_PR_ITERS):
-        # per-node outgoing weight first (|nodes|-row join of two
-        # node-keyed relations), THEN one edge-sized join - not two: the
-        # edge list is the big relation, it should be traversed once per
-        # iteration, not once per joined attribute
-        weights = ranks.join(deg, ranks.node == deg.src).select(
-            F.col("node"),
-            _pr_spark_micro(F.col("rank") / F.col("outdeg")).alias("c_u"),
-        )
-        contribs = (
-            und.join(weights, und.src == weights.node)
-            .groupBy("dst")
-            .agg(F.sum("c_u").alias("s_u"))
-        )
-        ranks = (
-            nodes.join(contribs, nodes.node == contribs.dst, "left")
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.lit(_PR_DAMP)
-                    * (
-                        # exact-int64 narrowing: native long->double is
-                        # correctly rounded and the value is < 2^53
-                        # (magnitude proof above), so no string hop
-                        F.coalesce(F.col("s_u"), F.lit(0).cast("bigint"))
-                        .cast("double")
-                        / F.lit(1e12)
-                    )
-                ).alias("rank"),
-            )
-            # each iteration's result is small (O(nodes)); checkpoint to
-            # keep the loop's analyzed plan linear, as in CC above
-            .localCheckpoint()
-        )
     return (
         ranks.where(F.col("node") >= _PR_SUPP_OFFSET)
         .select((F.col("node") - _PR_SUPP_OFFSET).alias("suppkey"), "rank")

@@ -18,8 +18,12 @@ correctness driver hands us a session we didn't build.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 from .session import apply_runtime_confs
 
@@ -40,12 +44,59 @@ TABLES = (
 _NANOS_COLS = {"events": ("ts",)}
 
 
+def _layout(path: str) -> tuple[int, ...] | None:
+    """Physical-layout fingerprint of a parquet path: (size, mtime) for a
+    file, (file count, total size, max mtime) for a directory. Rewriting
+    the table changes it; None when the path is not on the local
+    filesystem."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        n = size = mtime = 0
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                fst = os.stat(os.path.join(root, f))
+                n, size = n + 1, size + fst.st_size
+                mtime = max(mtime, fst.st_mtime_ns)
+        return (n, size, mtime)
+    except OSError:
+        return None
+
+
+def _memo_key(spark: SparkSession, path: str) -> tuple:
+    """(applicationId, path, layout): the key of both per-session layout
+    memos below."""
+    return (spark.sparkContext.applicationId, path, _layout(path))
+
+
+# Per-session memo of inferred parquet schemas (see load_table). Holds
+# the StructType only - never a DataFrame: one DataFrame object handed
+# to two loads inside one query would give a self-join shared
+# attribute ids.
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-    dtypes = dict(df.dtypes)
+    path = f"{sf_dir.rstrip('/')}/{name}.parquet"
+    # spark.read.parquet infers the schema with one Spark job per call
+    # (~80-90 ms at sf0.01); with the schema known, the read launches no
+    # job. The first load of each table in a session still infers.
+    # A path without a readable layout is never memoized: a rewrite of it
+    # could not be told from the old file.
+    key = _memo_key(spark, path)
+    schema = _SCHEMA_MEMO.get(key)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key[-1] is not None:
+            _SCHEMA_MEMO[key] = schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
+    types = {f.name: f.dataType for f in schema.fields}
     for col in _NANOS_COLS.get(name, ()):
-        if dtypes.get(col) == "bigint":
+        if isinstance(types.get(col), LongType):
             # Floor division in exact long arithmetic (`div` truncates toward
             # zero, which would be off by 1µs for pre-1970 negative nanos;
             # float division would lose precision past 2^53). pmod keeps the
@@ -58,7 +109,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     # NTZ -> UTC instant (no-op on the wall-clock under the UTC session; see
     # module docstring). Cast keeps the projection narrow and codegen-able.
-    ntz_cols = [c for c, d in dtypes.items() if d == "timestamp_ntz"]
+    ntz_cols = [c for c, t in types.items() if isinstance(t, TimestampNTZType)]
     if ntz_cols:
         df = df.withColumns(
             {c: F.col(c).cast("timestamp") for c in ntz_cols}
@@ -73,10 +124,10 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# Per-session memo of scan split counts (see scan_splits). Keyed on the
-# session's applicationId + fixture path + table + parallelism; holds
-# ONE int of physical-layout metadata per table - never query results.
-_SCAN_SPLITS_MEMO: dict[tuple[str, str, str, int], int] = {}
+# Per-session memo of scan split counts (see scan_splits). Keyed on
+# _memo_key + parallelism, so a rewritten table probes again; holds ONE
+# int of physical-layout metadata per table - never query results.
+_SCAN_SPLITS_MEMO: dict[tuple, int] = {}
 
 
 def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
@@ -88,14 +139,11 @@ def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     existing DataFrame, ~180 ms with a fresh load_table) - enough to
     show up as a fake "regression" on sub-second queries. The count is
     physical-layout metadata (file count x sizes x maxPartitionBytes),
-    constant for a fixture within a session, NOT a query result or
-    intermediate - memoizing it is a planning-cost optimization of the
-    same kind as Spark's own session FileIndex cache.
+    constant for a fixture layout within a session, NOT a query result
+    or intermediate - memoizing it is a planning-cost optimization of
+    the same kind as Spark's own session FileIndex cache.
     """
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir.rstrip("/"),
-        name,
+    key = _memo_key(spark, f"{sf_dir.rstrip('/')}/{name}.parquet") + (
         spark.sparkContext.defaultParallelism,
     )
     if key not in _SCAN_SPLITS_MEMO:
@@ -132,8 +180,10 @@ def persist_when_scaled(
     when one concurrent execution of all duplicated branches would
     already saturate the cores, so re-execution can no longer ride idle
     capacity. ``splits`` is the source scan's split count - pass
-    ``scan_splits(spark, sf_dir, table)`` (memoized; the fixture
-    parquet is ONE split, so the gate never engages at bench scale).
+    ``scan_splits(spark, sf_dir, table)`` (memoized). Fixtures scan as
+    few splits, but not always one: under ``local[4]`` the sf0.1
+    lineitem (10.8 MB) scans as 3 splits, so on a low-core session a
+    gate with ``dup >= 2`` over lineitem does engage at bench scale.
 
     The caller owns the release lifecycle (drain ``cache`` at query
     entry, caches.py); this helper only appends when it persists.

@@ -557,7 +557,8 @@ def test_no_raw_hash_checksum_sums():
 # 2^53 at the 100 TB design point, so the convention is tree-wide: a
 # decimal-sourced `.cast("double")` must take `.cast("string")` first,
 # and an oracle `CAST(<wide> AS DOUBLE)` must take the VARCHAR hop —
-# both closed mechanically in r15 (tools/apply_string_hop_r15.py).
+# both closed mechanically in r15 (one-shot rewrite tool
+# apply_string_hop_r15.py, in git history at a552ed4).
 # This lint re-runs the same scanners the rewrite used, so the class
 # cannot reappear on either side. Explicit exact-int64 narrowings
 # (CAST(... AS BIGINT) AS DOUBLE) stay native: long->double is

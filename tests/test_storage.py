@@ -720,3 +720,115 @@ def test_trending_anchor_is_stats_only_broadcast(spark):
     plan = plans.executed_plan(df)
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan
+
+
+def _jobs_in_group(spark, fn):
+    """Run ``fn()`` under a fresh job group; return its result and the
+    ids of the Spark jobs it launched."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"memo-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_schema_memo_skips_inference(spark, tmp_path):
+    """The first load of a table infers its parquet schema (one Spark
+    job); a second load of the unchanged file reads with the memoized
+    schema, launches no job, and yields the same schema and dtypes - as
+    a fresh DataFrame, never the first one."""
+    from data_engineering_spotify_etl_airflow_aws_spark import tables
+
+    from .conftest import SF_CORRECT
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    shutil.copy(f"{SF_CORRECT}/orders.parquet", sf / "orders.parquet")
+    first, jobs = _jobs_in_group(
+        spark, lambda: tables.load_table(spark, str(sf), "orders")
+    )
+    assert jobs, "the first load must infer the schema"
+    second, jobs = _jobs_in_group(
+        spark, lambda: tables.load_table(spark, str(sf), "orders")
+    )
+    assert jobs == []
+    assert second is not first
+    assert second.schema == first.schema
+    assert second.dtypes == first.dtypes
+
+
+def test_rewritten_table_probes_again(spark, tmp_path, monkeypatch):
+    """A rewrite (new size and mtime) changes the layout key, so both the
+    schema memo and the scan_splits memo probe again instead of serving
+    the old file's schema or split count."""
+    from data_engineering_spotify_etl_airflow_aws_spark import tables
+
+    from .conftest import SF_CORRECT
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    target = sf / "orders.parquet"
+    shutil.copy(f"{SF_CORRECT}/orders.parquet", target)
+    real_load = tables.load_table
+    splits = tables.scan_splits(spark, str(sf), "orders")
+    loads: list = []
+    monkeypatch.setattr(
+        tables, "load_table", lambda *a: loads.append(a) or real_load(*a)
+    )
+    assert tables.scan_splits(spark, str(sf), "orders") == splits
+    assert loads == [], "unchanged layout must hit the split memo"
+
+    shutil.copy(f"{SF_CORRECT}/nation.parquet", target)
+    rewritten, jobs = _jobs_in_group(
+        spark, lambda: real_load(spark, str(sf), "orders")
+    )
+    assert jobs, "a rewritten file must be inferred again"
+    assert "n_nationkey" in rewritten.columns
+    tables.scan_splits(spark, str(sf), "orders")
+    assert len(loads) == 1, "a rewritten file must be split-probed again"
+
+
+def test_schema_memo_keeps_timestamp_normalization(spark, tmp_path):
+    """A memo-hit load applies the same timestamp normalization as the
+    inferring one: timestamp[ns] columns (read as long) floor to micros,
+    NTZ columns cast to UTC instants - same schema, same values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_engineering_spotify_etl_airflow_aws_spark import tables
+
+    from .conftest import SF_CORRECT
+
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    nanos = [-1_500, 0, 1_700_000_000_123_456_789]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2, 3], pa.int64()),
+            "ts": pa.array(nanos, pa.timestamp("ns")),
+        }),
+        sf / "events.parquet",
+    )
+    shutil.copy(f"{SF_CORRECT}/orders.parquet", sf / "orders.parquet")
+    for name, col in (("events", "ts"), ("orders", "o_orderdate")):
+        first = tables.load_table(spark, str(sf), name)
+        second = tables.load_table(spark, str(sf), name)
+        assert dict(second.dtypes)[col] == "timestamp"
+        assert second.schema == first.schema
+        assert sorted(map(tuple, second.collect())) == sorted(
+            map(tuple, first.collect())
+        )
+    micros = [
+        r.m
+        for r in tables.load_table(spark, str(sf), "events")
+        .select("event_id", F.unix_micros("ts").alias("m"))
+        .orderBy("event_id")
+        .collect()
+    ]
+    assert micros == [-2, 0, 1_700_000_000_123_456]

@@ -2,11 +2,12 @@
 discipline: any perf-relevant change ships with an interleaved pair in
 evidence/).
 
-Generalizes tools/ab_bench_r15.py to an arbitrary query list: compares a
-PRE tree (a git worktree pinned at the pre-change commit) against the
-working tree. Interleaving: A B A B ... N times each, one process per
-sample (fresh JVM, same warmup), min-of-N per query per side. Values are
-verified identical between sides before timing counts.
+Generalizes ab_bench_r15.py (deleted; in git history) to an arbitrary
+query list: compares a PRE tree (a git worktree pinned at the
+pre-change commit) against the working tree. Interleaving: A B A B ...
+N times each, one process per sample (fresh JVM, same warmup), min-of-N
+per query per side. Values are verified identical between sides before
+timing counts.
 
 Usage:
     python tools/ab_bench_r16.py --pre /tmp/spark_graft_pre_r16 \
