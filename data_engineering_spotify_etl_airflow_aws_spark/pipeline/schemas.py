@@ -69,6 +69,15 @@ RAW_PLAYLIST_SCHEMA = T.StructType(
     ]
 )
 
+# The songs fact as songs_projection emits it and its Parquet sinks store it
+# (scrape_date, the partition column, last). Reading a sink with it skips
+# the schema-inference job.
+SONGS_SCHEMA = (
+    "song_id STRING, song_name STRING, duration_ms BIGINT, url STRING, "
+    "popularity BIGINT, song_added_us BIGINT, album_id STRING, "
+    "artist_id STRING, rank INT, scrape_date DATE"
+)
+
 # DuckDB read_json columns spec matching RAW_PLAYLIST_SCHEMA exactly, so the
 # oracle parses the same files with the same declared types.
 _DUCK_ARTIST = "STRUCT(id VARCHAR, \"name\" VARCHAR, href VARCHAR)"

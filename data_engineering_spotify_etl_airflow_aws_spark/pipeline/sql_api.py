@@ -14,15 +14,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import ORACLES, query
-from .transforms import album_transform, artist_transform, songs_transform
+from .transforms import album_dim, artist_dim, exploded_items, songs_projection
 
 
 def register_star_views(spark: SparkSession) -> None:
-    """The transformed star as temp views - the engine-side analog of the
-    reference's post-COPY warehouse tables (S:27-56)."""
-    songs_transform(spark).createOrReplaceTempView("songs")
-    album_transform(spark).createOrReplaceTempView("album")
-    artist_transform(spark).createOrReplaceTempView("artist")
+    """The transformed star, built from one parse of the inbox, as temp
+    views - the engine-side analog of the reference's post-COPY warehouse
+    tables (S:27-56)."""
+    ex = exploded_items(spark)
+    songs_projection(ex).createOrReplaceTempView("songs")
+    album_dim(ex).createOrReplaceTempView("album")
+    artist_dim(ex).createOrReplaceTempView("artist")
 
 
 Q1_SQL = """

@@ -7,13 +7,18 @@ collapses to on Spark:
               day's file first)
   ingest   -> exactly-once Structured Streaming file ingest of the
               songs fact (Snowpipe analog, checkpointed, archival)
-  transform-> album/artist dims + date-partitioned songs fact written
-              as the analytical star schema
+  transform-> one parse of the inbox, persisted, feeds the album/artist
+              dims and the date-partitioned songs fact, written as the
+              analytical star schema
   analyze  -> the four published analytics queries (S:93-126 / A:7-40)
+              over the same persisted parse, each written once with
+              its row count observed on the write
 
-Airflow's fan-out/fan-in becomes a single lazy Spark plan per output;
-scheduling is whatever calls this script daily (cron, Airflow
-BashOperator, Databricks job - orchestration is external to the engine).
+As in the reference (P:92-163), the day's JSON is parsed once and every
+output derives from that one parse; the persist is released on the way
+out, also when a write fails. Scheduling is whatever calls this script
+daily (cron, Airflow BashOperator, Databricks job - orchestration is
+external to the engine).
 
 Run: `python examples/daily_pipeline.py [output_dir]`, or import and
 call main(spark, output_dir) with an existing session (the test does).
@@ -28,16 +33,23 @@ from pathlib import Path
 
 
 def main(spark, out_dir: str | None = None) -> dict:
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
     import data_engineering_spotify_etl_airflow_aws_spark as engine
+    from data_engineering_spotify_etl_airflow_aws_spark.pipeline.schemas import (
+        SONGS_SCHEMA,
+    )
     from data_engineering_spotify_etl_airflow_aws_spark.pipeline.transforms import (
         INBOX_DIR,
-        album_transform,
-        artist_transform,
-        q1_top_trending,
-        q2_album_popularity,
-        q3_top_artist_presence,
-        q4_song_movement,
-        songs_transform,
+        album_dim,
+        album_popularity,
+        artist_dim,
+        exploded_items,
+        song_movement,
+        songs_projection,
+        top_artist_presence,
+        top_trending,
     )
     from data_engineering_spotify_etl_airflow_aws_spark.sinks import (
         write_partitioned,
@@ -59,30 +71,36 @@ def main(spark, out_dir: str | None = None) -> dict:
         str(out / "warehouse" / "songs_stream"),
         str(out / "checkpoints" / "songs"),
     )
-    results["songs_ingested"] = spark.read.parquet(
-        str(out / "warehouse" / "songs_stream")
-    ).count()
+    results["songs_ingested"] = (
+        spark.read.schema(SONGS_SCHEMA)
+        .parquet(str(out / "warehouse" / "songs_stream"))
+        .count()
+    )
 
     # -- transform: the star schema. Fact is date-partitioned parquet
     # (dynamic overwrite = idempotent daily re-runs); dims are small and
     # land as CSV exactly like the reference's interchange format.
-    write_partitioned(songs_transform(spark), str(out / "warehouse" / "songs"))
-    write_table_csv(album_transform(spark), str(out / "warehouse" / "album"))
-    write_table_csv(artist_transform(spark), str(out / "warehouse" / "artist"))
+    ex = exploded_items(spark).persist()
+    try:
+        songs, album = songs_projection(ex), album_dim(ex)
+        write_partitioned(songs, str(out / "warehouse" / "songs"))
+        write_table_csv(album, str(out / "warehouse" / "album"))
+        write_table_csv(artist_dim(ex), str(out / "warehouse" / "artist"))
 
-    # -- analyze: the four published analytics queries (sf_dir unused by
-    # the Q1-Q4 builders - they read the transformed star directly)
-    for name, fn in (
-        ("q1_top_trending", q1_top_trending),
-        ("q2_album_popularity", q2_album_popularity),
-        ("q3_top_artist_presence", q3_top_artist_presence),
-        ("q4_song_movement", q4_song_movement),
-    ):
-        df = fn(spark, "")
-        df.write.mode("overwrite").option("header", "true").csv(
-            str(out / "analytics" / name)
-        )
-        results[name] = df.count()
+        # -- analyze: the four published analytics queries over the same
+        # parse; each output's row count is observed on its write
+        for name, df in (
+            ("q1_top_trending", top_trending(songs)),
+            ("q2_album_popularity", album_popularity(songs, album)),
+            ("q3_top_artist_presence", top_artist_presence(songs)),
+            ("q4_song_movement", song_movement(songs)),
+        ):
+            obs = Observation(name)
+            n = F.count(F.lit(1)).alias("n")
+            write_table_csv(df.observe(obs, n), str(out / "analytics" / name))
+            results[name] = obs.get["n"]
+    finally:
+        ex.unpersist()
     return results
 
 

@@ -3,12 +3,17 @@ dedup idempotence/uniqueness, and end-to-end shape."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 import data_engineering_spotify_etl_airflow_aws_spark as engine
+from data_engineering_spotify_etl_airflow_aws_spark.pipeline.schemas import (
+    SONGS_SCHEMA,
+)
 from data_engineering_spotify_etl_airflow_aws_spark.pipeline.transforms import (
-    album_transform,
-    artist_transform,
+    album_dim,
+    artist_dim,
+    exploded_items,
     read_raw,
     songs_transform,
 )
@@ -35,8 +40,8 @@ def test_rank_dense_per_scrape_date(spark):
 
 
 def test_dims_are_unique_and_idempotent(spark):
-    album = album_transform(spark)
-    artist = artist_transform(spark)
+    album = album_dim(exploded_items(spark))
+    artist = artist_dim(exploded_items(spark))
     assert album.count() == album.select("album_id").distinct().count()
     assert artist.count() == artist.select("artist_id").distinct().count()
     # dedup idempotence: re-deduping the dim is a no-op
@@ -47,9 +52,19 @@ def test_dims_are_unique_and_idempotent(spark):
 def test_mixed_precision_release_dates_parse(spark):
     """D3: every non-null raw release_date must parse; the planted null
     stays null."""
-    album = album_transform(spark).collect()
+    album = album_dim(exploded_items(spark)).collect()
     nulls = [r.album_id for r in album if r.release_date is None]
     assert nulls == ["album_0013"]
+
+
+def test_songs_schema_is_the_fact_schema(spark):
+    """SONGS_SCHEMA, which the daily run reads its sink with, is the
+    songs fact's own schema (names, order, types)."""
+    declared = spark.createDataFrame([], SONGS_SCHEMA).schema
+    fact = songs_transform(spark).schema
+    assert [(f.name, f.dataType) for f in fact] == [
+        (f.name, f.dataType) for f in declared
+    ]
 
 
 def test_raw_read_schema_stable(spark):
@@ -204,10 +219,7 @@ def test_read_raw_survives_malformed_inbox_file(spark, tmp_path):
     assert explode_raw(ok).count() == n_good * 50
 
 
-def test_daily_pipeline_example_end_to_end(spark, tmp_path):
-    """examples/daily_pipeline.py - the reference's daily DAG as one
-    script - must ingest exactly-once, land the star schema, and emit
-    all four analytics outputs."""
+def _daily_pipeline_module():
     import sys
     from pathlib import Path
 
@@ -216,14 +228,70 @@ def test_daily_pipeline_example_end_to_end(spark, tmp_path):
         import daily_pipeline
     finally:
         sys.path.pop(0)
+    return daily_pipeline
 
-    out = daily_pipeline.main(spark, str(tmp_path / "run1"))
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def test_daily_pipeline_example_end_to_end(spark, tmp_path):
+    """examples/daily_pipeline.py - the reference's daily DAG as one
+    script - must ingest exactly-once, land the star schema, and emit
+    all four analytics outputs from one parse of the inbox: at most 21
+    jobs on the calling thread, each Q count observed on its write, one
+    part file per date of the fact and per other output, and nothing left
+    persisted."""
+    import uuid
+
+    daily_pipeline = _daily_pipeline_module()
+    sc = spark.sparkContext
+    before = _persisted_rdd_ids(spark)
+    group = f"daily-run-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = daily_pipeline.main(spark, str(tmp_path / "run1"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 21
+    assert _persisted_rdd_ids(spark) <= before
+
     assert out["songs_ingested"] == 150
     assert out["q1_top_trending"] == 10
     assert out["q2_album_popularity"] > 0
     assert out["q3_top_artist_presence"] == 10
     assert out["q4_song_movement"] == 3
+    run = tmp_path / "run1"
+    analytics = ("q1_top_trending", "q2_album_popularity",
+                 "q3_top_artist_presence", "q4_song_movement")
+    for name in analytics:
+        back = spark.read.option("header", "true").csv(str(run / "analytics" / name))
+        assert out[name] == back.count(), name
+    expected = {"warehouse/songs": 3, "warehouse/album": 1, "warehouse/artist": 1,
+                **{f"analytics/{name}": 1 for name in analytics}}
+    parts = {rel: len(list((run / rel).rglob("part-*"))) for rel in expected}
+    assert parts == expected
     # idempotent daily re-run: streaming replays nothing, partitioned
     # fact overwrites dynamically
     again = daily_pipeline.main(spark, str(tmp_path / "run1"))
     assert again["songs_ingested"] == 150
+
+
+def test_daily_pipeline_releases_its_persist_when_a_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """A failing sink write propagates out of main and leaves no RDD
+    persisted by the run."""
+    from data_engineering_spotify_etl_airflow_aws_spark import sinks
+
+    daily_pipeline = _daily_pipeline_module()
+
+    def boom(df, path):
+        raise RuntimeError("sink down")
+
+    monkeypatch.setattr(sinks, "write_table_csv", boom)
+    before = _persisted_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="sink down"):
+        daily_pipeline.main(spark, str(tmp_path / "run"))
+    assert _persisted_rdd_ids(spark) <= before
