@@ -363,8 +363,8 @@ def main() -> int:
         with open(tmp, "w") as fh:
             fh.write(line + "\n")
         os.replace(tmp, out_path)
-    # free the operators' module-level persisted bases (the last query's
-    # relation otherwise survives until session shutdown)
+    # free the last query's persisted relations (the query scope holds
+    # them until the next registry query or session shutdown)
     from data_engineering_spotify_etl_airflow_aws_spark import caches
 
     caches.release_all()

@@ -1,19 +1,34 @@
-"""Registry for module-level persisted-relation caches.
+"""Query-scoped lifecycle for persisted intermediate relations.
 
-Several operators persist an expensive shared base relation (the Jaccard
-shingle base, the IVF embedding base, the MinHash signature base, the
-decontamination gram base). The returned query plans are lazy, so an
-in-function unpersist would fire before the driver ever runs the plan;
-instead each operator keeps the persisted DataFrame in a module-level
-list and releases the PREVIOUS call's relation on the next call, so at
-most one cached relation per family outlives its query.
+Several operators persist an expensive shared relation (the Jaccard
+shingle base, the IVF embedding base, the MinHash band keys, the
+decontamination gram base, the scale-gated duplicated subtrees). The
+returned query plans are lazy, so an in-function unpersist would fire
+before the caller ever runs the plan. Instead every persist goes
+through persist() / persist_when_scaled() here, which record the
+relation in ONE scope; this is the only module that persists or
+unpersists anything.
 
-This module centralizes those lists so interactive sessions (and the
-bench teardown) can free everything at once with release_all() instead
-of relying on the next same-family call or session shutdown.
+Lifecycle:
 
-Notebook lifecycle example (see examples/interactive_session.py for the
-runnable version)::
+* Each query registered with ``registry.query`` is stored in
+  ``registry.QUERIES`` behind a wrapper that calls release_all() before
+  it builds, so the scope holds exactly the relations of the last query
+  built through ``QUERIES``.
+* Direct calls between operators (``dedup_clusters`` ->
+  ``ngram_jaccard_near_dup``, ``ann_recall_eval`` ->
+  ``topk_similar_per_query`` / ``ivf_topk_similar``) call the
+  undecorated function, so the callee never releases its caller's
+  relations.
+* Interactive consequence: building any query through ``QUERIES``
+  releases what the previous query persisted, whatever its family. A
+  DataFrame kept from an earlier query stays valid - its plan simply
+  recomputes the released relation when it next runs.
+* release_all() frees the scope at any time (bench teardown, end of a
+  notebook exploration); later queries persist again on demand.
+
+Notebook example (see examples/interactive_session.py for the runnable
+version)::
 
     import data_engineering_spotify_etl_airflow_aws_spark as engine
     from data_engineering_spotify_etl_airflow_aws_spark import caches, registry
@@ -23,28 +38,78 @@ runnable version)::
     spark = get_spark()
     sf = "/root/testdata/sf0.01"
 
-    registry.QUERIES["minhash_lsh_near_dup"](spark, sf).show()   # persists base
-    registry.QUERIES["ivf_topk_similar"](spark, sf).show()       # persists base
+    registry.QUERIES["minhash_lsh_near_dup"](spark, sf).show()  # persists
+    # building the next query releases the MinHash relations first
+    registry.QUERIES["ivf_topk_similar"](spark, sf).show()
     # ... exploration done - executor memory back in one call:
     caches.release_all()
-    # later queries just rebuild their bases on demand
 """
 
 from __future__ import annotations
 
-_REGISTRY: list[list] = []
+import os
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark import StorageLevel
+    from pyspark.sql import DataFrame
+
+_SCOPE: list[DataFrame] = []
 
 
-def register_cache(cache: list) -> list:
-    """Register a module's persist-cache list; returns it for assignment."""
-    _REGISTRY.append(cache)
-    return cache
+def persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
+    """Persist ``df`` (PySpark's default level unless ``level`` is given)
+    and record it in the query scope; returns the persisted frame."""
+    out = df.persist() if level is None else df.persist(level)
+    _SCOPE.append(out)
+    return out
+
+
+def persist_when_scaled(df: DataFrame, splits: int, dup: int) -> DataFrame:
+    """Persist a multiply-consumed derived relation ONLY when its input
+    is large enough that re-executing the duplicated subtree costs real
+    wall-clock (guide §2.4/§5, scale-gated like widen_small_scan).
+
+    Spark re-executes every reference to an unpersisted DataFrame, so a
+    subtree consumed ``dup`` times runs ``dup`` times per action. At
+    fixture scale that duplication is nearly FREE: the branches are
+    single-split columnar scans that execute concurrently on
+    otherwise-idle cores, while a persist serializes a materialization
+    barrier and replaces codegen-over-parquet reads with
+    InMemoryTableScan row iteration - measured as a consistent LOSS for
+    12 such persists in the r16 A/Bs (+0.06-0.55 s each, reverted). At
+    real corpus scale there is no idle capacity to hide the duplication
+    - every re-execution is pure added wall-clock and I/O - so the
+    persist wins.
+
+    Gate: engage when ``dup x splits >= session parallelism``, i.e.
+    when one concurrent execution of all duplicated branches would
+    already saturate the cores, so re-execution can no longer ride idle
+    capacity. ``splits`` is the source scan's split count - pass
+    ``tables.scan_splits(spark, sf_dir, table)`` (memoized). Fixtures
+    scan as few splits, but not always one: under ``local[4]`` the
+    sf0.1 lineitem (10.8 MB) scans as 3 splits, so on a low-core
+    session a gate with ``dup >= 2`` over lineitem does engage at bench
+    scale.
+
+    An engaged persist joins the query scope like persist(), at
+    MEMORY_AND_DISK, and is released when the next query is built
+    through ``registry.QUERIES`` or by release_all().
+    SPARK_GRAFT_FORCE_SCALE_PERSIST=1 engages the gate unconditionally
+    (used by the forced-gate oracle-parity run and the unit tests; the
+    driver never sets it).
+    """
+    from pyspark import StorageLevel
+
+    target = df.sparkSession.sparkContext.defaultParallelism
+    forced = os.environ.get("SPARK_GRAFT_FORCE_SCALE_PERSIST", "") == "1"
+    if not forced and splits * max(dup, 1) < target:
+        return df
+    return persist(df, StorageLevel.MEMORY_AND_DISK)
 
 
 def release_all() -> None:
-    """Unpersist and drop every cached relation across all operator
-    modules. Safe to call at any time; subsequent queries rebuild their
-    bases on demand."""
-    for cache in _REGISTRY:
-        while cache:
-            cache.pop().unpersist()
+    """Unpersist and drop every relation in the query scope. Safe to
+    call at any time; later queries persist again on demand."""
+    while _SCOPE:
+        _SCOPE.pop().unpersist()

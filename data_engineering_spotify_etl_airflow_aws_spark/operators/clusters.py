@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32, _DUCK_SHINGLE_BASE, _SPARK_H32, JACCARD_TAU, ngram_jaccard_near_dup
@@ -591,18 +591,11 @@ def supplier_recs_fof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): each of the 3 rounds is frontier ⋈ edges on the
 # node key followed by a distinct and an anti-join against the visited
 # set - all node-keyed shuffles, frontier-sized, nothing O(graph)
-# beyond the persisted edge relation (released via the caches.py
-# lifecycle). Fixed round count, so no fixpoint detection and no
-# driver traffic at all; lineage stays 3 deep, below the checkpoint
-# threshold the CC loop needs.
+# beyond the persisted edge relation. Fixed round count, so no fixpoint
+# detection and no driver traffic at all; lineage stays 3 deep, below
+# the checkpoint threshold the CC loop needs.
 _KHOP_SEEDS = 8
 _KHOP_MAX = 3
-
-_KHOP_CACHE: list[DataFrame] = register_cache([])
-
-# Shared by the two degree-profile queries (assortativity / power-law):
-# persisted pair-expansion + degree relations, released on the next call
-_DEGREE_CACHE: list[DataFrame] = register_cache([])
 
 
 def _khop_oracle() -> str:
@@ -637,19 +630,15 @@ def _khop_oracle() -> str:
 def khop_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .insights import _basket_pairs, _order_baskets
 
-    while _KHOP_CACHE:
-        _KHOP_CACHE.pop().unpersist()
     und = _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    edges = (
+    edges = caches.persist(
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
         # cache the edge relation ALREADY hash-partitioned on the probe
         # key: all three BFS rounds join on src, so each round reuses the
         # cached partitioning instead of re-exchanging 2x|edges| rows
-        .repartition("src")
-        .persist()
+        .repartition("src"),
     )
-    _KHOP_CACHE.append(edges)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     h = F.expr(_SPARK_H32.format(s="concat('khop-', cast(node as string))"))
     seeds = (
@@ -701,8 +690,6 @@ def khop_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 # collected; round count is fixed, so zero driver traffic.
 _LPA_ROUNDS = 3
 
-_LPA_CACHE: list[DataFrame] = register_cache([])
-
 
 def _lpa_oracle() -> str:
     from .insights import _PART_EDGES_SQL
@@ -746,18 +733,14 @@ def label_propagation_communities(
 ) -> DataFrame:
     from .insights import _basket_pairs, _order_baskets
 
-    while _LPA_CACHE:
-        _LPA_CACHE.pop().unpersist()
     und = _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    edges = (
+    edges = caches.persist(
         und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .unionAll(
             und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
         )
-        .repartition("src")
-        .persist()
+        .repartition("src"),
     )
-    _LPA_CACHE.append(edges)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -809,11 +792,10 @@ def degree_powerlaw_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist the pair expansion: the degree union references `und`
     # twice, so without this the executed plan runs the basket explode +
     # distinct (the query's dominant cost) twice - 2 lineitem scans for
-    # one logical pass (r16; guide §5). Released on the next call.
-    while _DEGREE_CACHE:
-        _DEGREE_CACHE.pop().unpersist()
-    und = _basket_pairs(_order_baskets(spark, sf_dir)).distinct().persist()
-    _DEGREE_CACHE.append(und)
+    # one logical pass (r16; guide §5).
+    und = caches.persist(
+        _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
+    )
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -929,21 +911,17 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degree agg and the e2 probe, while `deg` feeds two joins - without
     # the persists the executed plan re-ran the basket explode + distinct
     # SIX times (12 lineitem scans in one plan, r16 measurement; guide
-    # §5). Released on the next call, same lifecycle as the khop/LPA
-    # edge caches above.
-    while _DEGREE_CACHE:
-        _DEGREE_CACHE.pop().unpersist()
-    und = _basket_pairs(_order_baskets(spark, sf_dir)).distinct().persist()
-    _DEGREE_CACHE.append(und)
+    # §5).
+    und = caches.persist(
+        _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
+    )
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
-    deg = (
+    deg = caches.persist(
         edges.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("d"))
-        .persist()
+        .agg(F.count("*").alias("d")),
     )
-    _DEGREE_CACHE.append(deg)
     e2 = (
         edges.join(deg.withColumnRenamed("node", "src")
                    .withColumnRenamed("d", "dx"), "src")

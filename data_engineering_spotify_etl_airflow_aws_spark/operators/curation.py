@@ -40,16 +40,12 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import ORACLE_TOKENS, tokens
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32, _SPARK_H32
 from .text import _STOP_EN, _oracle_stop_hits, _stop_hits
-
-# Persisted multiply-referenced bases from the previous invocation,
-# released on the next call or via caches.release_all().
-_CURATION_CACHE: list[DataFrame] = register_cache([])
 
 _OT = ORACLE_TOKENS.format(col="text")
 
@@ -684,7 +680,7 @@ _TEMP_U_DUCK = (
     """,
 )
 def lang_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): `counts` feeds the min agg and the
     # rate table - plus the final keep-join re-scans docs, 3 scans per
@@ -692,12 +688,10 @@ def lang_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus scale the re-scans are pure added I/O, so the per-lang
     # count table (bounded by the language set) persists once the
     # input has real splits.
-    while _CURATION_CACHE:
-        _CURATION_CACHE.pop().unpersist()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_l"))
-    counts = persist_when_scaled(
-        counts, _CURATION_CACHE, scan_splits(spark, sf_dir, "documents"), dup=3
+    counts = caches.persist_when_scaled(
+        counts, scan_splits(spark, sf_dir, "documents"), dup=3
     )
     n_min = counts.agg(F.min("n_l").alias("n_min"))
     rates = (
@@ -939,14 +933,10 @@ def semdedup_embedding_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16: the cluster assignment feeds both sides of the in-cluster
     # pair join plus the output join - persist so the N x K centroid
     # argmax behind it runs once, not three times (guide §5)
-    while _CURATION_CACHE:
-        _CURATION_CACHE.pop().unpersist()
-    a = (
+    a = caches.persist(
         _km_assign(v, c0)
-        .withColumn("nrm", F.sqrt(F.col("vv")))
-        .persist()
+        .withColumn("nrm", F.sqrt(F.col("vv"))),
     )
-    _CURATION_CACHE.append(a)
     x = a.select(
         F.col("cid").alias("xcid"),
         F.col("vec_id").alias("x_id"),
@@ -1398,12 +1388,10 @@ def curriculum_stage_assignment(
     # lesson); at corpus scale the re-tokenizes are pure added CPU, so
     # the 2-int-per-doc relation persists (disk-backed) once the input
     # has real splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _CURATION_CACHE:
-        _CURATION_CACHE.pop().unpersist()
-    q = persist_when_scaled(
-        q, _CURATION_CACHE, scan_splits(spark, sf_dir, "documents"), dup=3
+    q = caches.persist_when_scaled(
+        q, scan_splits(spark, sf_dir, "documents"), dup=3
     )
 
     def cuts(col: str, alias1: str, alias2: str):

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import ORACLE_TOKENS
 from ..registry import query
 from ..tables import load_table, widen_small_scan
@@ -147,26 +147,14 @@ def dedup_exact_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Persisted relations from the previous near-dup invocation, released on
-# the next call (the lazily returned plans mean in-function unpersist
-# would be premature; the bench also clears cache between measurements)
-# or via caches.release_all() for interactive sessions.
-_SHINGLE_BASE_CACHE: list[DataFrame] = register_cache([])
-
-
 def _shingle_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The persisted non-empty shingle relation both near-dup pipelines
     (and their recall eval, which runs them against ONE shared base)
-    start from. Releases the previous invocation's relations first."""
-    while _SHINGLE_BASE_CACHE:
-        _SHINGLE_BASE_CACHE.pop().unpersist()
-    sh = (
-        _spark_shingle_df(spark, sf_dir)
-        .where(F.col("n_sh") > 0)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    start from."""
+    return caches.persist(
+        _spark_shingle_df(spark, sf_dir).where(F.col("n_sh") > 0),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _SHINGLE_BASE_CACHE.append(sh)
-    return sh
 
 
 # ---------------------------------------------------------------------------
@@ -202,8 +190,7 @@ def _ngram_pairs(sh: DataFrame) -> DataFrame:
     # Measured at sf0.1: no persist 10.6s, persist sh 4.6s, persist sh +
     # prefix 3.9s. (A round-1 note claimed caching slowed this query; that
     # predates the zip_with shingle fix that made recompute cheap enough
-    # to expose the 6x re-read instead.) Released on the next call, same
-    # pattern as the MinHash base.
+    # to expose the 6x re-read instead.)
     #
     # Prefix filtering (AllPairs/PPJoin): order every doc's shingles by ONE
     # global total order and keep the first |d| - ceil(tau*|d|) + 1. For any
@@ -219,24 +206,22 @@ def _ngram_pairs(sh: DataFrame) -> DataFrame:
     # ~20k frequency-ordered).
     # the exploded (doc, shingle) stream feeds both the df agg and the
     # prefix join; persist so the explode runs once (r16; guide §5)
-    full = (
-        sh.select("doc_id", "n_sh", F.explode("sh").alias("shingle"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    full = caches.persist(
+        sh.select("doc_id", "n_sh", F.explode("sh").alias("shingle")),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _SHINGLE_BASE_CACHE.append(full)
     freq = full.groupBy("shingle").agg(F.count("*").alias("df"))
     w = W.partitionBy("doc_id").orderBy("df", "shingle")
     prefix_len = (
         F.col("n_sh") - F.ceil(F.lit(JACCARD_TAU) * F.col("n_sh")) + 1
     ).cast("int")
-    prefix = (
+    prefix = caches.persist(
         full.join(freq, "shingle")
         .withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= prefix_len)
-        .select("doc_id", "n_sh", "rn", "shingle")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", "n_sh", "rn", "shingle"),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _SHINGLE_BASE_CACHE.append(prefix)
     # PPJoin pruning on the prefix-collision rows, both lossless for
     # J >= tau (the all-pairs oracle hash-match PROVES it):
     #   size filter      - tau*|a| <= |b| and tau*|b| <= |a|;
@@ -371,10 +356,6 @@ def _band_key_exprs(col: str = "mh") -> list[str]:
     """,
 )
 def minhash_lsh_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The returned plan is lazy, so the persist can't be released inside
-    # this function; instead each call frees the previous call's base, so
-    # at most one cached relation ever outlives its query (the bench also
-    # clears the cache between measurements).
     return _minhash_pairs(_shingle_base(spark, sf_dir))
 
 
@@ -384,12 +365,14 @@ def _minhash_pairs(sh: DataFrame) -> DataFrame:
     # both sides of the band self-join read `bands`; persist so the
     # signature computation (16 affine minima over every doc's hashed
     # shingle set - the pipeline's dominant map work) runs once, not
-    # twice (r16; guide §5). 4 small rows per doc; _SHINGLE_BASE_CACHE
-    # lifecycle.
-    bands = sig.select(
-        "doc_id", F.posexplode(F.array(*band_keys)).alias("band_idx", "band_key")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _SHINGLE_BASE_CACHE.append(bands)
+    # twice (r16; guide §5). 4 small rows per doc.
+    bands = caches.persist(
+        sig.select(
+            "doc_id",
+            F.posexplode(F.array(*band_keys)).alias("band_idx", "band_key"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     cand = (
         bands.alias("x")
         .join(
@@ -659,9 +642,9 @@ def dedup_rolling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # assigned below from the two composed oracle texts
 )
 def near_dup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # ONE shared shingle base: calling the two registered queries
-    # back-to-back would persist two identical bases and unpersist the
-    # first mid-plan (each call releases the previous cache entry)
+    # ONE shared shingle base: building the two registered queries
+    # through QUERIES would release the first one's base before this
+    # plan runs
     sh = _shingle_base(spark, sf_dir)
     exact = _ngram_pairs(sh).select(
         F.col("doc_a").alias("e_a"), F.col("doc_b").alias("e_b")
@@ -763,12 +746,14 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides of the delta-vs-base band join read `bands`; persist so
     # the signature computation runs once (r16; guide §5 - same fix as
     # _minhash_pairs)
-    bands = sig.select(
-        "doc_id",
-        "is_delta",
-        F.posexplode(F.array(*band_keys)).alias("band_idx", "band_key"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _SHINGLE_BASE_CACHE.append(bands)
+    bands = caches.persist(
+        sig.select(
+            "doc_id",
+            "is_delta",
+            F.posexplode(F.array(*band_keys)).alias("band_idx", "band_key"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     cand = (
         bands.where("is_delta")
         .select(
@@ -857,13 +842,11 @@ def containment_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _shingle_base(spark, sf_dir)
     # the exploded (doc, shingle) stream has THREE consumers (the df agg,
     # the prefix build, and the full-index probe side of the candidate
-    # join); persist so the explode runs once (r16; guide §5) - same
-    # lifecycle as the shingle base itself
-    full = (
-        sh.select("doc_id", "n_sh", F.explode("sh").alias("shingle"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # join); persist so the explode runs once (r16; guide §5)
+    full = caches.persist(
+        sh.select("doc_id", "n_sh", F.explode("sh").alias("shingle")),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _SHINGLE_BASE_CACHE.append(full)
     freq = full.groupBy("shingle").agg(F.count("*").alias("df"))
     w = W.partitionBy("doc_id").orderBy("df", "shingle")
     prefix_len = (
@@ -990,19 +973,12 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         F.lit(0),
     )
-    # Drain the previous invocation's relations BEFORE persisting (the
-    # contract every other persisting operator in this family follows);
-    # append-only here leaked one fingerprint relation per call in
-    # interactive sessions (r9 review).
-    while _SHINGLE_BASE_CACHE:
-        _SHINGLE_BASE_CACHE.pop().unpersist()
-    fp = (
+    fp = caches.persist(
         tok.groupBy("doc_id")
         .agg(*bit_sums)
-        .select("doc_id", assembled.cast("bigint").alias("f"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select("doc_id", assembled.cast("bigint").alias("f")),
+        StorageLevel.MEMORY_AND_DISK,
     )
-    _SHINGLE_BASE_CACHE.append(fp)
     bands = fp.select(
         "doc_id",
         "f",
@@ -1067,10 +1043,6 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The share division is a single IEEE double op on exact counts.
 _DUPSPAN_N = 8
 
-# previous invocation's persisted per-doc gram counts (dup_ngram_span_share),
-# released on the next call - the _SHINGLE_BASE_CACHE lifecycle
-_DUPSPAN_CACHE: list[DataFrame] = register_cache([])
-
 
 @query(
     "dup_ngram_span_share",
@@ -1126,10 +1098,9 @@ def dup_ngram_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.size("tk") >= _DUPSPAN_N)
         .select("doc_id", F.explode(F.expr(gram)).alias("gk"))
     )
-    while _DUPSPAN_CACHE:
-        _DUPSPAN_CACHE.pop().unpersist()
-    dg = g.groupBy("doc_id", "gk").agg(F.count("*").alias("c")).persist()
-    _DUPSPAN_CACHE.append(dg)
+    dg = caches.persist(
+        g.groupBy("doc_id", "gk").agg(F.count("*").alias("c"))
+    )
     gd = dg.groupBy("gk").agg(F.count("*").alias("n_docs"))
     per = (
         dg.join(gd, "gk")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import dsum, oracle_dsum
 from ..registry import query
 from ..tables import load_table
@@ -1264,12 +1264,6 @@ def dynamic_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame
 # integrity is a left-anti join - broadcast when the parent fits, keyed
 # shuffle otherwise (no hint pinned here).
 
-# Relations persisted by the previous gated-persist extras query (dq /
-# table-profile / cohort / fd / cdc / price-volume / rank-movers /
-# topk-stability) when the scale gate engages (released on the next
-# call; caches.py).
-_PROFILE_CACHE: list[DataFrame] = register_cache([])
-
 
 @query(
     "dq_constraint_violations",
@@ -1302,7 +1296,7 @@ _PROFILE_CACHE: list[DataFrame] = register_cache([])
     """,
 )
 def dq_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persists (r17): the six unioned checks re-scan
     # orders (5x) / customer (2x). At fixture scale an unconditional
@@ -1312,19 +1306,17 @@ def dq_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # added I/O, so the checked-column projections persist once the
     # input has real splits. The projections bound what the persist
     # materializes to exactly the columns the checks read.
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    orders = persist_when_scaled(
-        orders, _PROFILE_CACHE, scan_splits(spark, sf_dir, "orders"), dup=5
+    orders = caches.persist_when_scaled(
+        orders, scan_splits(spark, sf_dir, "orders"), dup=5
     )
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     )
-    cust = persist_when_scaled(
-        cust, _PROFILE_CACHE, scan_splits(spark, sf_dir, "customer"), dup=2
+    cust = caches.persist_when_scaled(
+        cust, scan_splits(spark, sf_dir, "customer"), dup=2
     )
 
     def check(df: DataFrame, table: str, name: str, violation) -> DataFrame:
@@ -1478,7 +1470,7 @@ _PROFILE_COLS = (
     """,
 )
 def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): one agg branch per profiled column
     # re-scans orders. At fixture scale an unconditional persist LOST
@@ -1488,12 +1480,9 @@ def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trade the gate is making: per-branch parquet scans prune to ONE
     # column each, while the persist materializes all profiled columns
     # once and reads them 4x - a win only when scan I/O dominates.
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
     orders = load_table(spark, sf_dir, "orders").select(*_PROFILE_COLS)
-    orders = persist_when_scaled(
+    orders = caches.persist_when_scaled(
         orders,
-        _PROFILE_CACHE,
         scan_splits(spark, sf_dir, "orders"),
         dup=len(_PROFILE_COLS),
     )
@@ -2026,10 +2015,6 @@ def zorder_box_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set-defined integers, identical under either plan).
 _BASKET_TOP = 20
 
-# previous invocation's persisted per-order basket-array relation (one
-# row per order: sorted distinct l_partkey array)
-_BASKET_ITEMS_CACHE: list[DataFrame] = register_cache([])
-
 
 @query(
     "market_basket_part_pairs",
@@ -2061,21 +2046,17 @@ _BASKET_ITEMS_CACHE: list[DataFrame] = register_cache([])
     """,
 )
 def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    while _BASKET_ITEMS_CACHE:
-        _BASKET_ITEMS_CACHE.pop().unpersist()
     # one shuffle builds the per-order basket array (sorted, distinct,
     # bounded by basket size); pair generation is then an in-group array
     # combination — the sorted order makes part_a < part_b free — with
     # no self-join at all. The oracle keeps the declarative self-join
     # form; the outputs are set-defined integers, identical either way.
     # (Measured at sf0.1: 4.1s self-join form -> 2.3s this form.)
-    baskets = (
+    baskets = caches.persist(
         load_table(spark, sf_dir, "lineitem")
         .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
-        .persist()
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps")),
     )
-    _BASKET_ITEMS_CACHE.append(baskets)
     combos = F.explode(
         F.flatten(
             F.expr(
@@ -2822,21 +2803,19 @@ def retractable_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fd_violation_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): the three FD branches each re-scan
     # orders. No-op at fixture scale (the r16 cheap-subtree lesson); at
     # corpus scale the re-scans are pure added I/O, so the projection
     # of exactly the checked columns persists once the input has real
     # splits.
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderdate",
         "o_orderstatus", "o_orderpriority",
     )
-    o = persist_when_scaled(
-        o, _PROFILE_CACHE, scan_splits(spark, sf_dir, "orders"), dup=3
+    o = caches.persist_when_scaled(
+        o, scan_splits(spark, sf_dir, "orders"), dup=3
     )
 
     def branch(fd: str, det: str, dep: str) -> DataFrame:
@@ -3110,20 +3089,18 @@ def freshness_sla_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_changelog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): the three changelog batches each
     # re-scan orders (different %-filters, same two columns). No-op at
     # fixture scale (the r16 cheap-subtree lesson); at corpus scale the
     # re-scans are pure added I/O, so the 2-column projection persists
     # once the input has real splits.
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )
-    o = persist_when_scaled(
-        o, _PROFILE_CACHE, scan_splits(spark, sf_dir, "orders"), dup=3
+    o = caches.persist_when_scaled(
+        o, scan_splits(spark, sf_dir, "orders"), dup=3
     )
 
     def batch(mod: int, seq: int, op: str, price):
@@ -3409,12 +3386,10 @@ def rank_movers_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window (4 lineitem scans per plan). No-op at fixture scale (the
     # r16 cheap-subtree lesson); at corpus scale the part-bounded
     # ranked relation persists once the input has real splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
-    ranked = persist_when_scaled(
-        ranked, _PROFILE_CACHE, scan_splits(spark, sf_dir, "lineitem"), dup=4
+    ranked = caches.persist_when_scaled(
+        ranked, scan_splits(spark, sf_dir, "lineitem"), dup=4
     )
     c, p = ranked.alias("c"), ranked.alias("p")
     return (
@@ -4005,12 +3980,10 @@ def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at fixture scale (the r16 cheap-subtree lesson); at corpus scale
     # the part-bounded two-week rollup persists once the input has real
     # splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
-    wk = persist_when_scaled(
-        wk, _PROFILE_CACHE, scan_splits(spark, sf_dir, "lineitem"), dup=4
+    wk = caches.persist_when_scaled(
+        wk, scan_splits(spark, sf_dir, "lineitem"), dup=4
     )
     c = wk.where("is_curr").select(
         F.col("l_partkey").alias("pk_c"),
@@ -4720,13 +4693,11 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per plan. No-op at fixture scale (the r16 cheap-subtree lesson);
     # at corpus scale the per-customer rollup persists once the input
     # has real splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
     fo = orders.groupBy("o_custkey").agg(F.min("oy").alias("cohort_y"))
-    fo = persist_when_scaled(
-        fo, _PROFILE_CACHE, scan_splits(spark, sf_dir, "orders"), dup=3
+    fo = caches.persist_when_scaled(
+        fo, scan_splits(spark, sf_dir, "orders"), dup=3
     )
     sz = fo.groupBy("cohort_y").agg(F.count("*").alias("cohort_n"))
     rev = (
@@ -4889,12 +4860,10 @@ def topk_stability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem scans per plan). No-op at fixture scale (the r16
     # cheap-subtree lesson); at corpus scale the part-bounded per-half
     # revenue rollup persists once the input has real splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _PROFILE_CACHE:
-        _PROFILE_CACHE.pop().unpersist()
-    g = persist_when_scaled(
-        g, _PROFILE_CACHE, scan_splits(spark, sf_dir, "lineitem"), dup=4
+    g = caches.persist_when_scaled(
+        g, scan_splits(spark, sf_dir, "lineitem"), dup=4
     )
 
     def top(first: bool):

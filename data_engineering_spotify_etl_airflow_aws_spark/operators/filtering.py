@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import ORACLE_TOKENS, tokens
 from ..registry import query
 from ..tables import load_table, widen_small_scan
@@ -240,13 +240,6 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # truncates 100 -> 50, i.e. the bound actually binds at a tested scale.
 _BENCH_N = 50
 
-# previous invocation's persisted gram base, released on next call
-# (or via caches.release_all())
-_GRAM_BASE_CACHE: list[DataFrame] = register_cache([])
-
-# previous tfidf invocation's persisted token/weight bases (same lifecycle)
-_TFIDF_CACHE: list[DataFrame] = register_cache([])
-
 
 @query(
     "benchmark_decontam_overlap",
@@ -283,21 +276,15 @@ def benchmark_decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both branches (bench broadcast + corpus probe) consume the gram
     # base; without the persist the tokenize+5-gram pass - the
     # dominant per-doc cost - executes twice (measured 2.1s of 4.6s
-    # at sf0.1). Same lifecycle as the Jaccard shingle base (dedup.py):
-    # the lazy plan forbids in-function unpersist, so the previous call's
-    # relation is released here and the last one via caches.release_all().
-    while _GRAM_BASE_CACHE:
-        _GRAM_BASE_CACHE.pop().unpersist()
-    base = (
+    # at sf0.1).
+    base = caches.persist(
         docs.select("doc_id", tokens("text").alias("t"))
         .select(
             "doc_id",
             F.array_distinct(F.expr(_spark_ngrams("t", 5))).alias("g"),
         )
-        .where(F.size("g") > 0)
-        .persist()
+        .where(F.size("g") > 0),
     )
-    _GRAM_BASE_CACHE.append(base)
     bench = (
         base.where(F.col("doc_id") % 50 == 0)
         .orderBy("doc_id")
@@ -374,17 +361,15 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf ahead of both consumers; at bench scale that trade inverts -
     # r17 realizes exactly that split with the scale-gated persist
     # (no-op at fixture scale, engages once the input has real splits).
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _TFIDF_CACHE:
-        _TFIDF_CACHE.pop().unpersist()
     tf = (
         docs.select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-    tf = persist_when_scaled(
-        tf, _TFIDF_CACHE, scan_splits(spark, sf_dir, "documents"), dup=2
+    tf = caches.persist_when_scaled(
+        tf, scan_splits(spark, sf_dir, "documents"), dup=2
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
@@ -409,10 +394,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.withColumn("rnk", F.row_number().over(w)).where(
         F.col("rnk") <= 5
     )
-
-
-# previous invocation's persisted (source, gram) base for the matrix below
-_XSRC_GRAM_CACHE: list[DataFrame] = register_cache([])
 
 
 # ---------------------------------------------------------------------------
@@ -464,10 +445,7 @@ def cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the self-join plus the per-source totals); persisted so the
     # tokenize+shingle pass runs once (measured warm 3.5s -> 2.9s at
     # sf0.1 - the self-join shuffle, not the shingling, dominates).
-    # Same lifecycle as the decontam gram base above.
-    while _XSRC_GRAM_CACHE:
-        _XSRC_GRAM_CACHE.pop().unpersist()
-    g = (
+    g = caches.persist(
         docs.select("source", tokens("text").alias("t"))
         .select(
             "source",
@@ -475,10 +453,8 @@ def cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "gram"
             ),
         )
-        .distinct()
-        .persist()
+        .distinct(),
     )
-    _XSRC_GRAM_CACHE.append(g)
     per_src = g.groupBy("source").agg(F.count("*").alias("n_grams"))
     a = g.select(F.col("source").alias("source_a"), "gram")
     b = g.select(F.col("source").alias("source_b"), "gram")
@@ -786,18 +762,14 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction (df-capped admitted terms only). The scan is also
     # widened so the single-split fixture tokenize parallelizes.
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
-    while _TFIDF_CACHE:
-        _TFIDF_CACHE.pop().unpersist()
-    tok = (
+    tok = caches.persist(
         docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
         .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-        .persist()
+        .agg(F.count("*").alias("tf")),
     )
-    _TFIDF_CACHE.append(tok)
     n = tok.agg(F.count_distinct("doc_id").cast("bigint").alias("n_docs"))
     df = tok.groupBy("term").agg(F.count("*").alias("df"))
-    w = (
+    w = caches.persist(
         tok.join(df, "term")
         .crossJoin(F.broadcast(n))
         .where(
@@ -817,10 +789,8 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("wm"),
-        )
-        .persist()
+        ),
     )
-    _TFIDF_CACHE.append(w)
     nrm = w.groupBy("doc_id").agg(
         # r12: cast one factor BEFORE the square - wm = tf*idf micro can
         # reach ~3e10 (tf 1e3 x idf 28 x 1e6), whose raw-bigint square

@@ -32,14 +32,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..registry import query
 from ..tables import load_table
-
-# Persisted bases shared by multiple plan branches (the caches.py
-# lifecycle: the lazy plan forbids in-function unpersist, so the previous
-# call's relations are released on the next call / via release_all()).
-_INSIGHTS_CACHE: list[DataFrame] = register_cache([])
 
 
 def _order_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,47 +105,38 @@ def part_triangle_stats(edges: DataFrame) -> DataFrame:
     The edge set feeds two plan branches (degrees, orientation join) and
     the directed set three (edge probe, adjacency x2), and Spark does
     NOT reuse those subtrees' exchanges here (AQE plans each branch
-    independently), so both persist for the duration of the query via
-    the _INSIGHTS_CACHE lifecycle - measured 7.2s -> 2.9s at sf0.1.
+    independently), so both persist for the duration of the query -
+    measured 7.2s -> 2.9s at sf0.1.
     """
-    while _INSIGHTS_CACHE:
-        _INSIGHTS_CACHE.pop().unpersist()
-    edges = edges.persist()
-    _INSIGHTS_CACHE.append(edges)
+    edges = caches.persist(edges)
     # deg (3 consumers: du, dv, output join) and adj (2 consumers) are
     # node-sized relations recomputed per consumer without a persist -
     # caching them trims three full agg re-executions of the cached
     # edge/directed relations.
-    deg = (
+    deg = caches.persist(
         edges.select(F.col("u").alias("node"))
         .unionAll(edges.select(F.col("v").alias("node")))
         .groupBy("node")
-        .agg(F.count("*").alias("degree"))
-        .persist()
+        .agg(F.count("*").alias("degree")),
     )
-    _INSIGHTS_CACHE.append(deg)
     du = deg.select(F.col("node").alias("u"), F.col("degree").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("degree").alias("dv"))
     # u < v already, so on a degree tie the lower id wins the tail slot.
     lower_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    directed = (
+    directed = caches.persist(
         edges.join(du, "u")
         .join(dv, "v")
         .select(
             F.when(lower_first, F.col("u")).otherwise(F.col("v")).alias("src"),
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        )
-        .persist()
+        ),
     )
-    _INSIGHTS_CACHE.append(directed)
-    adj = (
+    adj = caches.persist(
         directed.groupBy("src")
-        .agg(F.collect_list("dst").alias("nbrs"))
-        .persist()
+        .agg(F.collect_list("dst").alias("nbrs")),
     )
-    _INSIGHTS_CACHE.append(adj)
     common = (
         directed.withColumnRenamed("src", "x")
         .withColumnRenamed("dst", "y")
@@ -365,18 +351,16 @@ def gini_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def kl_divergence_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): 4 consumers re-scan the projection. At
     # fixture scale an unconditional persist LOST (r16 A/B min-of-3
     # 0.28s -> 0.38s: narrow scans ride idle cores); at corpus scale the
     # re-scans are pure added I/O, so the pruned 2-column projection
     # persists once the input has real splits.
-    while _INSIGHTS_CACHE:
-        _INSIGHTS_CACHE.pop().unpersist()
     docs = load_table(spark, sf_dir, "documents").select("source", "lang")
-    docs = persist_when_scaled(
-        docs, _INSIGHTS_CACHE, scan_splits(spark, sf_dir, "documents"), dup=4
+    docs = caches.persist_when_scaled(
+        docs, scan_splits(spark, sf_dir, "documents"), dup=4
     )
     cell = docs.groupBy("source", "lang").agg(F.count("*").alias("n_sl"))
     ms = docs.groupBy("source").agg(F.count("*").alias("n_s"))
@@ -453,10 +437,7 @@ def item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # baskets feed both the pair build and the per-part frequency count;
     # persisting skips the second lineitem shuffle (the market_basket
     # basket-cache pattern, extras.py).
-    while _INSIGHTS_CACHE:
-        _INSIGHTS_CACHE.pop().unpersist()
-    baskets = _order_baskets(spark, sf_dir).persist()
-    _INSIGHTS_CACHE.append(baskets)
+    baskets = caches.persist(_order_baskets(spark, sf_dir))
     # Scale-gated persist (r17): this support relation is the FULL
     # co-occurrence set (unlike assoc_rules_lift's >=2-filtered table),
     # and at fixture scale materializing it LOST (r16 A/B min-of-3
@@ -464,15 +445,15 @@ def item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cached baskets. At corpus scale the second explode+agg is a full
     # extra pass over the largest intermediate, so the pair table
     # persists (disk-backed) once the input has real splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     support = (
         _basket_pairs(baskets)
         .groupBy("u", "v")
         .agg(F.count("*").alias("support"))
     )
-    support = persist_when_scaled(
-        support, _INSIGHTS_CACHE, scan_splits(spark, sf_dir, "lineitem"), dup=2
+    support = caches.persist_when_scaled(
+        support, scan_splits(spark, sf_dir, "lineitem"), dup=2
     )
     bidir = support.select(
         F.col("u").alias("part_key"), F.col("v").alias("rec_key"), "support"
@@ -1774,7 +1755,7 @@ def retention_by_age(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persists (r17): `seq` feeds the state classifier and
     # the churn branch, and `act` additionally feeds the max-day agg -
@@ -1782,16 +1763,14 @@ def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the r16 cheap-subtree lesson); at corpus scale the re-runs are
     # full extra passes, so both (user, day)-bounded relations persist
     # once the input has real splits.
-    while _INSIGHTS_CACHE:
-        _INSIGHTS_CACHE.pop().unpersist()
     ev_scan = load_table(spark, sf_dir, "events")
     act = (
         ev_scan
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
     )
-    act = persist_when_scaled(
-        act, _INSIGHTS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    act = caches.persist_when_scaled(
+        act, scan_splits(spark, sf_dir, "events"), dup=3
     )
     w = W.partitionBy("user_id").orderBy("day")
     seq = act.select(
@@ -1799,8 +1778,8 @@ def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("day").over(w).alias("prev_day"),
         F.lead("day").over(w).alias("next_day"),
     )
-    seq = persist_when_scaled(
-        seq, _INSIGHTS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    seq = caches.persist_when_scaled(
+        seq, scan_splits(spark, sf_dir, "events"), dup=3
     )
     maxd = act.agg(F.max("day").alias("max_day"))
     active_states = seq.select(
@@ -1886,21 +1865,16 @@ def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def assoc_rules_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    while _INSIGHTS_CACHE:
-        _INSIGHTS_CACHE.pop().unpersist()
-    baskets = _order_baskets(spark, sf_dir).persist()
-    _INSIGHTS_CACHE.append(baskets)
+    baskets = caches.persist(_order_baskets(spark, sf_dir))
     nb = baskets.agg(F.count("*").cast("bigint").alias("n_baskets"))
     # the bidirectional rules union references `support` twice - persist
     # so the pair explode + groupBy runs once (r16; guide §5)
-    support = (
+    support = caches.persist(
         _basket_pairs(baskets)
         .groupBy("u", "v")
         .agg(F.count("*").alias("support"))
-        .where(F.col("support") >= 2)
-        .persist()
+        .where(F.col("support") >= 2),
     )
-    _INSIGHTS_CACHE.append(support)
     rules = support.select(
         F.col("u").alias("antecedent"), F.col("v").alias("consequent"), "support"
     ).unionAll(
@@ -2049,23 +2023,21 @@ _WAU_DAYS = 7
     """,
 )
 def weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): `act` feeds the max-day agg, the
     # window-cover explode, and the DAU agg - 3 events scan+distinct
     # runs per plan. No-op at fixture scale (the r16 cheap-subtree
     # lesson); at corpus scale the (user, day) rollup persists once the
     # input has real splits.
-    while _INSIGHTS_CACHE:
-        _INSIGHTS_CACHE.pop().unpersist()
     ev_scan = load_table(spark, sf_dir, "events")
     act = (
         ev_scan
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
     )
-    act = persist_when_scaled(
-        act, _INSIGHTS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    act = caches.persist_when_scaled(
+        act, scan_splits(spark, sf_dir, "events"), dup=3
     )
     maxd = act.agg(F.max("day").alias("max_day"))
     cover = (

@@ -31,16 +31,11 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import ORACLE_TOKENS, oracle_cosine, tokens, vec_double
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32, _SPARK_H32
-
-# Persisted relations from the previous recsys invocation, released on
-# the next call (lazily returned plans forbid in-function unpersist) or
-# via caches.release_all() - same pattern as the shingle/IVF bases.
-_MLPREP_CACHE: list[DataFrame] = register_cache([])
 
 # BM25 constants (Robertson k1/b defaults; exact binary: 0.25/0.75 are
 # dyadic, 1.2/2.2 parse to the same nearest-double in both engines)
@@ -134,7 +129,7 @@ _DUCK_TOK_TABLE = f"""
     """,
 )
 def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persists (r17): dl (2 consumers) and tf (2 consumers)
     # each re-run the tokenize+explode subtree - 3 full tokenize passes
@@ -144,12 +139,10 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded rollups (dl: one row/doc; tf: docs x |_BM25_TERMS|)
     # persist once the input has real splits. The full token stream
     # stays unpersisted at every scale (unbounded; the heaps lesson).
-    while _MLPREP_CACHE:
-        _MLPREP_CACHE.pop().unpersist()
     tok = _doc_tokens(spark, sf_dir).select("doc_id", "tok")
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    dl = persist_when_scaled(
-        dl, _MLPREP_CACHE, scan_splits(spark, sf_dir, "documents"), dup=3
+    dl = caches.persist_when_scaled(
+        dl, scan_splits(spark, sf_dir, "documents"), dup=3
     )
     stats = dl.agg(
         F.count("*").alias("n_docs"),
@@ -160,8 +153,8 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", F.col("tok").alias("term"))
         .agg(F.count("*").alias("tf"))
     )
-    tf = persist_when_scaled(
-        tf, _MLPREP_CACHE, scan_splits(spark, sf_dir, "documents"), dup=3
+    tf = caches.persist_when_scaled(
+        tf, scan_splits(spark, sf_dir, "documents"), dup=3
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     k1 = F.expr(_BM25_K1)
@@ -509,7 +502,7 @@ def _bloom_pos_spark(i: int, key: str) -> str:
     """,
 )
 def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): build (filtered distinct custkeys) has
     # 4 consumers and bits 3, re-running the orders scan 10x per plan.
@@ -517,8 +510,6 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.10s -> 1.34s: cheap columnar scans ride idle cores); at corpus
     # scale the re-scans are pure added I/O, so both bounded relations
     # persist once the input has real splits.
-    while _MLPREP_CACHE:
-        _MLPREP_CACHE.pop().unpersist()
     ord_scan = load_table(spark, sf_dir, "orders")
     build = (
         ord_scan
@@ -526,8 +517,8 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
         .distinct()
     )
-    build = persist_when_scaled(
-        build, _MLPREP_CACHE, scan_splits(spark, sf_dir, "orders"), dup=10
+    build = caches.persist_when_scaled(
+        build, scan_splits(spark, sf_dir, "orders"), dup=10
     )
     bits = (
         build.select(F.expr(_bloom_pos_spark(0, "o_custkey")).alias("pos"))
@@ -539,8 +530,8 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    bits = persist_when_scaled(
-        bits, _MLPREP_CACHE, scan_splits(spark, sf_dir, "orders"), dup=10
+    bits = caches.persist_when_scaled(
+        bits, scan_splits(spark, sf_dir, "orders"), dup=10
     )
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     probe = cust.select(
@@ -626,7 +617,7 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): `vocab` feeds the total agg and the
     # logprob table - plus the scoring join re-tokenizes, 3 tokenize
@@ -635,12 +626,10 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the vocabulary-bounded count table persists once the input has
     # real splits. The raw token stream stays unpersisted (unbounded;
     # the heaps lesson).
-    while _MLPREP_CACHE:
-        _MLPREP_CACHE.pop().unpersist()
     tok = _doc_tokens(spark, sf_dir)
     vocab = tok.groupBy("tok").agg(F.count("*").alias("cnt"))
-    vocab = persist_when_scaled(
-        vocab, _MLPREP_CACHE, scan_splits(spark, sf_dir, "documents"), dup=3
+    vocab = caches.persist_when_scaled(
+        vocab, scan_splits(spark, sf_dir, "documents"), dup=3
     )
     tot = vocab.agg(F.sum("cnt").cast("double").alias("total"))
     lp = vocab.crossJoin(F.broadcast(tot)).select(
@@ -1200,14 +1189,11 @@ def recsys_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # test twice - without the persist the executed plan re-runs the
     # orders x lineitem join + distinct + md5 split hash for EVERY
     # reference (r16 measurement: 64 parquet scans / 104 Exchanges in one
-    # plan; guide §5 "reused AND recompute is more expensive"). Released
-    # on the next call, same pattern as the shingle base.
-    while _MLPREP_CACHE:
-        _MLPREP_CACHE.pop().unpersist()
-    tagged = inter.withColumn(
-        "is_test", F.expr(_REC_SPLIT_H_S) % 5 == 0
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _MLPREP_CACHE.append(tagged)
+    # plan; guide §5 "reused AND recompute is more expensive").
+    tagged = caches.persist(
+        inter.withColumn("is_test", F.expr(_REC_SPLIT_H_S) % 5 == 0),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     train = tagged.where(~F.col("is_test")).select("u", "i")
     test = tagged.where("is_test").select("u", "i")
     # in-group ordered-pair expansion from the per-user sorted basket
@@ -1261,14 +1247,12 @@ def recsys_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct + hash-order pick behind them runs once, not four times
     # (guide §5; these are real multi-stage subtrees even over the
     # cached split, unlike the reverted cheap-scan class).
-    panel = (
+    panel = caches.persist(
         evalp_all.select("u")
         .distinct()
         .orderBy(F.expr(_REC_EVAL_H_S), "u")
-        .limit(_REC_EVAL_N)
-        .persist()
+        .limit(_REC_EVAL_N),
     )
-    _MLPREP_CACHE.append(panel)
     trainp = train.join(F.broadcast(panel), "u", "left_semi")
     scored = (
         trainp.withColumnRenamed("i", "j")
@@ -1283,8 +1267,9 @@ def recsys_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rk") <= _REC_K)
         .select("u", "i")
     )
-    evalp = evalp_all.join(F.broadcast(panel), "u", "left_semi").persist()
-    _MLPREP_CACHE.append(evalp)
+    evalp = caches.persist(
+        evalp_all.join(F.broadcast(panel), "u", "left_semi")
+    )
     hits = evalp.join(recs, ["u", "i"], "left_semi")
     eu = evalp.agg(
         F.count_distinct("u").alias("n_eval_users"),

@@ -44,7 +44,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import cosine, oracle_cosine, vec_double
 from ..registry import query
 from ..tables import load_table
@@ -171,10 +171,6 @@ def topk_similar_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Assignment and probing are both broadcast joins against the C-row
 # centroid table; only vectors in the nprobe probed clusters are scored.
 
-# previous invocation's persisted embedding base, released on next call
-# (or via caches.release_all())
-_IVF_CACHE: list[DataFrame] = register_cache([])
-
 
 def _ivf_centroid_set(v: DataFrame) -> DataFrame:
     """The fixed N_CENTROIDS-row (centroid_id, cent_emb, cent_nrm) pick —
@@ -224,7 +220,6 @@ def _ivf_argmax(
         .where(F.col("rn") <= keep)
         .select(id_col, "centroid_id")
     )
-
 
 
 @query(
@@ -281,12 +276,8 @@ def ivf_topk_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The embedding base feeds four consumers (assign over all vectors,
     # probe over queries, plus the q_emb/c_emb sides of the verify join);
     # without a persist each one re-reads parquet and re-runs the
-    # array<float> -> array<double> cast. Same released-on-next-call
-    # pattern as _SIG_CACHE below (round-3 verdict #2).
-    while _IVF_CACHE:
-        _IVF_CACHE.pop().unpersist()
-    v = _emb_n(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _IVF_CACHE.append(v)
+    # array<float> -> array<double> cast (round-3 verdict #2).
+    v = caches.persist(_emb_n(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     cent = _ivf_centroid_set(v)
     qset = _query_set(v)  # bounded N_QUERIES rows: safe to broadcast
 
@@ -388,11 +379,6 @@ def _duck_bucket(emb: str) -> str:
     return "CAST(" + " + ".join(terms) + " AS BIGINT)"
 
 
-# previous invocation's persisted signature table, released on next call
-# (or via caches.release_all())
-_SIG_CACHE: list[DataFrame] = register_cache([])
-
-
 def near_dup_pairs(
     v: DataFrame, tau: float | None = NEAR_DUP_TAU
 ) -> DataFrame:
@@ -418,15 +404,15 @@ def near_dup_pairs(
 
     from ..functions import dot, l2_norm
 
-    while _SIG_CACHE:
-        _SIG_CACHE.pop().unpersist()
-    sig = v.select(
-        "vec_id",
-        "emb",
-        _spark_bucket(F.col("emb")).alias("bucket"),
-        l2_norm(F.col("emb")).alias("nrm"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    _SIG_CACHE.append(sig)
+    sig = caches.persist(
+        v.select(
+            "vec_id",
+            "emb",
+            _spark_bucket(F.col("emb")).alias("bucket"),
+            l2_norm(F.col("emb")).alias("nrm"),
+        ),
+        StorageLevel.MEMORY_AND_DISK,
+    )
     score = dot(F.col("x.emb"), F.col("y.emb")) / (
         F.col("x.nrm") * F.col("y.nrm")
     )
@@ -1217,18 +1203,11 @@ def _ivfpq_oracle() -> str:
     """
 
 
-# previous invocation's persisted embedding base for the composed search
-_IVFPQ_CACHE: list[DataFrame] = register_cache([])
-
-
 @query("ivfpq_topk_similar", oracle=_ivfpq_oracle())
 def ivfpq_topk_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    while _IVFPQ_CACHE:
-        _IVFPQ_CACHE.pop().unpersist()
-    v = _emb_n(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _IVFPQ_CACHE.append(v)
+    v = caches.persist(_emb_n(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     cent = _ivf_centroid_set(v)
     qset = _query_set(v)
     assign = _ivf_argmax(cent, v, "vec_id", keep=1)
@@ -1482,14 +1461,9 @@ def _drift_oracle() -> str:
     """
 
 
-# Moment grid persisted by the previous embedding_centroid_drift call
-# when the scale gate engages (released on the next call; caches.py).
-_DRIFT_CACHE: list[DataFrame] = register_cache([])
-
-
 @query("embedding_centroid_drift", oracle=_drift_oracle())
 def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits, widen_small_scan
+    from ..tables import scan_splits, widen_small_scan
 
     emb_scan = load_table(spark, sf_dir, "embeddings")
     pe = widen_small_scan(
@@ -1515,10 +1489,8 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (2 x dims) moment grid persists once the input has real splits.
     # Gate base is the RAW scan: widen_small_scan already fans the
     # fixture out to 32 splits, which would otherwise fool the gate.
-    while _DRIFT_CACHE:
-        _DRIFT_CACHE.pop().unpersist()
-    m = persist_when_scaled(
-        m, _DRIFT_CACHE, scan_splits(spark, sf_dir, "embeddings"), dup=4
+    m = caches.persist_when_scaled(
+        m, scan_splits(spark, sf_dir, "embeddings"), dup=4
     )
     q = m.select(
         "half",
@@ -2120,10 +2092,7 @@ def cosine_vs_l2_rank_agreement(
 def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.storagelevel import StorageLevel
 
-    while _IVF_CACHE:
-        _IVF_CACHE.pop().unpersist()
-    v = _emb_n(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
-    _IVF_CACHE.append(v)
+    v = caches.persist(_emb_n(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     cent = _ivf_centroid_set(v)
     assign = _ivf_argmax(cent, v, "vec_id", keep=1)
     cells = assign.groupBy("centroid_id").agg(

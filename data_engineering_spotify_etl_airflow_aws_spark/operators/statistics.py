@@ -31,16 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32 as _ST_DH32
 from .dedup import _SPARK_H32 as _ST_SH32
-
-# Persisted multiply-referenced bases from the previous invocation,
-# released on the next call (lazily returned plans forbid in-function
-# unpersist) or via caches.release_all() - the shingle-base lifecycle.
-_STATS_CACHE: list[DataFrame] = register_cache([])
 
 
 def _daily_micro(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -522,18 +517,16 @@ def skew_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pmi_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): at fixture scale the 4 duplicated
     # narrow scans ride idle cores and an unconditional persist LOST
     # (r16 A/B min-of-3 0.30s -> 0.44s), but at corpus scale the 4x
     # re-scan is pure added I/O, so the persist engages once the input
-    # has real splits (gate math in tables.persist_when_scaled).
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
+    # has real splits (gate math in caches.persist_when_scaled).
     docs = load_table(spark, sf_dir, "documents").select("lang", "source")
-    docs = persist_when_scaled(
-        docs, _STATS_CACHE, scan_splits(spark, sf_dir, "documents"), dup=4
+    docs = caches.persist_when_scaled(
+        docs, scan_splits(spark, sf_dir, "documents"), dup=4
     )
     cell = docs.groupBy("lang", "source").agg(F.count("*").alias("n_ij"))
     ml = docs.groupBy("lang").agg(F.count("*").alias("n_i"))
@@ -1124,7 +1117,7 @@ def column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("documents", "source"),
         ("customer", "c_mktsegment"),
     )
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     src = None
     for tbl, col in cols:
@@ -1138,11 +1131,9 @@ def column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale the re-scan of every profiled table is pure added I/O, so
     # the per-(column, value) counts persist once the DOMINANT input
     # (events - the gate base) has real splits.
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
     cat = src.groupBy("column_name", "v").agg(F.count("*").alias("c"))
-    cat = persist_when_scaled(
-        cat, _STATS_CACHE, scan_splits(spark, sf_dir, "events"), dup=2
+    cat = caches.persist_when_scaled(
+        cat, scan_splits(spark, sf_dir, "events"), dup=2
     )
     tot = cat.groupBy("column_name").agg(
         F.sum("c").alias("n"), F.count("*").alias("n_distinct")
@@ -1266,7 +1257,7 @@ def daily_value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     docs = load_table(spark, sf_dir, "documents").select("lang", "source")
     # Scale-gated persist (r17): the grid feeds 4 consumers (rt/ct/tot/
@@ -1275,11 +1266,9 @@ def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r16 A/B min-of-3 0.79s -> 0.97s: idle cores hide the duplication);
     # at corpus scale the re-scans are pure added I/O, so the tiny
     # (lang x source) grid persists once the input has real splits.
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
     cells = docs.groupBy("lang", "source").agg(F.count("*").alias("n_obs"))
-    cells = persist_when_scaled(
-        cells, _STATS_CACHE, scan_splits(spark, sf_dir, "documents"), dup=8
+    cells = caches.persist_when_scaled(
+        cells, scan_splits(spark, sf_dir, "documents"), dup=8
     )
     rt = cells.groupBy("lang").agg(F.sum("n_obs").cast("bigint").alias("r"))
     ct = cells.groupBy("source").agg(F.sum("n_obs").cast("bigint").alias("c"))
@@ -1755,22 +1744,20 @@ _EWMA_W = [repr(0.75**j) for j in range(_EWMA_LOOKBACK)]
     """,
 )
 def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): the (type, day) count grid feeds sig
     # and both sides of the lag self-join - 3 events scans per plan.
     # No-op at fixture scale (the r16 cheap-subtree lesson); at corpus
     # scale the bounded grid persists and the re-scans collapse to one.
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
     ev_scan = load_table(spark, sf_dir, "events")
     d = (
         ev_scan
         .groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("x"))
     )
-    d = persist_when_scaled(
-        d, _STATS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    d = caches.persist_when_scaled(
+        d, scan_splits(spark, sf_dir, "events"), dup=3
     )
     # daily-count squares through a decimal accumulator (the pattern the
     # OLS/trend moments above already use): at a 100 TB/day stream a
@@ -1892,15 +1879,13 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg, the +/-3-day trend window (7 daily totals ~ 2e20 at the
     # design point), and the per-dow seasonal sums below all accumulate
     # in decimal; bigint output casts mirror the oracle's HUGEINT sums.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): `det` feeds the per-dow seasonal agg
     # and the final join - 3 events scans per plan. No-op at fixture
     # scale (the r16 cheap-subtree lesson); at corpus scale the
     # calendar-bounded detrended series persists and the re-scans
     # collapse to one.
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
     ev_scan = load_table(spark, sf_dir, "events")
     d = (
         ev_scan
@@ -1935,8 +1920,8 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("det_micro"),
     )
-    det = persist_when_scaled(
-        det, _STATS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    det = caches.persist_when_scaled(
+        det, scan_splits(spark, sf_dir, "events"), dup=3
     )
     s = det.groupBy("dow").agg(
         F.sum(F.col("det_micro").cast("decimal(38,0)")).cast("bigint").alias("sd"),
@@ -2394,9 +2379,7 @@ def cuped_ab_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds both the theta moment reduction and the adjusted-mean pass -
     # without the persist the full events scan + md5 arm hash ran twice
     # (8 parquet scans in one plan; guide §5)
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
-    u = (
+    u = caches.persist(
         ev.crossJoin(F.broadcast(mx))
         .groupBy(
             "user_id",
@@ -2419,10 +2402,8 @@ def cuped_ab_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("bigint")
             .alias("x_micro"),
-        )
-        .persist()
+        ),
     )
-    _STATS_CACHE.append(u)
     m = u.agg(
         F.count("*").cast("bigint").alias("n"),
         # r12: cast INSIDE the sum - the all-users micro totals are
@@ -2600,7 +2581,7 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past int64 under the pinned ANSI mode; the
     # window sums stay decimal end-to-end like the oracle's HUGEINT
     # window sums (both only ever narrow into a double at the use site).
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persists (r17): the day-series `c` feeds s1/t1, sided
     # and the top row - 3 events scans per plan - and t1 itself (a
@@ -2608,8 +2589,6 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sided and the final union. No-ops at fixture scale (the r16
     # cheap-subtree lesson); at corpus scale the calendar-bounded
     # series persists and the re-scans collapse to one.
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
     ev_scan = load_table(spark, sf_dir, "events")
     d = (
         ev_scan
@@ -2636,8 +2615,8 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd).over(w_all).alias("tot"),
         F.count("*").over(w_all).alias("n"),
     )
-    c = persist_when_scaled(
-        c, _STATS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    c = caches.persist_when_scaled(
+        c, scan_splits(spark, sf_dir, "events"), dup=3
     )
 
     def gap_col():
@@ -2658,8 +2637,8 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("i").alias("i1"),
         F.col("gap").alias("gap1"),
     )
-    t1 = persist_when_scaled(
-        t1, _STATS_CACHE, scan_splits(spark, sf_dir, "events"), dup=3
+    t1 = caches.persist_when_scaled(
+        t1, scan_splits(spark, sf_dir, "events"), dup=3
     )
     sided = c.select("day", "x").crossJoin(F.broadcast(t1)).select(
         "day", "x", (F.col("day") <= F.col("split1")).alias("left_side"),
@@ -3008,7 +2987,7 @@ def chisq_residual_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hash_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     h = _ST_SH32.format(s="concat('sbias:', cast(event_id as string))")
     # Scale-gated persist (r17): `e` feeds the global moment agg and
@@ -3017,8 +2996,6 @@ def hash_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap-subtree lesson); at corpus scale the second md5 pass is
     # pure added CPU. Scale caveat: `e` is O(rows) (3 narrow columns) -
     # disk-backed, written once and read twice, which beats re-hashing.
-    while _STATS_CACHE:
-        _STATS_CACHE.pop().unpersist()
     ev_scan = load_table(spark, sf_dir, "events")
     e = ev_scan.select(
         "event_type",
@@ -3027,8 +3004,8 @@ def hash_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("vm"),
         (F.expr(h) % 16 == 0).alias("in_sample"),
     )
-    e = persist_when_scaled(
-        e, _STATS_CACHE, scan_splits(spark, sf_dir, "events"), dup=2
+    e = caches.persist_when_scaled(
+        e, scan_splits(spark, sf_dir, "events"), dup=2
     )
     d = F.col("vm").cast("decimal(38,0)")
     m = e.agg(

@@ -38,14 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import caches
 from ..functions import dsum, oracle_dsum
 from ..registry import query
-from ..caches import register_cache
 from ..tables import load_table
-
-# Gap relation persisted by the previous attribution_window_sweep call
-# when the scale gate engages (released on the next call; caches.py).
-_ATTR_CACHE = register_cache([])
 
 # ---------------------------------------------------------------------------
 # Time-series resample + gap fill: regularize each user's event stream onto
@@ -1115,12 +1111,10 @@ def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap-subtree lesson); at corpus scale the second asof join is a
     # full extra shuffle+sort, so the 2-column per-purchase gap
     # relation persists (disk-backed) once the input has real splits.
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
-    while _ATTR_CACHE:
-        _ATTR_CACHE.pop().unpersist()
-    g = persist_when_scaled(
-        g, _ATTR_CACHE, scan_splits(spark, sf_dir, "events"), dup=2
+    g = caches.persist_when_scaled(
+        g, scan_splits(spark, sf_dir, "events"), dup=2
     )
     t = g.agg(F.count("*").cast("bigint").alias("n_purchases"))
     wins = F.explode(

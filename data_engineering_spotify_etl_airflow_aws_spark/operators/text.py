@@ -22,14 +22,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import ORACLE_TOKENS, tokens
 from ..registry import query
 from ..tables import load_table
-
-# Token-stream relations persisted by the previous text query when the
-# scale gate engages (released on the next call; caches.py).
-_TEXT_CACHE: list[DataFrame] = register_cache([])
 
 # English-ish stopword set; the synthetic corpus is English-like tech text
 # for every lang label, so the ID signal is degenerate by construction -
@@ -737,7 +733,7 @@ _LO_TOP = 5
 def logodds_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     docs = load_table(spark, sf_dir, "documents")
     # Scale-gated persist (r17): `st` has 4 consumers, each re-running
@@ -746,15 +742,13 @@ def logodds_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated branches ride idle cores); at corpus scale 4x
     # re-tokenize is pure added CPU, so the bounded (source x vocab)
     # count grid persists once the input has real splits.
-    while _TEXT_CACHE:
-        _TEXT_CACHE.pop().unpersist()
     st = (
         docs.select("source", F.explode(tokens(F.col("text"))).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("y_si"))
     )
-    st = persist_when_scaled(
-        st, _TEXT_CACHE, scan_splits(spark, sf_dir, "documents"), dup=4
+    st = caches.persist_when_scaled(
+        st, scan_splits(spark, sf_dir, "documents"), dup=4
     )
     gt = st.groupBy("token").agg(F.sum("y_si").alias("y_i"))
     srct = st.groupBy("source").agg(F.sum("y_si").alias("n_s"))
@@ -849,7 +843,7 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_docs"),
         F.min("doc_id").alias("id0"),
     )
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     # Scale-gated persist (r17): two consumers re-run the full tokenize.
     # At fixture scale an unconditional persist LOST (r16 A/B min-of-3
@@ -859,8 +853,6 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # spills it to local disk once and reads it back twice, which beats
     # re-running the regex tokenizer but is the largest persist the gate
     # ever engages here; re-measure at a larger sf before relying on it.
-    while _TEXT_CACHE:
-        _TEXT_CACHE.pop().unpersist()
     tok = (
         docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
         .crossJoin(F.broadcast(meta))
@@ -875,8 +867,8 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token",
         )
     )
-    tok = persist_when_scaled(
-        tok, _TEXT_CACHE, scan_splits(spark, sf_dir, "documents"), dup=2
+    tok = caches.persist_when_scaled(
+        tok, scan_splits(spark, sf_dir, "documents"), dup=2
     )
     firsts = tok.groupBy("token").agg(F.min("bucket").alias("first_bucket"))
     vol = tok.groupBy("bucket").agg(F.count("*").alias("n_tokens"))
@@ -954,7 +946,7 @@ _PMI_TOP = 15
     """,
 )
 def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import persist_when_scaled, scan_splits
+    from ..tables import scan_splits
 
     docs = load_table(spark, sf_dir, "documents")
     # Scale-gated persists (r17): `tk` has 3 consumers (uni, bi, n_bi)
@@ -964,19 +956,17 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU, so the token arrays (O(corpus), disk-backed - the heaps
     # caveat) and the bounded vocab counts persist once the input has
     # real splits.
-    while _TEXT_CACHE:
-        _TEXT_CACHE.pop().unpersist()
     tk = docs.select(tokens(F.col("text")).alias("t"))
-    tk = persist_when_scaled(
-        tk, _TEXT_CACHE, scan_splits(spark, sf_dir, "documents"), dup=5
+    tk = caches.persist_when_scaled(
+        tk, scan_splits(spark, sf_dir, "documents"), dup=5
     )
     uni = (
         tk.select(F.explode("t").alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("c"))
     )
-    uni = persist_when_scaled(
-        uni, _TEXT_CACHE, scan_splits(spark, sf_dir, "documents"), dup=5
+    uni = caches.persist_when_scaled(
+        uni, scan_splits(spark, sf_dir, "documents"), dup=5
     )
     n_uni = uni.agg(F.sum("c").cast("bigint").alias("n"))
     bigrams = F.expr(

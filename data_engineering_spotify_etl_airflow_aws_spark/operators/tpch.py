@@ -43,13 +43,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import davg, dsum, oracle_davg, oracle_dsum
 from ..registry import query
 from ..tables import load_table
-
-# previous invocation's persisted Q11 per-part value relation
-_Q11_VAL_CACHE: list[DataFrame] = register_cache([])
 
 # Derived-partsupp CTE, shared verbatim by every partsupp-analog oracle.
 # min() of an IEEE division is order-independent; the floor quantization
@@ -491,11 +488,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s_suppkey")
     )
     ps = _derived_partsupp(spark, sf_dir)
-    # released on the next call or via caches.release_all() (the lazy
-    # plan forbids an in-function unpersist — filtering.py lifecycle)
-    while _Q11_VAL_CACHE:
-        _Q11_VAL_CACHE.pop().unpersist()
-    val = (
+    val = caches.persist(
         ps.join(supp, ps.ps_suppkey == supp.s_suppkey)
         .groupBy("ps_partkey")
         .agg(
@@ -511,10 +504,8 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("decimal(38,0)")
             .alias("value_micro")
-        )
-        .persist()
+        ),
     )
-    _Q11_VAL_CACHE.append(val)
     total = val.agg(
         (F.sum("value_micro").cast("string").cast("double") * F.lit(0.0001)).alias("threshold")
     )

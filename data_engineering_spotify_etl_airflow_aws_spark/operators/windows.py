@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..caches import register_cache
+from .. import caches
 from ..functions import dsum, oracle_dsum
 from ..registry import query
 from ..tables import load_table
@@ -655,10 +655,6 @@ _CM_D = 4  # hash rows
 _CM_W = 256  # buckets per row
 _CM_TOP = 20  # candidate heavy hitters = exact top-K tokens
 
-# previous invocation's persisted token-count base (released on next call
-# or via caches.release_all())
-_CM_COUNT_CACHE: list[DataFrame] = register_cache([])
-
 
 def _cm_bucket_spark(r: str, tok: str) -> str:
     from .dedup import _SPARK_H32
@@ -718,16 +714,12 @@ def cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
     # the token-count base feeds both the sketch build and the candidate
     # top-K; persisted so the tokenize+count pass (the corpus-sized cost)
-    # runs once — same lifecycle as the decontam gram base (filtering.py)
-    while _CM_COUNT_CACHE:
-        _CM_COUNT_CACHE.pop().unpersist()
-    counts = (
+    # runs once
+    counts = caches.persist(
         docs.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
-        .agg(F.count("*").alias("cnt"))
-        .persist()
+        .agg(F.count("*").alias("cnt")),
     )
-    _CM_COUNT_CACHE.append(counts)
     hrows = spark.range(_CM_D).select(F.col("id").alias("r"))
     cells = (
         counts.crossJoin(F.broadcast(hrows))
@@ -895,11 +887,6 @@ def _kmv_sketch_sql(h32: str) -> str:
     """
 
 
-# KMV sketch relations persisted by the previous kmv_user_overlap call
-# when the scale gate engages (released on the next call; caches.py).
-_KMV_CACHE: list[DataFrame] = register_cache([])
-
-
 def _register_kmv() -> None:
     from .dedup import _DUCK_H32, _SPARK_H32
 
@@ -945,7 +932,7 @@ def _register_kmv() -> None:
         """,
     )
     def kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..tables import persist_when_scaled, scan_splits
+        from ..tables import scan_splits
 
         ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
         # Scale-gated persist (r17): the sketch subtree (events scan +
@@ -955,8 +942,6 @@ def _register_kmv() -> None:
         # branches ride idle cores); at corpus scale the re-scans are
         # pure added I/O, so the tiny k-per-type sketch (and the distinct
         # type list) persist once the input has real splits.
-        while _KMV_CACHE:
-            _KMV_CACHE.pop().unpersist()
         uh = ev.select(
             "event_type", F.expr(h_spark).alias("h")
         ).distinct()
@@ -966,12 +951,12 @@ def _register_kmv() -> None:
             .where(F.col("rn") <= k)
             .drop("rn")
         )
-        sk = persist_when_scaled(
-            sk, _KMV_CACHE, scan_splits(spark, sf_dir, "events"), dup=9
+        sk = caches.persist_when_scaled(
+            sk, scan_splits(spark, sf_dir, "events"), dup=9
         )
         types = ev.select("event_type").distinct()
-        types = persist_when_scaled(
-            types, _KMV_CACHE, scan_splits(spark, sf_dir, "events"), dup=9
+        types = caches.persist_when_scaled(
+            types, scan_splits(spark, sf_dir, "events"), dup=9
         )
         tpairs = (
             types.select(F.col("event_type").alias("type_a"))

@@ -16,8 +16,11 @@ schema + order-insensitive value hash between Spark and DuckDB):
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from typing import TYPE_CHECKING
+
+from . import caches
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
@@ -29,10 +32,21 @@ ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` under ``name``. QUERIES holds a wrapper that first
+    releases the previous query's persisted relations (caches.py); the
+    decorator returns ``fn`` itself, so a direct call from another
+    operator keeps its caller's relations."""
+
     def deco(fn: QueryFn) -> QueryFn:
         if name in QUERIES:
             raise ValueError(f"duplicate query registration: {name}")
-        QUERIES[name] = fn
+
+        @functools.wraps(fn)
+        def scoped(*args, **kwargs):
+            caches.release_all()
+            return fn(*args, **kwargs)
+
+        QUERIES[name] = scoped
         if oracle is not None:
             ORACLES[name] = oracle
         return fn

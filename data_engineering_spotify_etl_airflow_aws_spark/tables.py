@@ -133,7 +133,7 @@ _SCAN_SPLITS_MEMO: dict[tuple, int] = {}
 def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     """Split count of a testdata table's scan, memoized per session.
 
-    The persist gate below needs the input's scan parallelism, but
+    The persist gate (caches.py) needs the input's scan parallelism, but
     computing it costs real driver time inside the gated query's timed
     window (measured r17: ~48 ms for .rdd.getNumPartitions() on an
     existing DataFrame, ~180 ms with a fresh load_table) - enough to
@@ -153,59 +153,7 @@ def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
     return _SCAN_SPLITS_MEMO[key]
 
 
-def persist_when_scaled(
-    df: DataFrame,
-    cache: list,
-    splits: int,
-    dup: int,
-    parts: int | None = None,
-) -> DataFrame:
-    """Persist a multiply-consumed derived relation ONLY when its input
-    is large enough that re-executing the duplicated subtree costs real
-    wall-clock (guide §2.4/§5, scale-gated like widen_small_scan).
-
-    Spark re-executes every reference to an unpersisted DataFrame, so a
-    subtree consumed ``dup`` times runs ``dup`` times per action. At
-    fixture scale that duplication is nearly FREE: the branches are
-    single-split columnar scans that execute concurrently on
-    otherwise-idle cores, while a persist serializes a materialization
-    barrier and replaces codegen-over-parquet reads with
-    InMemoryTableScan row iteration - measured as a consistent LOSS for
-    12 such persists in the r16 A/Bs (+0.06-0.55 s each, reverted). At
-    real corpus scale there is no idle capacity to hide the duplication
-    - every re-execution is pure added wall-clock and I/O - so the
-    persist wins.
-
-    Gate: engage when ``dup x splits >= session parallelism``, i.e.
-    when one concurrent execution of all duplicated branches would
-    already saturate the cores, so re-execution can no longer ride idle
-    capacity. ``splits`` is the source scan's split count - pass
-    ``scan_splits(spark, sf_dir, table)`` (memoized). Fixtures scan as
-    few splits, but not always one: under ``local[4]`` the sf0.1
-    lineitem (10.8 MB) scans as 3 splits, so on a low-core session a
-    gate with ``dup >= 2`` over lineitem does engage at bench scale.
-
-    The caller owns the release lifecycle (drain ``cache`` at query
-    entry, caches.py); this helper only appends when it persists.
-    SPARK_GRAFT_FORCE_SCALE_PERSIST=1 engages the gate unconditionally
-    (used by the forced-gate oracle-parity run and the unit tests; the
-    driver never sets it).
-    """
-    import os
-
-    from pyspark import StorageLevel
-
-    sess = df.sparkSession
-    target = parts or sess.sparkContext.defaultParallelism
-    forced = os.environ.get("SPARK_GRAFT_FORCE_SCALE_PERSIST", "") == "1"
-    if not forced and splits * max(dup, 1) < target:
-        return df
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    cache.append(out)
-    return out
-
-
-def widen_small_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
+def widen_small_scan(df: DataFrame) -> DataFrame:
     """Fan a small scan out to the session's parallelism before CPU-heavy
     per-row work (regex tokenization, shingling, n-gram building).
 
@@ -215,8 +163,7 @@ def widen_small_scan(df: DataFrame, parts: int | None = None) -> DataFrame:
     scan already has >= parallelism splits and this is a no-op, so the
     shuffle only exists in exactly the regime where it is free.
     """
-    sess = df.sparkSession
-    target = parts or sess.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

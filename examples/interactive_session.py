@@ -3,7 +3,9 @@
   1. batch analytics via the query registry,
   2. continuous auto-ingest (the Snowpipe AUTO_INGEST analog) driven and
      introspected with pipe_status() - SHOW PIPES / DESC PIPE,
-  3. cache lifecycle: persisted operator bases released in one call.
+  3. cache lifecycle: persisted operator relations are query-scoped -
+     building the next query through the registry releases them, and
+     caches.release_all() frees the last query's in one call.
 
 Run it directly (`python examples/interactive_session.py [sf_dir]`) or
 import and call main(spark, sf_dir) from a notebook/test with an
@@ -36,7 +38,8 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.001") -> dict:
     top = registry.QUERIES["q1_top_trending"](spark, sf_dir)
     out["q1_rows"] = top.count()
 
-    # a query that persists a shared base relation (released in step 3)
+    # a query that persists a shared base relation (kept until the next
+    # registry query is built, or released in step 3)
     out["lsh_rows"] = registry.QUERIES["minhash_lsh_near_dup"](
         spark, sf_dir
     ).count()
@@ -61,7 +64,9 @@ def main(spark, sf_dir: str = "/root/testdata/sf0.001") -> dict:
         q.stop()
         shutil.rmtree(work, ignore_errors=True)
 
-    # -- 3. executor memory back without waiting for session shutdown
+    # -- 3. executor memory back without building another query or
+    # waiting for session shutdown: the scope holds only the last
+    # registry query's relations (here minhash_lsh_near_dup's)
     caches.release_all()
     return out
 

@@ -395,9 +395,9 @@ def test_persist_when_scaled_gate_semantics(spark, monkeypatch):
     consistent losses there) and engage exactly when dup x input-splits
     reaches the session parallelism - plus unconditionally under the
     forced-gate env hook used by the oracle-parity forced run."""
+    from data_engineering_spotify_etl_airflow_aws_spark import caches
     from data_engineering_spotify_etl_airflow_aws_spark.tables import (
         load_table,
-        persist_when_scaled,
         scan_splits,
     )
 
@@ -412,31 +412,30 @@ def test_persist_when_scaled_gate_semantics(spark, monkeypatch):
     assert splits * 4 < target or target <= 4
 
     # fixture regime: gate off - passthrough, nothing persisted/cached
-    cache: list = []
+    caches.release_all()
     monkeypatch.delenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", raising=False)
-    out = persist_when_scaled(docs, cache, splits, dup=4)
-    assert out is docs and cache == []
+    out = caches.persist_when_scaled(docs, splits, dup=4)
+    assert out is docs and caches._SCOPE == []
     assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
 
-    # scale regime (modelled via the parts override): gate on - the
-    # relation is persisted, registered, and value-identical (persist()
-    # returns the same DataFrame object in PySpark, so the observable
-    # is the storage level + cache registration, not object identity)
+    # scale regime (modelled as an input already scanning at session
+    # parallelism): gate on - the relation is persisted, registered in
+    # the query scope, and value-identical (persist() returns the same
+    # DataFrame object in PySpark, so the observable is the storage
+    # level + scope registration, not object identity)
     baseline = sorted(map(tuple, docs.collect()))
-    engaged = persist_when_scaled(docs, cache, splits, dup=4, parts=2)
-    assert cache == [engaged]
+    engaged = caches.persist_when_scaled(docs, target, dup=4)
+    assert caches._SCOPE == [engaged]
     assert engaged.storageLevel.useMemory and engaged.storageLevel.useDisk
     assert sorted(map(tuple, engaged.collect())) == baseline
-    while cache:
-        cache.pop().unpersist()
+    caches.release_all()
 
     # forced-gate hook engages regardless of input splits
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", "1")
-    forced = persist_when_scaled(docs, cache, splits, dup=1)
-    assert cache == [forced]
+    forced = caches.persist_when_scaled(docs, splits, dup=1)
+    assert caches._SCOPE == [forced]
     assert forced.storageLevel.useMemory
-    while cache:
-        cache.pop().unpersist()
+    caches.release_all()
 
 
 # The call sites that gained the r17 scale-gated persist: the r16
