@@ -4,8 +4,10 @@ All helpers are pure pyspark.sql.functions compositions (JVM-side, codegen'd,
 no Python UDFs) so every operator built on them stays inside whole-stage
 codegen. The decimal-sum helpers exist for oracle determinism: summing
 doubles is order-dependent, so float measures are first cast to an exact
-DECIMAL, summed exactly, and converted back to double once - bit-identical
-in Spark and DuckDB regardless of partitioning.
+DECIMAL, summed exactly, and converted back to double once with correct
+rounding - natively in Spark, through VARCHAR in the DuckDB oracle twins
+(oracle_dsum, oracle_exact_double) - bit-identical in both engines
+regardless of partitioning.
 """
 
 from __future__ import annotations
@@ -42,40 +44,35 @@ def dsum(col: str | Column, scale: int = 2, alias: str | None = None) -> Column:
     pure IEEE ops both engines compute identically (see
     curation.label_centroids / _km_update / text.vocab_oov_rate).
 
-    CONVERSION CONVENTION (r14 finding, measured by the first sf1
-    parity sweep): once the sum's UNSCALED value crosses 2^53 (which
-    pricing_summary's scale-6 charge sum does exactly in the
-    sf0.1->sf1 decade, and any money sum does at 100 TB), the engines'
-    NATIVE decimal->double casts stop agreeing - DuckDB's came out one
-    ulp above the correctly-rounded value (the r6 int128->double
-    truncation family, now measured for DECIMAL too) while Spark's
-    JDK path happened to be correct there; neither native path is
-    specified correctly-rounded at every magnitude. Both sides
-    therefore take their STRING path, which is correctly rounded by
-    spec in both engines (Java Double.parseDouble / DuckDB's
-    VARCHAR->DOUBLE parser - the same hop oracle_exact_double uses for
-    integer moments). Value-identical below 2^53; exact above it. The
-    hop costs one tiny string per GROUP, nothing per row."""
+    CONVERSION: the exact sum's unscaled value crosses 2^53 at scale
+    (pricing_summary's scale-6 charge sum does in the sf0.1->sf1 decade;
+    any money sum does at 100 TB), so the one decimal->double conversion
+    must be correctly rounded on both engines. Spark's native cast is: on
+    JDK 17 Decimal.toDouble is BigDecimal.doubleValue, an exact (double)
+    long at scale 0, one exact-operand IEEE divide while |unscaled| <
+    2^52, and Double.parseDouble(toString()) otherwise
+    (tests/test_accumulator_overflow_behavior.py pins the equality with
+    the string path above 2^53). DuckDB's native DECIMAL->DOUBLE is not
+    (measured one ulp high), so oracle_dsum takes the VARCHAR hop."""
     c = F.col(col) if isinstance(col, str) else col
-    out = F.sum(c.cast(f"decimal(30,{scale})")).cast("string").cast("double")
+    out = F.sum(c.cast(f"decimal(30,{scale})")).cast("double")
     return out.alias(alias) if alias else out
 
 
 def davg(col: str | Column, scale: int = 2, alias: str | None = None) -> Column:
     """Order-independent mean: exact decimal sum / count, single IEEE divide.
-    Same quantization contract as dsum(): the mean of inputs rounded to
-    `scale` fractional digits."""
+    Same quantization and conversion contract as dsum(): the mean of
+    inputs rounded to `scale` fractional digits, the sum converted with
+    Spark's correctly rounded native cast (the oracle: VARCHAR hop)."""
     c = F.col(col) if isinstance(col, str) else col
-    out = (
-        F.sum(c.cast(f"decimal(30,{scale})")).cast("string").cast("double")
-        / F.count(c)
-    )
+    out = F.sum(c.cast(f"decimal(30,{scale})")).cast("double") / F.count(c)
     return out.alias(alias) if alias else out
 
 
 def oracle_dsum(expr: str, scale: int = 2) -> str:
-    """DuckDB SQL fragment matching dsum() - VARCHAR hop per the r14
-    conversion convention (see dsum docstring)."""
+    """DuckDB SQL fragment matching dsum(). The sum takes the VARCHAR hop
+    because DuckDB's native DECIMAL->DOUBLE is not correctly rounded
+    above 2^53 (see dsum docstring)."""
     return (
         f"CAST(CAST(CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS VARCHAR)"
         f" AS VARCHAR) AS DOUBLE)"

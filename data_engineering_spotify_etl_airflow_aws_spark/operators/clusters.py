@@ -249,13 +249,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # smaller still. That is < 2^53 by three orders of magnitude even at a
 # ~1e9-edge decade, so (a) the long sum cannot overflow, and (b) the
 # native long->double cast is exact and equals the oracle's HUGEINT->
-# VARCHAR->DOUBLE hop bit-for-bit (exact-int64 narrowings stay native
-# per the r15 conversion convention). This removes the r15 in-loop
-# string hop (+10.5% at sf0.1, evidence/ab_r15_string_hop.json) AND the
-# decimal aggregation over the edge-sized relation (VERDICT r15 ask #4).
-# The ORACLE keeps HUGEINT + VARCHAR hop unchanged - rank mass is
-# conserved at exactly 1 regardless of scale, so the bound is
-# scale-free and the two sides stay value-identical at every decade.
+# VARCHAR->DOUBLE conversion bit-for-bit. Summing in long also avoids a
+# decimal aggregation over the edge-sized relation. The ORACLE keeps
+# HUGEINT + the VARCHAR hop (DuckDB's native HUGEINT->DOUBLE is not
+# correctly rounded above 2^53) - rank mass is conserved at exactly 1
+# regardless of scale, so the bound is scale-free and the two sides
+# stay value-identical at every decade.
 _PR_DAMP = 0.85
 # the residual factor is computed ONCE here and interpolated into the
 # oracle as its decimal repr: a SQL engine folding (1.0 - 0.85) in
@@ -388,9 +387,8 @@ def _pr_iterate(und: DataFrame) -> DataFrame:
             # out-edge of a node carries the same long micro-unit, and
             # the long sum is exact in any order
             c_u = _pr_spark_micro(rank / F.col("outdeg"))
-            # exact-int64 narrowing: native long->double is correctly
-            # rounded and the value is < 2^53 (magnitude proof above),
-            # so no string hop
+            # native long->double is exact: the value is < 2^53
+            # (magnitude proof above)
             s_u = F.sum(c_u).cast("double") / F.lit(1e12)
             ranks = (
                 edge_ranks.groupBy("dst")
@@ -568,7 +566,7 @@ def supplier_recs_fof(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             F.col("n_connectors").cast("bigint").alias("n_connectors"),
             F.round(
-                F.col("score_p").cast("string").cast("double") / 1_000_000_000_000, 6
+                F.col("score_p").cast("double") / 1_000_000_000_000, 6
             ).alias("aa_score"),
         )
     )
@@ -828,11 +826,11 @@ def degree_powerlaw_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)")).alias("sxx"),
     )
     slope = (
-        F.col("n").cast("double") * F.col("sxy").cast("string").cast("double")
-        - F.col("sx").cast("string").cast("double") * F.col("sy").cast("string").cast("double")
+        F.col("n").cast("double") * F.col("sxy").cast("double")
+        - F.col("sx").cast("double") * F.col("sy").cast("double")
     ) / (
-        F.col("n").cast("double") * F.col("sxx").cast("string").cast("double")
-        - F.col("sx").cast("string").cast("double") * F.col("sx").cast("string").cast("double")
+        F.col("n").cast("double") * F.col("sxx").cast("double")
+        - F.col("sx").cast("double") * F.col("sx").cast("double")
     )
     return m.select(
         "n",
@@ -950,15 +948,10 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(dyd * F.col("dy")).alias("syy"),
     )
     nd = F.col("n").cast("double")
-    cov = F.col("sxy").cast("string").cast("double") - F.col("sx").cast("string").cast("double") * F.col(
-        "sy"
-    ).cast("string").cast("double") / nd
-    vx = F.col("sxx").cast("string").cast("double") - F.col("sx").cast("string").cast("double") * F.col(
-        "sx"
-    ).cast("string").cast("double") / nd
-    vy = F.col("syy").cast("string").cast("double") - F.col("sy").cast("string").cast("double") * F.col(
-        "sy"
-    ).cast("string").cast("double") / nd
+    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
+    cov = F.col("sxy").cast("double") - sx * sy / nd
+    vx = F.col("sxx").cast("double") - sx * sx / nd
+    vy = F.col("syy").cast("double") - sy * sy / nd
     r = cov / F.sqrt(vx * vy)
     return m.select(
         "n",

@@ -157,7 +157,7 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("label", "dim")
         .agg(
             (
-                F.sum(u9.cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(u9.cast("decimal(38,0)")).cast("double")
                 / (F.lit(1_000_000_000.0) * F.count("*"))
             ).alias("centroid"),
             F.count("*").alias("n_vecs"),
@@ -502,7 +502,7 @@ def _km_update(assigned: DataFrame) -> DataFrame:
         .groupBy("cid", "dim")
         .agg(
             (
-                F.sum(u9.cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(u9.cast("decimal(38,0)")).cast("double")
                 / (F.lit(1_000_000_000.0) * F.count("*"))
             ).alias("mv")
         )
@@ -1177,7 +1177,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_toks").cast("bigint").alias("n_tokens"),
         F.sum(F.col("qm").cast("decimal(38,0)")).cast("bigint").alias("q_sum"),
     )
-    mean_q = F.col("q_sum").cast("string").cast("double") / (
+    mean_q = F.col("q_sum").cast("double") / (
         F.lit(1_000_000.0) * F.col("n_docs")
     )
     # r12 review find (the only double-accumulating fold left in the
@@ -1205,7 +1205,7 @@ def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             1_000_000_000
         )
 
-    share = F.col("w_pico").cast("double") / F.col("w_tot").cast("string").cast("double")
+    share = F.col("w_pico").cast("double") / F.col("w_tot").cast("double")
     return w.crossJoin(F.broadcast(t)).select(
         "source",
         "n_docs",

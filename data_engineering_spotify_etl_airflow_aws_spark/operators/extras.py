@@ -558,7 +558,7 @@ def rolling_value_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_micros(F.col("ts")))
         .rangeBetween(-7 * 86_400 * 1_000_000, 0)
     )
-    dec_sum = F.sum(F.col("value").cast("decimal(30,6)")).over(w).cast("string").cast("double")
+    dec_sum = F.sum(F.col("value").cast("decimal(30,6)")).over(w).cast("double")
     n = F.count("*").over(w)
     # no output sort: full-table projection, driver hash is order-insensitive
     return ev.select(
@@ -595,7 +595,7 @@ def orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     w = W.partitionBy("o_custkey")
     cust_avg = (
-        F.sum(F.col("o_totalprice").cast("decimal(30,2)")).over(w).cast("string").cast("double")
+        F.sum(F.col("o_totalprice").cast("decimal(30,2)")).over(w).cast("double")
         / F.count("*").over(w)
     )
     # no output sort: ~half the fact table, driver hash is order-insensitive
@@ -906,7 +906,7 @@ def incremental_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.sum("n").alias("n_orders"),
-            F.sum("s").cast("string").cast("double").alias("sum_price"),
+            F.sum("s").cast("double").alias("sum_price"),
             F.max("d").alias("latest_order_date"),
         )
         # no output sort: driver hash is order-insensitive (r5 rule)
@@ -975,10 +975,10 @@ def value_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and HUGEINT->DOUBLE round-to-nearest identically.
         F.sum(F.col("u6").cast("decimal(38,0)")).alias("su"),
         F.sum(F.col("u6").cast("decimal(38,0)") * F.col("u6"))
-        .cast("string").cast("double")
+        .cast("double")
         .alias("sq"),
     )
-    mean = F.col("su").cast("string").cast("double") / F.col("n")
+    mean = F.col("su").cast("double") / F.col("n")
     zv = (F.col("u6").cast("double") - mean) / F.sqrt(
         F.col("sq") / F.col("n") - mean * mean
     )
@@ -1582,12 +1582,12 @@ def daily_value_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         F.sum(pxd).alias("sx"),
         F.sum(pyd).alias("sy"),
-        F.sum(pxd * F.col("px")).cast("string").cast("double").alias("sxx"),
-        F.sum(pyd * F.col("py")).cast("string").cast("double").alias("syy"),
-        F.sum(pxd * F.col("py")).cast("string").cast("double").alias("sxy"),
+        F.sum(pxd * F.col("px")).cast("double").alias("sxx"),
+        F.sum(pyd * F.col("py")).cast("double").alias("syy"),
+        F.sum(pxd * F.col("py")).cast("double").alias("sxy"),
     )
     n = F.col("n")
-    sxd, syd = F.col("sx").cast("string").cast("double"), F.col("sy").cast("string").cast("double")
+    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
     return m.select(
         n.alias("n_days"),
         F.round(
@@ -2746,10 +2746,8 @@ def retractable_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merged.select(
         "o_orderpriority",
         "n_orders",
-        F.col("s").cast("string").cast("double").alias("sum_price"),
-        (F.col("s").cast("string").cast("double") / F.col("n_orders")).cast("string").cast("double").alias(
-            "avg_price"
-        ),
+        F.col("s").cast("double").alias("sum_price"),
+        (F.col("s").cast("double") / F.col("n_orders")).alias("avg_price"),
     )
 
 
@@ -2927,7 +2925,7 @@ def topk_plus_other_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return lab.groupBy("n_name", "part_label").agg(
         F.count("*").alias("n_parts"),
-        F.sum("r").cast("string").cast("double").alias("revenue"),
+        F.sum("r").cast("double").alias("revenue"),
     )
 
 
@@ -3606,7 +3604,7 @@ def order_header_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_abs_diff"
             ),
             (
-                F.sum(F.col("adiff").cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(F.col("adiff").cast("decimal(38,0)")).cast("double")
                 / F.lit(1_000_000)
             ).alias("total_abs_diff"),
         )
@@ -3804,11 +3802,11 @@ def discount_elasticity_profile(
         .agg(
             F.count("*").alias("n_lines"),
             (
-                F.sum(qty_micro.cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(qty_micro.cast("decimal(38,0)")).cast("double")
                 / (F.lit(1_000_000.0) * F.count("*"))
             ).alias("avg_quantity"),
             (
-                F.sum(rev_micro.cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(rev_micro.cast("decimal(38,0)")).cast("double")
                 / F.lit(1_000_000)
             ).alias("revenue"),
         )
@@ -4028,20 +4026,18 @@ def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = F.lit(1_000_000)
     return eff.agg(
-        (F.sum(F.col("delta").cast("decimal(38,0)")).cast("string").cast("double") / m).alias(
-            "total_delta"
-        ),
+        (F.sum(F.col("delta").cast("decimal(38,0)")).cast("double") / m).alias("total_delta"),
         (
-            F.sum(F.col("price_eff").cast("decimal(38,0)")).cast("string").cast("double") / m
+            F.sum(F.col("price_eff").cast("decimal(38,0)")).cast("double") / m
         ).alias("price_effect"),
         (
-            F.sum(F.col("vol_eff").cast("decimal(38,0)")).cast("string").cast("double") / m
+            F.sum(F.col("vol_eff").cast("decimal(38,0)")).cast("double") / m
         ).alias("volume_effect"),
         (
             F.sum(
                 F.when(F.col("kind") == "new", F.col("delta")).otherwise(0)
                 .cast("decimal(38,0)")
-            ).cast("string").cast("double")
+            ).cast("double")
             / m
         ).alias("new_effect"),
         (
@@ -4049,7 +4045,7 @@ def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("kind") == "discontinued", F.col("delta"))
                 .otherwise(0)
                 .cast("decimal(38,0)")
-            ).cast("string").cast("double")
+            ).cast("double")
             / m
         ).alias("discontinued_effect"),
         F.count(F.when(F.col("kind") == "common", 1))
@@ -4244,7 +4240,7 @@ def ltv_by_order_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_orders"),
         F.count_distinct("o_custkey").cast("bigint").alias("n_customers"),
         (
-            F.sum(F.col("v_micro").cast("decimal(38,0)")).cast("string").cast("double")
+            F.sum(F.col("v_micro").cast("decimal(38,0)")).cast("double")
             / (F.lit(1_000_000.0) * F.count("*"))
         ).alias("avg_order_value"),
     )
@@ -4505,7 +4501,7 @@ def time_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             (g("y") + g("q") + g("m")).alias("agg_level"),
             F.count("*").alias("n_lines"),
             (
-                F.sum(F.col("rev_micro").cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(F.col("rev_micro").cast("decimal(38,0)")).cast("double")
                 / F.lit(1_000_000)
             ).alias("revenue"),
         )
@@ -4567,7 +4563,7 @@ def return_rate_by_brand(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(
                     F.when(ret, F.col("rev_micro")).otherwise(0)
                     .cast("decimal(38,0)")
-                ).cast("string").cast("double")
+                ).cast("double")
                 / F.lit(1_000_000)
             ).alias("returned_revenue"),
         )
@@ -4967,7 +4963,7 @@ def region_flow_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_lines"),
             (
-                F.sum(F.col("rev_micro").cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(F.col("rev_micro").cast("decimal(38,0)")).cast("double")
                 / F.lit(1_000_000)
             ).alias("revenue"),
         )

@@ -657,7 +657,7 @@ def char_entropy_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(term_pico.cast("decimal(38,0)")).cast("bigint").alias("s_pico"),
     )
     h_raw = F.log(F.col("n_chars_tot").cast("double")) - (
-        F.col("s_pico").cast("string").cast("double") / F.lit(1_000_000_000_000)
+        F.col("s_pico").cast("double") / F.lit(1_000_000_000_000)
     ) / F.col("n_chars_tot").cast("double")
     # quantize the post-ln chain (ln differs at the last ulp between
     # engines - the established quantize-after-ln contract)
@@ -796,9 +796,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reach ~3e10 (tf 1e3 x idf 28 x 1e6), whose raw-bigint square
         # wraps; the old cast applied after the wrap.
         F.sqrt(
-            F.sum(F.col("wm").cast("decimal(38,0)") * F.col("wm")).cast(
-                "string"
-            ).cast("double")
+            F.sum(F.col("wm").cast("decimal(38,0)") * F.col("wm")).cast("double")
         ).alias("nm")
     )
     a, b = w.alias("a"), w.alias("b")
@@ -826,7 +824,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
             F.floor(
-                F.col("dot").cast("string").cast("double")
+                F.col("dot").cast("double")
                 / (F.col("na") * F.col("nb"))
                 * F.lit(1_000_000_000)
                 + F.lit(0.5)
@@ -935,15 +933,10 @@ def length_quality_correlation(
         F.sum(yd38 * F.col("y")).alias("syy"),
     )
     nd = F.col("n").cast("double")
-    cov = F.col("sxy").cast("string").cast("double") - F.col("sx").cast("string").cast("double") * F.col(
-        "sy"
-    ).cast("string").cast("double") / nd
-    vx = F.col("sxx").cast("string").cast("double") - F.col("sx").cast("string").cast("double") * F.col(
-        "sx"
-    ).cast("string").cast("double") / nd
-    vy = F.col("syy").cast("string").cast("double") - F.col("sy").cast("string").cast("double") * F.col(
-        "sy"
-    ).cast("string").cast("double") / nd
+    sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
+    cov = F.col("sxy").cast("double") - sx * sy / nd
+    vx = F.col("sxx").cast("double") - sx * sx / nd
+    vy = F.col("syy").cast("double") - sy * sy / nd
     return m.select(
         "n",
         F.floor(cov / F.sqrt(vx * vy) * F.lit(1_000_000) + F.lit(0.5))

@@ -313,7 +313,7 @@ def gini_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         "n_customers",
         "total_cents",
-        F.round(num.cast("string").cast("double") / den.cast("string").cast("double"), 6).alias("gini"),
+        F.round(num.cast("double") / den.cast("double"), 6).alias("gini"),
     )
 
 
@@ -824,9 +824,7 @@ def auc_click_propensity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     auc = (
         F.col("pos_rank2") - F.col("n_pos") * (F.col("n_pos") + F.lit(1))
-    ).cast("string").cast("double") / (F.lit(2) * F.col("n_pos") * F.col("n_neg")).cast(
-        "double"
-    )
+    ).cast("double") / (F.lit(2) * F.col("n_pos") * F.col("n_neg")).cast("double")
     return m.select("n_pos", "n_neg", F.round(auc, 6).alias("auc"))
 
 
@@ -1008,14 +1006,12 @@ def hhi_supplier_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sum_sq"),
         )
     )
-    total_d = F.col("total_rev_u6").cast("string").cast("double")
+    total_d = F.col("total_rev_u6").cast("double")
     return m.select(
         "s_nationkey",
         "n_suppliers",
         "total_rev_u6",
-        F.round(F.col("sum_sq").cast("string").cast("double") / (total_d * total_d), 6).alias(
-            "hhi"
-        ),
+        F.round(F.col("sum_sq").cast("double") / (total_d * total_d), 6).alias("hhi"),
     )
 
 
@@ -1476,12 +1472,12 @@ def rollup_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nation",
         "rev_u6",
         (
-            F.col("rev_u6").cast("string").cast("double")
-            / F.sum(rev_dec).over(wreg).cast("string").cast("double")
+            F.col("rev_u6").cast("double")
+            / F.sum(rev_dec).over(wreg).cast("double")
         ).alias("share_of_region"),
         (
-            F.sum(rev_dec).over(wreg).cast("string").cast("double")
-            / F.sum(rev_dec).over(wall).cast("string").cast("double")
+            F.sum(rev_dec).over(wreg).cast("double")
+            / F.sum(rev_dec).over(wall).cast("double")
         ).alias("region_share_of_total"),
     )
 

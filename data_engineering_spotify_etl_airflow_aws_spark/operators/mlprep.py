@@ -656,7 +656,7 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.round(
-            F.sum(F.col("avg_u").cast("decimal(38,0)")).cast("string").cast("double")
+            F.sum(F.col("avg_u").cast("decimal(38,0)")).cast("double")
             / F.count("*")
             / 1_000_000,
             6,
@@ -770,7 +770,7 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 F.col("n").cast("decimal(38,0)")
                                 * F.col(f"s{i}_{j}")
                                 - F.col(f"s{i}") * F.col(f"s{j}")
-                            ).cast("string").cast("double")
+                            ).cast("double")
                             / den
                             / F.lit(1e18)
                         ).alias("cov"),
@@ -799,9 +799,10 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # projection chained.
 #
 # Determinism: covariance cells convert from exact integer moments
-# exactly as embedding_covariance_matrix (VARCHAR-hop cast); every later
-# sum-of-8-products is written left-associated in BOTH engines, so the
-# IEEE sequence is identical; sqrt/divisions are single ops.
+# exactly as embedding_covariance_matrix (one correctly rounded cast);
+# every later sum-of-8-products is written left-associated in BOTH
+# engines, so the IEEE sequence is identical; sqrt/divisions are single
+# ops.
 @query("pca_power_iteration")
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..tables import widen_small_scan
@@ -841,7 +842,7 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.col("n").cast("decimal(38,0)") * F.col(f"s{a}_{b}")
                 - F.col(f"s{a}") * F.col(f"s{b}")
-            ).cast("string").cast("double")
+            ).cast("double")
             / den
             / F.lit(1e18)
         )

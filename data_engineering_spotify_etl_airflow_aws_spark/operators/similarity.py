@@ -669,9 +669,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         vecs.groupBy("dim")
         .agg(
-            (F.sum(micro).cast("string").cast("double") / (F.lit(1e9) * F.count("*"))).alias(
-                "dim_mean"
-            ),
+            (F.sum(micro).cast("double") / (F.lit(1e9) * F.count("*"))).alias("dim_mean"),
             F.min("val").alias("dim_min"),
             F.max("val").alias("dim_max"),
             F.count("*").alias("n_vals"),
@@ -1408,10 +1406,10 @@ def matryoshka_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # micro-unit contract, then RE-QUANTIZE (floor(mv*1e9+0.5) - identical
 # IEEE both engines) so every cross-dim reduction (dot, norms, L2) is an
 # EXACT integer sum - a direct sum of per-dim double products would be
-# partition-order-dependent. Exact integers convert once through the
-# VARCHAR-hop cast (moments exceed 2^53), then identical sqrt/division
-# sequences. The argmax dimension rides the (|shift| DESC, dim) total
-# order.
+# partition-order-dependent. Exact integers convert once to double with
+# correct rounding (moments exceed 2^53: native on Spark, VARCHAR hop on
+# the oracle), then identical sqrt/division sequences. The argmax
+# dimension rides the (|shift| DESC, dim) total order.
 #
 # Scale notes (100 TB): posexplode -> ONE (half, dim) shuffle with
 # map-side partials (no vector crosses the wire whole); everything after
@@ -1478,7 +1476,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = pe.groupBy("half", "dim").agg(
         F.count("*").alias("n"),
         (
-            F.sum(u9).cast("string").cast("double")
+            F.sum(u9).cast("double")
             / (F.lit(1_000_000_000.0) * F.count("*"))
         ).alias("mv"),
     )
@@ -1535,13 +1533,13 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_a",
         "n_b",
         (
-            F.col("sxy").cast("string").cast("double")
+            F.col("sxy").cast("double")
             / (
-                F.sqrt(F.col("sxx").cast("string").cast("double"))
-                * F.sqrt(F.col("syy").cast("string").cast("double"))
+                F.sqrt(F.col("sxx").cast("double"))
+                * F.sqrt(F.col("syy").cast("double"))
             )
         ).alias("cos_centroids"),
-        (F.sqrt(F.col("sd2").cast("string").cast("double")) / F.lit(1e9)).alias(
+        (F.sqrt(F.col("sd2").cast("double")) / F.lit(1e9)).alias(
             "l2_shift"
         ),
         F.col("dim").alias("max_shift_dim"),
@@ -1637,7 +1635,7 @@ def simplified_silhouette_by_label(
                     F.floor(F.col("val") * F.lit(1e9) + F.lit(0.5)).cast(
                         "decimal(38,0)"
                     )
-                ).cast("string").cast("double")
+                ).cast("double")
                 / (F.lit(1000000000.0) * F.count("*"))
             ).alias("c")
         )
@@ -1682,7 +1680,7 @@ def simplified_silhouette_by_label(
         .agg(
             F.count("*").cast("bigint").alias("n_vecs"),
             (
-                F.sum("s9").cast("string").cast("double")
+                F.sum("s9").cast("double")
                 / (F.lit(1000000000.0) * F.count("*"))
             ).alias("mean_silhouette"),
             F.count(F.when(F.col("s9") < 0, 1))
@@ -1828,7 +1826,7 @@ def embedding_anisotropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.agg(
         F.count("*").cast("bigint").alias("n_pairs"),
         (
-            F.sum(F.col("cos_nano").cast("decimal(38,0)")).cast("string").cast("double")
+            F.sum(F.col("cos_nano").cast("decimal(38,0)")).cast("double")
             / (F.lit(1_000_000_000.0) * F.count("*"))
         ).alias("mean_cosine"),
         F.count(F.when(F.col("cos_nano") > 500_000_000, 1))

@@ -133,15 +133,15 @@ def autocorr_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # the use site equals the oracle's BIGINT->double.
                 F.sum(vd).alias("sx"),
                 F.sum(ld).alias("sy"),
-                F.sum(vd * F.col("v")).cast("string").cast("double").alias("sxx"),
-                F.sum(ld * F.col(col)).cast("string").cast("double").alias("syy"),
-                F.sum(vd * F.col(col)).cast("string").cast("double").alias("sxy"),
+                F.sum(vd * F.col("v")).cast("double").alias("sxx"),
+                F.sum(ld * F.col(col)).cast("double").alias("syy"),
+                F.sum(vd * F.col(col)).cast("double").alias("sxy"),
             )
         )
 
     m = moments("l1", 1).unionByName(moments("l7", 7))
     n = F.col("n")
-    sxd, syd = F.col("sx").cast("string").cast("double"), F.col("sy").cast("string").cast("double")
+    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
     return m.select(
         "lag_days",
         n.alias("n_pairs"),
@@ -214,10 +214,10 @@ def seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_pairs"),
             F.round(
-                F.sum(F.abs(diff)).cast("string").cast("double") / F.count("*") / 1_000_000, 6
+                F.sum(F.abs(diff)).cast("double") / F.count("*") / 1_000_000, 6
             ).alias("mae_value"),
             F.round(
-                F.sum(diff).cast("string").cast("double") / F.count("*") / 1_000_000, 6
+                F.sum(diff).cast("double") / F.count("*") / 1_000_000, 6
             ).alias("bias_value"),
         )
     )
@@ -297,7 +297,7 @@ def winsorized_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("lo").cast("bigint").alias("n_clamped_low"),
             F.sum("hi").cast("bigint").alias("n_clamped_high"),
             F.round(
-                F.sum(F.col("c20").cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(F.col("c20").cast("decimal(38,0)")).cast("double")
                 / F.count("*")
                 / 20_000_000,
                 6,
@@ -381,7 +381,7 @@ def target_encoding_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fold",
         F.col("cnt").cast("bigint").alias("n_rows"),
         F.round(
-            (F.sum("s").over(wseg) - F.col("s")).cast("string").cast("double")
+            (F.sum("s").over(wseg) - F.col("s")).cast("double")
             / (F.sum("cnt").over(wseg) - F.col("cnt"))
             / 100,
             6,
@@ -463,11 +463,11 @@ def skew_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             * nd
             * (cd * F.col("cum_n_prev") - F.col("cum_s_prev"))
         )
-        .cast("string").cast("double")
+        .cast("double")
         .alias("pair_sum"),
     )
     nk = F.col("n_keys").cast("double")
-    no = F.col("n_orders").cast("string").cast("double")
+    no = F.col("n_orders").cast("double")
     return m.select(
         "n_keys",
         "n_orders",
@@ -610,12 +610,12 @@ def daily_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
         # r12: the value-series total stays decimal (internal moment; a
         # year of 100 TB days crosses int64) - see autocorr_daily_value.
         F.sum(vd).alias("sy"),
-        F.sum(xd * F.col("x")).cast("string").cast("double").alias("sxx"),
-        F.sum(vd * F.col("v")).cast("string").cast("double").alias("syy"),
-        F.sum(xd * F.col("v")).cast("string").cast("double").alias("sxy"),
+        F.sum(xd * F.col("x")).cast("double").alias("sxx"),
+        F.sum(vd * F.col("v")).cast("double").alias("syy"),
+        F.sum(xd * F.col("v")).cast("double").alias("sxy"),
     )
     n = F.col("n")
-    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("string").cast("double")
+    sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")
     cov = n * F.col("sxy") - sxd * F.col("sy")
     varx = n * F.col("sxx") - sxd * F.col("sx")
     vary = n * F.col("syy") - syd * F.col("sy")
@@ -691,7 +691,7 @@ def cusum_changepoint_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("day").alias("change_day"),
             F.col("n").cast("bigint").alias("n_days"),
             F.round(
-                F.abs(F.col("c")).cast("string").cast("double") / F.col("n") / 1_000_000, 6
+                F.abs(F.col("c")).cast("double") / F.col("n") / 1_000_000, 6
             ).alias("max_cusum_value"),
         )
     )
@@ -745,7 +745,7 @@ def dow_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow_iso",
         F.col("n_events").cast("bigint").alias("n_events"),
         F.round(
-            F.col("s").cast("string").cast("double") / F.col("n_events") / 1_000_000, 6
+            F.col("s").cast("double") / F.col("n_events") / 1_000_000, 6
         ).alias("mean_value"),
         F.round(
             F.col("n_events").cast("double") / F.sum("n_events").over(wtype), 6
@@ -937,10 +937,10 @@ def dow_adjusted_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n"),
         # r12: per-(type,dow) series total stays decimal (internal).
         F.sum(vd).alias("s"),
-        F.sum(vd * F.col("v")).cast("string").cast("double").alias("sxx"),
+        F.sum(vd * F.col("v")).cast("double").alias("sxx"),
     )
-    z = (F.col("n") * F.col("v").cast("string").cast("double") - F.col("s")) / F.sqrt(
-        F.col("n") * F.col("sxx") - F.col("s").cast("string").cast("double") * F.col("s")
+    z = (F.col("n") * F.col("v").cast("double") - F.col("s")) / F.sqrt(
+        F.col("n") * F.col("sxx") - F.col("s").cast("double") * F.col("s")
     )
     return (
         daily.join(F.broadcast(m), ["event_type", "dow_iso"])
@@ -948,7 +948,7 @@ def dow_adjusted_anomaly_days(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "day",
-            F.round(F.col("v").cast("string").cast("double") / 1_000_000, 6).alias(
+            F.round(F.col("v").cast("double") / 1_000_000, 6).alias(
                 "day_value"
             ),
             F.round(z, 6).alias("z_value"),
@@ -1316,7 +1316,7 @@ def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expected_u6",
         "chi_term_u6",
         (
-            F.col("total_u6").cast("string").cast("double") / F.lit(1_000_000).cast("double")
+            F.col("total_u6").cast("double") / F.lit(1_000_000).cast("double")
         ).alias("chi2"),
         ((F.col("nl") - 1) * (F.col("ns") - 1)).alias("dof"),
     )
@@ -1386,14 +1386,14 @@ def user_value_trend_slopes(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("sxy"),
     )
     n38 = F.col("n_events").cast("decimal(38,0)")
-    num = (n38 * F.col("sxy") - F.col("sx") * F.col("sy")).cast("string").cast("double")
+    num = (n38 * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
     den_exact = n38 * F.col("sxx") - F.col("sx") * F.col("sx")
     return (
         m.where(den_exact != F.lit(0))
         .select(
             "user_id",
             "n_events",
-            (num / den_exact.cast("string").cast("double") / F.lit(1e6)).alias(
+            (num / den_exact.cast("double") / F.lit(1e6)).alias(
                 "slope_per_day"
             ),
         )
@@ -1605,7 +1605,7 @@ def bootstrap_ci_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     pt = e.agg(
         F.count("*").alias("n_events"),
         (
-            F.sum(F.col("y6").cast("decimal(38,0)")).cast("string").cast("double")
+            F.sum(F.col("y6").cast("decimal(38,0)")).cast("double")
             / F.count("*")
             / F.lit(1e6)
         ).alias("point_mean"),
@@ -1643,7 +1643,7 @@ def bootstrap_ci_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "b",
             (
-                F.col("swy").cast("string").cast("double")
+                F.col("swy").cast("double")
                 / F.col("sw").cast("double")
                 / F.lit(1e6)
             ).alias("mean_b"),
@@ -1794,7 +1794,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ewma"),
     )
     var = (
-        F.col("sxx").cast("string").cast("double")
+        F.col("sxx").cast("double")
         - F.col("sx").cast("double")
         * F.col("sx").cast("double")
         / F.col("n_days").cast("double")
@@ -1905,7 +1905,7 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "x_micro",
         (
-            F.sum(F.col("x_micro").cast("decimal(38,0)")).over(w).cast("string").cast("double")
+            F.sum(F.col("x_micro").cast("decimal(38,0)")).over(w).cast("double")
             / F.count("*").over(w).cast("double")
         ).alias("trend_micro"),
     )
@@ -1915,7 +1915,7 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "trend_micro",
         (F.weekday("day") + F.lit(1)).alias("dow"),
         F.floor(
-            F.col("x_micro").cast("string").cast("double") - F.col("trend_micro") + F.lit(0.5)
+            F.col("x_micro").cast("double") - F.col("trend_micro") + F.lit(0.5)
         )
         .cast("bigint")
         .alias("det_micro"),
@@ -1932,15 +1932,15 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nd").cast("bigint").alias("gn"),
     )
     seasonal = (
-        F.col("sd").cast("string").cast("double") / F.col("nd").cast("double")
-        - F.col("gs").cast("string").cast("double") / F.col("gn").cast("double")
+        F.col("sd").cast("double") / F.col("nd").cast("double")
+        - F.col("gs").cast("double") / F.col("gn").cast("double")
     )
     return (
         det.join(F.broadcast(s), "dow")
         .crossJoin(F.broadcast(g))
         .select(
             "day",
-            (F.col("x_micro").cast("string").cast("double") / F.lit(1_000_000)).alias(
+            (F.col("x_micro").cast("double") / F.lit(1_000_000)).alias(
                 "value_total"
             ),
             # floor(x + 0.5)/1e6, not round(,6): round() half-boundary
@@ -1954,7 +1954,7 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             (
                 F.floor(
-                    F.col("x_micro").cast("string").cast("double")
+                    F.col("x_micro").cast("double")
                     - F.col("trend_micro")
                     - seasonal
                     + F.lit(0.5)
@@ -2034,7 +2034,7 @@ def diurnal_circular_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("s_p").cast("decimal(38,0)")).cast("bigint").alias("ss"),
         F.sum(F.col("c_p").cast("decimal(38,0)")).cast("bigint").alias("cc"),
     )
-    ang = F.atan2(F.col("ss").cast("string").cast("double"), F.col("cc").cast("string").cast("double"))
+    ang = F.atan2(F.col("ss").cast("double"), F.col("cc").cast("double"))
     mean_hour = (
         F.floor(
             ((ang + two_pi) % two_pi) / two_pi * 24 * F.lit(1_000_000_000)
@@ -2045,8 +2045,8 @@ def diurnal_circular_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = (
         F.floor(
             F.sqrt(
-                F.col("ss").cast("string").cast("double") * F.col("ss").cast("string").cast("double")
-                + F.col("cc").cast("string").cast("double") * F.col("cc").cast("string").cast("double")
+                F.col("ss").cast("double") * F.col("ss").cast("double")
+                + F.col("cc").cast("double") * F.col("cc").cast("double")
             )
             / (F.lit(1_000_000_000_000.0) * F.col("n").cast("double"))
             * F.lit(1_000_000_000)
@@ -2137,7 +2137,7 @@ def weighted_median_price_by_brand(
         F.min(
             F.when(2 * F.col("cum") >= F.col("tot"), F.col("p_retailprice"))
         )
-        .cast("string").cast("double")
+        .cast("double")
         .alias("weighted_median_price"),
         F.max("tot").cast("bigint").alias("total_qty_micro"),
         F.count("*").cast("bigint").alias("n_parts"),
@@ -2424,11 +2424,11 @@ def cuped_ab_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nd = F.col("n").cast("double")
     theta = (
-        F.col("sxy").cast("string").cast("double")
-        - F.col("sx").cast("string").cast("double") * F.col("sy").cast("string").cast("double") / nd
+        F.col("sxy").cast("double")
+        - F.col("sx").cast("double") * F.col("sy").cast("double") / nd
     ) / (
-        F.col("sxx").cast("string").cast("double")
-        - F.col("sx").cast("string").cast("double") * F.col("sx").cast("string").cast("double") / nd
+        F.col("sxx").cast("double")
+        - F.col("sx").cast("double") * F.col("sx").cast("double") / nd
     )
     th = m.select("n", "sx", theta.alias("theta"))
     g = (
@@ -2437,18 +2437,18 @@ def cuped_ab_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_g"),
             (
-                F.sum(F.col("y_micro").cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(F.col("y_micro").cast("decimal(38,0)")).cast("double")
                 / F.count("*")
             ).alias("y_mean"),
             (
                 (
-                    F.sum(F.col("y_micro").cast("decimal(38,0)")).cast("string").cast("double")
+                    F.sum(F.col("y_micro").cast("decimal(38,0)")).cast("double")
                     - F.max("theta")
                     * (
-                        F.sum(F.col("x_micro").cast("decimal(38,0)")).cast("string").cast("double")
+                        F.sum(F.col("x_micro").cast("decimal(38,0)")).cast("double")
                         - F.count("*")
                         * (
-                            F.max("sx").cast("string").cast("double")
+                            F.max("sx").cast("double")
                             / F.max("n").cast("double")
                         )
                     )
@@ -2622,8 +2622,8 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     def gap_col():
         return F.abs(
             F.floor(
-                F.col("cum").cast("string").cast("double") / F.col("i")
-                - (F.col("tot") - F.col("cum")).cast("string").cast("double")
+                F.col("cum").cast("double") / F.col("i")
+                - (F.col("tot") - F.col("cum")).cast("double")
                 / (F.col("n") - F.col("i"))
                 + F.lit(0.5)
             ).cast("bigint")
@@ -2751,10 +2751,10 @@ def skewness_kurtosis_by_type(
         F.sum(d * d * d * d).alias("s4"),
     )
     nd = F.col("n").cast("double")
-    m1 = F.col("s1").cast("string").cast("double") / nd
-    r2 = F.col("s2").cast("string").cast("double") / nd
-    r3 = F.col("s3").cast("string").cast("double") / nd
-    r4 = F.col("s4").cast("string").cast("double") / nd
+    m1 = F.col("s1").cast("double") / nd
+    r2 = F.col("s2").cast("double") / nd
+    r3 = F.col("s3").cast("double") / nd
+    r4 = F.col("s4").cast("double") / nd
     mu2 = r2 - m1 * m1
     mu3 = r3 - 3 * m1 * r2 + 2 * m1 * m1 * m1
     mu4 = r4 - 4 * m1 * r3 + 6 * m1 * m1 * r2 - 3 * m1 * m1 * m1 * m1
@@ -3036,14 +3036,14 @@ def hash_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(term_n9).alias("tv_n9"))
     )
     var = (
-        F.col("ss_all").cast("string").cast("double")
-        - F.col("s_all").cast("string").cast("double")
-        * F.col("s_all").cast("string").cast("double")
+        F.col("ss_all").cast("double")
+        - F.col("s_all").cast("double")
+        * F.col("s_all").cast("double")
         / F.col("n_all").cast("double")
     ) / F.col("n_all").cast("double")
     smd = (
-        F.col("s_s").cast("string").cast("double") / F.col("n_s").cast("double")
-        - F.col("s_all").cast("string").cast("double") / F.col("n_all").cast("double")
+        F.col("s_s").cast("double") / F.col("n_s").cast("double")
+        - F.col("s_all").cast("double") / F.col("n_all").cast("double")
     ) / F.sqrt(var)
 
     def q9(col):
@@ -3153,7 +3153,7 @@ def forecast_model_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x",
         F.lag("x", 7).over(w).alias("f_naive"),
         F.floor(
-            F.sum(F.col("x").cast("decimal(38,0)")).over(w_tm).cast("string").cast("double")
+            F.sum(F.col("x").cast("decimal(38,0)")).over(w_tm).cast("double")
             / F.count("x").over(w_tm)
             + F.lit(0.5)
         )
@@ -3175,7 +3175,7 @@ def forecast_model_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("seasonal_naive").alias("model"),
         "n_days",
         (
-            F.col("ae_naive").cast("string").cast("double")
+            F.col("ae_naive").cast("double")
             / (F.lit(1_000_000.0) * F.col("n_days"))
         ).alias("mae"),
         (F.col("ae_naive") <= F.col("ae_mean")).alias("is_winner"),
@@ -3184,7 +3184,7 @@ def forecast_model_bakeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("trailing_mean").alias("model"),
         "n_days",
         (
-            F.col("ae_mean").cast("string").cast("double")
+            F.col("ae_mean").cast("double")
             / (F.lit(1_000_000.0) * F.col("n_days"))
         ).alias("mae"),
         (F.col("ae_mean") < F.col("ae_naive")).alias("is_winner"),
@@ -3268,11 +3268,11 @@ def welch_t_weekend_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = g.select(
         "is_weekend",
         "n",
-        (F.col("s1").cast("string").cast("double") / nd).alias("mean"),
+        (F.col("s1").cast("double") / nd).alias("mean"),
         (
             (
-                F.col("s2").cast("string").cast("double")
-                - F.col("s1").cast("string").cast("double") * F.col("s1").cast("string").cast("double") / nd
+                F.col("s2").cast("double")
+                - F.col("s1").cast("double") * F.col("s1").cast("double") / nd
             )
             / (F.col("n") - 1).cast("double")
         ).alias("var"),

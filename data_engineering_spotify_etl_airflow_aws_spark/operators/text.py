@@ -413,7 +413,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             (
-                F.sum(u9.cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(u9.cast("decimal(38,0)")).cast("double")
                 / (F.lit(1_000_000_000.0) * F.count("*"))
             ).alias("avg_oov_ratio"),
         )
@@ -634,9 +634,9 @@ def _register_zipf() -> None:
             F.count("*").alias("n"),
             F.sum("x").cast("bigint").alias("sx"),
             F.sum("y").cast("bigint").alias("sy"),
-            F.sum(xd * F.col("x")).cast("string").cast("double").alias("sxx"),
-            F.sum(yd * F.col("y")).cast("string").cast("double").alias("syy"),
-            F.sum(xd * F.col("y")).cast("string").cast("double").alias("sxy"),
+            F.sum(xd * F.col("x")).cast("double").alias("sxx"),
+            F.sum(yd * F.col("y")).cast("double").alias("syy"),
+            F.sum(xd * F.col("y")).cast("double").alias("sxy"),
         )
         n = F.col("n")
         sxd, syd = F.col("sx").cast("double"), F.col("sy").cast("double")

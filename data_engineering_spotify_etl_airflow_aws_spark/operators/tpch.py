@@ -442,7 +442,7 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("nation", F.year("o_orderdate").alias("o_year"))
         .agg(
             (
-                F.sum(F.col("amount_micro").cast("decimal(38,0)")).cast("string").cast("double")
+                F.sum(F.col("amount_micro").cast("decimal(38,0)")).cast("double")
                 / F.lit(1_000_000)
             ).alias("profit")
         )
@@ -507,14 +507,14 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     total = val.agg(
-        (F.sum("value_micro").cast("string").cast("double") * F.lit(0.0001)).alias("threshold")
+        (F.sum("value_micro").cast("double") * F.lit(0.0001)).alias("threshold")
     )
     return (
         val.join(F.broadcast(total))
-        .where(F.col("value_micro").cast("string").cast("double") > F.col("threshold"))
+        .where(F.col("value_micro").cast("double") > F.col("threshold"))
         .select(
             "ps_partkey",
-            (F.col("value_micro").cast("string").cast("double") / F.lit(1_000_000)).alias(
+            (F.col("value_micro").cast("double") / F.lit(1_000_000)).alias(
                 "stock_value"
             ),
         )

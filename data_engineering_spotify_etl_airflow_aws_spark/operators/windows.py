@@ -413,8 +413,8 @@ def time_weighted_avg_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             # engines' int128/decimal -> double conversions can differ in
             # the last ulp (same reason value_quantiles_exact rounds)
             F.round(
-                F.sum(F.col("val_u6") * F.col("dt_us")).cast("string").cast("double")
-                / (F.lit(1_000_000.0) * F.sum("dt_us").cast("string").cast("double")),
+                F.sum(F.col("val_u6") * F.col("dt_us")).cast("double")
+                / (F.lit(1_000_000.0) * F.sum("dt_us").cast("double")),
                 6,
             ).alias("twa_value"),
         )
@@ -1353,14 +1353,14 @@ def late_data_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day",
         "n_events",
         "n_late",
-        (F.col("final_u6").cast("string").cast("double") / F.lit(1e6)).alias("final_value"),
-        (F.col("ontime_u6").cast("string").cast("double") / F.lit(1e6)).alias(
+        (F.col("final_u6").cast("double") / F.lit(1e6)).alias("final_value"),
+        (F.col("ontime_u6").cast("double") / F.lit(1e6)).alias(
             "ontime_value"
         ),
         F.when(
             F.col("final_u6") != 0,
-            (F.col("final_u6") - F.col("ontime_u6")).cast("string").cast("double")
-            / F.col("final_u6").cast("string").cast("double"),
+            (F.col("final_u6") - F.col("ontime_u6")).cast("double")
+            / F.col("final_u6").cast("double"),
         ).alias("restatement_share"),
     )
 
@@ -1434,9 +1434,9 @@ def trailing_7d_sum_per_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Determinism: gaps are exact integer micros on the (us, event_id)
 # total order; moments are exact integer sums (squares of ~2.6e12 us
-# gaps overflow int64 -> decimal/HUGEINT), converted once through the
-# VARCHAR-hop exact-double cast; mean/CV are the same IEEE sequence both
-# engines.
+# gaps overflow int64 -> decimal/HUGEINT), converted once to double
+# (correctly rounded: native on Spark, VARCHAR hop on the oracle);
+# mean/CV are the same IEEE sequence both engines.
 #
 # Scale notes (100 TB): one (user, type)-keyed window shuffle, then a
 # map-side-combinable agg onto the bounded type vocabulary.
@@ -1496,11 +1496,11 @@ def interarrival_stats_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_gaps",
         (
-            (F.col("s").cast("string").cast("double") / F.col("n_gaps")) / F.lit(1e6)
+            (F.col("s").cast("double") / F.col("n_gaps")) / F.lit(1e6)
         ).alias("mean_gap_sec"),
         (
-            F.sqrt((n38 * F.col("sq") - F.col("s") * F.col("s")).cast("string").cast("double"))
-            / F.col("s").cast("string").cast("double")
+            F.sqrt((n38 * F.col("sq") - F.col("s") * F.col("s")).cast("double"))
+            / F.col("s").cast("double")
         ).alias("cv_gap"),
     )
 

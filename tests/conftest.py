@@ -188,9 +188,6 @@ def pytest_sessionfinish(session, exitstatus):
             name = _FULL_MODE_NAMES[base]
         elif mode == "rest" and base in _REST_MODE_NAMES:
             name = _REST_MODE_NAMES[base]
-        elif mode == "touched":
-            # r15: re-run of the round's PIN_FIRST changed set at scale
-            name = name.replace("_at_risk", "_touched")
         entry = {
             "sweep": name,
             "sf": sf,

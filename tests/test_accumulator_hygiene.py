@@ -545,50 +545,49 @@ def test_no_raw_hash_checksum_sums():
 
 
 # ---------------------------------------------------------------------
-# Seventh lint (r15): the decimal->double CONVERSION class — the family
-# that produced r14's only wrong answer (pricing_summary's sum_charge,
-# one ulp off at sf1 only). Once a decimal/HUGEINT value's unscaled
-# magnitude crosses 2^53, the engines' NATIVE wide->double casts are not
-# both correctly rounded (measured: DuckDB's DECIMAL->DOUBLE diverges
-# from its correctly-rounded VARCHAR parser on 2476/16k adversarial
-# magnitudes, HUGEINT->DOUBLE on 15/4k — the r6 int128 truncation
-# family; Spark's JDK path agreed with the string hop on all of them;
-# evidence/decimal_double_rounding_probe.json). Every money sum crosses
-# 2^53 at the 100 TB design point, so the convention is tree-wide: a
-# decimal-sourced `.cast("double")` must take `.cast("string")` first,
-# and an oracle `CAST(<wide> AS DOUBLE)` must take the VARCHAR hop —
-# both closed mechanically in r15 (one-shot rewrite tool
-# apply_string_hop_r15.py, in git history at a552ed4).
-# This lint re-runs the same scanners the rewrite used, so the class
-# cannot reappear on either side. Explicit exact-int64 narrowings
-# (CAST(... AS BIGINT) AS DOUBLE) stay native: long->double is
-# correctly rounded by spec in both engines (JLS 5.1.2; hardware
-# i64->f64 under round-to-nearest).
+# Seventh lint: the decimal->double CONVERSION class - the family that
+# produced r14's only wrong answer (pricing_summary's sum_charge, one ulp
+# off at sf1 only). Once a decimal/HUGEINT value's unscaled magnitude
+# crosses 2^53 (every money sum does at the 100 TB design point), the
+# conversion must be correctly rounded on both engines, and the engines
+# differ:
+#   * Spark: the NATIVE cast is correctly rounded on this JVM (JDK 17
+#     BigDecimal.doubleValue: exact long->double, one exact-operand
+#     divide below 2^52, Double.parseDouble otherwise).
+#     tests/test_accumulator_overflow_behavior.py pins that equality
+#     against the string path on adversarial magnitudes, so the engine
+#     converts natively and a `.cast("string").cast("double")` chain is
+#     dead weight - the reverse check below keeps it from coming back.
+#   * Oracle: DuckDB's native DECIMAL->DOUBLE diverged from its
+#     correctly rounded VARCHAR parser on 2476 of 16k probe values and
+#     HUGEINT->DOUBLE on 15 of 4k (evidence/
+#     decimal_double_rounding_probe.json), so every oracle
+#     CAST(<wide> AS DOUBLE) takes the VARCHAR hop. Explicit exact-int64
+#     narrowings (CAST(... AS BIGINT) AS DOUBLE) stay native:
+#     long->double is correctly rounded by spec (hardware i64->f64 under
+#     round-to-nearest).
 
-_ALLOWED_SPARK_NATIVE_DECIMAL_DOUBLE: set[tuple[str, str]] = set()
 _ALLOWED_ORACLE_WIDE_NATIVE: set[tuple[str, str]] = set()
 
+_STRING_HOP = re.compile(r'\.cast\(\s*"string"\s*\)\s*\.cast\(\s*"double"\s*\)')
 
-def test_no_native_decimal_to_double_conversions():
-    from tools.triage_decimal_double import scan_spark_side
 
-    sites = scan_spark_side()
-    # guard the guard: the scanners found 167 hopped sites at r15 close;
-    # a scanner regression that stops seeing casts must fail loudly
-    assert sum(1 for s in sites if s["kind"] == "hop") >= 150, (
-        "decimal->double scanner regression: hop census collapsed"
+def test_no_spark_side_string_hop_to_double():
+    # the pattern must span the line breaks a wrapped call chain uses
+    assert _STRING_HOP.search('F.sum(x)\n    .cast("string")\n    .cast("double")')
+    pkg = os.path.dirname(engine.__file__)
+    found = []
+    for root, _dirs, files in os.walk(pkg):
+        for fn in sorted(f for f in files if f.endswith(".py")):
+            path = os.path.join(root, fn)
+            src = open(path).read()
+            for m in _STRING_HOP.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                found.append(f"{os.path.relpath(path, pkg)}:{line}")
+    assert not found, (
+        "Spark's native decimal->double cast is correctly rounded; drop "
+        f"the .cast('string') before .cast('double') at: {found}"
     )
-    bad = [
-        f"{s['file']}:{s['line']} {s['func']}: {s['snippet'][:80]!r} — "
-        f"decimal-sourced .cast('double') must take .cast('string') "
-        f"first (conversion convention, r15) or be allowlisted with a "
-        f"<2^53 magnitude proof"
-        for s in sites
-        if s["kind"].startswith("decimal_native")
-        and (s["file"].split("/")[-1], s["func"])
-        not in _ALLOWED_SPARK_NATIVE_DECIMAL_DOUBLE
-    ]
-    assert not bad, "\n".join(bad)
 
 
 def test_no_native_wide_to_double_oracle_casts():

@@ -25,10 +25,17 @@ why it is the house rule rather than "rely on ANSI to crash":
 4. DuckDB sums integers in HUGEINT (exact, no config) and ERRORS on a
    HUGEINT->BIGINT overflow cast — why an oracle must never narrow an
    internal moment the Spark side keeps wide (the fourth lint).
+5. Spark's native decimal->double and bigint->double casts are
+   correctly rounded: equal to the string path (Double.parseDouble) on
+   adversarial magnitudes straddling 2^53, per row and on F.sum (the
+   dsum shape). This is why Spark-side conversions are native while the
+   DuckDB oracles keep their VARCHAR hop (DuckDB's native wide casts
+   diverge above 2^53, evidence/decimal_double_rounding_probe.json).
 """
 
 from __future__ import annotations
 
+import random
 from contextlib import contextmanager
 
 import duckdb
@@ -134,3 +141,84 @@ def test_spark_per_row_product_fails_before_cast_can_widen(spark):
         with _ansi(spark, enabled):
             exact = df.select(good).first()["p"]
         assert int(exact) == 16_000_000_000_000_000_000, f"ansi={enabled}"
+
+
+# (Spark type, scale, max unscaled bits): bigint stays below 2^62 so a
+# pair sum cannot overflow under ANSI; decimal(18, s) below 10^18.
+_BANDS = [
+    ("decimal(18,2)", 2, 59),
+    ("decimal(18,6)", 6, 59),
+    ("decimal(38,0)", 0, 100),
+    ("decimal(38,2)", 2, 100),
+    ("decimal(38,6)", 6, 100),
+    ("bigint", 0, 61),
+]
+
+
+def _adversarial_unscaled(max_bits: int, n: int = 2000) -> list[int]:
+    """Signed unscaled integers: a dense band around 2^53, then wide
+    magnitudes whose low bits force rounding decisions (0111..1 /
+    1000..1 near-tie tails below the 53-bit mantissa)."""
+    rng = random.Random(0xD15C)
+    vals = [(1 << (53 + d)) + off for d in range(-3, 4) for off in (-3, -1, 0, 1, 3)]
+    while len(vals) < n:
+        bits = rng.randint(40, max_bits)
+        base = rng.getrandbits(bits) | (1 << (bits - 1))
+        low = 1 << max(bits - 54, 1)
+        vals.append(base ^ rng.choice([0, 1, low - 1, low + 1]) | 1)
+    return [v if i % 2 else -v for i, v in enumerate(vals)]
+
+
+def _decimal_text(u: int, scale: int) -> str:
+    digits = str(abs(u)).rjust(scale + 1, "0")
+    body = f"{digits[:-scale]}.{digits[-scale:]}" if scale else digits
+    return f"-{body}" if u < 0 else body
+
+
+@pytest.mark.parametrize("dtype,scale,max_bits", _BANDS, ids=[b[0] for b in _BANDS])
+def test_spark_native_to_double_cast_is_correctly_rounded(
+    spark, dtype, scale, max_bits
+):
+    unscaled = _adversarial_unscaled(max_bits)
+    # exact literal text, parsed losslessly by the cast inside a codegen'd
+    # plan (an RDD scan, so the optimizer cannot fold the casts on the
+    # driver); rows pair up (k = i // 2) for the F.sum check
+    df = spark.createDataFrame(
+        [(i // 2, _decimal_text(u, scale), str(u)) for i, u in enumerate(unscaled)],
+        "k int, t string, u string",
+    ).select("k", F.col("t").cast(dtype).alias("d"),
+             F.col("u").cast("decimal(38,0)").alias("u"))
+
+    def native_and_hop(c):
+        return [c.cast("double"), c.cast("string").cast("double")]
+
+    d, u, s = F.col("d"), F.col("u"), F.col("s")
+    groups = (
+        df.groupBy("k")
+        .agg(
+            F.collect_list(
+                F.struct(
+                    d.cast("string"),
+                    *native_and_hop(d),
+                    # deliberately double-rounded: unscaled -> double,
+                    # then an inexact divide
+                    u.cast("double") / F.lit(10.0**scale),
+                    F.abs(u) > F.lit(2**53),
+                )
+            ).alias("rows"),
+            F.sum(d).alias("s"),
+        )
+        .select("rows", s.cast("string"), *native_and_hop(s))
+        .collect()
+    )
+    rows = [r for g in groups for r in g[0]]
+    assert len(rows) == len(unscaled)
+    # guard the guard: the band really straddles 2^53, and (for scaled
+    # bands) a wrong cast would be caught on these inputs
+    assert sum(r[4] for r in rows) >= 100
+    if scale:
+        assert any(r[3] != r[2] for r in rows), "inputs cannot catch a double rounding"
+    bad = [r[:3] for r in rows if r[1] != r[2]]
+    assert not bad, f"{dtype}: native cast != string path on {len(bad)} rows: {bad[:5]}"
+    bad_sums = [tuple(g[1:]) for g in groups if g[2] != g[3]]
+    assert not bad_sums, f"sum({dtype}): native != string path: {bad_sums[:5]}"

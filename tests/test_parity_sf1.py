@@ -106,11 +106,11 @@ _MODE = os.environ.get("SPARK_GRAFT_SF1_PARITY", "")
 
 pytestmark = [
     pytest.mark.skipif(
-        _MODE not in ("1", "full", "rest", "touched"),
+        _MODE not in ("1", "full", "rest"),
         reason="sf1 parity is opt-in (SPARK_GRAFT_SF1_PARITY=1 for the "
         "at-risk window, =full for the whole registry, =rest for "
-        "full-minus-at-risk, =touched for the round's PIN_FIRST changed "
-        "set); the default suite runs the full registry at sf0.01",
+        "full-minus-at-risk); the default suite runs the full registry "
+        "at sf0.01",
     ),
     pytest.mark.skipif(
         not os.path.isdir(SF1),
@@ -123,11 +123,6 @@ if _MODE == "full":
     _NAMES = sorted(registry.ORACLES)
 elif _MODE == "rest":
     _NAMES = sorted(set(registry.ORACLES) - set(AT_RISK))
-elif _MODE == "touched":
-    # the round's PIN_FIRST changed set (r15: every query the
-    # conversion-class rewrite touched), re-proven at sf1 per the
-    # verdict's "Done" bar; records as sf1_oracle_parity_touched
-    _NAMES = [n for n in engine.PIN_FIRST if n in registry.ORACLES]
 else:
     _NAMES = list(AT_RISK)
 
@@ -141,7 +136,7 @@ def duck1():
 
 @pytest.mark.parametrize("name", _NAMES)
 def test_parity_at_sf1(name, spark, duck1):
-    if _MODE in ("full", "rest", "touched") and name in SF1_ORACLE_INFEASIBLE:
+    if _MODE in ("full", "rest") and name in SF1_ORACLE_INFEASIBLE:
         pytest.skip(f"oracle infeasible at sf1: {SF1_ORACLE_INFEASIBLE[name]}")
     sdf = registry.QUERIES[name](spark, SF1)
     rel = duck1.execute(registry.ORACLES[name])

@@ -1,29 +1,18 @@
-"""Triage every decimal->double conversion site, both engines — the r14
-verdict's ask #1 ("the decimal→double conversion class is only HALF
-closed", SCALING_r14.md residual note).
+"""Triage every DuckDB-oracle decimal->double conversion site.
 
-Background: once a decimal's UNSCALED value crosses 2^53, the engines'
-NATIVE decimal->double casts are not both correctly rounded (DuckDB's
-measured 1 ulp high at sf1 on pricing_summary; the r6 int128->double
-truncation family). The r14 fix closed the sharp exposure (dsum/davg
-raw-double OUTPUT columns take the string hop on both engines); this
-tool enumerates the REMAINDER so each site can be converted to the
-string-hop convention or allowlisted with a magnitude proof
-(unscaled < 2^53 on both sides => both native paths are single-rounded
-and exact-operand, hence correctly rounded and equal to the hop).
+Background: once a decimal's UNSCALED value crosses 2^53, DuckDB's
+NATIVE DECIMAL->DOUBLE and HUGEINT->DOUBLE casts are not correctly
+rounded (measured 1 ulp high at sf1 on pricing_summary; the r6
+int128->double truncation family; 2476 of 16k and 15 of 4k adversarial
+values in evidence/decimal_double_rounding_probe.json), while its
+VARCHAR->DOUBLE parser is. So every oracle `CAST(<wide> AS DOUBLE)`
+takes the VARCHAR hop. The Spark side converts natively: its cast is
+correctly rounded (tests/test_accumulator_overflow_behavior.py).
 
-Spark side: AST walk over engine sources for `<expr>.cast("double")`
-where <expr> contains a decimal cast — directly, or via a local name
-bound to a decimal-cast expression in the same module (the same
-name-tracking the accumulator lints use; fixtures carry no decimal
-columns, so every decimal in the engine originates at an explicit
-cast site — verified: pyarrow schemas of all 10 fixture tables).
-
-Oracle side: balanced-paren extraction of every `CAST(<inner> AS
-DOUBLE)` in registry.ORACLES; the inner is HOP-safe when it is itself
-a `CAST(... AS VARCHAR)`, suspect when it mentions DECIMAL( / sum( /
-HUGEINT (DuckDB's native DECIMAL->DOUBLE and HUGEINT->DOUBLE are the
-measured-wrong paths).
+Balanced-paren extraction of every `CAST(<inner> AS DOUBLE)` in
+registry.ORACLES; the inner is HOP-safe when it is itself a
+`CAST(... AS VARCHAR)`, suspect when it mentions DECIMAL( / sum( /
+HUGEINT, or names an alias defined as an un-narrowed sum.
 
 Usage: python tools/triage_decimal_double.py [--json evidence/...]
 """
@@ -31,7 +20,6 @@ Usage: python tools/triage_decimal_double.py [--json evidence/...]
 from __future__ import annotations
 
 import argparse
-import ast
 import json
 import os
 import re
@@ -40,173 +28,6 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import data_engineering_spotify_etl_airflow_aws_spark as engine
-
-_PKG = os.path.dirname(engine.__file__)
-_SCAN_DIRS = ("operators", "streaming", "functions", "pipeline", "sources")
-
-
-def _is_cast_to(node: ast.AST, typename: str) -> bool:
-    return (
-        isinstance(node, ast.Call)
-        and isinstance(node.func, ast.Attribute)
-        and node.func.attr == "cast"
-        and len(node.args) == 1
-        and isinstance(node.args[0], ast.Constant)
-        and isinstance(node.args[0].value, str)
-        and node.args[0].value.lower().startswith(typename)
-    )
-
-
-def _contains_decimal(
-    node: ast.AST, dec_names: set[str], dec_aliases: set[str] = frozenset()
-) -> bool:
-    for n in ast.walk(node):
-        if _is_cast_to(n, "decimal"):
-            return True
-        if isinstance(n, ast.Name) and n.id in dec_names:
-            return True
-        # a column REFERENCE to a decimal-typed alias created earlier in
-        # the same function (F.col("s") / "s" after .alias("s") on a
-        # decimal expression) — cross-select blindness, r15 find on
-        # dow_seasonality_profile / cusum_changepoint_daily
-        if (
-            isinstance(n, ast.Constant)
-            and isinstance(n.value, str)
-            and n.value in dec_aliases
-        ):
-            return True
-    return False
-
-
-def _decimal_aliases(scope_nodes: list[ast.AST], dec_names: set[str]) -> set[str]:
-    """Alias strings whose aliased expression is decimal-sourced:
-    `<decimal expr>.alias("x")` anywhere in the given scopes."""
-    out: set[str] = set()
-    for s in scope_nodes:
-        for n in ast.walk(s):
-            if (
-                isinstance(n, ast.Call)
-                and isinstance(n.func, ast.Attribute)
-                and n.func.attr == "alias"
-                and n.args
-                and isinstance(n.args[0], ast.Constant)
-                and isinstance(n.args[0].value, str)
-                and _contains_decimal(n.func.value, dec_names)
-            ):
-                out.add(n.args[0].value)
-    return out
-
-
-def _enclosing_function(tree: ast.Module, lineno: int) -> str:
-    best = "<module>"
-    for n in ast.walk(tree):
-        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            end = getattr(n, "end_lineno", n.lineno)
-            if n.lineno <= lineno <= end:
-                best = n.name
-    return best
-
-
-def scan_spark_side() -> list[dict]:
-    sites: list[dict] = []
-    for d in _SCAN_DIRS:
-        full = os.path.join(_PKG, d)
-        if not os.path.isdir(full):
-            continue
-        for fn in sorted(os.listdir(full)):
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(full, fn)
-            src = open(path).read()
-            tree = ast.parse(src)
-            # scan each function with FUNCTION-scoped name tracking
-            # (module-wide tracking poisons short reused names like `w`)
-            scopes: list[ast.AST] = [
-                n
-                for n in ast.walk(tree)
-                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-            ]
-            for scope in scopes:
-                # skip nested defs: they are scanned as their own scope
-                inner_defs = [
-                    n
-                    for n in ast.walk(scope)
-                    if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-                    and n is not scope
-                ]
-
-                def in_inner(node: ast.AST) -> bool:
-                    return any(
-                        d.lineno <= node.lineno <= getattr(d, "end_lineno", d.lineno)
-                        for d in inner_defs
-                    )
-
-                # visible names: this scope, every enclosing function
-                # (closures), and module level — but never siblings
-                def contains(outer: ast.AST, inner: ast.AST) -> bool:
-                    return (
-                        outer.lineno <= inner.lineno
-                        and getattr(outer, "end_lineno", outer.lineno)
-                        >= getattr(inner, "end_lineno", inner.lineno)
-                    )
-
-                visible = [scope] + [
-                    s for s in scopes if s is not scope and contains(s, scope)
-                ]
-                module_assigns = [
-                    n
-                    for n in tree.body
-                    if isinstance(n, ast.Assign)
-                    and len(n.targets) == 1
-                    and isinstance(n.targets[0], ast.Name)
-                ]
-                dec_names: set[str] = set()
-                assigns = module_assigns + [
-                    n
-                    for s in visible
-                    for n in ast.walk(s)
-                    if isinstance(n, ast.Assign)
-                    and len(n.targets) == 1
-                    and isinstance(n.targets[0], ast.Name)
-                ]
-                changed = True
-                while changed:
-                    changed = False
-                    for a in assigns:
-                        t = a.targets[0].id
-                        if t not in dec_names and _contains_decimal(
-                            a.value, dec_names
-                        ):
-                            dec_names.add(t)
-                            changed = True
-                dec_aliases = _decimal_aliases(visible, dec_names)
-                for node in ast.walk(scope):
-                    if not _is_cast_to(node, "double") or in_inner(node):
-                        continue
-                    recv = node.func.value
-                    if _is_cast_to(recv, "string"):
-                        kind = "hop"  # the convention — safe by spec
-                    elif _contains_decimal(recv, dec_names):
-                        kind = "decimal_native"  # the class under triage
-                    elif _contains_decimal(recv, dec_names, dec_aliases):
-                        # reference to a decimal-typed column alias from
-                        # an earlier select in the same function
-                        kind = "decimal_native_via_alias"
-                    else:
-                        continue  # int/double-sourced: out of class
-                    sites.append(
-                        {
-                            "side": "spark",
-                            "file": f"{d}/{fn}",
-                            "line": node.lineno,
-                            "col": node.col_offset,
-                            "func": scope.name,
-                            "kind": kind,
-                            "snippet": ast.get_source_segment(src, node)[:160],
-                        }
-                    )
-    return sites
-
 
 _AS_DOUBLE = re.compile(r"AS\s+DOUBLE\s*\)", re.I)
 
@@ -360,7 +181,6 @@ def main() -> int:
     ap.add_argument("--json", default=None)
     args = ap.parse_args()
 
-    spark = scan_spark_side()
     oracle = scan_oracle_side()
 
     def count(rows, key):
@@ -369,14 +189,8 @@ def main() -> int:
             out[r[key]] = out.get(r[key], 0) + 1
         return out
 
-    summary = {
-        "spark_kinds": count(spark, "kind"),
-        "oracle_kinds": count(oracle, "kind"),
-    }
+    summary = {"oracle_kinds": count(oracle, "kind")}
     print(json.dumps(summary, indent=1))
-    for r in spark:
-        if r["kind"] == "decimal_native":
-            print(f"SPARK  {r['file']}:{r['line']} {r['func']}: {r['snippet']}")
     seen = set()
     for r in oracle:
         if r["kind"] == "wide_native":
@@ -388,8 +202,7 @@ def main() -> int:
     if args.json:
         os.makedirs(os.path.dirname(args.json), exist_ok=True)
         with open(args.json, "w") as f:
-            json.dump({"summary": summary, "spark": spark, "oracle": oracle},
-                      f, indent=1)
+            json.dump({"summary": summary, "oracle": oracle}, f, indent=1)
             f.write("\n")
     return 0
 
