@@ -180,8 +180,8 @@ def test_spark_native_to_double_cast_is_correctly_rounded(
     spark, dtype, scale, max_bits
 ):
     unscaled = _adversarial_unscaled(max_bits)
-    # exact literal text, parsed losslessly by the cast inside a codegen'd
-    # plan (an RDD scan, so the optimizer cannot fold the casts on the
+    # exact literal text, parsed losslessly by the cast on the executors
+    # (an RDD scan, so the optimizer cannot fold the casts on the
     # driver); rows pair up (k = i // 2) for the F.sum check
     df = spark.createDataFrame(
         [(i // 2, _decimal_text(u, scale), str(u)) for i, u in enumerate(unscaled)],
