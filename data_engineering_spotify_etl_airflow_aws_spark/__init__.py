@@ -26,8 +26,8 @@ __version__ = "0.1.0"
 # only the local parity suite. The 50-slot window is COMPUTED, not
 # hand-listed: _compute_audit_first() below scans the driver's
 # CORRECTNESS_r*.json history LIVE at load time (audit.scan_last_green;
-# the generated audit_ledger.py snapshot is only a fallback for trees
-# without the history files) and orders the registry by:
+# a tree without the history files gets registration order) and orders
+# the registry by:
 #   1. never-audited - no green driver row in any CORRECTNESS file,
 #      in registration order;
 #   2. evidence rotation - oldest green round first, then registration

@@ -6,10 +6,9 @@ queries each round and records the results in CORRECTNESS_r{N}.json at
 the repo root. The audit-slot rotation (``__init__._compute_audit_first``)
 needs "last green round" per query; this module derives it by scanning
 those files LIVE at import time, so the rotation can never run on stale
-evidence (round-6 verdict #6: rule enforced by code, not prose). The
-generated ``audit_ledger.py`` snapshot (tools/gen_audit_ledger.py) is the
-fallback for installations without the history files, and a drift guard
-in tests.
+evidence (round-6 verdict #6: rule enforced by code, not prose). A tree
+without the history files has no green evidence, so every query counts
+as never-audited and the window follows registration order.
 """
 
 from __future__ import annotations
@@ -25,14 +24,11 @@ def repo_root() -> str:
     return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def scan_last_green(
-    root: str | None = None, rounds: list[int] | None = None
-) -> dict[str, int]:
+def scan_last_green(root: str | None = None) -> dict[str, int]:
     """query name -> latest round whose driver audit row was green
     (err-free, rows matched, schema/hash not mismatched; rows-only
-    queries count on their rows check - the strongest evidence the
-    driver produces for them). ``rounds`` restricts the scan to those
-    round numbers (used by the ledger drift guard)."""
+    queries count on their rows check - the strongest evidence there
+    is for them)."""
     last_green: dict[str, int] = {}
     for path in sorted(
         glob.glob(os.path.join(root or repo_root(), "CORRECTNESS_r*.json"))
@@ -41,8 +37,6 @@ def scan_last_green(
         if not m:
             continue
         rnd = int(m.group(1))
-        if rounds is not None and rnd not in rounds:
-            continue
         try:
             with open(path) as f:
                 data = json.load(f)
@@ -77,11 +71,5 @@ def scanned_rounds(root: str | None = None) -> list[int]:
 
 
 def last_green_audit() -> dict[str, int]:
-    """Live scan when the history files are present, else the checked-in
-    snapshot."""
-    live = scan_last_green()
-    if live:
-        return live
-    from .audit_ledger import LAST_GREEN_AUDIT
-
-    return dict(LAST_GREEN_AUDIT)
+    """Live scan of the CORRECTNESS history next to the package."""
+    return scan_last_green()

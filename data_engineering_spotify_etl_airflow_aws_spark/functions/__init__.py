@@ -74,16 +74,16 @@ def oracle_dsum(expr: str, scale: int = 2) -> str:
     because DuckDB's native DECIMAL->DOUBLE is not correctly rounded
     above 2^53 (see dsum docstring)."""
     return (
-        f"CAST(CAST(CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS VARCHAR)"
-        f" AS VARCHAR) AS DOUBLE)"
+        f"CAST(CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS VARCHAR)"
+        f" AS DOUBLE)"
     )
 
 
 def oracle_davg(expr: str, scale: int = 2) -> str:
     """DuckDB SQL fragment matching davg() - VARCHAR hop on the sum."""
     return (
-        f"CAST(CAST(CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS VARCHAR)"
-        f" AS VARCHAR) AS DOUBLE) / count({expr})"
+        f"CAST(CAST(sum(CAST({expr} AS DECIMAL(30,{scale}))) AS VARCHAR)"
+        f" AS DOUBLE) / count({expr})"
     )
 
 

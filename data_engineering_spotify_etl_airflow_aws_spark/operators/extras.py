@@ -2714,8 +2714,8 @@ def join_cardinality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_orders,
            CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(30,2))) AS VARCHAR) AS DOUBLE)
                AS sum_price,
-           CAST(CAST(CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(30,2))) AS VARCHAR) AS DOUBLE)
-               / count(*) AS VARCHAR) AS DOUBLE) AS avg_price
+           CAST(CAST(sum(CAST(o_totalprice AS DECIMAL(30,2))) AS VARCHAR) AS DOUBLE)
+               / count(*) AS avg_price
     FROM orders
     WHERE o_orderkey % 17 <> 3
     GROUP BY o_orderpriority

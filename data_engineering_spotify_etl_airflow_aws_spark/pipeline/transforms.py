@@ -52,6 +52,12 @@ def read_raw(spark: SparkSession, inbox_dir: str | Path = INBOX_DIR) -> DataFram
         .option("pathGlobFilter", "*.json")
         .json(str(inbox_dir))
     )
+    return with_scrape_date(raw)
+
+
+def with_scrape_date(raw: DataFrame) -> DataFrame:
+    """(tracks, scrape_date): the date taken from the raw object key.
+    Works on batch and streaming DataFrames alike (pure projection)."""
     return raw.select(
         "tracks",
         F.to_date(

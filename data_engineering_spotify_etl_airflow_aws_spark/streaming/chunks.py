@@ -1,4 +1,5 @@
-"""Shared time-bucketed chunk-file builder for the streaming queries.
+"""Shared time-bucketed chunk feeds and the one run-to-completion path
+of the streaming queries.
 
 The registered streaming queries (dedup, stream-stream join, stateful
 totals) exercise a file-source stream over the events fixture. The chunk
@@ -20,6 +21,35 @@ past rows still in flight and silently drop them as late. The builder
 therefore stamps each part file's mtime explicitly in range (path) order
 after the write, making arrival order == event-time order by
 construction.
+
+Event reader. read_events() is the one file-source reader over an event
+chunk directory: EVENT_SCHEMA bound up front (a stream cannot infer
+one) and maxFilesPerTrigger set on the READER - on the DataStreamWriter
+Spark silently ignores it and availableNow collapses to one batch.
+
+Drain. drain() runs a stream to completion the way every registered
+query does: a fresh run_scratch dir (so a fresh checkpoint - the query
+is replayable), trigger(availableNow=True) (every pending file, in as
+many micro-batches as maxFilesPerTrigger allows, then stop),
+awaitTermination; it returns the output location and the finished
+query, whose recentProgress stays readable. The sink is the parquet
+file sink unless foreach_batch is given: append_batch appends each
+micro-batch to parquet, upsert_sink passes its own merge.
+run_available_now() is the trigger step alone, for the ingest, whose
+caller owns the sink and checkpoint paths.
+
+State-partition override. A stateful operator keeps one state store per
+shuffle partition (x4 for a stream-stream join) and every store pays
+checkpoint I/O each micro-batch, so the partition count is sized to
+STATE volume, not to the session's scan parallelism; a production run
+sizes it to arrival rate x watermark. The seven stateful queries -
+stream_dedup_events, the three click/purchase joins,
+stream_session_rollup, stateful_running_totals and
+stream_rate_limit_flags - pass state_partitions=STATE_PARTITIONS, set
+for the run and restored in a finally. The stateless queries (ingest,
+enrich, decode, the foreachBatch upsert) keep the session's count: they
+hold no state store, and the upsert's per-batch groupBy is sized like
+any batch shuffle.
 """
 
 from __future__ import annotations
@@ -32,8 +62,17 @@ from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 _CHUNK_ROOT = Path("/tmp/spark_graft_stream")
+
+EVENT_SCHEMA = (
+    "event_id bigint, user_id bigint, ts timestamp, "
+    "event_type string, value double"
+)
+
+# shuffle (= state-store) partitions of the stateful queries' runs
+STATE_PARTITIONS = 8
 
 
 def _stamp_mtimes_in_range_order(chunks: Path) -> None:
@@ -137,3 +176,81 @@ def run_scratch(name: str) -> Path:
         _SWEPT_STALE_RUNS = True
         _sweep_dead_run_dirs()
     return _CHUNK_ROOT / f"run_{os.getpid()}" / name
+
+
+def read_events(
+    spark: SparkSession,
+    chunk_dir: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """File-source stream over an event chunk directory."""
+    reader = spark.readStream.schema(EVENT_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.parquet(chunk_dir)
+
+
+def append_batch(out: Path, batch_df: DataFrame, _batch_id: int) -> None:
+    """foreachBatch sink: append each micro-batch to parquet at out."""
+    batch_df.write.mode("append").parquet(str(out))
+
+
+def sink_writer(
+    stream: DataFrame,
+    out: str | Path,
+    checkpoint: str | Path,
+    foreach_batch: Callable[[Path, DataFrame, int], None] | None = None,
+    output_mode: str | None = None,
+    partition_by: str | None = None,
+) -> DataStreamWriter:
+    """stream's writer into out: the parquet file sink, or
+    foreach_batch(out, batch_df, batch_id) per micro-batch."""
+    writer = stream.writeStream
+    if foreach_batch is None:
+        writer = writer.format("parquet").option("path", str(out))
+    else:
+        writer = writer.foreachBatch(
+            lambda df, batch_id: foreach_batch(Path(out), df, batch_id)
+        )
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    return writer.option("checkpointLocation", str(checkpoint))
+
+
+def run_available_now(writer: DataStreamWriter) -> StreamingQuery:
+    """Drain everything pending, then stop; return the finished query."""
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
+
+
+def drain(
+    stream: DataFrame,
+    name: str,
+    foreach_batch: Callable[[Path, DataFrame, int], None] | None = None,
+    output_mode: str | None = None,
+    partition_by: str | None = None,
+    state_partitions: int | None = None,
+) -> tuple[str, StreamingQuery]:
+    """Run stream to completion under a fresh run_scratch(name) dir and
+    checkpoint; return (output location, finished query). With
+    state_partitions, spark.sql.shuffle.partitions is that count for the
+    run and restored afterwards, also when the run fails."""
+    base = run_scratch(name)
+    shutil.rmtree(base, ignore_errors=True)  # fresh checkpoint => replayable
+    out = base / "data"
+    writer = sink_writer(
+        stream, out, base / "checkpoint", foreach_batch, output_mode,
+        partition_by,
+    )
+    if state_partitions is None:
+        return str(out), run_available_now(writer)
+    conf, key = stream.sparkSession.conf, "spark.sql.shuffle.partitions"
+    prev = conf.get(key)
+    conf.set(key, str(state_partitions))
+    try:
+        return str(out), run_available_now(writer)
+    finally:
+        conf.set(key, prev)

@@ -40,7 +40,7 @@ from ..operators.multimodal import (
     ppm_payload_df,
 )
 from ..registry import ORACLES, query
-from .chunks import _CHUNK_ROOT, run_scratch
+from .chunks import _CHUNK_ROOT, drain
 
 _PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 _N_CHUNKS = 4
@@ -91,18 +91,6 @@ def decode_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:
     oracle=ORACLES["multimodal_ppm_decode_stats"],
 )
 def stream_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = run_scratch("mm_decode")
-    shutil.rmtree(base, ignore_errors=True)
-
     chunks = ppm_payload_feed(spark, sf_dir)
-    q = (
-        decode_stream(spark, chunks)
-        .writeStream.format("parquet")
-        .option("path", str(base / "data"))
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    return spark.read.parquet(str(base / "data")).orderBy("doc_id")
+    out, _ = drain(decode_stream(spark, chunks), "mm_decode")
+    return spark.read.parquet(out).orderBy("doc_id")

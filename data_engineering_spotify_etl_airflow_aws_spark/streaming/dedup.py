@@ -29,15 +29,13 @@ driven explicitly.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _SPARK_H32
 from ..registry import query
 from ..tables import load_table
-from .chunks import ensure_event_chunks, run_scratch
+from .chunks import STATE_PARTITIONS, drain, ensure_event_chunks, read_events
 
 # deterministic ~15% duplicate injection: pure function of event_id
 _DUP_PRED = (
@@ -71,21 +69,9 @@ def dedup_within_watermark_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """The streaming operator under test: schema-bound file stream ->
-    event-time watermark -> per-row dedup on event_id with bounded state.
-
-    max_files_per_trigger is a READER (file-source) option; setting it on
-    the DataStreamWriter is silently ignored by Spark — the r9 review
-    caught exactly that bug in the registered queries, which therefore
-    ran single-batch while claiming '>1 real micro-batch'."""
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    event-time watermark -> per-row dedup on event_id with bounded state."""
     return (
-        reader.parquet(chunk_dir)
+        read_events(spark, chunk_dir, max_files_per_trigger)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
@@ -100,9 +86,6 @@ def dedup_within_watermark_stream(
     """,
 )
 def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = run_scratch("events_dedup")
-    shutil.rmtree(base, ignore_errors=True)
-
     # 6 time-bucketed chunk files; identical ts keys (original + its dup)
     # land in the same range partition by construction. The chunk content
     # is a pure function of the source data, so it is written ONCE per
@@ -110,31 +93,13 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     # only the streaming run below - the operator under test - gets a
     # fresh checkpoint and output dir every time.
     chunks = dup_event_feed(spark, sf_dir)
-
-    # State stores are one-per-shuffle-partition with per-batch checkpoint
-    # I/O; size the partition count to STATE volume, not scan parallelism
-    # (see streaming/joins.py for the measured 4x).
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            # maxFilesPerTrigger on the READER: 6 chunks / 3 per trigger
-            # = 2+ genuine micro-batches (writer-side placement is
-            # silently ignored - r9 review fix)
-            dedup_within_watermark_stream(
-                spark, chunks, max_files_per_trigger=3
-            )
-            .writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    back = spark.read.parquet(str(base / "data"))
+    # 6 chunks / 3 per trigger = 2+ genuine micro-batches
+    out, _ = drain(
+        dedup_within_watermark_stream(spark, chunks, max_files_per_trigger=3),
+        "events_dedup",
+        state_partitions=STATE_PARTITIONS,
+    )
+    back = spark.read.parquet(out)
     return back.select(
         "event_id",
         "user_id",

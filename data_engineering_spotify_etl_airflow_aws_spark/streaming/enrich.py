@@ -23,19 +23,12 @@ oracle - row for row.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..tables import load_table
-from .chunks import plain_event_feed, run_scratch
-
-_EVENT_SCHEMA = (
-    "event_id bigint, user_id bigint, ts timestamp, "
-    "event_type string, value double"
-)
+from .chunks import drain, plain_event_feed, read_events
 
 
 def static_user_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,13 +46,10 @@ def enrich_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """The operator under test: file-source stream inner-joined per
-    micro-batch against the static dim on user_id. max_files_per_trigger
-    must sit on the READER (the file source) — writer-side placement is
-    silently ignored (r9 review fix)."""
-    reader = spark.readStream.schema(_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.parquet(chunk_dir).join(dim, "user_id")
+    micro-batch against the static dim on user_id."""
+    return read_events(spark, chunk_dir, max_files_per_trigger).join(
+        dim, "user_id"
+    )
 
 
 @query(
@@ -72,23 +62,13 @@ def enrich_stream(
     """,
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = run_scratch("static_enrich")
-    shutil.rmtree(base, ignore_errors=True)
-
     chunks = plain_event_feed(spark, sf_dir)
     dim = static_user_dim(spark, sf_dir)
-
-    q = (
-        enrich_stream(spark, chunks, dim, max_files_per_trigger=3)
-        .writeStream.format("parquet")
-        .option("path", str(base / "data"))
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    out, _ = drain(
+        enrich_stream(spark, chunks, dim, max_files_per_trigger=3),
+        "static_enrich",
     )
-    q.awaitTermination()
-
-    back = spark.read.parquet(str(base / "data"))
+    back = spark.read.parquet(out)
     return back.select(
         "event_id",
         "user_id",

@@ -37,15 +37,19 @@ anywhere (reference substrate is S3, P:166-183):
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..pipeline.schemas import RAW_PLAYLIST_SCHEMA
-from ..pipeline.transforms import INBOX_DIR, _DATE_RE, explode_raw, songs_projection
+from ..pipeline.transforms import (
+    _ORACLE_BASE,
+    INBOX_DIR,
+    explode_raw,
+    songs_projection,
+    with_scrape_date,
+)
 from ..registry import query
-from .chunks import run_scratch
+from .chunks import drain, run_available_now, sink_writer
 
 
 def read_raw_stream(
@@ -66,12 +70,25 @@ def read_raw_stream(
         )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.json(inbox_dir)
-    return raw.select(
-        "tracks",
-        F.to_date(
-            F.regexp_extract(F.col("_metadata.file_path"), _DATE_RE, 1)
-        ).alias("scrape_date"),
+    return with_scrape_date(reader.json(inbox_dir))
+
+
+def _songs_writer(
+    spark: SparkSession,
+    inbox_dir: str,
+    dest_dir: str,
+    checkpoint_dir: str,
+    archive_dir: str | None = None,
+    max_files_per_trigger: int | None = None,
+) -> DataStreamWriter:
+    """The ingest query minus its trigger: inbox -> songs fact ->
+    date-partitioned Parquet under one checkpoint."""
+    raw = read_raw_stream(spark, inbox_dir, archive_dir, max_files_per_trigger)
+    return sink_writer(
+        songs_projection(explode_raw(raw)),
+        dest_dir,
+        checkpoint_dir,
+        partition_by="scrape_date",
     )
 
 
@@ -86,19 +103,12 @@ def ingest_songs_available_now(
     """One daily micro-batch run: drain the inbox into date-partitioned
     Parquet exactly once, then stop. Re-running with the same checkpoint
     is a no-op unless new files arrived."""
-    raw = read_raw_stream(
-        spark, inbox_dir, archive_dir, max_files_per_trigger
+    run_available_now(
+        _songs_writer(
+            spark, inbox_dir, dest_dir, checkpoint_dir, archive_dir,
+            max_files_per_trigger,
+        )
     )
-    songs = songs_projection(explode_raw(raw))
-    q = (
-        songs.writeStream.format("parquet")
-        .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("scrape_date")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def ingest_songs_continuous(
@@ -114,13 +124,8 @@ def ingest_songs_continuous(
     form, but with a processingTime trigger so it keeps polling the inbox
     and ingests files as they arrive. Returns the running StreamingQuery;
     callers stop() it (tests drive it with processAllAvailable())."""
-    raw = read_raw_stream(spark, inbox_dir, archive_dir)
-    songs = songs_projection(explode_raw(raw))
     return (
-        songs.writeStream.format("parquet")
-        .option("path", dest_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("scrape_date")
+        _songs_writer(spark, inbox_dir, dest_dir, checkpoint_dir, archive_dir)
         .trigger(processingTime=processing_interval)
         .start()
     )
@@ -131,23 +136,18 @@ def ingest_songs_continuous(
 # committed inbox through a fresh checkpoint into Parquet, read the result
 # back, and hash it against the same batch oracle as star_songs_fact. A
 # genuinely-streaming plan whose output is provably identical to batch.
-from ..pipeline.transforms import _ORACLE_BASE  # noqa: E402
-
-
 @query(
     "streaming_ingest_songs",
     oracle=_ORACLE_BASE + "SELECT * FROM songs ORDER BY scrape_date, rank",
 )
 def streaming_ingest_songs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = run_scratch("songs_ingest")
-    shutil.rmtree(base, ignore_errors=True)  # fresh checkpoint => replayable
-    ingest_songs_available_now(
-        spark,
-        str(INBOX_DIR),
-        str(base / "data"),
-        str(base / "checkpoint"),
+    raw = read_raw_stream(spark, str(INBOX_DIR))
+    out, _ = drain(
+        songs_projection(explode_raw(raw)),
+        "songs_ingest",
+        partition_by="scrape_date",
     )
-    back = spark.read.parquet(str(base / "data"))
+    back = spark.read.parquet(out)
     cols = [
         "song_id",
         "song_name",

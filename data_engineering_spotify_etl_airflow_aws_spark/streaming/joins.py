@@ -28,35 +28,15 @@ states directly.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .chunks import plain_event_feed, run_scratch
-
-_EVENT_SCHEMA = (
-    "event_id bigint, user_id bigint, ts timestamp, "
-    "event_type string, value double"
-)
+from .chunks import STATE_PARTITIONS, drain, plain_event_feed, read_events
 
 # attribution window: clicks within 2h before the purchase
 _JOIN_WINDOW = "2 hours"
 _WATERMARK = "30 minutes"
-
-
-def _event_reader(
-    spark: SparkSession, max_files_per_trigger: int | None
-):
-    """File-source reader; maxFilesPerTrigger is a READER option (on the
-    writer Spark silently ignores it - r9 review fix: the registered
-    queries had it writer-side and ran single-batch while claiming
-    '>1 real micro-batch')."""
-    reader = spark.readStream.schema(_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader
 
 
 def click_purchase_join_stream(
@@ -67,7 +47,14 @@ def click_purchase_join_stream(
     """The streaming operator under test: two file-source streams over the
     same chunk feed, watermarked both sides, inner-joined on user with an
     event-time interval condition (the state-eviction contract)."""
-    raw = _event_reader(spark, max_files_per_trigger).parquet(chunk_dir)
+    return _click_purchase_join(
+        read_events(spark, chunk_dir, max_files_per_trigger), "inner"
+    )
+
+
+def _click_purchase_join(raw: DataFrame, how: str) -> DataFrame:
+    """Purchases joined (how) to the clicks of the same user within the
+    attribution window before them, both sides watermarked."""
     clicks = (
         raw.where(F.col("event_type") == "click")
         .select(
@@ -92,7 +79,19 @@ def click_purchase_join_stream(
             f"c_user = p_user AND "
             f"c_ts BETWEEN p_ts - INTERVAL {_JOIN_WINDOW} AND p_ts"
         ),
+        how,
     )
+
+
+def _drain_join(spark, chunks: str, name: str, how: str = "inner") -> DataFrame:
+    """Drain the click/purchase join over chunks (3 files per trigger)
+    and read the joined rows back."""
+    out, _ = drain(
+        _click_purchase_join(read_events(spark, chunks, 3), how),
+        name,
+        state_partitions=STATE_PARTITIONS,
+    )
+    return spark.read.parquet(out)
 
 
 @query(
@@ -111,33 +110,9 @@ def click_purchase_join_stream(
     """,
 )
 def stream_join_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = run_scratch("click_purchase_join")
-    shutil.rmtree(base, ignore_errors=True)
-
-    chunks = plain_event_feed(spark, sf_dir)
-
-    # Stateful-query state stores are one-per-shuffle-partition (x4 for a
-    # stream-stream join) and each pays per-batch checkpoint I/O, so the
-    # partition count must be sized to STATE volume, not to the session's
-    # scan parallelism (32 partitions of near-empty state measured 12.2s;
-    # 8 measured 3.0s). A production run sizes this to arrival rate x
-    # watermark the same way.
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            click_purchase_join_stream(spark, chunks, max_files_per_trigger=3)
-            .writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    back = spark.read.parquet(str(base / "data"))
+    back = _drain_join(
+        spark, plain_event_feed(spark, sf_dir), "click_purchase_join"
+    )
     return back.select(
         "purchase_id",
         "click_id",
@@ -223,53 +198,12 @@ def outer_event_feed(spark: SparkSession, sf_dir: str) -> str:
 def stream_left_join_click_purchase(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    base = run_scratch("click_purchase_left_join")
-    shutil.rmtree(base, ignore_errors=True)
-
-    chunks = outer_event_feed(spark, sf_dir)
-    raw = _event_reader(spark, 3).parquet(chunks)
-    clicks = (
-        raw.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", _WATERMARK)
-    )
-    purchases = (
-        raw.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", _WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            f"c_user = p_user AND "
-            f"c_ts BETWEEN p_ts - INTERVAL {_JOIN_WINDOW} AND p_ts"
-        ),
+    back = _drain_join(
+        spark,
+        outer_event_feed(spark, sf_dir),
+        "click_purchase_left_join",
         "left_outer",
     )
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    back = spark.read.parquet(str(base / "data"))
     return (
         back.where(F.col("purchase_id") >= 0)  # drop the sentinel row
         .select(
@@ -314,53 +248,12 @@ def stream_left_join_click_purchase(
 def stream_full_join_click_purchase(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    base = run_scratch("click_purchase_full_join")
-    shutil.rmtree(base, ignore_errors=True)
-
-    chunks = outer_event_feed(spark, sf_dir)
-    raw = _event_reader(spark, 3).parquet(chunks)
-    clicks = (
-        raw.where(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", _WATERMARK)
-    )
-    purchases = (
-        raw.where(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", _WATERMARK)
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            f"c_user = p_user AND "
-            f"c_ts BETWEEN p_ts - INTERVAL {_JOIN_WINDOW} AND p_ts"
-        ),
+    back = _drain_join(
+        spark,
+        outer_event_feed(spark, sf_dir),
+        "click_purchase_full_join",
         "full_outer",
     )
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            joined.writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    back = spark.read.parquet(str(base / "data"))
     return back.where(
         (F.col("purchase_id").isNull() | (F.col("purchase_id") >= 0))
         & (F.col("click_id").isNull() | (F.col("click_id") >= 0))

@@ -59,7 +59,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
 from ..operators.windows import _MACRO_GAP_US, _MICRO_GAP_US
-from .chunks import plain_event_feed, run_scratch
+from .chunks import (
+    STATE_PARTITIONS,
+    append_batch,
+    drain,
+    plain_event_feed,
+    read_events,
+)
 
 DELTA_SCHEMA = T.StructType(
     [
@@ -263,21 +269,16 @@ def session_delta_stream_tws(events_stream: DataFrame) -> DataFrame:
 # in both engines.
 
 
-def _drain_session_deltas(spark, sf_dir: str, out_dir: str) -> None:
+def session_events(spark, chunk_dir: str) -> DataFrame:
+    """(user_id, event_id, ts, ts_us) over an event chunk feed, 2 files
+    per trigger (>1 real micro-batch), with the event-time watermark the
+    timer operator needs. Delay 0 is exact on this feed: equal timestamps
+    never straddle chunk files (chunks.py), so every later batch is
+    strictly past the watermark and nothing is ever late-dropped."""
     from pyspark.sql import functions as F
 
-    chunks = plain_event_feed(spark, sf_dir)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")  # >1 real micro-batch (reader!)
-        .parquet(chunks)
-        # delay 0 is exact on this feed: equal timestamps never straddle
-        # chunk files (chunks.py), so every later batch is strictly past
-        # the watermark and nothing is ever late-dropped
+    return (
+        read_events(spark, chunk_dir, max_files_per_trigger=2)
         .withWatermark("ts", "0 seconds")
         .select(
             "user_id",
@@ -286,25 +287,6 @@ def _drain_session_deltas(spark, sf_dir: str, out_dir: str) -> None:
             F.unix_micros("ts").alias("ts_us"),
         )
     )
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    base = run_scratch("session_deltas")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            session_delta_stream(stream)
-            .writeStream.foreachBatch(_append)
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
 
 
 @query(
@@ -358,15 +340,18 @@ def stream_session_rollup(spark, sf_dir: str) -> DataFrame:
     up per user - identical columns and (per the module docstring's
     expiry-losslessness argument) identical VALUES to the batch
     macro_session_rollup, whose oracle SQL this query reuses verbatim."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    base = run_scratch("session_deltas")
-    shutil.rmtree(base, ignore_errors=True)
-    out_dir = str(base / "deltas")
-    _drain_session_deltas(spark, sf_dir, out_dir)
-    deltas = spark.read.parquet(out_dir)
+    out, _ = drain(
+        session_delta_stream(
+            session_events(spark, plain_event_feed(spark, sf_dir))
+        ),
+        "session_deltas",
+        foreach_batch=append_batch,
+        output_mode="append",
+        state_partitions=STATE_PARTITIONS,
+    )
+    deltas = spark.read.parquet(out)
     return deltas.groupBy("user_id").agg(
         F.sum("d_events").cast("bigint").alias("n_events"),
         F.sum("d_sessions").cast("bigint").alias("n_sessions"),

@@ -31,7 +31,13 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 from ..registry import query
-from .chunks import run_scratch
+from .chunks import (
+    STATE_PARTITIONS,
+    append_batch,
+    drain,
+    plain_event_feed,
+    read_events,
+)
 
 STATE_SCHEMA = T.StructType(
     [
@@ -172,53 +178,24 @@ def stateful_running_totals(spark, sf_dir: str) -> DataFrame:
     (the documented downstream pattern), and the final state per user -
     the snapshot with the greatest n_events, which is strictly monotone
     per emission - must equal the batch aggregate, hash-exact."""
-    import shutil
-    from pathlib import Path
-
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    from .chunks import plain_event_feed
-
-    base = run_scratch("stateful_totals")
-    shutil.rmtree(base, ignore_errors=True)
-    chunks = plain_event_feed(spark, sf_dir)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
+    stream = read_events(
+        spark, plain_event_feed(spark, sf_dir), max_files_per_trigger=3
+    ).select(
+        "user_id",
+        F.floor(F.col("value") * 1_000_000).cast("long").alias("value_u6"),
+        F.unix_micros("ts").alias("ts_us"),
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3")  # >1 real micro-batch
-        .parquet(chunks)
-        .select(
-            "user_id",
-            F.floor(F.col("value") * 1_000_000).cast("long").alias("value_u6"),
-            F.unix_micros("ts").alias("ts_us"),
-        )
+    out, _ = drain(
+        running_user_totals_u6(stream),
+        "stateful_totals",
+        foreach_batch=append_batch,
+        output_mode="update",
+        state_partitions=STATE_PARTITIONS,
     )
-    out_dir = str(base / "upserts")
-
-    def _append_upserts(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    # state stores sized to state volume, not scan parallelism (joins.py)
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            running_user_totals_u6(stream)
-            .writeStream.foreachBatch(_append_upserts)
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    upserts = spark.read.parquet(out_dir)
+    upserts = spark.read.parquet(out)
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
     return (
         upserts.withColumn("_rn", F.row_number().over(w))
@@ -339,52 +316,24 @@ def stream_rate_limit_flags(spark, sf_dir: str) -> DataFrame:
     roll the per-event flag log up by type - identical columns (and, by
     the ordering guarantee, identical values) to the batch
     rate_limit_flags window; the oracle is the same SQL."""
-    import shutil
-    from pathlib import Path
-
     from pyspark.sql import functions as F
 
-    from .chunks import plain_event_feed
-
-    base = run_scratch("rate_limit")
-    shutil.rmtree(base, ignore_errors=True)
-    chunks = plain_event_feed(spark, sf_dir)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
+    stream = read_events(
+        spark, plain_event_feed(spark, sf_dir), max_files_per_trigger=3
+    ).select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros("ts").alias("ts_us"),
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "3")  # >1 real micro-batch
-        .parquet(chunks)
-        .select(
-            "user_id",
-            "event_id",
-            "event_type",
-            F.unix_micros("ts").alias("ts_us"),
-        )
+    out, _ = drain(
+        rate_limit_stream(stream),
+        "rate_limit",
+        foreach_batch=append_batch,
+        output_mode="append",
+        state_partitions=STATE_PARTITIONS,
     )
-    out_dir = str(base / "flags")
-
-    def _append_flags(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out_dir)
-
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            rate_limit_stream(stream)
-            .writeStream.foreachBatch(_append_flags)
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-
-    flags = spark.read.parquet(out_dir)
+    flags = spark.read.parquet(out)
     throttled = F.sum("throttled")
     return flags.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_events"),

@@ -29,18 +29,14 @@ from __future__ import annotations
 
 import re
 import shutil
+from functools import partial
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from .chunks import plain_event_feed, run_scratch
-
-_EVENT_SCHEMA = (
-    "event_id bigint, user_id bigint, ts timestamp, "
-    "event_type string, value double"
-)
+from .chunks import drain, plain_event_feed, read_events
 
 
 def _versions(state_dir: Path) -> list[tuple[int, Path]]:
@@ -85,30 +81,14 @@ def upsert_batch(
     """,
 )
 def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = run_scratch("foreachbatch_upsert")
-    shutil.rmtree(base, ignore_errors=True)
-    state = base / "state"
-    state.mkdir(parents=True)
-
     chunks = plain_event_feed(spark, sf_dir)
-
-    q = (
-        spark.readStream.schema(_EVENT_SCHEMA)
-        # READER option: 6 chunks / 3 per trigger = multiple genuine
-        # micro-batches; writer-side placement is silently ignored
-        # (r9 review fix)
-        .option("maxFilesPerTrigger", "3")
-        .parquet(chunks)
-        .writeStream.foreachBatch(
-            lambda df, bid: upsert_batch(spark, state, df, bid)
-        )
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    # 6 chunks / 3 per trigger = multiple genuine micro-batches
+    state, _ = drain(
+        read_events(spark, chunks, max_files_per_trigger=3),
+        "foreachbatch_upsert",
+        foreach_batch=partial(upsert_batch, spark),
     )
-    q.awaitTermination()
-
-    latest = _versions(state)[-1][1]
+    latest = _versions(Path(state))[-1][1]
     return spark.read.parquet(str(latest)).select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),

@@ -154,20 +154,13 @@ def pytest_runtest_logreport(report):
 
 
 def _current_round() -> int:
-    """The build round in progress = latest driver CORRECTNESS round + 1.
-    Trees without the history files fall back to the generated ledger
-    snapshot's SCANNED_ROUNDS (the same fallback the audit rotation uses)."""
+    """The build round in progress = latest CORRECTNESS round + 1 (0 in
+    a tree without the history files)."""
     from data_engineering_spotify_etl_airflow_aws_spark.audit import (
         scanned_rounds,
     )
 
     rounds = scanned_rounds(_REPO_ROOT)
-    if not rounds:
-        from data_engineering_spotify_etl_airflow_aws_spark.audit_ledger import (
-            SCANNED_ROUNDS,
-        )
-
-        rounds = SCANNED_ROUNDS
     return (max(rounds) + 1) if rounds else 0
 
 

@@ -168,28 +168,6 @@ def test_audit_window_pinned():
     assert names[: len(engine.AUDIT_FIRST)] == engine.AUDIT_FIRST
 
 
-def test_audit_ledger_snapshot_consistent():
-    """audit_ledger.py is a GENERATED snapshot of the live CORRECTNESS
-    scan; re-scan the rounds it recorded and assert it matches, which
-    catches hand-edits/drift while tolerating rounds that landed after
-    generation (the live scan, not the snapshot, drives rotation)."""
-    from data_engineering_spotify_etl_airflow_aws_spark.audit import (
-        repo_root,
-        scan_last_green,
-    )
-    from data_engineering_spotify_etl_airflow_aws_spark.audit_ledger import (
-        LAST_GREEN_AUDIT,
-        SCANNED_ROUNDS,
-    )
-
-    assert LAST_GREEN_AUDIT == scan_last_green(
-        repo_root(), rounds=SCANNED_ROUNDS
-    ), "audit_ledger.py drifted: rerun python tools/gen_audit_ledger.py"
-    # Ledger names must be real queries (dead entries mask rotation).
-    unknown = set(LAST_GREEN_AUDIT) - set(registry.QUERIES)
-    assert not unknown, f"ledger names unregistered queries: {unknown}"
-
-
 def test_rows_only_queries_run(spark):
     """Queries without oracles still must run and return a stable schema."""
     for name in sorted(set(registry.QUERIES) - set(registry.ORACLES)):

@@ -739,11 +739,9 @@ def test_registered_streams_run_multiple_microbatches(spark):
     micro-batch' while running single-batch). Drive the fixed builders
     the way the registered queries do and assert the batch count from
     recentProgress."""
-    import shutil as _shutil
-
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        drain,
         plain_event_feed,
-        run_scratch,
     )
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.decode import (
         decode_stream,
@@ -754,16 +752,7 @@ def test_registered_streams_run_multiple_microbatches(spark):
     )
 
     def n_batches(stream_df, name):
-        base = run_scratch(f"mb_probe_{name}")
-        _shutil.rmtree(base, ignore_errors=True)
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _, q = drain(stream_df, f"mb_probe_{name}")
         return len([p for p in q.recentProgress if p["numInputRows"] > 0])
 
     decode_batches = n_batches(
@@ -871,40 +860,19 @@ def test_session_delta_stream_multibatch_and_timer_expiry(spark):
     and (b) have its event-time timers actually reclaim state mid-stream
     (numRowsRemoved > 0): bounded state is the operator's contract, not
     an aspiration. Uses the same chunk feed as the registered query."""
-    import shutil as _shutil
-
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        drain,
         plain_event_feed,
-        run_scratch,
     )
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.sessions import (
         session_delta_stream,
+        session_events,
     )
 
-    chunks = plain_event_feed(spark, SF_SMOKE)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
+    stream = session_events(spark, plain_event_feed(spark, SF_SMOKE))
+    out, q = drain(
+        session_delta_stream(stream), "session_mb_probe", output_mode="append"
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(chunks)
-        .withWatermark("ts", "0 seconds")
-        .select("user_id", "event_id", F.col("ts"), F.unix_micros("ts").alias("ts_us"))
-    )
-    base = run_scratch("session_mb_probe")
-    _shutil.rmtree(base, ignore_errors=True)
-    q = (
-        session_delta_stream(stream)
-        .writeStream.format("parquet")
-        .option("path", str(base / "data"))
-        .option("checkpointLocation", str(base / "checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     data_batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(data_batches) >= 2, len(data_batches)
     removed = sum(
@@ -920,7 +888,7 @@ def test_session_delta_stream_multibatch_and_timer_expiry(spark):
 
     got = {
         r["user_id"]: (r["n_events"], r["n_sessions"], r["n_visits"])
-        for r in spark.read.parquet(str(base / "data"))
+        for r in spark.read.parquet(out)
         .groupBy("user_id")
         .agg(
             F.sum("d_events").alias("n_events"),
@@ -1017,27 +985,15 @@ def test_tws_session_stream_end_to_end(spark):
             "transformWithStateInPandas needs the protobuf package "
             "(pyspark StateMessage_pb2) - not shipped in this container"
         )
-    import shutil as _shutil
-
     from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        drain,
         plain_event_feed,
-        run_scratch,
+    )
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.sessions import (
+        session_events,
     )
 
-    chunks = plain_event_feed(spark, SF_SMOKE)
-    schema = (
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double"
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2")
-        .parquet(chunks)
-        .withWatermark("ts", "0 seconds")
-        .select("user_id", "event_id", F.col("ts"), F.unix_micros("ts").alias("ts_us"))
-    )
-    base = run_scratch("session_tws_probe")
-    _shutil.rmtree(base, ignore_errors=True)
+    stream = session_events(spark, plain_event_feed(spark, SF_SMOKE))
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
@@ -1045,16 +1001,11 @@ def test_tws_session_stream_end_to_end(spark):
         "RocksDBStateStoreProvider",
     )
     try:
-        q = (
-            session_delta_stream_tws(stream)
-            .writeStream.format("parquet")
-            .option("path", str(base / "data"))
-            .option("checkpointLocation", str(base / "checkpoint"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        out, _ = drain(
+            session_delta_stream_tws(stream),
+            "session_tws_probe",
+            output_mode="append",
         )
-        q.awaitTermination()
     finally:
         if prev is not None:
             spark.conf.set(
@@ -1066,7 +1017,7 @@ def test_tws_session_stream_end_to_end(spark):
 
     got = {
         r["user_id"]: (r["n_events"], r["n_sessions"], r["n_visits"])
-        for r in spark.read.parquet(str(base / "data"))
+        for r in spark.read.parquet(out)
         .groupBy("user_id")
         .agg(
             F.sum("d_events").alias("n_events"),
@@ -1080,3 +1031,140 @@ def test_tws_session_stream_end_to_end(spark):
         for r in macro_session_rollup(spark, SF_SMOKE).collect()
     }
     assert got == want
+
+
+# ---------------------------------------------------------------------------
+# The shared run-to-completion path (streaming/chunks.py)
+
+_SP = "spark.sql.shuffle.partitions"
+
+
+def test_drain_sets_and_restores_state_partitions(spark):
+    """drain(state_partitions=n) runs the stateful operator on n state
+    partitions and gives the session its own count back afterwards."""
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        drain,
+        plain_event_feed,
+    )
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.dedup import (
+        dedup_within_watermark_stream,
+    )
+
+    before = spark.conf.get(_SP)
+    spark.conf.set(_SP, "5")
+    try:
+        chunks = plain_event_feed(spark, SF_SMOKE)
+        _, q = drain(
+            dedup_within_watermark_stream(spark, chunks, max_files_per_trigger=3),
+            "drain_state_partitions",
+            state_partitions=3,
+        )
+        assert spark.conf.get(_SP) == "5"
+        parts = {
+            so["numShufflePartitions"]
+            for p in q.recentProgress
+            for so in p["stateOperators"]
+        }
+        assert parts == {3}, parts
+    finally:
+        spark.conf.set(_SP, before)
+
+
+def test_drain_restores_state_partitions_when_batch_fails(spark):
+    import pytest
+
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        drain,
+        plain_event_feed,
+        read_events,
+    )
+
+    def fail(_out, _df, _batch_id):
+        raise RuntimeError("sink down")
+
+    before = spark.conf.get(_SP)
+    spark.conf.set(_SP, "5")
+    try:
+        stream = read_events(spark, plain_event_feed(spark, SF_SMOKE))
+        with pytest.raises(Exception, match="sink down"):
+            drain(stream, "drain_fails", foreach_batch=fail, state_partitions=3)
+        assert spark.conf.get(_SP) == "5"
+    finally:
+        spark.conf.set(_SP, before)
+
+
+def test_drain_under_same_name_starts_fresh(spark):
+    """A second drain under one name gets a fresh checkpoint (it re-reads
+    the whole feed) and a fresh output (the first run's rows are gone,
+    not doubled)."""
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming.chunks import (
+        append_batch,
+        drain,
+        plain_event_feed,
+        read_events,
+    )
+
+    chunks = plain_event_feed(spark, SF_SMOKE)
+    n_events = load_table(spark, SF_SMOKE, "events").count()
+    for _ in range(2):
+        out, q = drain(
+            read_events(spark, chunks, max_files_per_trigger=3),
+            "drain_twice",
+            foreach_batch=append_batch,
+        )
+        assert sum(p["numInputRows"] for p in q.recentProgress) == n_events
+        assert spark.read.parquet(out).count() == n_events
+
+
+def _run_mechanism_sites(path: str) -> list[str]:
+    """availableNow triggers, shuffle-partition conf keys and event-schema
+    literals in one module."""
+    import ast
+    import re
+
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    bad = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and any(
+            k.arg == "availableNow" for k in node.keywords
+        ):
+            bad.append(f"line {node.lineno}: availableNow")
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if node.value == _SP:
+                bad.append(f"line {node.lineno}: {_SP}")
+            elif re.search(
+                r"event_id\s+bigint.*event_type\s+string", node.value, re.S | re.I
+            ):
+                bad.append(f"line {node.lineno}: event schema")
+    return bad
+
+
+def test_only_chunks_module_runs_streams():
+    """The availableNow drain, the state-partition override and the event
+    schema live in streaming/chunks.py alone: no other package module
+    triggers availableNow or spells the event schema, and no other
+    streaming module touches spark.sql.shuffle.partitions (operators that
+    narrow it for a batch shuffle are out of scope)."""
+    import os
+
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming import chunks
+
+    pkg_dir = os.path.dirname(engine.__file__)
+    stream_dir = os.path.dirname(chunks.__file__)
+    found = {}
+    for root, _, files in os.walk(pkg_dir):
+        for fname in files:
+            path = os.path.join(root, fname)
+            if not fname.endswith(".py") or path == chunks.__file__:
+                continue
+            bad = [
+                b for b in _run_mechanism_sites(path)
+                if root == stream_dir or not b.endswith(_SP)
+            ]
+            if bad:
+                found[os.path.relpath(path, pkg_dir)] = bad
+    assert found == {}
+    # ...and chunks.py holds exactly one copy of each
+    kinds = sorted(b.split(": ", 1)[1] for b in _run_mechanism_sites(chunks.__file__))
+    assert kinds == sorted(["availableNow", _SP, "event schema"])
