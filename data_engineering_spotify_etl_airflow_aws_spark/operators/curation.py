@@ -41,11 +41,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .. import caches
-from ..functions import ORACLE_TOKENS, tokens
+from ..functions import (
+    ORACLE_TOKENS,
+    band_offsets,
+    oracle_quality_micro,
+    oracle_quality_score,
+    oracle_stop_hits,
+    quality_micro,
+    quality_score,
+    stop_hits,
+    tokens,
+)
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32, _SPARK_H32
-from .text import _STOP_EN, _oracle_stop_hits, _stop_hits
 
 _OT = ORACLE_TOKENS.format(col="text")
 
@@ -182,11 +191,9 @@ _MIN_TOKENS = 10
         SELECT doc_id, lang,
                len(toks) AS n_tokens,
                md5(array_to_string(toks, ' ')) AS fp_norm,
-               ((0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                 + 0.3 * (1.0 - CAST({_oracle_stop_hits('toks', _STOP_EN)}
-                                      AS DOUBLE) / len(toks)))
-                 + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
-                          / len(toks))) AS quality_score
+               {oracle_quality_score('len(toks)', oracle_stop_hits('toks'),
+                                     'len(list_distinct(toks))')}
+                   AS quality_score
         FROM (SELECT doc_id, lang, text, {_OT} AS toks FROM documents)
         WHERE len(toks) >= {_MIN_TOKENS}
     ),
@@ -222,16 +229,11 @@ def corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(t).alias("n_tokens"),
             F.md5(F.array_join(t, " ").cast("binary")).alias("fp_norm"),
             F.size(F.array_distinct(t)).alias("n_uniq"),
-            _stop_hits(t, _STOP_EN).alias("n_stop"),
+            stop_hits("t").alias("n_stop"),
         )
         .where(F.col("n_tokens") >= _MIN_TOKENS)
     )
-    nt = F.col("n_tokens").cast("double")
-    quality = (
-        F.lit(0.4) * F.least(nt / F.lit(100.0), F.lit(1.0))
-        + F.lit(0.3) * (F.lit(1.0) - F.col("n_stop").cast("double") / F.col("n_tokens"))
-    ) + F.lit(0.3) * (F.col("n_uniq").cast("double") / F.col("n_tokens"))
-    kept = base.withColumn("quality_score", quality).where(
+    kept = base.withColumn("quality_score", quality_score()).where(
         F.col("quality_score") >= F.lit(_QUALITY_GATE)
     )
     survivor = (
@@ -262,13 +264,11 @@ def corpus_curation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which spans sequences floor(start/L) .. floor((end-1)/L).
 #
 # The prefix sum does NOT use a global single-partition window (the
-# canonical scale-killer): same banded plan as ntile_price_deciles -
-# approx-percentile doc_id boundaries split the corpus into bands, ONE
-# shuffle computes per-band local cumsums, and band offsets ride a window
-# over the band-count table (rows = n_bands, bounded by construction).
+# canonical scale-killer): functions.band_offsets - approx-percentile
+# doc_id boundaries split the corpus into bands, ONE shuffle computes
+# per-band local cumsums, and band offsets ride a window over the
+# band-count table (rows = n_bands, bounded by construction).
 _SEQ_LEN = 512
-_PACK_MIN_BANDS = 8
-_PACK_MAX_BANDS = 65536
 
 
 @query(
@@ -299,45 +299,19 @@ def pack_token_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id", F.size(tokens("text")).cast("bigint").alias("n_tokens")
     )
-
-    n_bands = max(
-        _PACK_MIN_BANDS, min(_PACK_MAX_BANDS, 2 * len(docs.inputFiles()))
+    banded = band_offsets(
+        t,
+        "doc_id",
+        F.sum("n_tokens"),
+        lambda band: F.coalesce(
+            F.sum("n_tokens").over(
+                band.orderBy("doc_id").rowsBetween(W.unboundedPreceding, -1)
+            ),
+            F.lit(0),
+        ).alias("_lsum"),
     )
-    probs = [i / n_bands for i in range(1, n_bands)]
-    # localCheckpoint freezes the boundaries: `banded` feeds both the
-    # local prefix-sum and the band totals, and a second physical
-    # evaluation of the merge-order-dependent GK sketch could band rows
-    # differently between the two consumers (r9 review)
-    bounds = t.agg(
-        F.percentile_approx("doc_id", probs, max(10_000, 4 * n_bands)).alias(
-            "_bounds"
-        )
-    ).localCheckpoint()
-    banded = (
-        t.join(F.broadcast(bounds))
-        .withColumn(
-            "_band", F.size(F.filter("_bounds", lambda x: x < F.col("doc_id")))
-        )
-        .drop("_bounds")
-    )
-    w_local = (
-        W.partitionBy("_band")
-        .orderBy("doc_id")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = banded.withColumn(
-        "_lsum", F.coalesce(F.sum("n_tokens").over(w_local), F.lit(0))
-    )
-    counts = banded.groupBy("_band").agg(F.sum("n_tokens").alias("_bn"))
-    w_off = W.orderBy("_band").rowsBetween(W.unboundedPreceding, -1)
-    offsets = counts.select(
-        "_band", F.coalesce(F.sum("_bn").over(w_off), F.lit(0)).alias("_off")
-    )
-
     start = (F.col("_off") + F.col("_lsum")).alias("start_tok")
-    out = local.join(F.broadcast(offsets), "_band").select(
-        "doc_id", "n_tokens", start
-    )
+    out = banded.select("doc_id", "n_tokens", start)
     end_tok = F.col("start_tok") + F.col("n_tokens") - 1
     return out.select(
         "doc_id",
@@ -1107,24 +1081,13 @@ def nested_subsample_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): per-row quality math + ONE bounded source-keyed
 # shuffle with map-side partials; the normalization is a 1-row
 # broadcast back over the 20-row source table.
-_SMW_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "source_mixture_weights",
     oracle=f"""
     WITH q AS (
         SELECT source, len(toks) AS n_toks,
-               CAST(floor((
-                   (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                    + 0.3 * (1.0 - CAST(len(list_filter(toks,
-                          x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _SMW_STOP)}], x)))
-                          AS DOUBLE) / len(toks)))
-                   + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
-                            / len(toks))) * 1000000 + 0.5) AS BIGINT)
-                   AS q_micro
-        FROM (SELECT source, list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks FROM documents)
+               {oracle_quality_micro()} AS q_micro
+        FROM (SELECT source, {_OT} AS toks FROM documents)
         WHERE len(toks) > 0
     ),
     s AS (
@@ -1156,21 +1119,10 @@ _SMW_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 )
 def source_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _SMW_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select("source", F.expr(toks).alias("t"))
+        docs.select("source", tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select(
-            "source", F.size("t").alias("n_toks"), F.expr(q_expr).alias("qm")
-        )
+        .select("source", F.size("t").alias("n_toks"), quality_micro().alias("qm"))
     )
     s = q.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1242,7 +1194,7 @@ _SHARD_H_D = _DUCK_H32.format(s="concat('shard:', CAST(doc_id AS VARCHAR))")
     oracle=f"""
     WITH a AS (
         SELECT ({_SHARD_H_D}) % {_SHARD_N} AS shard,
-               len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS n_toks
+               len({_OT}) AS n_toks
         FROM documents
     ),
     s AS (
@@ -1266,10 +1218,9 @@ _SHARD_H_D = _DUCK_H32.format(s="concat('shard:', CAST(doc_id AS VARCHAR))")
 )
 def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     a = docs.select(
         (F.expr(_SHARD_H_S) % _SHARD_N).alias("shard"),
-        F.size(F.expr(toks)).alias("n_toks"),
+        F.size(tokens("text")).alias("n_toks"),
     )
     s = a.groupBy("shard").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1310,24 +1261,13 @@ def shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): per-row quality/length math; each cut table
 # derives from a value-domain-sized cumulative window; the two 1-row
 # cut relations broadcast back and the final cell rollup is 9 rows.
-_CUR_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "curriculum_stage_assignment",
     oracle=f"""
     WITH q AS (
         SELECT len(toks) AS n_toks,
-               CAST(floor((
-                   (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                    + 0.3 * (1.0 - CAST(len(list_filter(toks,
-                          x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _CUR_STOP)}], x)))
-                          AS DOUBLE) / len(toks)))
-                   + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
-                            / len(toks))) * 1000000 + 0.5) AS BIGINT)
-                   AS q_micro
-        FROM (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks FROM documents)
+               {oracle_quality_micro()} AS q_micro
+        FROM (SELECT {_OT} AS toks FROM documents)
         WHERE len(toks) > 0
     ),
     qc AS (
@@ -1368,19 +1308,10 @@ def curriculum_stage_assignment(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _CUR_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select(F.expr(toks).alias("t"))
+        docs.select(tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select(F.size("t").alias("n_toks"), F.expr(q_expr).alias("q_micro"))
+        .select(F.size("t").alias("n_toks"), quality_micro().alias("q_micro"))
     )
     # Scale-gated persist (r17): `q` feeds both tercile-cut histograms
     # and the final stage rollup - 3 runs of the tokenize + quality

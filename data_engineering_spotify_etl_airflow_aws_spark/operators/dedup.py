@@ -43,7 +43,14 @@ from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from .. import caches
-from ..functions import ORACLE_TOKENS
+from ..functions import (
+    ORACLE_TOKENS,
+    ngrams,
+    oracle_ngrams,
+    oracle_quality_micro,
+    quality_micro,
+    tokens,
+)
 from ..registry import query
 from ..tables import load_table, widen_small_scan
 
@@ -64,26 +71,10 @@ _N_BANDS, _BAND_ROWS = 4, 4  # 16 = 4 bands x 4 rows
 
 _OT = ORACLE_TOKENS.format(col="text")
 
-# --- shared shingle / hash expressions, Spark (SQL-expr) and DuckDB forms.
-# Shingles are distinct token 3-grams; element_at / l[i] are both 1-based.
-# zip_with over shifted slices, NOT transform(sequence, i -> element_at):
-# positional element_at inside a lambda costs ~40us/element (per-element
-# array re-wrapping), ~11x slower than the zip_with formulation at sf0.1.
-_SPARK_SHINGLES = """
-    array_distinct(CASE WHEN size({t}) >= 3 THEN
-        zip_with(zip_with(slice({t}, 1, size({t}) - 2),
-                          slice({t}, 2, size({t}) - 2),
-                          (x, y) -> concat(x, ' ', y)),
-                 slice({t}, 3, size({t}) - 2),
-                 (xy, z) -> concat(xy, ' ', z))
-    ELSE array() END)
-"""
-_DUCK_SHINGLES = """
-    list_distinct(CASE WHEN len({t}) >= 3 THEN
-        list_transform(generate_series(1, len({t}) - 2),
-                       i -> concat_ws(' ', {t}[i], {t}[i+1], {t}[i+2]))
-    ELSE [] END)
-"""
+# Shingles are distinct token 3-grams (functions.ngrams).
+_DUCK_SHINGLES = f"list_distinct({oracle_ngrams(_OT, 3)})"
+
+# --- shared hash expressions, Spark (SQL-expr) and DuckDB forms.
 # 32-bit hash of a string from its md5 hex prefix - identical cross-engine
 _SPARK_H32 = "cast(conv(substring(md5(cast({s} as binary)), 1, 8), 16, 10) as bigint)"
 _DUCK_H32 = "CAST(('0x' || substring(md5({s}), 1, 8)) AS BIGINT)"
@@ -103,17 +94,15 @@ def _spark_shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the per-row regex+shingle work dominates; widen the 1-split fixture
     # scan so it parallelizes (no-op on a real many-split corpus)
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     return (
-        docs.select("doc_id", F.expr(toks).alias("t"))
-        .select("doc_id", F.expr(_SPARK_SHINGLES.format(t="t")).alias("sh"))
+        docs.select("doc_id", tokens("text").alias("t"))
+        .select("doc_id", F.array_distinct(ngrams("t", 3)).alias("sh"))
         .withColumn("n_sh", F.size("sh"))
     )
 
 
 _DUCK_SHINGLE_BASE = f"""
-    SELECT doc_id, {_DUCK_SHINGLES.format(t=_OT)} AS sh,
-           len({_DUCK_SHINGLES.format(t=_OT)}) AS n_sh
+    SELECT doc_id, {_DUCK_SHINGLES} AS sh, len({_DUCK_SHINGLES}) AS n_sh
     FROM documents
 """
 
@@ -442,9 +431,8 @@ _DUCK_ASSEMBLE = " + ".join(
 )
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     tok = (
-        docs.select("doc_id", F.explode(F.expr(toks)).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -949,9 +937,8 @@ _SH_TAU = 2
 )
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     tok = (
-        docs.select("doc_id", F.explode(F.expr(toks)).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -1087,14 +1074,13 @@ def dup_ngram_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc join - without the persist the whole explode + md5 pass
     # executes twice (guide §5).
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     gram = (
         f"transform(sequence(1, size(tk) - {_DUPSPAN_N - 1}), "
         f"i -> substring(md5(cast(concat_ws(' ', "
         f"slice(tk, i, {_DUPSPAN_N})) as binary)), 1, 16))"
     )
     g = (
-        docs.select("doc_id", F.expr(toks).alias("tk"))
+        docs.select("doc_id", tokens("text").alias("tk"))
         .where(F.size("tk") >= _DUPSPAN_N)
         .select("doc_id", F.explode(F.expr(gram)).alias("gk"))
     )
@@ -1121,9 +1107,6 @@ def dup_ngram_span_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_grams").cast("double")
         ).alias("dup_share"),
     )
-
-
-_GOLD_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
 
 # ---------------------------------------------------------------------------
@@ -1171,15 +1154,7 @@ _GOLD_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
     ),
     q AS (
         SELECT doc_id,
-               CAST(floor((
-                   (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                    + 0.3 * (1.0 - CAST(len(list_filter(toks,
-                          x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _GOLD_STOP)}], x)))
-                          AS DOUBLE) / len(toks)))
-                   + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
-                            / len(toks))) * 1000000 + 0.5) AS BIGINT)
-                   AS q_micro
+               {oracle_quality_micro()} AS q_micro
         FROM (SELECT doc_id, {_OT} AS toks FROM documents)
         WHERE len(toks) > 0
     )
@@ -1196,9 +1171,8 @@ _GOLD_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 )
 def golden_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     tok = (
-        docs.select("doc_id", F.explode(F.expr(toks)).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .groupBy("doc_id", "token")
         .agg(F.count("*").alias("c"))
     )
@@ -1213,18 +1187,10 @@ def golden_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    stop_lst = ", ".join(f"'{w}'" for w in _GOLD_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select("doc_id", F.expr(toks).alias("t"))
+        docs.select("doc_id", tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select("doc_id", F.expr(q_expr).alias("q_micro"))
+        .select("doc_id", quality_micro().alias("q_micro"))
     )
     key = F.col("q_micro") * F.lit(1_000_000_000_000) - F.col("doc_id")
     return (
@@ -1289,11 +1255,10 @@ def _impact_oracle() -> str:
 def near_dup_removal_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = _minhash_pairs(_shingle_base(spark, sf_dir))
     removed = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
     d = (
         load_table(spark, sf_dir, "documents")
         .select(
-            "doc_id", "n_chars", F.size(F.expr(toks)).alias("n_toks")
+            "doc_id", "n_chars", F.size(tokens("text")).alias("n_toks")
         )
         .join(
             removed.withColumn("is_removed", F.lit(True)), "doc_id", "left"

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .. import caches
-from ..functions import dsum, oracle_dsum
+from ..functions import band_offsets, dsum, decile, oracle_dsum
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32 as _G_DH32
@@ -258,36 +258,11 @@ def intersect_segment_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Exact ntile deciles WITHOUT a global single-partition sort (round-2
-# verdict: the naive `ntile(10) OVER (ORDER BY ...)` plan is the canonical
-# 100x-scale-killer). Distributed plan:
-#   1. approx_percentile boundaries split the order into _N_BANDS
-#      price-ordered bands (boundary quality only affects band balance,
-#      never correctness);
-#   2. rows get their band via a broadcast of the 1-row boundary array -
-#      the fact table never shuffles for the assignment;
-#   3. ONE wide shuffle: row_number per band (reducers = bands, each
-#      sorting ~1/n_bands of the data);
-#   4. band counts -> cumulative offsets + grand total via ONE window
-#      cumsum over the n_bands-row count table. That window is
-#      single-partition, but over a relation whose size is the BAND
-#      COUNT, not the data - bounded by construction, so it is not the
-#      global-sort scale-killer the naive ntile plan had. (Round-3 shape
-#      used a broadcast triangular self-join here; same result, three
-#      more stages - round-4 verdict item.)
-#   5. global rank = offset + local rank; ntile's exact bucket arithmetic
-#      (first n%10 deciles get one extra row) reproduces ntile(10) row for
-#      row, verified by the unchanged ntile oracle.
-#
-# Band count scales with the scan partitioning (~128 MB splits by
-# spark.sql.files.maxPartitionBytes): ~2 bands per split keeps each
-# band's sort at roughly half an input split regardless of data volume,
-# so the plan that runs on one parquet file at sf0.1 is the same plan
-# that runs on 100k files at 100 TB.
-_MIN_BANDS = 8
-_MAX_BANDS = 65536
-
-
+# Exact ntile deciles WITHOUT a global single-partition sort: the banded
+# global order of functions.band_offsets (its design comment has the plan
+# and the band-count rule) ranks orders by (price, orderkey) per band, and
+# decile() turns offset + local rank into ntile(10), verified by the
+# unchanged ntile oracle.
 @query(
     "ntile_price_deciles",
     oracle="""
@@ -304,56 +279,19 @@ _MAX_BANDS = 65536
 )
 def ntile_price_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    n_bands = max(_MIN_BANDS, min(_MAX_BANDS, 2 * len(o.inputFiles())))
-    probs = [i / n_bands for i in range(1, n_bands)]
-    # localCheckpoint freezes the boundaries: `banded` feeds both the
-    # ranking and the counts, and a second physical evaluation of the
-    # merge-order-dependent GK sketch could band rows differently
-    # between the two consumers (r9 review)
-    bounds = o.agg(
-        F.percentile_approx(
-            "o_totalprice", probs, max(10_000, 4 * n_bands)
-        ).alias("_bounds")
-    ).localCheckpoint()
-    # band = #boundaries strictly below the price: rows equal to a boundary
-    # all land in the same band, so bands strictly respect the price order
-    # and (band, price, orderkey) is a total order.
-    banded = (
-        o.join(F.broadcast(bounds))
-        .withColumn(
-            "_band", F.size(F.filter("_bounds", lambda x: x < F.col("o_totalprice")))
-        )
-        .drop("_bounds")
-    )
-    wb = W.partitionBy("_band").orderBy("o_totalprice", "o_orderkey")
-    ranked = banded.withColumn("_lrn", F.row_number().over(wb))
-
-    # counts come from the pre-window lineage: the heavy per-band sort never
-    # re-executes for the offset table (its agg is partial + tiny shuffle);
-    # offsets + grand total ride ONE window pass over the n_bands-row table
-    counts = banded.groupBy("_band").agg(F.count("*").alias("_bn"))
-    w_cum = W.orderBy("_band").rowsBetween(W.unboundedPreceding, -1)
-    w_all = W.orderBy("_band").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    offsets = counts.select(
-        "_band",
-        F.coalesce(F.sum("_bn").over(w_cum), F.lit(0)).alias("_off"),
-        F.sum("_bn").over(w_all).alias("_n"),
-    )
-
-    r = F.col("_off") + F.col("_lrn")
-    q = F.floor(F.col("_n") / 10)
-    rem = F.col("_n") % 10
-    cut = rem * (q + 1)
-    decile = (
-        F.when(r <= cut, F.floor((r - 1) / (q + 1)) + 1)
-        .otherwise(rem + F.floor((r - cut - 1) / q) + 1)
-        .cast("int")
+    # (band, price, orderkey) is a total order
+    ranked = band_offsets(
+        o,
+        "o_totalprice",
+        F.count("*"),
+        lambda band: F.row_number()
+        .over(band.orderBy("o_totalprice", "o_orderkey"))
+        .alias("_lrn"),
     )
     return (
-        ranked.join(F.broadcast(offsets), "_band")
-        .withColumn("decile", decile)
+        ranked.withColumn(
+            "decile", decile(F.col("_off") + F.col("_lrn"), F.col("_n"))
+        )
         .groupBy("decile")
         .agg(
             F.count("*").alias("n_orders"),

@@ -42,32 +42,18 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .. import caches
-from ..functions import ORACLE_TOKENS, tokens
+from ..functions import (
+    ORACLE_TOKENS,
+    ngrams,
+    oracle_ngrams,
+    oracle_quality_micro,
+    quality_micro,
+    tokens,
+)
 from ..registry import query
 from ..tables import load_table, widen_small_scan
 
 _OT = ORACLE_TOKENS.format(col="text")
-
-
-def _spark_ngrams(t: str, n: int) -> str:
-    """SQL expr: list of space-joined token n-grams (NOT distinct) via
-    chained zip_with over shifted slices - the dedup.py shingle shape,
-    which keeps per-element cost O(1) (element_at inside a lambda re-wraps
-    the array per element, ~11x slower; dedup.py:72)."""
-    m = f"(size({t}) - {n - 1})"
-    acc = f"slice({t}, 1, {m})"
-    for k in range(2, n + 1):
-        acc = f"zip_with({acc}, slice({t}, {k}, {m}), (x, y) -> concat(x, ' ', y))"
-    return f"CASE WHEN size({t}) >= {n} THEN {acc} ELSE array() END"
-
-
-def _duck_ngrams(t: str, n: int) -> str:
-    parts = ", ".join(f"{t}[i+{j}]" for j in range(n))
-    return (
-        f"CASE WHEN len({t}) >= {n} THEN "
-        f"list_transform(generate_series(1, len({t}) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})) ELSE [] END"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -176,7 +162,7 @@ def pii_scrub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_repetition_stats",
     oracle=f"""
     WITH t AS (
-        SELECT doc_id, {_duck_ngrams('t', 3)} AS tg
+        SELECT doc_id, {oracle_ngrams('t', 3)} AS tg
         FROM (SELECT doc_id, {_OT} AS t FROM documents)
     ),
     e AS (
@@ -201,7 +187,7 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
     e = (
         docs.select("doc_id", tokens("text").alias("t"))
-        .select("doc_id", F.expr(_spark_ngrams("t", 3)).alias("tg"))
+        .select("doc_id", ngrams("t", 3).alias("tg"))
         .where(F.size("tg") > 0)
         .select(
             "doc_id",
@@ -245,7 +231,7 @@ _BENCH_N = 50
     "benchmark_decontam_overlap",
     oracle=f"""
     WITH g AS (
-        SELECT doc_id, list_distinct({_duck_ngrams('t', 5)}) AS g
+        SELECT doc_id, list_distinct({oracle_ngrams('t', 5)}) AS g
         FROM (SELECT doc_id, {_OT} AS t FROM documents)
     ),
     gg AS (
@@ -281,7 +267,7 @@ def benchmark_decontam_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", tokens("text").alias("t"))
         .select(
             "doc_id",
-            F.array_distinct(F.expr(_spark_ngrams("t", 5))).alias("g"),
+            F.array_distinct(ngrams("t", 5)).alias("g"),
         )
         .where(F.size("g") > 0),
     )
@@ -416,7 +402,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cross_source_ngram_overlap",
     oracle=f"""
     WITH g0 AS (
-        SELECT source, unnest(list_distinct({_duck_ngrams('t', 5)})) AS gram
+        SELECT source, unnest(list_distinct({oracle_ngrams('t', 5)})) AS gram
         FROM (SELECT source, {_OT} AS t FROM documents)
     ),
     g AS (SELECT DISTINCT source, gram FROM g0),
@@ -449,7 +435,7 @@ def cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("source", tokens("text").alias("t"))
         .select(
             "source",
-            F.explode(F.array_distinct(F.expr(_spark_ngrams("t", 5)))).alias(
+            F.explode(F.array_distinct(ngrams("t", 5))).alias(
                 "gram"
             ),
         )
@@ -500,24 +486,13 @@ def cross_source_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): per-row quality math, ONE bounded-key (11-band)
 # shuffle with map-side partials; the cumulative windows run over the
 # band table. Nothing joins, nothing broadcasts.
-_QPC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "quality_pruning_curve",
     oracle=f"""
     WITH q AS (
         SELECT len(toks) AS n_toks,
-               CAST(floor((
-                   (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                    + 0.3 * (1.0 - CAST(len(list_filter(toks,
-                          x -> list_contains([{', '.join(
-                              f"'{w}'" for w in _QPC_STOP)}], x)))
-                          AS DOUBLE) / len(toks)))
-                   + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
-                            / len(toks))) * 1000000 + 0.5) AS BIGINT)
-                   AS q_micro
-        FROM (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks FROM documents)
+               {oracle_quality_micro()} AS q_micro
+        FROM (SELECT {_OT} AS toks FROM documents)
         WHERE len(toks) > 0
     ),
     b AS (
@@ -542,19 +517,10 @@ _QPC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 )
 def quality_pruning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _QPC_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select(F.expr(toks).alias("t"))
+        docs.select(tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select(F.size("t").alias("n_toks"), F.expr(q_expr).alias("q_micro"))
+        .select(F.size("t").alias("n_toks"), quality_micro().alias("q_micro"))
     )
     b = (
         q.select(
@@ -709,7 +675,7 @@ _TFC_TOP = 20
     oracle=f"""
     WITH tok AS (
         SELECT doc_id, t AS term, CAST(count(*) AS BIGINT) AS tf
-        FROM (SELECT doc_id, unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')) AS t FROM documents)
+        FROM (SELECT doc_id, unnest({_OT}) AS t FROM documents)
         GROUP BY 1, 2
     ),
     n AS (SELECT CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs FROM tok),
@@ -763,7 +729,7 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # widened so the single-split fixture tokenize parallelizes.
     docs = widen_small_scan(load_table(spark, sf_dir, "documents"))
     tok = caches.persist(
-        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf")),
     )
@@ -859,23 +825,13 @@ def tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # at micro.
 #
 # Scale notes (100 TB): per-row math + a 1-row exact-moment reduction.
-_LQC_STOP = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
-
-
 @query(
     "length_quality_correlation",
     oracle=f"""
     WITH q AS (
         SELECT CAST(len(toks) AS BIGINT) AS x,
-               CAST(floor((
-                   (0.4 * least(CAST(len(toks) AS DOUBLE) / 100.0, 1.0)
-                    + 0.3 * (1.0 - CAST(len(list_filter(toks,
-                          t -> list_contains([{', '.join(
-                              f"'{w}'" for w in _LQC_STOP)}], t)))
-                          AS DOUBLE) / len(toks)))
-                   + 0.3 * (CAST(len(list_distinct(toks)) AS DOUBLE)
-                            / len(toks))) * 1000000 + 0.5) AS BIGINT) AS y
-        FROM (SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '') AS toks FROM documents)
+               {oracle_quality_micro()} AS y
+        FROM (SELECT {_OT} AS toks FROM documents)
         WHERE len(toks) > 0
     ),
     m AS (
@@ -902,22 +858,10 @@ def length_quality_correlation(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = "filter(split(lower(text), '[^a-z0-9]+'), x -> x != '')"
-    stop_lst = ", ".join(f"'{w}'" for w in _LQC_STOP)
-    q_expr = (
-        f"cast(floor(((0.4 * least(cast(size(t) as double) / 100.0, 1.0)"
-        f" + 0.3 * (1.0 - cast(size(filter(t, x -> array_contains("
-        f"array({stop_lst}), x))) as double) / size(t)))"
-        f" + 0.3 * (cast(size(array_distinct(t)) as double) / size(t)))"
-        f" * 1000000 + 0.5) as bigint)"
-    )
     q = (
-        docs.select(F.expr(toks).alias("t"))
+        docs.select(tokens("text").alias("t"))
         .where(F.size("t") > 0)
-        .select(
-            F.size("t").cast("bigint").alias("x"),
-            F.expr(q_expr).alias("y"),
-        )
+        .select(F.size("t").cast("bigint").alias("x"), quality_micro().alias("y"))
     )
     # r12: decimal accumulation + cast-one-factor products (the corpus
     # quality-micro total has <10x int64 headroom at 1e12 docs; the raw

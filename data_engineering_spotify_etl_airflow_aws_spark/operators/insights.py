@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .. import caches
+from ..functions import band_offsets, decile
 from ..registry import query
 from ..tables import load_table
 
@@ -2071,15 +2072,12 @@ def weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # AUC op; deciles are EXACT ntile(10) over (score DESC, user_id).
 #
 # Scale notes (100 TB): exact ntile WITHOUT the single-partition global
-# sort - the banded device of ntile_price_deciles (extras.py): approx
-# boundaries on the negated score split users into ordered bands (a
-# broadcast 1-row array - correctness never depends on boundary
-# quality), ONE per-band row_number shuffle, then band offsets from a
-# window over the BAND-COUNT-sized table. All per-decile math is exact
-# ints; rates/lift/cum-capture are the final IEEE divisions, mirrored
-# association-for-association in the oracle.
-_LIFT_MIN_BANDS = 8
-_LIFT_MAX_BANDS = 65536
+# sort - functions.band_offsets: approx boundaries on the negated score
+# split users into ordered bands (a broadcast 1-row array - correctness
+# never depends on boundary quality), ONE per-band row_number shuffle,
+# then band offsets from a window over the BAND-COUNT-sized table. All
+# per-decile math is exact ints; rates/lift/cum-capture are the final
+# IEEE divisions, mirrored association-for-association in the oracle.
 
 
 @query(
@@ -2122,56 +2120,21 @@ def decile_lift_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("label"),
     )
-    n_bands = max(
-        _LIFT_MIN_BANDS, min(_LIFT_MAX_BANDS, 2 * len(ev.inputFiles()))
-    )
     pu = per_user.select(
         "user_id", "label", (-F.col("score")).alias("key")
     )
-    probs = [i / n_bands for i in range(1, n_bands)]
-    # localCheckpoint freezes the approx boundaries: `banded` feeds BOTH
-    # the per-band ranking and the offset counts, and Greenwald-Khanna
-    # summaries are merge-order-dependent, so two physical evaluations
-    # of this subtree could band the same row differently and corrupt
-    # the offsets (r9 review). One bounded 1-row job; correctness never
-    # depends on boundary QUALITY, only on both consumers seeing the
-    # SAME boundaries.
-    bounds = pu.agg(
-        F.percentile_approx("key", probs, max(10_000, 4 * n_bands)).alias(
-            "_bounds"
-        )
-    ).localCheckpoint()
-    banded = (
-        pu.join(F.broadcast(bounds))
-        .withColumn(
-            "_band", F.size(F.filter("_bounds", lambda x: x < F.col("key")))
-        )
-        .drop("_bounds")
-    )
-    wb = W.partitionBy("_band").orderBy("key", "user_id")
-    ranked = banded.withColumn("_lrn", F.row_number().over(wb))
-    counts = banded.groupBy("_band").agg(F.count("*").alias("_bn"))
-    w_cum = W.orderBy("_band").rowsBetween(W.unboundedPreceding, -1)
-    w_all = W.orderBy("_band").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    offsets = counts.select(
-        "_band",
-        F.coalesce(F.sum("_bn").over(w_cum), F.lit(0)).alias("_off"),
-        F.sum("_bn").over(w_all).alias("_n"),
-    )
-    r = F.col("_off") + F.col("_lrn")
-    q = F.floor(F.col("_n") / 10)
-    rem = F.col("_n") % 10
-    cut = rem * (q + 1)
-    decile = (
-        F.when(r <= cut, F.floor((r - 1) / (q + 1)) + 1)
-        .otherwise(rem + F.floor((r - cut - 1) / q) + 1)
-        .cast("int")
+    ranked = band_offsets(
+        pu,
+        "key",
+        F.count("*"),
+        lambda band: F.row_number()
+        .over(band.orderBy("key", "user_id"))
+        .alias("_lrn"),
     )
     g = (
-        ranked.join(F.broadcast(offsets), "_band")
-        .withColumn("decile", decile)
+        ranked.withColumn(
+            "decile", decile(F.col("_off") + F.col("_lrn"), F.col("_n"))
+        )
         .groupBy("decile")
         .agg(
             F.count("*").cast("bigint").alias("n_users"),

@@ -19,18 +19,27 @@ produced and consumed inside one projection, so nothing wide shuffles.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import caches
-from ..functions import ORACLE_TOKENS, tokens
+from ..functions import (
+    ORACLE_TOKENS,
+    ngrams,
+    oracle_ngrams,
+    oracle_quality_score,
+    oracle_stop_hits,
+    quality_score,
+    stop_hits,
+    tokens,
+)
 from ..registry import query
 from ..tables import load_table
 
-# English-ish stopword set; the synthetic corpus is English-like tech text
-# for every lang label, so the ID signal is degenerate by construction -
-# the query exercises the mechanics (set-membership counting + argmax).
-_STOP_EN = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
+# Profile stopword sets beside functions.STOPWORDS (English); the synthetic
+# corpus is English-like tech text for every lang label, so the ID signal
+# is degenerate by construction - the query exercises the mechanics
+# (set-membership counting + argmax).
 _STOP_DE = ("der", "die", "das", "und", "ist", "ein", "zu", "den")
 _STOP_ES = ("el", "la", "de", "que", "y", "en", "un", "es")
 
@@ -38,23 +47,12 @@ _STOP_ES = ("el", "la", "de", "que", "y", "en", "un", "es")
 _BPE_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
-def _stop_hits(toks: Column, stop: tuple[str, ...]) -> Column:
-    sset = F.array(*[F.lit(s) for s in stop])
-    return F.size(F.filter(toks, lambda t: F.array_contains(sset, t)))
-
-
-def _oracle_stop_hits(toks: str, stop: tuple[str, ...]) -> str:
-    lst = "[" + ", ".join(f"'{s}'" for s in stop) + "]"
-    return f"len(list_filter({toks}, x -> list_contains({lst}, x)))"
-
-
 _OT = ORACLE_TOKENS.format(col="text")
 
 
 # ---------------------------------------------------------------------------
-# Per-document quality statistics. quality_score is a fixed-association
-# double chain ((0.4*len_norm + 0.3*(1-stop_ratio)) + 0.3*uniq_ratio),
-# mirrored exactly in the oracle.
+# Per-document quality statistics; quality_score is functions.quality_score
+# over the token, stopword-hit and distinct-token counts.
 @query(
     "text_quality_stats",
     oracle=f"""
@@ -63,15 +61,14 @@ _OT = ORACLE_TOKENS.format(col="text")
            n_tokens, n_uniq,
            CAST(sum_tok_len AS DOUBLE) / n_tokens AS avg_token_len,
            CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
-           ((0.4 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0)
-             + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens))
-             + 0.3 * (CAST(n_uniq AS DOUBLE) / n_tokens)) AS quality_score
+           {oracle_quality_score('n_tokens', 'n_stop', 'n_uniq')}
+               AS quality_score
     FROM (
         SELECT doc_id, lang, text,
                len(toks) AS n_tokens,
                len(list_distinct(toks)) AS n_uniq,
                list_sum(list_transform(toks, t -> length(t))) AS sum_tok_len,
-               {_oracle_stop_hits('toks', _STOP_EN)} AS n_stop
+               {oracle_stop_hits('toks')} AS n_stop
         FROM (SELECT doc_id, lang, text, {_OT} AS toks FROM documents)
     )
     WHERE n_tokens > 0
@@ -97,12 +94,10 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(
                 F.transform(t, F.length), F.lit(0), lambda acc, v: acc + v
             ).alias("sum_tok_len"),
-            _stop_hits(t, _STOP_EN).alias("n_stop"),
+            stop_hits("t").alias("n_stop"),
         )
         .where(F.col("n_tokens") > 0)
     )
-    nt = F.col("n_tokens").cast("double")
-    stop_ratio = F.col("n_stop").cast("double") / F.col("n_tokens")
     return d.select(
         "doc_id",
         "lang",
@@ -112,14 +107,10 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sum_tok_len").cast("double") / F.col("n_tokens")).alias(
             "avg_token_len"
         ),
-        stop_ratio.alias("stop_ratio"),
-        (
-            (
-                F.lit(0.4) * F.least(nt / F.lit(100.0), F.lit(1.0))
-                + F.lit(0.3) * (F.lit(1.0) - stop_ratio)
-            )
-            + F.lit(0.3) * (F.col("n_uniq").cast("double") / F.col("n_tokens"))
-        ).alias("quality_score"),
+        (F.col("n_stop").cast("double") / F.col("n_tokens")).alias(
+            "stop_ratio"
+        ),
+        quality_score().alias("quality_score"),
     ).orderBy("doc_id")
 
 
@@ -172,9 +163,9 @@ def token_counts_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'es' END AS pred_lang
     FROM (
         SELECT doc_id, lang,
-               {_oracle_stop_hits('toks', _STOP_EN)} AS hits_en,
-               {_oracle_stop_hits('toks', _STOP_DE)} AS hits_de,
-               {_oracle_stop_hits('toks', _STOP_ES)} AS hits_es
+               {oracle_stop_hits('toks')} AS hits_en,
+               {oracle_stop_hits('toks', _STOP_DE)} AS hits_de,
+               {oracle_stop_hits('toks', _STOP_ES)} AS hits_es
         FROM (SELECT doc_id, lang, {_OT} AS toks FROM documents)
     )
     ORDER BY doc_id
@@ -187,9 +178,9 @@ def lang_id_stopword(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = docs.select("doc_id", "lang", tokens("text").alias("t")).select(
         "doc_id",
         "lang",
-        _stop_hits(t, _STOP_EN).alias("hits_en"),
-        _stop_hits(t, _STOP_DE).alias("hits_de"),
-        _stop_hits(t, _STOP_ES).alias("hits_es"),
+        stop_hits("t").alias("hits_en"),
+        stop_hits("t", _STOP_DE).alias("hits_de"),
+        stop_hits("t", _STOP_ES).alias("hits_es"),
     )
     pred = (
         F.when(
@@ -236,20 +227,16 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (n_occurrences DESC, bigram ASC) makes the cut deterministic.
 #
 # Scale notes (100 TB): per-doc bigram construction is one projection (the
-# token array is bound once, then zip_with over shifted slices - same
-# pattern as the shingle base in dedup.py); the count is a partial-agg
+# token array is bound once, then functions.ngrams' zip_with over shifted
+# slices, as for the dedup.py shingles); the count is a partial-agg
 # shuffle on the bigram itself (high-entropy key, map-side combine), and
 # the top-k rides TakeOrderedAndProject, never a global sort.
 @query(
     "token_ngram_vocab",
     oracle=f"""
     WITH bg AS (
-        SELECT doc_id,
-               unnest(CASE WHEN len({_OT}) >= 2 THEN
-                   list_transform(generate_series(1, len({_OT}) - 1),
-                                  i -> concat_ws(' ', ({_OT})[i], ({_OT})[i+1]))
-               ELSE [] END) AS bigram
-        FROM documents
+        SELECT doc_id, unnest({oracle_ngrams('t', 2)}) AS bigram
+        FROM (SELECT doc_id, {_OT} AS t FROM documents)
     )
     SELECT bigram,
            count(*) AS n_occurrences,
@@ -261,15 +248,10 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def token_ngram_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bigrams = F.zip_with(
-        F.slice(F.col("t"), 1, F.size("t") - 1),
-        F.slice(F.col("t"), 2, F.size("t") - 1),
-        lambda x, y: F.concat_ws(" ", x, y),
-    )
     return (
         docs.select("doc_id", tokens("text").alias("t"))
         .where(F.size("t") >= 2)
-        .select("doc_id", F.explode(bigrams).alias("bigram"))
+        .select("doc_id", F.explode(ngrams("t", 2)).alias("bigram"))
         .groupBy("bigram")
         .agg(
             F.count("*").alias("n_occurrences"),
@@ -488,19 +470,15 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale notes (100 TB): pure per-row projection - zero shuffle; the
 # regex work is JVM codegen inside the scan stage.
 def _register_lexical() -> None:
-    from ..functions import ORACLE_TOKENS, tokens
-
-    toks = ORACLE_TOKENS.format(col="text")
-
     @query(
         "lexical_complexity_scores",
         oracle=f"""
         WITH t AS (
             SELECT doc_id, lang,
-                   len({toks}) AS n_words,
+                   len({_OT}) AS n_words,
                    len(regexp_extract_all(lower(text), '[aeiou]+'))
                        AS n_syllables,
-                   len(list_filter({toks},
+                   len(list_filter({_OT},
                        w -> len(regexp_extract_all(lower(w), '[aeiou]+')) >= 3))
                        AS n_complex
             FROM documents
@@ -570,16 +548,12 @@ _register_lexical()
 def _register_zipf() -> None:
     from pyspark.sql.window import Window as W
 
-    from ..functions import ORACLE_TOKENS, tokens
-
-    toks = ORACLE_TOKENS.format(col="text")
-
     @query(
         "zipf_token_slope",
         oracle=f"""
         WITH freq AS (
             SELECT tok, count(*) AS c
-            FROM (SELECT unnest({toks}) AS tok FROM documents)
+            FROM (SELECT unnest({_OT}) AS tok FROM documents)
             GROUP BY tok
         ),
         ranked AS (
@@ -743,7 +717,7 @@ def logodds_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-tokenize is pure added CPU, so the bounded (source x vocab)
     # count grid persists once the input has real splits.
     st = (
-        docs.select("source", F.explode(tokens(F.col("text"))).alias("token"))
+        docs.select("source", F.explode(tokens("text")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("y_si"))
     )
@@ -854,7 +828,7 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the regex tokenizer but is the largest persist the gate
     # ever engages here; re-measure at a larger sf before relying on it.
     tok = (
-        docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("token"))
+        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
         .crossJoin(F.broadcast(meta))
         .select(
             F.floor(
@@ -956,7 +930,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CPU, so the token arrays (O(corpus), disk-backed - the heaps
     # caveat) and the bounded vocab counts persist once the input has
     # real splits.
-    tk = docs.select(tokens(F.col("text")).alias("t"))
+    tk = docs.select(tokens("text").alias("t"))
     tk = caches.persist_when_scaled(
         tk, scan_splits(spark, sf_dir, "documents"), dup=5
     )
@@ -1026,7 +1000,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 # which folds from the first element - the SAME association): append
 # each token, or fuse it into the accumulator's tail when the tail is
 # exactly the merge's left side. After a fusion the tail contains '_',
-# which no raw [a-z0-9]+ token equals, so overlapping triples ("a a a"
+# which no raw alphanumeric token equals, so overlapping triples ("a a a"
 # with merge (a,a)) fuse leftmost-first exactly like BPE.
 #
 # Scale notes (100 TB): the winning pair is a 1-row TakeOrdered
@@ -1065,7 +1039,7 @@ def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bpe_apply_top_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    tk = docs.select(tokens(F.col("text")).alias("t")).where(
+    tk = docs.select(tokens("text").alias("t")).where(
         F.size("t") >= 1
     )
     adj = F.expr(
@@ -1124,9 +1098,9 @@ def bpe_apply_top_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                     ELSE 'es' END AS pred_lang
         FROM (
             SELECT lang,
-                   {_oracle_stop_hits('toks', _STOP_EN)} AS hits_en,
-                   {_oracle_stop_hits('toks', _STOP_DE)} AS hits_de,
-                   {_oracle_stop_hits('toks', _STOP_ES)} AS hits_es
+                   {oracle_stop_hits('toks')} AS hits_en,
+                   {oracle_stop_hits('toks', _STOP_DE)} AS hits_de,
+                   {oracle_stop_hits('toks', _STOP_ES)} AS hits_es
             FROM (SELECT lang, {_OT} AS toks FROM documents)
         )
     ),
@@ -1148,9 +1122,9 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = F.col("t")
     d = docs.select("lang", tokens("text").alias("t")).select(
         "lang",
-        _stop_hits(t, _STOP_EN).alias("hits_en"),
-        _stop_hits(t, _STOP_DE).alias("hits_de"),
-        _stop_hits(t, _STOP_ES).alias("hits_es"),
+        stop_hits("t").alias("hits_en"),
+        stop_hits("t", _STOP_DE).alias("hits_de"),
+        stop_hits("t", _STOP_ES).alias("hits_es"),
     )
     pred = (
         F.when(
@@ -1228,7 +1202,7 @@ _VCC_KS = (10, 100, 1000, 10000)
 def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     c = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("token"))
+        docs.select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("n"))
     )

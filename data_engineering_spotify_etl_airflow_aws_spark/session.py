@@ -260,19 +260,6 @@ def get_spark(
                 "SPARK_GRAFT_DRIVER_MEM", sf_mem or _default_driver_mem()
             ),
         )
-        # The generated-code cache (CodeGenerator.cache) defaults to 100
-        # entries while this suite compiles ~1000+ distinct codegen
-        # units, so shared sub-plans recompile after eviction. Measured
-        # A/B (r7): 4096 entries is -33s (-14%) on the 335-query suite
-        # at sf0.01/8cpus (compile-dominated), but +20s in a paired run
-        # at sf0.1/32cpus (execution-dominated; retaining thousands of
-        # compiled classes pressures the JIT) with +-15% run-to-run
-        # noise on this host. Scale-dependent tradeoff -> keep Spark's
-        # default; the env knob stays for re-measurement on other hosts.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "100"),
-        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Pin ANSI mode ON explicitly rather than inheriting the Spark 4
         # default (r13 behavior pins, tests/

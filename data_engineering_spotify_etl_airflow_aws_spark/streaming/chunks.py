@@ -9,7 +9,8 @@ across invocations - the per-run rebuild was bench noise (round-3
 verdict). The cache key covers the source file's identity (size + mtime)
 because the round driver regenerates /root/testdata between rounds, plus
 the caller's builder-version string and n_chunks, because a code change
-to the builder must not replay a stale layout from /tmp.
+to the builder must not replay a stale layout from /tmp. The same writer
+serves the PPM decode's payload feed (documents.parquet, doc_id ranges).
 
 repartitionByRange(ts) is the distributed way to write time-bucketed
 files: no global sort, no driver collection, and rows with equal ts land
@@ -94,13 +95,15 @@ def ensure_event_chunks(
     build_df: Callable[[], DataFrame],
     n_chunks: int = 6,
     builder_version: str = "1",
+    source: str = "events",
+    order: tuple[str, ...] = ("ts", "event_id"),
 ) -> str:
-    """Write build_df() as n_chunks time-bucketed parquet files, once per
-    (tag, source-file generation, builder version); return the chunk
+    """Write build_df() as n_chunks parquet files range-bucketed on
+    order[0] and sorted by `order` within each, once per (tag, generation
+    of the `source` table's file, builder version); return the chunk
     directory path. Callers bump builder_version whenever the build_df
     logic changes so stale /tmp layouts are never replayed."""
-    src = Path(sf_dir) / "events.parquet"
-    st = src.stat()
+    st = (Path(sf_dir) / f"{source}.parquet").stat()
     cache_id = hashlib.md5(
         f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}"
         f"|{n_chunks}|v{builder_version}".encode()
@@ -110,8 +113,8 @@ def ensure_event_chunks(
         shutil.rmtree(chunks, ignore_errors=True)  # partial previous write
         (
             build_df()
-            .repartitionByRange(n_chunks, "ts")
-            .sortWithinPartitions("ts", "event_id")
+            .repartitionByRange(n_chunks, order[0])
+            .sortWithinPartitions(*order)
             .write.parquet(str(chunks))
         )
         _stamp_mtimes_in_range_order(chunks)

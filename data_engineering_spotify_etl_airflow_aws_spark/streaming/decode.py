@@ -28,10 +28,6 @@ listing or notification source.
 
 from __future__ import annotations
 
-import hashlib
-import shutil
-from pathlib import Path
-
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.multimodal import (
@@ -40,34 +36,27 @@ from ..operators.multimodal import (
     ppm_payload_df,
 )
 from ..registry import ORACLES, query
-from .chunks import _CHUNK_ROOT, drain
+from .chunks import drain, ensure_event_chunks
 
 _PAYLOAD_SCHEMA = "doc_id bigint, payload binary"
 _N_CHUNKS = 4
 
 
 def ppm_payload_feed(spark: SparkSession, sf_dir: str) -> str:
-    """Write the PPM payload table as _N_CHUNKS doc_id-range-bucketed
-    parquet files, once per (source generation, builder version);
-    return the chunk directory. Mirrors chunks.ensure_event_chunks but
-    keys on documents.parquet and ranges on doc_id — no mtime stamping
-    needed: the decode is stateless (no event time, no watermark), so
-    file-arrival order cannot drop rows."""
-    src = Path(sf_dir) / "documents.parquet"
-    st = src.stat()
-    cache_id = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|{_N_CHUNKS}|v1".encode()
-    ).hexdigest()[:12]
-    chunks = _CHUNK_ROOT / "ppm_payload_chunks" / cache_id
-    if not (chunks / "_SUCCESS").exists():
-        shutil.rmtree(chunks, ignore_errors=True)  # partial previous write
-        (
-            ppm_payload_df(spark, sf_dir)
-            .repartitionByRange(_N_CHUNKS, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.parquet(str(chunks))
-        )
-    return str(chunks)
+    """The PPM payload table as _N_CHUNKS doc_id-range-bucketed parquet
+    files, keyed on documents.parquet's generation; return the chunk
+    directory. The range-order mtime stamp is harmless here: the decode
+    is stateless (no event time, no watermark), so file-arrival order
+    cannot drop rows."""
+    return ensure_event_chunks(
+        spark,
+        sf_dir,
+        "ppm_payload",
+        lambda: ppm_payload_df(spark, sf_dir),
+        n_chunks=_N_CHUNKS,
+        source="documents",
+        order=("doc_id",),
+    )
 
 
 def decode_stream(spark: SparkSession, chunk_dir: str) -> DataFrame:

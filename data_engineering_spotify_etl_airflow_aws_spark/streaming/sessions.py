@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..registry import query
+from ..registry import ORACLES, query
 from ..operators.windows import _MACRO_GAP_US, _MICRO_GAP_US
 from .chunks import (
     STATE_PARTITIONS,
@@ -291,48 +291,8 @@ def session_events(spark, chunk_dir: str) -> DataFrame:
 
 @query(
     "stream_session_rollup",
-    oracle=f"""
-    WITH e AS (
-        SELECT user_id, event_id, epoch_us(ts) AS us FROM events
-    ),
-    s AS (
-        SELECT user_id, us, event_id,
-               CASE WHEN lag(us) OVER w1 IS NULL
-                         OR us - lag(us) OVER w1 > {_MICRO_GAP_US}
-                    THEN 1 ELSE 0 END AS new_s
-        FROM e
-        WINDOW w1 AS (PARTITION BY user_id ORDER BY us, event_id)
-    ),
-    sid AS (
-        SELECT user_id, us,
-               CAST(sum(new_s) OVER (PARTITION BY user_id
-                   ORDER BY us, event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS BIGINT) AS sid
-        FROM s
-    ),
-    starts AS (
-        SELECT user_id, sid, min(us) AS start_us,
-               CAST(count(*) AS BIGINT) AS n_ev
-        FROM sid GROUP BY 1, 2
-    ),
-    v AS (
-        SELECT user_id, n_ev,
-               CASE WHEN lag(start_us) OVER w2 IS NULL
-                         OR start_us - lag(start_us) OVER w2
-                            > {_MACRO_GAP_US}
-                    THEN 1 ELSE 0 END AS new_v
-        FROM starts
-        WINDOW w2 AS (PARTITION BY user_id ORDER BY sid)
-    )
-    SELECT user_id,
-           CAST(sum(n_ev) AS BIGINT) AS n_events,
-           CAST(count(*) AS BIGINT) AS n_sessions,
-           CAST(sum(new_v) AS BIGINT) AS n_visits,
-           CAST(count(*) AS DOUBLE) / CAST(CAST(sum(new_v) AS VARCHAR) AS DOUBLE)
-               AS sessions_per_visit
-    FROM v GROUP BY user_id
-    """,
+    # the batch twin's oracle verbatim: streaming must be hash-equal
+    oracle=ORACLES["macro_session_rollup"],
 )
 def stream_session_rollup(spark, sf_dir: str) -> DataFrame:
     """Timer-bounded streaming sessionization: drain the event chunk

@@ -30,7 +30,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from ..registry import query
+from ..operators.statistics import _RL_CAP
+from ..registry import ORACLES, query
 from .chunks import (
     STATE_PARTITIONS,
     append_batch,
@@ -215,7 +216,7 @@ def stateful_running_totals(spark, sf_dir: str) -> DataFrame:
 # rate_limit_flags operator (operators/statistics.py). Per-user state is
 # ONE (current_hour, count) pair - bounded regardless of stream length -
 # advanced row-by-row in event-time order; every event past the first
-# _SRL_CAP in its (user, clock-hour) bucket is emitted flagged. Exactness
+# _RL_CAP in its (user, clock-hour) bucket is emitted flagged. Exactness
 # rests on the chunk feed's arrival-order == event-time-order guarantee
 # (chunks.py: range-bucketed files, mtimes stamped in range order; equal
 # timestamps never straddle a chunk) plus an in-group (ts, event_id)
@@ -227,8 +228,6 @@ def stateful_running_totals(spark, sf_dir: str) -> DataFrame:
 # hash-partitioned by user_id; rows cross the Python boundary in Arrow
 # batches; emitted rows are append-only (no retraction), so any
 # append-capable sink works downstream.
-_SRL_CAP = 3  # == statistics._RL_CAP; the parity test pins them equal
-
 SRL_STATE_SCHEMA = T.StructType(
     [
         T.StructField("cur_hour", T.LongType()),
@@ -267,7 +266,7 @@ def _rate_limit(
         if hour != cur_hour:
             cur_hour, cnt = hour, 0
         cnt += 1
-        flags.append(1 if cnt > _SRL_CAP else 0)
+        flags.append(1 if cnt > _RL_CAP else 0)
     state.update((cur_hour, cnt))
     yield pd.DataFrame(
         {
@@ -293,23 +292,8 @@ def rate_limit_stream(events_stream: DataFrame) -> DataFrame:
 
 @query(
     "stream_rate_limit_flags",
-    oracle=f"""
-    WITH ranked AS (
-        SELECT event_type,
-               row_number() OVER (
-                   PARTITION BY user_id, date_trunc('hour', ts)
-                   ORDER BY ts, event_id
-               ) AS rn
-        FROM events
-    )
-    SELECT event_type,
-           CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CASE WHEN rn > {_SRL_CAP} THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_throttled,
-           round(CAST(CAST(sum(CASE WHEN rn > {_SRL_CAP} THEN 1 ELSE 0 END) AS VARCHAR) AS DOUBLE) / count(*), 6) AS throttle_rate
-    FROM ranked
-    GROUP BY event_type
-    """,
+    # the batch twin's oracle verbatim: streaming must be hash-equal
+    oracle=ORACLES["rate_limit_flags"],
 )
 def stream_rate_limit_flags(spark, sf_dir: str) -> DataFrame:
     """Drain the chunked event stream through the stateful limiter and

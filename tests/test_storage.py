@@ -150,36 +150,42 @@ def test_ntile_deciles_no_global_sort_window(spark):
     window must be fed by a _band-hash exchange. The cumulative-offset
     window over the per-band COUNT table is allowed to be
     SinglePartition — its input cardinality is the band count, bounded
-    by construction, never the data."""
+    by construction, never the data. Both banded decile queries
+    (functions.band_offsets) are checked; decile_lift_table's
+    cumulative-capture window runs over its 10-row decile table."""
     from data_engineering_spotify_etl_airflow_aws_spark.registry import QUERIES
 
     from .conftest import SF_CORRECT
 
-    df = QUERIES["ntile_price_deciles"](spark, SF_CORRECT)
-    df.collect()
-    plan = plans.executed_plan(df)
-    lines = plan.splitlines()
-    rn_windows = [
-        i for i, l in enumerate(lines) if "Window" in l and "row_number" in l
-    ]
-    assert rn_windows, "expected a per-band row_number window"
-    for i in rn_windows:
-        feeding = next(
-            (l for l in lines[i + 1 : i + 6] if "Exchange" in l), ""
-        )
-        assert "hashpartitioning(_band" in feeding, (
-            f"row_number window fed by non-band exchange: {feeding.strip()[:120]}"
-        )
-    # the bounded offset window exists but must only aggregate _bn counts
-    other = [
-        i
-        for i, l in enumerate(lines)
-        if "Window" in l and "row_number" not in l and "windowspecdefinition" in l
-    ]
-    for i in other:
-        assert "_bn" in lines[i], (
-            f"unexpected non-count single-partition window: {lines[i].strip()[:120]}"
-        )
+    for name in ("ntile_price_deciles", "decile_lift_table"):
+        df = QUERIES[name](spark, SF_CORRECT)
+        df.collect()
+        plan = plans.executed_plan(df)
+        lines = plan.splitlines()
+        rn_windows = [
+            i for i, l in enumerate(lines) if "Window" in l and "row_number" in l
+        ]
+        assert rn_windows, f"{name}: expected a per-band row_number window"
+        for i in rn_windows:
+            feeding = next(
+                (l for l in lines[i + 1 : i + 6] if "Exchange" in l), ""
+            )
+            assert "hashpartitioning(_band" in feeding, (
+                f"{name}: row_number window fed by non-band exchange: "
+                f"{feeding.strip()[:120]}"
+            )
+        # the bounded windows exist but only over the _bn band counts (or
+        # the 10-row decile table)
+        other = [
+            i
+            for i, l in enumerate(lines)
+            if "Window" in l and "row_number" not in l and "windowspecdefinition" in l
+        ]
+        for i in other:
+            assert "_bn" in lines[i] or "windowspecdefinition(decile" in lines[i], (
+                f"{name}: unexpected single-partition window: "
+                f"{lines[i].strip()[:120]}"
+            )
 
 
 def test_bucketed_join_is_exchange_free(spark):
