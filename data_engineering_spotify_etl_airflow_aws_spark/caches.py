@@ -2,7 +2,7 @@
 
 Several operators persist an expensive shared relation (the Jaccard
 shingle base, the IVF embedding base, the MinHash band keys, the
-decontamination gram base, the scale-gated duplicated subtrees). The
+decontamination gram base, the scale-gated shared subtrees). The
 returned query plans are lazy, so an in-function unpersist would fire
 before the caller ever runs the plan. Instead every persist goes
 through persist() / persist_when_scaled() here, which record the
@@ -65,32 +65,28 @@ def persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     return out
 
 
-def persist_when_scaled(df: DataFrame, splits: int, dup: int) -> DataFrame:
-    """Persist a multiply-consumed derived relation ONLY when its input
-    is large enough that re-executing the duplicated subtree costs real
-    wall-clock (guide §2.4/§5, scale-gated like widen_small_scan).
+def persist_when_scaled(df: DataFrame, base: DataFrame) -> DataFrame:
+    """Persist a multiply-consumed derived relation ONLY when its source
+    scan ``base`` fills the cores (tables.scan_splits: at least
+    ``defaultParallelism`` splits), the rule widen_small_scan uses.
 
-    Spark re-executes every reference to an unpersisted DataFrame, so a
-    subtree consumed ``dup`` times runs ``dup`` times per action. At
+    Spark re-executes every reference to an unpersisted DataFrame. At
     fixture scale that duplication is nearly FREE: the branches are
-    single-split columnar scans that execute concurrently on
-    otherwise-idle cores, while a persist serializes a materialization
-    barrier and replaces codegen-over-parquet reads with
-    InMemoryTableScan row iteration - measured as a consistent LOSS for
-    12 such persists in the r16 A/Bs (+0.06-0.55 s each, reverted). At
-    real corpus scale there is no idle capacity to hide the duplication
-    - every re-execution is pure added wall-clock and I/O - so the
+    few-split columnar scans that execute concurrently on otherwise-idle
+    cores, while a persist serializes a materialization barrier and
+    replaces codegen-over-parquet reads with InMemoryTableScan row
+    iteration - measured as a consistent LOSS for 12 such persists in
+    the r16 A/Bs (+0.06-0.55 s each, reverted). Once the source scan
+    fills the cores there is no idle capacity to hide the duplication -
+    every re-execution is pure added wall-clock and I/O - so the
     persist wins.
 
-    Gate: engage when ``dup x splits >= session parallelism``, i.e.
-    when one concurrent execution of all duplicated branches would
-    already saturate the cores, so re-execution can no longer ride idle
-    capacity. ``splits`` is the source scan's split count - pass
-    ``tables.scan_splits(spark, sf_dir, table)`` (memoized). Fixtures
-    scan as few splits, but not always one: under ``local[4]`` the
-    sf0.1 lineitem (10.8 MB) scans as 3 splits, so on a low-core
-    session a gate with ``dup >= 2`` over lineitem does engage at bench
-    scale.
+    ``base`` is the ``tables.load_table`` frame of the input the site
+    names (pass it, not a projection that sits behind a persist or a
+    checkpoint: those read no files). The rule once scaled the splits
+    by a hand-counted consumer count; that only moved engagement on
+    fixtures under low-core sessions (splits < parallelism <= splits x
+    count), the cheap-subtree regime above.
 
     An engaged persist joins the query scope like persist(), at
     MEMORY_AND_DISK, and is released when the next query is built
@@ -101,9 +97,11 @@ def persist_when_scaled(df: DataFrame, splits: int, dup: int) -> DataFrame:
     """
     from pyspark import StorageLevel
 
+    from .tables import scan_splits
+
     target = df.sparkSession.sparkContext.defaultParallelism
     forced = os.environ.get("SPARK_GRAFT_FORCE_SCALE_PERSIST", "") == "1"
-    if not forced and splits * max(dup, 1) < target:
+    if not forced and scan_splits(base) < target:
         return df
     return persist(df, StorageLevel.MEMORY_AND_DISK)
 

@@ -654,19 +654,16 @@ _TEMP_U_DUCK = (
     """,
 )
 def lang_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): `counts` feeds the min agg and the
     # rate table - plus the final keep-join re-scans docs, 3 scans per
     # plan. No-op at fixture scale (the r16 cheap-subtree lesson); at
     # corpus scale the re-scans are pure added I/O, so the per-lang
     # count table (bounded by the language set) persists once the
-    # input has real splits.
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
+    # scan fills the cores.
+    scan = load_table(spark, sf_dir, "documents")
+    docs = scan.select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_l"))
-    counts = caches.persist_when_scaled(
-        counts, scan_splits(spark, sf_dir, "documents"), dup=3
-    )
+    counts = caches.persist_when_scaled(counts, scan)
     n_min = counts.agg(F.min("n_l").alias("n_min"))
     rates = (
         counts.crossJoin(F.broadcast(n_min))  # 1-row broadcast, bounded
@@ -1317,13 +1314,9 @@ def curriculum_stage_assignment(
     # and the final stage rollup - 3 runs of the tokenize + quality
     # scoring per plan. No-op at fixture scale (the r16 cheap-subtree
     # lesson); at corpus scale the re-tokenizes are pure added CPU, so
-    # the 2-int-per-doc relation persists (disk-backed) once the input
-    # has real splits.
-    from ..tables import scan_splits
-
-    q = caches.persist_when_scaled(
-        q, scan_splits(spark, sf_dir, "documents"), dup=3
-    )
+    # the 2-int-per-doc relation persists (disk-backed) once the scan
+    # fills the cores.
+    q = caches.persist_when_scaled(q, docs)
 
     def cuts(col: str, alias1: str, alias2: str):
         hist = q.groupBy(col).agg(F.count("*").alias("c"))

@@ -71,9 +71,6 @@ _N_BANDS, _BAND_ROWS = 4, 4  # 16 = 4 bands x 4 rows
 
 _OT = ORACLE_TOKENS.format(col="text")
 
-# Shingles are distinct token 3-grams (functions.ngrams).
-_DUCK_SHINGLES = f"list_distinct({oracle_ngrams(_OT, 3)})"
-
 # --- shared hash expressions, Spark (SQL-expr) and DuckDB forms.
 # 32-bit hash of a string from its md5 hex prefix - identical cross-engine
 _SPARK_H32 = "cast(conv(substring(md5(cast({s} as binary)), 1, 8), 16, 10) as bigint)"
@@ -101,9 +98,16 @@ def _spark_shingle_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Shingles are distinct token 3-grams (functions.ngrams). The token
+# list is bound once in a subquery: inlined, DuckDB re-ran the regex
+# tokenizer for every t[i] of the n-gram lambda (1.60 s -> 0.03 s at
+# sf0.01, same rows).
 _DUCK_SHINGLE_BASE = f"""
-    SELECT doc_id, {_DUCK_SHINGLES} AS sh, len({_DUCK_SHINGLES}) AS n_sh
-    FROM documents
+    SELECT doc_id, sh, len(sh) AS n_sh
+    FROM (
+        SELECT doc_id, list_distinct({oracle_ngrams('t', 3)}) AS sh
+        FROM (SELECT doc_id, {_OT} AS t FROM documents)
+    )
 """
 
 

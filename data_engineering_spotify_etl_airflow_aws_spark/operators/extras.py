@@ -1234,27 +1234,24 @@ def dynamic_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def dq_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persists (r17): the six unioned checks re-scan
     # orders (5x) / customer (2x). At fixture scale an unconditional
     # persist LOST (r16 A/B min-of-3 0.66s -> 1.21s: InMemoryTableScan
     # of a row cache is slower than re-running trivial columnar scans
     # that ride idle cores); at corpus scale the re-scans are pure
     # added I/O, so the checked-column projections persist once the
-    # input has real splits. The projections bound what the persist
+    # scan fills the cores. The projections bound what the persist
     # materializes to exactly the columns the checks read.
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-    )
+    scan = load_table(spark, sf_dir, "orders")
     orders = caches.persist_when_scaled(
-        orders, scan_splits(spark, sf_dir, "orders"), dup=5
+        scan.select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
+        ),
+        scan,
     )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_acctbal"
-    )
+    cust_scan = load_table(spark, sf_dir, "customer")
     cust = caches.persist_when_scaled(
-        cust, scan_splits(spark, sf_dir, "customer"), dup=2
+        cust_scan.select("c_custkey", "c_acctbal"), cust_scan
     )
 
     def check(df: DataFrame, table: str, name: str, violation) -> DataFrame:
@@ -1408,22 +1405,16 @@ _PROFILE_COLS = (
     """,
 )
 def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): one agg branch per profiled column
     # re-scans orders. At fixture scale an unconditional persist LOST
     # (r16 A/B min-of-3 0.74s -> 1.14s - the dq lesson); at corpus
     # scale the re-scans are pure added I/O, so the profiled-column
-    # projection persists once the input has real splits. Note the
+    # projection persists once the scan fills the cores. Note the
     # trade the gate is making: per-branch parquet scans prune to ONE
     # column each, while the persist materializes all profiled columns
     # once and reads them 4x - a win only when scan I/O dominates.
-    orders = load_table(spark, sf_dir, "orders").select(*_PROFILE_COLS)
-    orders = caches.persist_when_scaled(
-        orders,
-        scan_splits(spark, sf_dir, "orders"),
-        dup=len(_PROFILE_COLS),
-    )
+    scan = load_table(spark, sf_dir, "orders")
+    orders = caches.persist_when_scaled(scan.select(*_PROFILE_COLS), scan)
     parts = [
         orders.agg(
             F.lit(c).alias("column_name"),
@@ -2739,19 +2730,18 @@ def retractable_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def fd_violation_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): the three FD branches each re-scan
     # orders. No-op at fixture scale (the r16 cheap-subtree lesson); at
     # corpus scale the re-scans are pure added I/O, so the projection
-    # of exactly the checked columns persists once the input has real
-    # splits.
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate",
-        "o_orderstatus", "o_orderpriority",
-    )
+    # of exactly the checked columns persists once the scan fills the
+    # cores.
+    scan = load_table(spark, sf_dir, "orders")
     o = caches.persist_when_scaled(
-        o, scan_splits(spark, sf_dir, "orders"), dup=3
+        scan.select(
+            "o_orderkey", "o_custkey", "o_orderdate",
+            "o_orderstatus", "o_orderpriority",
+        ),
+        scan,
     )
 
     def branch(fd: str, det: str, dep: str) -> DataFrame:
@@ -3025,18 +3015,14 @@ def freshness_sla_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_changelog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): the three changelog batches each
     # re-scan orders (different %-filters, same two columns). No-op at
     # fixture scale (the r16 cheap-subtree lesson); at corpus scale the
     # re-scans are pure added I/O, so the 2-column projection persists
-    # once the input has real splits.
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice"
-    )
+    # once the scan fills the cores.
+    scan = load_table(spark, sf_dir, "orders")
     o = caches.persist_when_scaled(
-        o, scan_splits(spark, sf_dir, "orders"), dup=3
+        scan.select("o_orderkey", "o_totalprice"), scan
     )
 
     def batch(mod: int, seq: int, op: str, price):
@@ -3296,7 +3282,8 @@ _WOW_TOP = 20
     """,
 )
 def rank_movers_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select(
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    li = lineitem.select(
         "l_partkey",
         F.date_trunc("week", "l_shipdate").alias("wk"),
         F.floor(
@@ -3321,12 +3308,8 @@ def rank_movers_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run the lineitem scan + max-week agg + weekly rollup + rank
     # window (4 lineitem scans per plan). No-op at fixture scale (the
     # r16 cheap-subtree lesson); at corpus scale the part-bounded
-    # ranked relation persists once the input has real splits.
-    from ..tables import scan_splits
-
-    ranked = caches.persist_when_scaled(
-        ranked, scan_splits(spark, sf_dir, "lineitem"), dup=4
-    )
+    # ranked relation persists once the scan fills the cores.
+    ranked = caches.persist_when_scaled(ranked, lineitem)
     c, p = ranked.alias("c"), ranked.alias("p")
     return (
         c.where(F.col("c.wk") == F.col("c.w_curr"))
@@ -3881,7 +3864,8 @@ def except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select(
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    li = lineitem.select(
         "l_partkey",
         F.date_trunc("week", "l_shipdate").alias("wk"),
         F.floor(
@@ -3914,13 +3898,9 @@ def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prior-week sides of the bridge - the lineitem scan + max-week agg
     # + filter + rollup runs twice per plan (4 lineitem scans). No-op
     # at fixture scale (the r16 cheap-subtree lesson); at corpus scale
-    # the part-bounded two-week rollup persists once the input has real
-    # splits.
-    from ..tables import scan_splits
-
-    wk = caches.persist_when_scaled(
-        wk, scan_splits(spark, sf_dir, "lineitem"), dup=4
-    )
+    # the part-bounded two-week rollup persists once the scan fills the
+    # cores.
+    wk = caches.persist_when_scaled(wk, lineitem)
     c = wk.where("is_curr").select(
         F.col("l_partkey").alias("pk_c"),
         F.col("rev").alias("rev1"),
@@ -4615,7 +4595,8 @@ def pivot_multi_agg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = load_table(spark, sf_dir, "orders").select(
+    scan = load_table(spark, sf_dir, "orders")
+    orders = scan.select(
         "o_custkey",
         F.year("o_orderdate").alias("oy"),
         F.floor(F.col("o_totalprice") * F.lit(1_000_000) + F.lit(0.5))
@@ -4625,14 +4606,10 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Scale-gated persist (r17): `fo` (first order year per customer)
     # feeds the cohort-size agg and the revenue join - 3 orders scans
     # per plan. No-op at fixture scale (the r16 cheap-subtree lesson);
-    # at corpus scale the per-customer rollup persists once the input
-    # has real splits.
-    from ..tables import scan_splits
-
+    # at corpus scale the per-customer rollup persists once the scan
+    # fills the cores.
     fo = orders.groupBy("o_custkey").agg(F.min("oy").alias("cohort_y"))
-    fo = caches.persist_when_scaled(
-        fo, scan_splits(spark, sf_dir, "orders"), dup=3
-    )
+    fo = caches.persist_when_scaled(fo, scan)
     sz = fo.groupBy("cohort_y").agg(F.count("*").alias("cohort_n"))
     rev = (
         orders.join(fo, "o_custkey")
@@ -4761,7 +4738,8 @@ _TKS_K = 100
     """,
 )
 def topk_stability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li0 = load_table(spark, sf_dir, "lineitem").select(
+    lineitem = load_table(spark, sf_dir, "lineitem")
+    li0 = lineitem.select(
         "l_partkey",
         F.to_date("l_shipdate").alias("sd"),
         F.floor(
@@ -4793,12 +4771,8 @@ def topk_stability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run the lineitem scan + bounds agg + per-half rollup (4
     # lineitem scans per plan). No-op at fixture scale (the r16
     # cheap-subtree lesson); at corpus scale the part-bounded per-half
-    # revenue rollup persists once the input has real splits.
-    from ..tables import scan_splits
-
-    g = caches.persist_when_scaled(
-        g, scan_splits(spark, sf_dir, "lineitem"), dup=4
-    )
+    # revenue rollup persists once the scan fills the cores.
+    g = caches.persist_when_scaled(g, lineitem)
 
     def top(first: bool):
         return (

@@ -346,17 +346,13 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape is not. At true corpus scale the right lever is persisting
     # tf ahead of both consumers; at bench scale that trade inverts -
     # r17 realizes exactly that split with the scale-gated persist
-    # (no-op at fixture scale, engages once the input has real splits).
-    from ..tables import scan_splits
-
+    # (no-op at fixture scale, engages once the scan fills the cores).
     tf = (
         docs.select("doc_id", F.explode(tokens("text")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
     )
-    tf = caches.persist_when_scaled(
-        tf, scan_splits(spark, sf_dir, "documents"), dup=2
-    )
+    tf = caches.persist_when_scaled(tf, docs)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))
     scored = (

@@ -352,17 +352,13 @@ def gini_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def kl_divergence_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): 4 consumers re-scan the projection. At
     # fixture scale an unconditional persist LOST (r16 A/B min-of-3
     # 0.28s -> 0.38s: narrow scans ride idle cores); at corpus scale the
     # re-scans are pure added I/O, so the pruned 2-column projection
-    # persists once the input has real splits.
-    docs = load_table(spark, sf_dir, "documents").select("source", "lang")
-    docs = caches.persist_when_scaled(
-        docs, scan_splits(spark, sf_dir, "documents"), dup=4
-    )
+    # persists once the scan fills the cores.
+    scan = load_table(spark, sf_dir, "documents")
+    docs = caches.persist_when_scaled(scan.select("source", "lang"), scan)
     cell = docs.groupBy("source", "lang").agg(F.count("*").alias("n_sl"))
     ms = docs.groupBy("source").agg(F.count("*").alias("n_s"))
     ml = docs.groupBy("lang").agg(F.count("*").alias("n_l"))
@@ -445,16 +441,14 @@ def item_item_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4.08s -> 4.50s) versus re-running the pair explode from the
     # cached baskets. At corpus scale the second explode+agg is a full
     # extra pass over the largest intermediate, so the pair table
-    # persists (disk-backed) once the input has real splits.
-    from ..tables import scan_splits
-
+    # persists (disk-backed) once the scan fills the cores.
     support = (
         _basket_pairs(baskets)
         .groupBy("u", "v")
         .agg(F.count("*").alias("support"))
     )
     support = caches.persist_when_scaled(
-        support, scan_splits(spark, sf_dir, "lineitem"), dup=2
+        support, load_table(spark, sf_dir, "lineitem")
     )
     bidir = support.select(
         F.col("u").alias("part_key"), F.col("v").alias("rec_key"), "support"
@@ -1752,32 +1746,26 @@ def retention_by_age(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def growth_accounting_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persists (r17): `seq` feeds the state classifier and
     # the churn branch, and `act` additionally feeds the max-day agg -
     # 3 events scan+distinct runs per plan. No-ops at fixture scale
     # (the r16 cheap-subtree lesson); at corpus scale the re-runs are
     # full extra passes, so both (user, day)-bounded relations persist
-    # once the input has real splits.
+    # once the scan fills the cores.
     ev_scan = load_table(spark, sf_dir, "events")
     act = (
         ev_scan
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
     )
-    act = caches.persist_when_scaled(
-        act, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    act = caches.persist_when_scaled(act, ev_scan)
     w = W.partitionBy("user_id").orderBy("day")
     seq = act.select(
         "day",
         F.lag("day").over(w).alias("prev_day"),
         F.lead("day").over(w).alias("next_day"),
     )
-    seq = caches.persist_when_scaled(
-        seq, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    seq = caches.persist_when_scaled(seq, ev_scan)
     maxd = act.agg(F.max("day").alias("max_day"))
     active_states = seq.select(
         "day",
@@ -2020,22 +2008,18 @@ _WAU_DAYS = 7
     """,
 )
 def weekly_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): `act` feeds the max-day agg, the
     # window-cover explode, and the DAU agg - 3 events scan+distinct
     # runs per plan. No-op at fixture scale (the r16 cheap-subtree
     # lesson); at corpus scale the (user, day) rollup persists once the
-    # input has real splits.
+    # scan fills the cores.
     ev_scan = load_table(spark, sf_dir, "events")
     act = (
         ev_scan
         .select("user_id", F.to_date("ts").alias("day"))
         .distinct()
     )
-    act = caches.persist_when_scaled(
-        act, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    act = caches.persist_when_scaled(act, ev_scan)
     maxd = act.agg(F.max("day").alias("max_day"))
     cover = (
         act.select(

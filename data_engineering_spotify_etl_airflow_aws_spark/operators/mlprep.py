@@ -129,21 +129,18 @@ _DUCK_TOK_TABLE = f"""
     """,
 )
 def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persists (r17): dl (2 consumers) and tf (2 consumers)
     # each re-run the tokenize+explode subtree - 3 full tokenize passes
     # per plan. At fixture scale an unconditional persist of dl LOST
     # (r16 A/B min-of-3 0.77s -> 0.90s: duplicated branches ride idle
     # cores); at corpus scale re-tokenizing is pure added CPU, so the
     # bounded rollups (dl: one row/doc; tf: docs x |_BM25_TERMS|)
-    # persist once the input has real splits. The full token stream
+    # persist once the scan fills the cores. The full token stream
     # stays unpersisted at every scale (unbounded; the heaps lesson).
+    docs = load_table(spark, sf_dir, "documents")
     tok = _doc_tokens(spark, sf_dir).select("doc_id", "tok")
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    dl = caches.persist_when_scaled(
-        dl, scan_splits(spark, sf_dir, "documents"), dup=3
-    )
+    dl = caches.persist_when_scaled(dl, docs)
     stats = dl.agg(
         F.count("*").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
@@ -153,9 +150,7 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", F.col("tok").alias("term"))
         .agg(F.count("*").alias("tf"))
     )
-    tf = caches.persist_when_scaled(
-        tf, scan_splits(spark, sf_dir, "documents"), dup=3
-    )
+    tf = caches.persist_when_scaled(tf, docs)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     k1 = F.expr(_BM25_K1)
     k1p1 = F.expr(_BM25_K1P1)
@@ -502,14 +497,12 @@ def _bloom_pos_spark(i: int, key: str) -> str:
     """,
 )
 def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): build (filtered distinct custkeys) has
     # 4 consumers and bits 3, re-running the orders scan 10x per plan.
     # At fixture scale an unconditional persist LOST (r16 A/B min-of-3
     # 1.10s -> 1.34s: cheap columnar scans ride idle cores); at corpus
     # scale the re-scans are pure added I/O, so both bounded relations
-    # persist once the input has real splits.
+    # persist once the scan fills the cores.
     ord_scan = load_table(spark, sf_dir, "orders")
     build = (
         ord_scan
@@ -517,9 +510,7 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_custkey")
         .distinct()
     )
-    build = caches.persist_when_scaled(
-        build, scan_splits(spark, sf_dir, "orders"), dup=10
-    )
+    build = caches.persist_when_scaled(build, ord_scan)
     bits = (
         build.select(F.expr(_bloom_pos_spark(0, "o_custkey")).alias("pos"))
         .unionAll(
@@ -530,9 +521,7 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    bits = caches.persist_when_scaled(
-        bits, scan_splits(spark, sf_dir, "orders"), dup=10
-    )
+    bits = caches.persist_when_scaled(bits, ord_scan)
     cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     probe = cust.select(
         "c_custkey",
@@ -617,19 +606,17 @@ def bloom_filter_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): `vocab` feeds the total agg and the
     # logprob table - plus the scoring join re-tokenizes, 3 tokenize
     # runs per plan. No-op at fixture scale (the r16 cheap-subtree
     # lesson); at corpus scale a full re-tokenize is pure added CPU, so
-    # the vocabulary-bounded count table persists once the input has
-    # real splits. The raw token stream stays unpersisted (unbounded;
+    # the vocabulary-bounded count table persists once the scan fills
+    # the cores. The raw token stream stays unpersisted (unbounded;
     # the heaps lesson).
     tok = _doc_tokens(spark, sf_dir)
     vocab = tok.groupBy("tok").agg(F.count("*").alias("cnt"))
     vocab = caches.persist_when_scaled(
-        vocab, scan_splits(spark, sf_dir, "documents"), dup=3
+        vocab, load_table(spark, sf_dir, "documents")
     )
     tot = vocab.agg(F.sum("cnt").cast("double").alias("total"))
     lp = vocab.crossJoin(F.broadcast(tot)).select(

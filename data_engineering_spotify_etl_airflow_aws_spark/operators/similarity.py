@@ -1461,7 +1461,7 @@ def _drift_oracle() -> str:
 
 @query("embedding_centroid_drift", oracle=_drift_oracle())
 def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits, widen_small_scan
+    from ..tables import widen_small_scan
 
     emb_scan = load_table(spark, sf_dir, "embeddings")
     pe = widen_small_scan(
@@ -1484,12 +1484,8 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per plan. At fixture scale an unconditional persist LOST (r16 A/B
     # min-of-3 0.85s -> 0.99s: the branches ride idle cores); at corpus
     # scale 4 full explode passes are pure added work, so the bounded
-    # (2 x dims) moment grid persists once the input has real splits.
-    # Gate base is the RAW scan: widen_small_scan already fans the
-    # fixture out to 32 splits, which would otherwise fool the gate.
-    m = caches.persist_when_scaled(
-        m, scan_splits(spark, sf_dir, "embeddings"), dup=4
-    )
+    # (2 x dims) moment grid persists once the scan fills the cores.
+    m = caches.persist_when_scaled(m, emb_scan)
     q = m.select(
         "half",
         "dim",

@@ -517,17 +517,13 @@ def skew_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pmi_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): at fixture scale the 4 duplicated
     # narrow scans ride idle cores and an unconditional persist LOST
     # (r16 A/B min-of-3 0.30s -> 0.44s), but at corpus scale the 4x
-    # re-scan is pure added I/O, so the persist engages once the input
-    # has real splits (gate math in caches.persist_when_scaled).
-    docs = load_table(spark, sf_dir, "documents").select("lang", "source")
-    docs = caches.persist_when_scaled(
-        docs, scan_splits(spark, sf_dir, "documents"), dup=4
-    )
+    # re-scan is pure added I/O, so the persist engages once the scan
+    # fills the cores (the rule in caches.persist_when_scaled).
+    scan = load_table(spark, sf_dir, "documents")
+    docs = caches.persist_when_scaled(scan.select("lang", "source"), scan)
     cell = docs.groupBy("lang", "source").agg(F.count("*").alias("n_ij"))
     ml = docs.groupBy("lang").agg(F.count("*").alias("n_i"))
     ms = docs.groupBy("source").agg(F.count("*").alias("n_j"))
@@ -1117,8 +1113,6 @@ def column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("documents", "source"),
         ("customer", "c_mktsegment"),
     )
-    from ..tables import scan_splits
-
     src = None
     for tbl, col in cols:
         part = load_table(spark, sf_dir, tbl).select(
@@ -1129,12 +1123,10 @@ def column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the entropy join - 2 runs of the 6-table union scan per plan.
     # No-op at fixture scale (the r16 cheap-subtree lesson); at corpus
     # scale the re-scan of every profiled table is pure added I/O, so
-    # the per-(column, value) counts persist once the DOMINANT input
-    # (events - the gate base) has real splits.
+    # the per-(column, value) counts persist once the scan of the
+    # DOMINANT input (events - the gate base) fills the cores.
     cat = src.groupBy("column_name", "v").agg(F.count("*").alias("c"))
-    cat = caches.persist_when_scaled(
-        cat, scan_splits(spark, sf_dir, "events"), dup=2
-    )
+    cat = caches.persist_when_scaled(cat, load_table(spark, sf_dir, "events"))
     tot = cat.groupBy("column_name").agg(
         F.sum("c").alias("n"), F.count("*").alias("n_distinct")
     )
@@ -1257,19 +1249,16 @@ def daily_value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
-    docs = load_table(spark, sf_dir, "documents").select("lang", "source")
+    scan = load_table(spark, sf_dir, "documents")
+    docs = scan.select("lang", "source")
     # Scale-gated persist (r17): the grid feeds 4 consumers (rt/ct/tot/
     # terms), each re-running the docs scan + groupBy - 8 duplicated
     # scans per plan. At fixture scale an unconditional persist LOST
     # (r16 A/B min-of-3 0.79s -> 0.97s: idle cores hide the duplication);
     # at corpus scale the re-scans are pure added I/O, so the tiny
-    # (lang x source) grid persists once the input has real splits.
+    # (lang x source) grid persists once the scan fills the cores.
     cells = docs.groupBy("lang", "source").agg(F.count("*").alias("n_obs"))
-    cells = caches.persist_when_scaled(
-        cells, scan_splits(spark, sf_dir, "documents"), dup=8
-    )
+    cells = caches.persist_when_scaled(cells, scan)
     rt = cells.groupBy("lang").agg(F.sum("n_obs").cast("bigint").alias("r"))
     ct = cells.groupBy("source").agg(F.sum("n_obs").cast("bigint").alias("c"))
     tot = cells.agg(F.sum("n_obs").cast("bigint").alias("n"))
@@ -1744,8 +1733,6 @@ _EWMA_W = [repr(0.75**j) for j in range(_EWMA_LOOKBACK)]
     """,
 )
 def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): the (type, day) count grid feeds sig
     # and both sides of the lag self-join - 3 events scans per plan.
     # No-op at fixture scale (the r16 cheap-subtree lesson); at corpus
@@ -1756,9 +1743,7 @@ def ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("x"))
     )
-    d = caches.persist_when_scaled(
-        d, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    d = caches.persist_when_scaled(d, ev_scan)
     # daily-count squares through a decimal accumulator (the pattern the
     # OLS/trend moments above already use): at a 100 TB/day stream a
     # single (type, day) count reaches ~3e9+, whose SQUARE alone passes
@@ -1879,8 +1864,6 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # agg, the +/-3-day trend window (7 daily totals ~ 2e20 at the
     # design point), and the per-dow seasonal sums below all accumulate
     # in decimal; bigint output casts mirror the oracle's HUGEINT sums.
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): `det` feeds the per-dow seasonal agg
     # and the final join - 3 events scans per plan. No-op at fixture
     # scale (the r16 cheap-subtree lesson); at corpus scale the
@@ -1920,9 +1903,7 @@ def stl_daily_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("det_micro"),
     )
-    det = caches.persist_when_scaled(
-        det, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    det = caches.persist_when_scaled(det, ev_scan)
     s = det.groupBy("dow").agg(
         F.sum(F.col("det_micro").cast("decimal(38,0)")).cast("bigint").alias("sd"),
         F.count("*").cast("bigint").alias("nd"),
@@ -2581,8 +2562,6 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past int64 under the pinned ANSI mode; the
     # window sums stay decimal end-to-end like the oracle's HUGEINT
     # window sums (both only ever narrow into a double at the use site).
-    from ..tables import scan_splits
-
     # Scale-gated persists (r17): the day-series `c` feeds s1/t1, sided
     # and the top row - 3 events scans per plan - and t1 itself (a
     # 1-row pick that re-runs the whole series build) is consumed by
@@ -2615,9 +2594,7 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(xd).over(w_all).alias("tot"),
         F.count("*").over(w_all).alias("n"),
     )
-    c = caches.persist_when_scaled(
-        c, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    c = caches.persist_when_scaled(c, ev_scan)
 
     def gap_col():
         return F.abs(
@@ -2637,9 +2614,7 @@ def binseg_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("i").alias("i1"),
         F.col("gap").alias("gap1"),
     )
-    t1 = caches.persist_when_scaled(
-        t1, scan_splits(spark, sf_dir, "events"), dup=3
-    )
+    t1 = caches.persist_when_scaled(t1, ev_scan)
     sided = c.select("day", "x").crossJoin(F.broadcast(t1)).select(
         "day", "x", (F.col("day") <= F.col("split1")).alias("left_side"),
         "split1", "gap1",
@@ -2987,8 +2962,6 @@ def chisq_residual_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def hash_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     h = _ST_SH32.format(s="concat('sbias:', cast(event_id as string))")
     # Scale-gated persist (r17): `e` feeds the global moment agg and
     # the per-type mix - 2 events scans per plan, each re-running the
@@ -3004,9 +2977,7 @@ def hash_sample_bias_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("vm"),
         (F.expr(h) % 16 == 0).alias("in_sample"),
     )
-    e = caches.persist_when_scaled(
-        e, scan_splits(spark, sf_dir, "events"), dup=2
-    )
+    e = caches.persist_when_scaled(e, ev_scan)
     d = F.col("vm").cast("decimal(38,0)")
     m = e.agg(
         F.count("*").cast("bigint").alias("n_all"),

@@ -1089,7 +1089,8 @@ _ATTR_WINDOWS_H = (1, 6, 24, 72)
     """,
 )
 def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events").select(
+    events = load_table(spark, sf_dir, "events")
+    ev = events.select(
         "event_id", "user_id", "ts", "event_type"
     )
     probe = ev.where(F.col("event_type") == "purchase").select(
@@ -1110,12 +1111,8 @@ def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort) runs twice per plan. No-op at fixture scale (the r16
     # cheap-subtree lesson); at corpus scale the second asof join is a
     # full extra shuffle+sort, so the 2-column per-purchase gap
-    # relation persists (disk-backed) once the input has real splits.
-    from ..tables import scan_splits
-
-    g = caches.persist_when_scaled(
-        g, scan_splits(spark, sf_dir, "events"), dup=2
-    )
+    # relation persists (disk-backed) once the scan fills the cores.
+    g = caches.persist_when_scaled(g, events)
     t = g.agg(F.count("*").cast("bigint").alias("n_purchases"))
     wins = F.explode(
         F.array(*[F.lit(h).cast("bigint") for h in _ATTR_WINDOWS_H])

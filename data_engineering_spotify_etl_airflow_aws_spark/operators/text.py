@@ -707,23 +707,19 @@ _LO_TOP = 5
 def logodds_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
-    from ..tables import scan_splits
-
     docs = load_table(spark, sf_dir, "documents")
     # Scale-gated persist (r17): `st` has 4 consumers, each re-running
     # the tokenize+explode+groupBy subtree. At fixture scale an
     # unconditional persist LOST (r16 A/B min-of-3 0.85s -> 1.08s: the
     # duplicated branches ride idle cores); at corpus scale 4x
     # re-tokenize is pure added CPU, so the bounded (source x vocab)
-    # count grid persists once the input has real splits.
+    # count grid persists once the scan fills the cores.
     st = (
         docs.select("source", F.explode(tokens("text")).alias("token"))
         .groupBy("source", "token")
         .agg(F.count("*").alias("y_si"))
     )
-    st = caches.persist_when_scaled(
-        st, scan_splits(spark, sf_dir, "documents"), dup=4
-    )
+    st = caches.persist_when_scaled(st, docs)
     gt = st.groupBy("token").agg(F.sum("y_si").alias("y_i"))
     srct = st.groupBy("source").agg(F.sum("y_si").alias("n_s"))
     tot = st.agg(F.sum("y_si").alias("n"))
@@ -817,12 +813,10 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_docs"),
         F.min("doc_id").alias("id0"),
     )
-    from ..tables import scan_splits
-
     # Scale-gated persist (r17): two consumers re-run the full tokenize.
     # At fixture scale an unconditional persist LOST (r16 A/B min-of-3
     # 0.81s -> 0.95s); at corpus scale the second tokenize is pure added
-    # CPU, so the stream persists once the input has real splits.
+    # CPU, so the stream persists once the scan fills the cores.
     # Scale caveat: this relation is O(total tokens) - MEMORY_AND_DISK
     # spills it to local disk once and reads it back twice, which beats
     # re-running the regex tokenizer but is the largest persist the gate
@@ -841,9 +835,7 @@ def heaps_law_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "token",
         )
     )
-    tok = caches.persist_when_scaled(
-        tok, scan_splits(spark, sf_dir, "documents"), dup=2
-    )
+    tok = caches.persist_when_scaled(tok, docs)
     firsts = tok.groupBy("token").agg(F.min("bucket").alias("first_bucket"))
     vol = tok.groupBy("bucket").agg(F.count("*").alias("n_tokens"))
     news = firsts.groupBy(F.col("first_bucket").alias("bucket")).agg(
@@ -920,28 +912,22 @@ _PMI_TOP = 15
     """,
 )
 def bigram_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import scan_splits
-
     docs = load_table(spark, sf_dir, "documents")
     # Scale-gated persists (r17): `tk` has 3 consumers (uni, bi, n_bi)
     # and `uni` 3 (n_uni, ua, ub) - 5 tokenize runs per plan. At fixture
     # scale an unconditional persist of tk LOST (r16 A/B min-of-3
     # 0.83s -> 0.89s); at corpus scale the re-tokenizes are pure added
     # CPU, so the token arrays (O(corpus), disk-backed - the heaps
-    # caveat) and the bounded vocab counts persist once the input has
-    # real splits.
+    # caveat) and the bounded vocab counts persist once the scan fills
+    # the cores.
     tk = docs.select(tokens("text").alias("t"))
-    tk = caches.persist_when_scaled(
-        tk, scan_splits(spark, sf_dir, "documents"), dup=5
-    )
+    tk = caches.persist_when_scaled(tk, docs)
     uni = (
         tk.select(F.explode("t").alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("c"))
     )
-    uni = caches.persist_when_scaled(
-        uni, scan_splits(spark, sf_dir, "documents"), dup=5
-    )
+    uni = caches.persist_when_scaled(uni, docs)
     n_uni = uni.agg(F.sum("c").cast("bigint").alias("n"))
     bigrams = F.expr(
         "transform(sequence(1, size(t) - 1), "

@@ -932,16 +932,15 @@ def _register_kmv() -> None:
         """,
     )
     def kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from ..tables import scan_splits
-
-        ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
+        events = load_table(spark, sf_dir, "events")
+        ev = events.select("event_type", "user_id")
         # Scale-gated persist (r17): the sketch subtree (events scan +
         # md5 + distinct + top-k window) is re-run by every consumer -
         # 9 events scans in one plan. At fixture scale an unconditional
         # persist LOST (r16 A/B min-of-3 1.22s -> 1.50s: the duplicated
         # branches ride idle cores); at corpus scale the re-scans are
         # pure added I/O, so the tiny k-per-type sketch (and the distinct
-        # type list) persist once the input has real splits.
+        # type list) persist once the scan fills the cores.
         uh = ev.select(
             "event_type", F.expr(h_spark).alias("h")
         ).distinct()
@@ -951,13 +950,9 @@ def _register_kmv() -> None:
             .where(F.col("rn") <= k)
             .drop("rn")
         )
-        sk = caches.persist_when_scaled(
-            sk, scan_splits(spark, sf_dir, "events"), dup=9
-        )
+        sk = caches.persist_when_scaled(sk, events)
         types = ev.select("event_type").distinct()
-        types = caches.persist_when_scaled(
-            types, scan_splits(spark, sf_dir, "events"), dup=9
-        )
+        types = caches.persist_when_scaled(types, events)
         tpairs = (
             types.select(F.col("event_type").alias("type_a"))
             .join(

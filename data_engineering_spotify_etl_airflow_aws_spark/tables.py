@@ -14,12 +14,20 @@ to UTC in session.RUNTIME_CONFS).
 
 load_table() applies the needed session confs defensively because the
 correctness driver hands us a session we didn't build.
+
+One scale rule, probed by scan_splits(): an input fills the cores when
+its source scan has at least ``defaultParallelism`` splits.
+widen_small_scan() fans out a scan that does not;
+caches.persist_when_scaled() persists a shared relation whose base
+scan does.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+from urllib.parse import urlparse
+from urllib.request import url2pathname
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -64,9 +72,15 @@ def _layout(path: str) -> tuple[int, ...] | None:
         return None
 
 
+def _local_path(uri: str) -> str:
+    """Filesystem path of a ``file:`` URI as ``inputFiles()`` reports
+    it; "" (which has no layout) for any other scheme."""
+    u = urlparse(uri)
+    return url2pathname(u.path) if u.scheme == "file" else ""
+
+
 def _memo_key(spark: SparkSession, path: str) -> tuple:
-    """(applicationId, path, layout): the key of both per-session layout
-    memos below."""
+    """(applicationId, path, layout): the key of the schema memo below."""
     return (spark.sparkContext.applicationId, path, _layout(path))
 
 
@@ -124,33 +138,49 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# Per-session memo of scan split counts (see scan_splits). Keyed on
-# _memo_key + parallelism, so a rewritten table probes again; holds ONE
-# int of physical-layout metadata per table - never query results.
+# Per-session memo of scan split counts (see scan_splits). Keyed on the
+# applicationId, each input file with its _layout, and the parallelism,
+# so a rewritten table probes again; holds ONE int of physical-layout
+# metadata per input - never query results.
 _SCAN_SPLITS_MEMO: dict[tuple, int] = {}
 
 
-def scan_splits(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Split count of a testdata table's scan, memoized per session.
+def scan_splits(df: DataFrame) -> int:
+    """Split count of a plain parquet scan of ``df``'s input files,
+    memoized per session; 0 for a frame that reads no files.
 
-    The persist gate (caches.py) needs the input's scan parallelism, but
-    computing it costs real driver time inside the gated query's timed
-    window (measured r17: ~48 ms for .rdd.getNumPartitions() on an
-    existing DataFrame, ~180 ms with a fresh load_table) - enough to
-    show up as a fake "regression" on sub-second queries. The count is
-    physical-layout metadata (file count x sizes x maxPartitionBytes),
-    constant for a fixture layout within a session, NOT a query result
-    or intermediate - memoizing it is a planning-cost optimization of
-    the same kind as Spark's own session FileIndex cache.
+    This is the one probe behind both scale gates. An input *fills the
+    cores* when its source scan has at least ``defaultParallelism``
+    splits: widen_small_scan fans out a scan that does not, and
+    caches.persist_when_scaled persists a shared relation whose base
+    does. The count is physical-layout metadata (file count x sizes x
+    maxPartitionBytes), constant for a layout within a session, so it
+    is memoized like Spark's own FileIndex cache: an unmemoized
+    ``getNumPartitions()`` costs ~20-60 ms of driver time inside the
+    query's build. A file without a readable layout is never memoized.
+
+    The miss counts a fresh scan of the files, never ``df``'s own
+    partitioning, so a widened or repartitioned frame reports the
+    splits of the scan under it.
     """
-    key = _memo_key(spark, f"{sf_dir.rstrip('/')}/{name}.parquet") + (
+    spark = df.sparkSession
+    files = sorted(df.inputFiles())
+    if not files:
+        return 0
+    layouts = tuple(_layout(_local_path(f)) for f in files)
+    key = (
+        spark.sparkContext.applicationId,
+        tuple(files),
+        layouts,
         spark.sparkContext.defaultParallelism,
     )
-    if key not in _SCAN_SPLITS_MEMO:
-        _SCAN_SPLITS_MEMO[key] = load_table(
-            spark, sf_dir, name
-        ).rdd.getNumPartitions()
-    return _SCAN_SPLITS_MEMO[key]
+    n = _SCAN_SPLITS_MEMO.get(key)
+    if n is None:
+        scan = spark.read.schema(StructType()).parquet(*files)
+        n = scan.rdd.getNumPartitions()
+        if None not in layouts:
+            _SCAN_SPLITS_MEMO[key] = n
+    return n
 
 
 def widen_small_scan(df: DataFrame) -> DataFrame:
@@ -158,12 +188,13 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     per-row work (regex tokenization, shingling, n-gram building).
 
     A small parquet fixture is ONE split (single row group), so without
-    this the whole map stage runs on one core while 31 idle - measured
-    3.5s -> 1.3s for the Jaccard shingle base at sf0.1. At real scale the
-    scan already has >= parallelism splits and this is a no-op, so the
-    shuffle only exists in exactly the regime where it is free.
+    this the whole map stage runs on one core while the rest idle -
+    measured 3.5s -> 1.3s for the Jaccard shingle base at sf0.1 on 32
+    cores. A scan that fills the cores (see scan_splits) - every real
+    corpus - passes through, as does a frame that reads no files, so
+    the shuffle only exists in exactly the regime where it is free.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
+    if 0 < scan_splits(df) < target:
+        return df.repartition(target)
+    return df

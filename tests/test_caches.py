@@ -11,8 +11,9 @@ while a direct call between operators keeps its caller's. Three checks:
   site was dropped or added;
 * scope semantics - cross-family release through QUERIES, no release on
   a direct (nested) call;
-* a source lint - no package module but caches.py persists, unpersists
-  or keeps a module-level ``*_CACHE`` list.
+* source lints - no package module but caches.py persists, unpersists
+  or keeps a module-level ``*_CACHE`` list, and none but caches.py and
+  tables.py probes scan splits or passes a hand-counted ``dup=``.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import inspect
 import os
 
 import data_engineering_spotify_etl_airflow_aws_spark as engine
-from data_engineering_spotify_etl_airflow_aws_spark import caches
+from data_engineering_spotify_etl_airflow_aws_spark import caches, tables
 from data_engineering_spotify_etl_airflow_aws_spark.registry import QUERIES
 
 from .conftest import SF_SMOKE
@@ -207,18 +208,50 @@ def _lifecycle_violations(path: str) -> list[str]:
     return bad
 
 
+def _scale_probe_violations(path: str) -> list[str]:
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    probes = path in (caches.__file__, tables.__file__)
+    bad = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        func = node.func
+        name = func.attr if isinstance(func, ast.Attribute) else getattr(
+            func, "id", None
+        )
+        if name in ("scan_splits", "getNumPartitions") and not probes:
+            bad.append(f"line {node.lineno}: {name}(")
+        if any(kw.arg == "dup" for kw in node.keywords):
+            bad.append(f"line {node.lineno}: dup=")
+    return bad
+
+
+def _package_violations(check, allowed=()) -> dict[str, list[str]]:
+    """``check(path)`` over every package module but ``allowed``."""
+    found = {}
+    for root, _, files in os.walk(_PKG_DIR):
+        for fname in files:
+            path = os.path.join(root, fname)
+            if not fname.endswith(".py") or path in allowed:
+                continue
+            bad = check(path)
+            if bad:
+                found[os.path.relpath(path, _PKG_DIR)] = bad
+    return found
+
+
 def test_only_caches_module_persists():
     """Persisting, unpersisting and cache lists belong to caches.py
     alone; everywhere else persists through caches.persist() /
     caches.persist_when_scaled() so the query scope releases it.
     (localCheckpoint is out of scope: it needs no release.)"""
-    found = {}
-    for root, _, files in os.walk(_PKG_DIR):
-        for fname in files:
-            path = os.path.join(root, fname)
-            if not fname.endswith(".py") or path == caches.__file__:
-                continue
-            bad = _lifecycle_violations(path)
-            if bad:
-                found[os.path.relpath(path, _PKG_DIR)] = bad
-    assert found == {}
+    assert _package_violations(_lifecycle_violations, {caches.__file__}) == {}
+
+
+def test_only_scale_gates_probe_splits():
+    """The scale rule has one probe: only tables.py and caches.py call
+    scan_splits / getNumPartitions (every other module goes through
+    widen_small_scan or persist_when_scaled with its base frame), and
+    no call passes a hand-counted ``dup=``."""
+    assert _package_violations(_scale_probe_violations) == {}

@@ -395,92 +395,72 @@ def test_widen_small_scan_noops_on_wide_input(spark):
     assert widened.count() == docs.count()
 
 
-def test_persist_when_scaled_gate_semantics(spark, monkeypatch):
-    """The scale-gated persist (r17) must be a NO-OP at fixture scale
-    (r16 measured unconditional persists of cheap duplicated subtrees as
-    consistent losses there) and engage exactly when dup x input-splits
-    reaches the session parallelism - plus unconditionally under the
-    forced-gate env hook used by the oracle-parity forced run."""
+def test_persist_when_scaled_gate_semantics(spark, monkeypatch, tmp_path):
+    """Both scale gates follow one rule: an input fills the cores when
+    its source scan has at least defaultParallelism splits. The persist
+    gate must be a NO-OP on the fixture (r16 measured unconditional
+    persists of cheap duplicated subtrees as consistent losses there),
+    engage on a base that fills the cores, and engage unconditionally
+    under the forced-gate env hook; widen_small_scan widens exactly
+    where the gate does not persist."""
     from data_engineering_spotify_etl_airflow_aws_spark import caches
     from data_engineering_spotify_etl_airflow_aws_spark.tables import (
         load_table,
         scan_splits,
+        widen_small_scan,
     )
 
     from .conftest import SF_CORRECT
 
     target = spark.sparkContext.defaultParallelism
-    docs = load_table(spark, SF_CORRECT, "documents").select("lang", "source")
-    splits = scan_splits(spark, SF_CORRECT, "documents")
-    # the memoized split count must agree with Spark's own scan split
-    # count (the fixture is a single row group -> one split)
-    assert splits == docs.rdd.getNumPartitions()
-    assert splits * 4 < target or target <= 4
+    fixture = load_table(spark, SF_CORRECT, "documents")
+    # the memoized split count agrees with Spark's own scan split count
+    # (the fixture is a single row group -> one split)
+    assert scan_splits(fixture) == fixture.rdd.getNumPartitions() < target
 
-    # fixture regime: gate off - passthrough, nothing persisted/cached
+    # a base that fills the cores: the fixture rewritten as `target`
+    # parquet files
+    wide_path = str(tmp_path / "documents_wide.parquet")
+    fixture.repartition(target).write.parquet(wide_path)
+    wide = spark.read.parquet(wide_path)
+    assert scan_splits(wide) >= target
+
     caches.release_all()
     monkeypatch.delenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", raising=False)
-    out = caches.persist_when_scaled(docs, splits, dup=4)
-    assert out is docs and caches._SCOPE == []
-    assert not out.storageLevel.useMemory and not out.storageLevel.useDisk
+    for base, engages in ((fixture, False), (wide, True)):
+        df = base.select("lang", "source")
+        plain = sorted(map(tuple, df.collect()))
+        out = caches.persist_when_scaled(df, base)
+        # persist() returns the same DataFrame object in PySpark, so the
+        # observable is the storage level + scope registration
+        assert out is df
+        assert caches._SCOPE == ([out] if engages else [])
+        level = out.storageLevel
+        assert (level.useMemory, level.useDisk) == (engages, engages)
+        assert sorted(map(tuple, out.collect())) == plain
+        assert (widen_small_scan(base) is base) == engages
+        caches.release_all()
 
-    # scale regime (modelled as an input already scanning at session
-    # parallelism): gate on - the relation is persisted, registered in
-    # the query scope, and value-identical (persist() returns the same
-    # DataFrame object in PySpark, so the observable is the storage
-    # level + scope registration, not object identity)
-    baseline = sorted(map(tuple, docs.collect()))
-    engaged = caches.persist_when_scaled(docs, target, dup=4)
-    assert caches._SCOPE == [engaged]
-    assert engaged.storageLevel.useMemory and engaged.storageLevel.useDisk
-    assert sorted(map(tuple, engaged.collect())) == baseline
-    caches.release_all()
-
-    # forced-gate hook engages regardless of input splits
+    # forced-gate hook engages regardless of the base
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", "1")
-    forced = caches.persist_when_scaled(docs, splits, dup=1)
+    forced = caches.persist_when_scaled(fixture.select("lang"), fixture)
     assert caches._SCOPE == [forced]
     assert forced.storageLevel.useMemory
     caches.release_all()
 
 
-# The call sites that gained the r17 scale-gated persist: the r16
-# reverted cheap-subtree class + item_item_recs' support table, plus
-# the x3/x4 scan-census tail swept in the same round.
-_GATED_PERSIST_QUERIES = (
-    "pmi_lang_source",
-    "chi_square_lang_source",
-    "kmv_user_overlap",
-    "bloom_filter_semi_join",
-    "bm25_doc_ranking",
-    "logodds_distinctive_terms",
-    "heaps_law_curve",
-    "bigram_pmi_collocations",
-    "kl_divergence_source_lang",
-    "embedding_centroid_drift",
-    "dq_constraint_violations",
-    "table_profile_orders",
-    "item_item_recs",
-    # census tail (r17 sweep)
-    "attribution_window_sweep",
-    "binseg_changepoints",
-    "ewma_control_chart",
-    "growth_accounting_daily",
-    "hash_sample_bias_audit",
-    "stl_daily_decomposition",
-    "weekly_active_users",
-    "cohort_ltv_matrix",
-    "fd_violation_profile",
-    "cdc_changelog_compaction",
-    "price_volume_mix_bridge",
-    "rank_movers_wow",
-    "topk_stability_audit",
-    "column_entropy_profile",
-    "curriculum_stage_assignment",
-    "lang_temperature_resample",
-    "unigram_logprob_filter",
-    "tfidf_top_terms",
-)
+def _gated_persist_queries() -> list[str]:
+    """Every registered query whose source calls
+    caches.persist_when_scaled, so a new gate site cannot skip the
+    value-identity test below."""
+    import inspect
+
+    from data_engineering_spotify_etl_airflow_aws_spark.registry import QUERIES
+
+    return sorted(
+        name for name, fn in QUERIES.items()
+        if "caches.persist_when_scaled(" in inspect.getsource(fn)
+    )
 
 
 def test_gated_persist_values_identical_when_engaged(spark, monkeypatch):
@@ -496,7 +476,7 @@ def test_gated_persist_values_identical_when_engaged(spark, monkeypatch):
 
     from .conftest import SF_SMOKE
 
-    for name in _GATED_PERSIST_QUERIES:
+    for name in _gated_persist_queries():
         monkeypatch.delenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", raising=False)
         plain = sorted(
             str(tuple(r)) for r in QUERIES[name](spark, SF_SMOKE).collect()
@@ -780,23 +760,25 @@ def test_rewritten_table_probes_again(spark, tmp_path, monkeypatch):
     sf.mkdir()
     target = sf / "orders.parquet"
     shutil.copy(f"{SF_CORRECT}/orders.parquet", target)
-    real_load = tables.load_table
-    splits = tables.scan_splits(spark, str(sf), "orders")
-    loads: list = []
-    monkeypatch.setattr(
-        tables, "load_table", lambda *a: loads.append(a) or real_load(*a)
+    memo: dict = {}
+    monkeypatch.setattr(tables, "_SCAN_SPLITS_MEMO", memo)
+    tables.scan_splits(tables.load_table(spark, str(sf), "orders"))
+    (key,) = memo
+    memo[key] = -1  # only a memo hit can return the planted count
+    orders = tables.load_table(spark, str(sf), "orders")
+    assert tables.scan_splits(orders) == -1, (
+        "unchanged layout must hit the split memo"
     )
-    assert tables.scan_splits(spark, str(sf), "orders") == splits
-    assert loads == [], "unchanged layout must hit the split memo"
 
     shutil.copy(f"{SF_CORRECT}/nation.parquet", target)
     rewritten, jobs = _jobs_in_group(
-        spark, lambda: real_load(spark, str(sf), "orders")
+        spark, lambda: tables.load_table(spark, str(sf), "orders")
     )
     assert jobs, "a rewritten file must be inferred again"
     assert "n_nationkey" in rewritten.columns
-    tables.scan_splits(spark, str(sf), "orders")
-    assert len(loads) == 1, "a rewritten file must be split-probed again"
+    assert tables.scan_splits(rewritten) > 0 and len(memo) == 2, (
+        "a rewritten file must be split-probed again"
+    )
 
 
 def test_schema_memo_keeps_timestamp_normalization(spark, tmp_path):
