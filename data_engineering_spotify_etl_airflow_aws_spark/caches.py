@@ -81,12 +81,15 @@ def persist_when_scaled(df: DataFrame, base: DataFrame) -> DataFrame:
     every re-execution is pure added wall-clock and I/O - so the
     persist wins.
 
-    ``base`` is the ``tables.load_table`` frame of the input the site
-    names (pass it, not a projection that sits behind a persist or a
-    checkpoint: those read no files). The rule once scaled the splits
-    by a hand-counted consumer count; that only moved engagement on
-    fixtures under low-core sessions (splits < parallelism <= splits x
-    count), the cheap-subtree regime above.
+    ``base`` is any frame over the input the site names - the
+    ``tables.load_table`` frame or a projection of it, but not one
+    behind a persist or a checkpoint: those read no files. Under
+    Spark's default 4 MB openCostInBytes a one-file table of S bytes
+    fills P cores only once S reaches about 4 MB x (P - 1): ~12 MB
+    under local[4], ~28 MB under local[8], ~124 MB under local[32].
+    Smaller tables never persist here, on any session; the retired
+    hand-counted consumer factor engaged some of them (that band is
+    timed in evidence/scale_gate_band_sf1_timing.json).
 
     An engaged persist joins the query scope like persist(), at
     MEMORY_AND_DISK, and is released when the next query is built

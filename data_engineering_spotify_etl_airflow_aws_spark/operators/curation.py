@@ -660,10 +660,9 @@ def lang_temperature_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus scale the re-scans are pure added I/O, so the per-lang
     # count table (bounded by the language set) persists once the
     # scan fills the cores.
-    scan = load_table(spark, sf_dir, "documents")
-    docs = scan.select("doc_id", "lang")
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n_l"))
-    counts = caches.persist_when_scaled(counts, scan)
+    counts = caches.persist_when_scaled(counts, docs)
     n_min = counts.agg(F.min("n_l").alias("n_min"))
     rates = (
         counts.crossJoin(F.broadcast(n_min))  # 1-row broadcast, bounded

@@ -1242,17 +1242,14 @@ def dq_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # added I/O, so the checked-column projections persist once the
     # scan fills the cores. The projections bound what the persist
     # materializes to exactly the columns the checks read.
-    scan = load_table(spark, sf_dir, "orders")
-    orders = caches.persist_when_scaled(
-        scan.select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
-        ),
-        scan,
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    cust_scan = load_table(spark, sf_dir, "customer")
-    cust = caches.persist_when_scaled(
-        cust_scan.select("c_custkey", "c_acctbal"), cust_scan
+    orders = caches.persist_when_scaled(orders, orders)
+    cust = load_table(spark, sf_dir, "customer").select(
+        "c_custkey", "c_acctbal"
     )
+    cust = caches.persist_when_scaled(cust, cust)
 
     def check(df: DataFrame, table: str, name: str, violation) -> DataFrame:
         return df.agg(
@@ -1413,8 +1410,8 @@ def table_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trade the gate is making: per-branch parquet scans prune to ONE
     # column each, while the persist materializes all profiled columns
     # once and reads them 4x - a win only when scan I/O dominates.
-    scan = load_table(spark, sf_dir, "orders")
-    orders = caches.persist_when_scaled(scan.select(*_PROFILE_COLS), scan)
+    orders = load_table(spark, sf_dir, "orders").select(*_PROFILE_COLS)
+    orders = caches.persist_when_scaled(orders, orders)
     parts = [
         orders.agg(
             F.lit(c).alias("column_name"),
@@ -2735,14 +2732,11 @@ def fd_violation_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus scale the re-scans are pure added I/O, so the projection
     # of exactly the checked columns persists once the scan fills the
     # cores.
-    scan = load_table(spark, sf_dir, "orders")
-    o = caches.persist_when_scaled(
-        scan.select(
-            "o_orderkey", "o_custkey", "o_orderdate",
-            "o_orderstatus", "o_orderpriority",
-        ),
-        scan,
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate",
+        "o_orderstatus", "o_orderpriority",
     )
+    o = caches.persist_when_scaled(o, o)
 
     def branch(fd: str, det: str, dep: str) -> DataFrame:
         return o.select(
@@ -3020,10 +3014,10 @@ def cdc_changelog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture scale (the r16 cheap-subtree lesson); at corpus scale the
     # re-scans are pure added I/O, so the 2-column projection persists
     # once the scan fills the cores.
-    scan = load_table(spark, sf_dir, "orders")
-    o = caches.persist_when_scaled(
-        scan.select("o_orderkey", "o_totalprice"), scan
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_totalprice"
     )
+    o = caches.persist_when_scaled(o, o)
 
     def batch(mod: int, seq: int, op: str, price):
         return o.where(F.col("o_orderkey") % mod == 0).select(
@@ -3282,8 +3276,7 @@ _WOW_TOP = 20
     """,
 )
 def rank_movers_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    li = lineitem.select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.date_trunc("week", "l_shipdate").alias("wk"),
         F.floor(
@@ -3309,7 +3302,7 @@ def rank_movers_wow(spark: SparkSession, sf_dir: str) -> DataFrame:
     # window (4 lineitem scans per plan). No-op at fixture scale (the
     # r16 cheap-subtree lesson); at corpus scale the part-bounded
     # ranked relation persists once the scan fills the cores.
-    ranked = caches.persist_when_scaled(ranked, lineitem)
+    ranked = caches.persist_when_scaled(ranked, li)
     c, p = ranked.alias("c"), ranked.alias("p")
     return (
         c.where(F.col("c.wk") == F.col("c.w_curr"))
@@ -3864,8 +3857,7 @@ def except_all_priorities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    li = lineitem.select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.date_trunc("week", "l_shipdate").alias("wk"),
         F.floor(
@@ -3900,7 +3892,7 @@ def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at fixture scale (the r16 cheap-subtree lesson); at corpus scale
     # the part-bounded two-week rollup persists once the scan fills the
     # cores.
-    wk = caches.persist_when_scaled(wk, lineitem)
+    wk = caches.persist_when_scaled(wk, li)
     c = wk.where("is_curr").select(
         F.col("l_partkey").alias("pk_c"),
         F.col("rev").alias("rev1"),
@@ -4595,8 +4587,7 @@ def pivot_multi_agg_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scan = load_table(spark, sf_dir, "orders")
-    orders = scan.select(
+    orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.year("o_orderdate").alias("oy"),
         F.floor(F.col("o_totalprice") * F.lit(1_000_000) + F.lit(0.5))
@@ -4609,7 +4600,7 @@ def cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at corpus scale the per-customer rollup persists once the scan
     # fills the cores.
     fo = orders.groupBy("o_custkey").agg(F.min("oy").alias("cohort_y"))
-    fo = caches.persist_when_scaled(fo, scan)
+    fo = caches.persist_when_scaled(fo, orders)
     sz = fo.groupBy("cohort_y").agg(F.count("*").alias("cohort_n"))
     rev = (
         orders.join(fo, "o_custkey")
@@ -4738,8 +4729,7 @@ _TKS_K = 100
     """,
 )
 def topk_stability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lineitem = load_table(spark, sf_dir, "lineitem")
-    li0 = lineitem.select(
+    li0 = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.to_date("l_shipdate").alias("sd"),
         F.floor(
@@ -4772,7 +4762,7 @@ def topk_stability_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineitem scans per plan). No-op at fixture scale (the r16
     # cheap-subtree lesson); at corpus scale the part-bounded per-half
     # revenue rollup persists once the scan fills the cores.
-    g = caches.persist_when_scaled(g, lineitem)
+    g = caches.persist_when_scaled(g, li0)
 
     def top(first: bool):
         return (

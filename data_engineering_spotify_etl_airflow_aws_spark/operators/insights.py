@@ -357,8 +357,8 @@ def kl_divergence_source_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 0.28s -> 0.38s: narrow scans ride idle cores); at corpus scale the
     # re-scans are pure added I/O, so the pruned 2-column projection
     # persists once the scan fills the cores.
-    scan = load_table(spark, sf_dir, "documents")
-    docs = caches.persist_when_scaled(scan.select("source", "lang"), scan)
+    docs = load_table(spark, sf_dir, "documents").select("source", "lang")
+    docs = caches.persist_when_scaled(docs, docs)
     cell = docs.groupBy("source", "lang").agg(F.count("*").alias("n_sl"))
     ms = docs.groupBy("source").agg(F.count("*").alias("n_s"))
     ml = docs.groupBy("lang").agg(F.count("*").alias("n_l"))

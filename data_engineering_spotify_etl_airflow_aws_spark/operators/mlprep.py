@@ -137,10 +137,9 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded rollups (dl: one row/doc; tf: docs x |_BM25_TERMS|)
     # persist once the scan fills the cores. The full token stream
     # stays unpersisted at every scale (unbounded; the heaps lesson).
-    docs = load_table(spark, sf_dir, "documents")
     tok = _doc_tokens(spark, sf_dir).select("doc_id", "tok")
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    dl = caches.persist_when_scaled(dl, docs)
+    dl = caches.persist_when_scaled(dl, tok)
     stats = dl.agg(
         F.count("*").alias("n_docs"),
         (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
@@ -150,7 +149,7 @@ def bm25_doc_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", F.col("tok").alias("term"))
         .agg(F.count("*").alias("tf"))
     )
-    tf = caches.persist_when_scaled(tf, docs)
+    tf = caches.persist_when_scaled(tf, tok)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     k1 = F.expr(_BM25_K1)
     k1p1 = F.expr(_BM25_K1P1)
@@ -615,9 +614,7 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the heaps lesson).
     tok = _doc_tokens(spark, sf_dir)
     vocab = tok.groupBy("tok").agg(F.count("*").alias("cnt"))
-    vocab = caches.persist_when_scaled(
-        vocab, load_table(spark, sf_dir, "documents")
-    )
+    vocab = caches.persist_when_scaled(vocab, tok)
     tot = vocab.agg(F.sum("cnt").cast("double").alias("total"))
     lp = vocab.crossJoin(F.broadcast(tot)).select(
         "tok",

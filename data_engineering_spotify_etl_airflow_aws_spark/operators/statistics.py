@@ -522,8 +522,8 @@ def pmi_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r16 A/B min-of-3 0.30s -> 0.44s), but at corpus scale the 4x
     # re-scan is pure added I/O, so the persist engages once the scan
     # fills the cores (the rule in caches.persist_when_scaled).
-    scan = load_table(spark, sf_dir, "documents")
-    docs = caches.persist_when_scaled(scan.select("lang", "source"), scan)
+    docs = load_table(spark, sf_dir, "documents").select("lang", "source")
+    docs = caches.persist_when_scaled(docs, docs)
     cell = docs.groupBy("lang", "source").agg(F.count("*").alias("n_ij"))
     ml = docs.groupBy("lang").agg(F.count("*").alias("n_i"))
     ms = docs.groupBy("source").agg(F.count("*").alias("n_j"))
@@ -1249,8 +1249,7 @@ def daily_value_percentile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    scan = load_table(spark, sf_dir, "documents")
-    docs = scan.select("lang", "source")
+    docs = load_table(spark, sf_dir, "documents").select("lang", "source")
     # Scale-gated persist (r17): the grid feeds 4 consumers (rt/ct/tot/
     # terms), each re-running the docs scan + groupBy - 8 duplicated
     # scans per plan. At fixture scale an unconditional persist LOST
@@ -1258,7 +1257,7 @@ def chi_square_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at corpus scale the re-scans are pure added I/O, so the tiny
     # (lang x source) grid persists once the scan fills the cores.
     cells = docs.groupBy("lang", "source").agg(F.count("*").alias("n_obs"))
-    cells = caches.persist_when_scaled(cells, scan)
+    cells = caches.persist_when_scaled(cells, docs)
     rt = cells.groupBy("lang").agg(F.sum("n_obs").cast("bigint").alias("r"))
     ct = cells.groupBy("source").agg(F.sum("n_obs").cast("bigint").alias("c"))
     tot = cells.agg(F.sum("n_obs").cast("bigint").alias("n"))

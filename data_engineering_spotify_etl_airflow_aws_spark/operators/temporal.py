@@ -1089,8 +1089,7 @@ _ATTR_WINDOWS_H = (1, 6, 24, 72)
     """,
 )
 def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    events = load_table(spark, sf_dir, "events")
-    ev = events.select(
+    ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts", "event_type"
     )
     probe = ev.where(F.col("event_type") == "purchase").select(
@@ -1112,7 +1111,7 @@ def attribution_window_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cheap-subtree lesson); at corpus scale the second asof join is a
     # full extra shuffle+sort, so the 2-column per-purchase gap
     # relation persists (disk-backed) once the scan fills the cores.
-    g = caches.persist_when_scaled(g, events)
+    g = caches.persist_when_scaled(g, ev)
     t = g.agg(F.count("*").cast("bigint").alias("n_purchases"))
     wins = F.explode(
         F.array(*[F.lit(h).cast("bigint") for h in _ATTR_WINDOWS_H])

@@ -932,8 +932,7 @@ def _register_kmv() -> None:
         """,
     )
     def kmv_user_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        events = load_table(spark, sf_dir, "events")
-        ev = events.select("event_type", "user_id")
+        ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
         # Scale-gated persist (r17): the sketch subtree (events scan +
         # md5 + distinct + top-k window) is re-run by every consumer -
         # 9 events scans in one plan. At fixture scale an unconditional
@@ -950,9 +949,9 @@ def _register_kmv() -> None:
             .where(F.col("rn") <= k)
             .drop("rn")
         )
-        sk = caches.persist_when_scaled(sk, events)
+        sk = caches.persist_when_scaled(sk, ev)
         types = ev.select("event_type").distinct()
-        types = caches.persist_when_scaled(types, events)
+        types = caches.persist_when_scaled(types, ev)
         tpairs = (
             types.select(F.col("event_type").alias("type_a"))
             .join(

@@ -190,9 +190,11 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     A small parquet fixture is ONE split (single row group), so without
     this the whole map stage runs on one core while the rest idle -
     measured 3.5s -> 1.3s for the Jaccard shingle base at sf0.1 on 32
-    cores. A scan that fills the cores (see scan_splits) - every real
-    corpus - passes through, as does a frame that reads no files, so
-    the shuffle only exists in exactly the regime where it is free.
+    cores. A scan that fills the cores (see scan_splits; a one-file
+    table needs about 4 MB x (P - 1) bytes under Spark's default
+    openCostInBytes) passes through, as does a frame that reads no
+    files, so the shuffle only exists in exactly the regime where it
+    is free.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if 0 < scan_splits(df) < target:

@@ -373,10 +373,12 @@ def test_tpch_q3_q5_join_plans_broadcast_dims(spark):
     assert "l_extendedprice" in p5 and "l_tax" not in p5
 
 
-def test_widen_small_scan_noops_on_wide_input(spark):
-    """The fan-out must fire only in the small-scan regime: a relation
-    already at session parallelism passes through untouched (the 100 TB
-    case), while a 1-split scan widens to the default parallelism."""
+def test_widen_small_scan_noops_on_wide_input(spark, tmp_path):
+    """The fan-out must fire only in the small-scan regime: a scan that
+    already fills the cores passes through untouched (the 100 TB case),
+    as does a frame that reads no files (nothing to fan out, whatever
+    its partitioning), while a 1-split scan widens to the default
+    parallelism."""
     from data_engineering_spotify_etl_airflow_aws_spark.tables import (
         load_table,
         widen_small_scan,
@@ -385,8 +387,14 @@ def test_widen_small_scan_noops_on_wide_input(spark):
     from .conftest import SF_CORRECT
 
     target = spark.sparkContext.defaultParallelism
-    wide = spark.range(0, 1000, numPartitions=target)
+    wide_path = str(tmp_path / "range_wide.parquet")
+    spark.range(0, 1000, numPartitions=target).write.parquet(wide_path)
+    wide = spark.read.parquet(wide_path)
+    assert wide.rdd.getNumPartitions() >= target
     assert widen_small_scan(wide) is wide
+
+    no_files = spark.range(0, 1000, numPartitions=1)
+    assert widen_small_scan(no_files) is no_files
 
     docs = load_table(spark, SF_CORRECT, "documents")
     assert docs.rdd.getNumPartitions() < target
