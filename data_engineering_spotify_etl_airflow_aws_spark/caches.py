@@ -1,13 +1,15 @@
-"""Query-scoped lifecycle for persisted intermediate relations.
+"""Query-scoped lifecycle for persisted and checkpointed relations.
 
 Several operators persist an expensive shared relation (the Jaccard
 shingle base, the IVF embedding base, the MinHash band keys, the
-decontamination gram base, the scale-gated shared subtrees). The
-returned query plans are lazy, so an in-function unpersist would fire
-before the caller ever runs the plan. Instead every persist goes
-through persist() / persist_when_scaled() here, which record the
-relation in ONE scope; this is the only module that persists or
-unpersists anything.
+decontamination gram base, the scale-gated shared subtrees) or cut a
+plan's lineage with an eager checkpoint (the iterative graph loops, the
+banded global order). The returned query plans are lazy, so an
+in-function release would fire before the caller ever runs the plan.
+Instead every persist goes through persist() / persist_when_scaled()
+and every lineage cut through checkpoint() here, which record the
+relation in ONE scope; this is the only module that persists,
+unpersists or checkpoints anything.
 
 Lifecycle:
 
@@ -21,28 +23,17 @@ Lifecycle:
   undecorated function, so the callee never releases its caller's
   relations.
 * Interactive consequence: building any query through ``QUERIES``
-  releases what the previous query persisted, whatever its family. A
-  DataFrame kept from an earlier query stays valid - its plan simply
-  recomputes the released relation when it next runs.
+  releases what the previous query persisted or checkpointed, whatever
+  its family. A DataFrame kept from an earlier query recomputes a
+  released persist when it next runs, but FAILS on a released
+  checkpoint (there is no lineage left to recompute it from): executor
+  memory comes back per query, not whenever a JVM GC lets Spark's
+  ContextCleaner find it.
 * release_all() frees the scope at any time (bench teardown, end of a
   notebook exploration); later queries persist again on demand.
 
-Notebook example (see examples/interactive_session.py for the runnable
-version)::
-
-    import data_engineering_spotify_etl_airflow_aws_spark as engine
-    from data_engineering_spotify_etl_airflow_aws_spark import caches, registry
-    from data_engineering_spotify_etl_airflow_aws_spark.session import get_spark
-
-    engine.load_all_operators()
-    spark = get_spark()
-    sf = "/root/testdata/sf0.01"
-
-    registry.QUERIES["minhash_lsh_near_dup"](spark, sf).show()  # persists
-    # building the next query releases the MinHash relations first
-    registry.QUERIES["ivf_topk_similar"](spark, sf).show()
-    # ... exploration done - executor memory back in one call:
-    caches.release_all()
+examples/interactive_session.py walks through the lifecycle in a
+notebook-style session (tests/test_streaming.py runs it).
 """
 
 from __future__ import annotations
@@ -54,14 +45,25 @@ if TYPE_CHECKING:
     from pyspark import StorageLevel
     from pyspark.sql import DataFrame
 
-_SCOPE: list[DataFrame] = []
+# (frame, is_checkpoint) for each relation of the query scope
+_SCOPE: list[tuple[DataFrame, bool]] = []
 
 
 def persist(df: DataFrame, level: StorageLevel | None = None) -> DataFrame:
     """Persist ``df`` (PySpark's default level unless ``level`` is given)
     and record it in the query scope; returns the persisted frame."""
     out = df.persist() if level is None else df.persist(level)
-    _SCOPE.append(out)
+    _SCOPE.append((out, False))
+    return out
+
+
+def checkpoint(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` now as an executor-local checkpoint, cutting
+    the lineage above it, and record it in the query scope; returns the
+    checkpointed frame. A fault-tolerant run would swap in the reliable
+    ``df.checkpoint()`` (under ``setCheckpointDir``) here."""
+    out = df.localCheckpoint()
+    _SCOPE.append((out, True))
     return out
 
 
@@ -110,7 +112,12 @@ def persist_when_scaled(df: DataFrame, base: DataFrame) -> DataFrame:
 
 
 def release_all() -> None:
-    """Unpersist and drop every relation in the query scope. Safe to
-    call at any time; later queries persist again on demand."""
+    """Unpersist every persist and drop every checkpoint's blocks (the
+    RDD behind its LogicalRDD plan) in the query scope. Safe to call at
+    any time; later queries persist again on demand."""
     while _SCOPE:
-        _SCOPE.pop().unpersist()
+        df, is_checkpoint = _SCOPE.pop()
+        if is_checkpoint:
+            df._jdf.logicalPlan().rdd().unpersist(False)
+        else:
+            df.unpersist()

@@ -38,6 +38,8 @@ from pyspark.sql import Column, DataFrame, WindowSpec
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import caches
+
 # ---------------------------------------------------------------------------
 # deterministic numeric aggregation
 
@@ -315,17 +317,14 @@ def band_offsets(
     strictly respect the key order; the band count follows df's input
     file count.
 
-    localCheckpoint freezes the boundaries: the banded rows feed both the
+    A checkpoint freezes the boundaries: the banded rows feed both the
     in-band window and the band totals, and a second physical evaluation
     of the merge-order-dependent GK sketch could band rows differently
     between the two consumers (r9 review). One bounded 1-row job."""
     n_bands = max(MIN_BANDS, min(MAX_BANDS, 2 * len(df.inputFiles())))
     probs = [i / n_bands for i in range(1, n_bands)]
-    bounds = df.agg(
-        F.percentile_approx(key, probs, max(10_000, 4 * n_bands)).alias(
-            "_bounds"
-        )
-    ).localCheckpoint()
+    quantiles = F.percentile_approx(key, probs, max(10_000, 4 * n_bands))
+    bounds = caches.checkpoint(df.agg(quantiles.alias("_bounds")))
     banded = (
         df.join(F.broadcast(bounds))
         .withColumn("_band", F.size(F.filter("_bounds", lambda x: x < F.col(key))))

@@ -22,16 +22,15 @@ graph algorithms (GraphX/GraphFrames do the same); no row data ever
 reaches the driver. The oracle is a DuckDB recursive CTE over the same
 edges, so the iterative plan is value-checked end to end, not rows-only.
 
-Lineage MUST be truncated every round (localCheckpoint), not merely
+Lineage MUST be truncated every round (caches.checkpoint), not merely
 persisted: the pointer-jump self-join references the hop relation twice,
 so round r's ANALYZED plan holds 2^r copies of the full upstream tree
 (including the expensive edge-producing join). Caching short-circuits
 execution but Catalyst still walks the whole logical plan - measured
 2.8s/9.8s/~40s for rounds 0/1/2 at sf0.1 before truncation, <1s/round
-after. localCheckpoint (executor-local, no HDFS dir) is the right tool
-on a long-lived session; a fault-tolerant production run would point
-spark.sparkContext.setCheckpointDir at durable storage and use
-checkpoint() with the same plan shape.
+after. An executor-local checkpoint (no HDFS dir) is the right tool on
+a long-lived session; caches.checkpoint names the reliable variant a
+fault-tolerant production run would switch to.
 
 Scale notes (100 TB):
   * each round is equi-join + partial-agg shuffles on node id - a uniform
@@ -40,7 +39,8 @@ Scale notes (100 TB):
     fixture clusters converge in 2 rounds, the cap of 15 covers diameters
     beyond 2^15 after jumping).
   * label state is one (node, lbl) row per doc, checkpointed per round;
-    superseded rounds' blocks are freed when their DataFrames are GC'd.
+    every round's blocks stay until the query scope is released
+    (caches.release_all), not when a superseded DataFrame is GC'd.
 """
 
 from __future__ import annotations
@@ -51,8 +51,22 @@ from pyspark.sql.window import Window as W
 
 from .. import caches
 from ..registry import query
+from ..session import session_shuffle_partitions, with_shuffle_partitions
 from ..tables import load_table
 from .dedup import _DUCK_H32, _DUCK_SHINGLE_BASE, _SPARK_H32, JACCARD_TAU, ngram_jaccard_near_dup
+
+
+def _edge_frame_width(spark: SparkSession, n_edges: int):
+    """Context manager that narrows the shuffle width for a loop over an
+    edge frame of n_edges rows, whose relations are all O(edges) or
+    O(nodes): one partition per ~50k edges, floor 8, capped at the
+    session value (never WIDEN), so a 100 TB edge set keeps session width. Round 5 re-measured the floor: one partition
+    serializes the per-round micro-jobs and is ~1.6x SLOWER than 8 even
+    on a 256-edge fixture (the cost is job launch, not task count)."""
+    session = session_shuffle_partitions(spark)
+    return with_shuffle_partitions(
+        spark, min(session, max(8, n_edges // 50_000 + 1))
+    )
 
 
 def connected_components(
@@ -72,50 +86,29 @@ def connected_components(
     materialized exactly once, not once per downstream consumer.
 
     Returns (node, lbl) where lbl = min(vertex id in the component). The
-    result is an eagerly-materialized localCheckpoint relation (its blocks
-    are freed when the DataFrame is garbage-collected).
+    result is an eagerly-materialized caches.checkpoint relation (its
+    blocks are freed when the query scope is released).
     """
     # Truncate lineage at the edge relation: every round's plan re-walks
     # whatever sits above `und` during analysis, so an expensive upstream
     # join (the Jaccard pair plan) must be cut out of the loop entirely.
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    und = (
+    und = caches.checkpoint(
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .distinct()
-        .localCheckpoint()
     )
     # Size the ROUND shuffles by the iteration frame (edge endpoints), not
-    # the session default: und is materialized, so its count is free, and
-    # every relation inside the loop is O(edges) - at near-dup densities a
-    # tiny fraction of the corpus. One shuffle partition per ~50k edges
-    # (floor 8) keeps per-round task overhead proportional to the frame;
-    # a 100 TB edge set stays at the session width. The upstream edge
-    # plan (the expensive part) already ran at full width inside the
-    # localCheckpoint above.
-    spark = edges.sparkSession
-    n_edges = und.count()
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    # One shuffle partition per ~50k edges with a floor of 8, capped at
-    # the session value (never WIDEN - min(prev, ...) holds even when the
-    # session is already narrower than 8). The floor was re-measured in
-    # round 5: a single partition serializes the per-round micro-jobs and
-    # is ~1.6x SLOWER than 8 even on a 256-edge fixture (the cost is job
-    # launch, not task count), while a 100 TB edge set still gets session
-    # width. The override is session-global (restored in the finally
-    # below) - the fixpoint loop assumes it owns the session while
-    # iterating, same as any multi-action driver algorithm; concurrent
-    # queries on the same session would need a per-query session clone,
-    # which cross-session DataFrames forbid.
-    narrowed = min(int(prev_sp), max(8, n_edges // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(narrowed))
-    try:
+    # the session default: und is materialized, so its count is free. The
+    # upstream edge plan (the expensive part) already ran at full width
+    # inside the checkpoint above.
+    with _edge_frame_width(edges.sparkSession, und.count()):
         if nodes is None:
             vertices = und.select(F.col("src").alias("node")).distinct()
         else:
             vertices = nodes.select(F.col(id_col).alias("node"))
-        labels = vertices.select(
-            "node", F.col("node").alias("lbl")
-        ).localCheckpoint()
+        labels = caches.checkpoint(
+            vertices.select("node", F.col("node").alias("lbl"))
+        )
         # label(v) <= v holds throughout (init =, least() only lowers), so
         # the decimal checksum strictly decreases iff any label moved.
         checksum = lambda df: df.agg(  # noqa: E731
@@ -133,17 +126,16 @@ def connected_components(
                 "node", F.least("lbl", F.coalesce("nbr", "lbl")).alias("lbl")
             )
             # jump: label's label (always defined: every label is a vertex
-            # id). localCheckpoint both truncates the 2x-per-round plan
+            # id). The checkpoint both truncates the 2x-per-round plan
             # growth of this self-join AND materializes nxt for the
             # checksum read.
-            nxt = (
+            nxt = caches.checkpoint(
                 hop.alias("x")
                 .join(hop.alias("y"), F.col("x.lbl") == F.col("y.node"))
                 .select(
                     F.col("x.node").alias("node"),
                     F.least("x.lbl", "y.lbl").alias("lbl"),
                 )
-                .localCheckpoint()
             )
             cur = checksum(nxt)
             labels = nxt
@@ -154,8 +146,6 @@ def connected_components(
             raise RuntimeError(
                 f"connected_components: no fixpoint in {max_rounds} rounds"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     return labels
 
 
@@ -363,20 +353,12 @@ def _pr_iterate(und: DataFrame) -> DataFrame:
     # connected_components). No node-side left join per round: `und`
     # holds both orientations of every edge, so every node is some
     # edge's dst and gets a (non-null) contribution sum every round.
-    e = und.withColumn(
-        "outdeg", F.count("*").over(W.partitionBy("src"))
-    ).localCheckpoint()
+    e = caches.checkpoint(
+        und.withColumn("outdeg", F.count("*").over(W.partitionBy("src")))
+    )
     n_edges, n_nodes = e.agg(F.count("*"), F.count_distinct("src")).first()
-    # Size the iteration shuffles by the edge frame, not the session
-    # default (same rationale + floor as connected_components above):
-    # every loop relation is O(edges) or O(nodes), tiny next to the
-    # session width tuned for full-table scans; a 100 TB edge list
-    # still gets session width via the min().
-    spark = e.sparkSession
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    narrowed = min(int(prev_sp), max(8, n_edges // 50_000 + 1))
-    spark.conf.set("spark.sql.shuffle.partitions", str(narrowed))
-    try:
+    # iteration shuffles sized by the edge frame, as in CC above
+    with _edge_frame_width(e.sparkSession, n_edges):
         base = _PR_RESID / n_nodes
         rank, edge_ranks = F.lit(1.0 / n_nodes), e  # r0 is uniform: no join
         for i in range(_PR_ITERS):
@@ -390,16 +372,13 @@ def _pr_iterate(und: DataFrame) -> DataFrame:
             # native long->double is exact: the value is < 2^53
             # (magnitude proof above)
             s_u = F.sum(c_u).cast("double") / F.lit(1e12)
-            ranks = (
+            # each iteration's result is small (O(nodes)); checkpoint to
+            # keep the loop's analyzed plan linear, as in CC above
+            ranks = caches.checkpoint(
                 edge_ranks.groupBy("dst")
                 .agg((F.lit(base) + F.lit(_PR_DAMP) * s_u).alias("rank"))
                 .withColumnRenamed("dst", "node")
-                # each iteration's result is small (O(nodes)); checkpoint
-                # to keep the loop's analyzed plan linear, as in CC above
-                .localCheckpoint()
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
     return (
         ranks.where(F.col("node") >= _PR_SUPP_OFFSET)
         .select((F.col("node") - _PR_SUPP_OFFSET).alias("suppkey"), "rank")
@@ -510,7 +489,7 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def supplier_recs_fof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _trade_edges(spark, sf_dir).localCheckpoint()
+    edges = caches.checkpoint(_trade_edges(spark, sf_dir))
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     pick = (
         deg.orderBy(F.expr(_FOF_H_SPARK).asc(), F.col("src").asc())
@@ -590,23 +569,18 @@ def supplier_recs_fof(spark: SparkSession, sf_dir: str) -> DataFrame:
 # node key followed by a distinct and an anti-join against the visited
 # set - all node-keyed shuffles, frontier-sized, nothing O(graph)
 # beyond the persisted edge relation. Fixed round count, so no fixpoint
-# detection and no driver traffic at all; lineage stays 3 deep, below
-# the checkpoint threshold the CC loop needs.
+# detection and no driver traffic; each round's new frontier is
+# checkpointed all the same (the loop says why).
 _KHOP_SEEDS = 8
 _KHOP_MAX = 3
 
 
 def _khop_oracle() -> str:
-    from .insights import _PART_EDGES_SQL
+    from .insights import _PART_ARCS_SQL
 
     h = _DUCK_H32.format(s="concat('khop-', CAST(node AS VARCHAR))")
     return f"""
-    WITH RECURSIVE {_PART_EDGES_SQL},
-    dedges AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+    WITH RECURSIVE {_PART_ARCS_SQL},
     nodes AS (SELECT DISTINCT src AS node FROM dedges),
     seeds AS (
         SELECT node FROM nodes
@@ -626,17 +600,9 @@ def _khop_oracle() -> str:
 
 @query("khop_part_reach", oracle=_khop_oracle())
 def khop_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .insights import _basket_pairs, _order_baskets
+    from .insights import _part_arcs
 
-    und = _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    edges = caches.persist(
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        # cache the edge relation ALREADY hash-partitioned on the probe
-        # key: all three BFS rounds join on src, so each round reuses the
-        # cached partitioning instead of re-exchanging 2x|edges| rows
-        .repartition("src"),
-    )
+    edges = _part_arcs(spark, sf_dir)
     nodes = edges.select(F.col("src").alias("node")).distinct()
     h = F.expr(_SPARK_H32.format(s="concat('khop-', cast(node as string))"))
     seeds = (
@@ -657,7 +623,7 @@ def khop_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         # round k's anti-join references the whole reach union, so an
         # unbroken chain replays every earlier round's edge join again -
         # measured 25.6s -> ~7s at sf0.1 for the 3-round BFS
-        new = nbrs.join(reach, "node", "left_anti").localCheckpoint()
+        new = caches.checkpoint(nbrs.join(reach, "node", "left_anti"))
         reach = reach.unionByName(new.select("node", F.lit(k).alias("hop")))
         frontier = new
     return reach.select("node", F.col("hop").cast("bigint").alias("hop"))
@@ -683,14 +649,14 @@ def khop_part_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 # relation against the edge relation CACHED pre-partitioned on the join
 # key (src - the khop device, so rounds reuse the exchange), a
 # (dst, lab) partial-agg shuffle, and a dst-keyed struct-max (no window
-# sort). Labels are localCheckpoint'ed per round - the CC lineage
+# sort). Labels are checkpointed per round - the CC lineage
 # lesson (module docstring). Nothing O(nodes) is broadcast or
 # collected; round count is fixed, so zero driver traffic.
 _LPA_ROUNDS = 3
 
 
 def _lpa_oracle() -> str:
-    from .insights import _PART_EDGES_SQL
+    from .insights import _PART_ARCS_SQL
 
     rounds = []
     prev = "l0"
@@ -713,12 +679,7 @@ def _lpa_oracle() -> str:
         )
         prev = f"l{k}"
     return f"""
-    WITH {_PART_EDGES_SQL},
-    dedges AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+    WITH {_PART_ARCS_SQL},
     l0 AS (SELECT DISTINCT src AS node, src AS lab FROM dedges),
     {','.join(rounds)}
     SELECT node, CAST(lab AS BIGINT) AS community FROM {prev}
@@ -729,16 +690,9 @@ def _lpa_oracle() -> str:
 def label_propagation_communities(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from .insights import _basket_pairs, _order_baskets
+    from .insights import _part_arcs
 
-    und = _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    edges = caches.persist(
-        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionAll(
-            und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .repartition("src"),
-    )
+    edges = _part_arcs(spark, sf_dir)
     labels = (
         edges.select(F.col("src").alias("node"))
         .distinct()
@@ -752,13 +706,12 @@ def label_propagation_communities(
         )
         # struct-max picks (max count, then min label) without a window
         # sort; -lab flips the tie order inside the max
-        labels = (
+        labels = caches.checkpoint(
             cnt.groupBy("dst")
             .agg(F.max(F.struct(F.col("c"), (-F.col("lab")).alias("nl"))).alias("b"))
             .select(
                 F.col("dst").alias("node"), (-F.col("b.nl")).alias("lab")
             )
-            .localCheckpoint()
         )
     return labels.select(
         "node", F.col("lab").cast("bigint").alias("community")
@@ -785,15 +738,13 @@ def label_propagation_communities(
     oracle=None,
 )
 def degree_powerlaw_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .insights import _basket_pairs, _order_baskets
+    from .insights import _part_edges
 
     # Persist the pair expansion: the degree union references `und`
     # twice, so without this the executed plan runs the basket explode +
     # distinct (the query's dominant cost) twice - 2 lineitem scans for
     # one logical pass (r16; guide §5).
-    und = caches.persist(
-        _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    )
+    und = caches.persist(_part_edges(spark, sf_dir))
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -902,7 +853,7 @@ _CL_OR["degree_powerlaw_check"] = _degree_powerlaw_oracle()
     oracle=None,
 )
 def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .insights import _basket_pairs, _order_baskets
+    from .insights import _part_edges
 
     # Persist the pair expansion AND the degree table: `edges` references
     # `und` twice (the two orientations) and is itself consumed by the
@@ -910,9 +861,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the persists the executed plan re-ran the basket explode + distinct
     # SIX times (12 lineitem scans in one plan, r16 measurement; guide
     # §5).
-    und = caches.persist(
-        _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    )
+    und = caches.persist(_part_edges(spark, sf_dir))
     edges = und.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
         und.select(F.col("v").alias("src"), F.col("u").alias("dst"))
     )
@@ -962,14 +911,10 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _assort_oracle() -> str:
-    from .insights import _PART_EDGES_SQL
+    from .insights import _PART_ARCS_SQL
 
     return f"""
-    WITH {_PART_EDGES_SQL},
-    dedges AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL SELECT v, u FROM edges
-    ),
+    WITH {_PART_ARCS_SQL},
     deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS d
             FROM dedges GROUP BY 1),
     e2 AS (

@@ -68,6 +68,25 @@ def _basket_pairs(baskets: DataFrame) -> DataFrame:
     )
 
 
+def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part co-occurrence graph: one (u < v) row per pair of parts
+    some order contains both of (the Spark side of _PART_EDGES_SQL)."""
+    return _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
+
+
+def _part_arcs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Both orientations (src, dst) of every _part_edges pair, persisted
+    ALREADY hash-partitioned on src: loops that join on src each round
+    (k-hop BFS, label propagation) reuse the cached partitioning instead
+    of re-exchanging 2x|edges| rows."""
+    und = _part_edges(spark, sf_dir)
+    return caches.persist(
+        und.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .unionAll(und.select(F.col("v").alias("src"), F.col("u").alias("dst")))
+        .repartition("src"),
+    )
+
+
 _ITEMS_SQL = "items AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem)"
 
 _PART_EDGES_SQL = f"""
@@ -79,6 +98,13 @@ _PART_EDGES_SQL = f"""
                     AND a.l_partkey < b.l_partkey
     )
 """
+
+# both orientations of every edge as (src, dst): the oracle of _part_arcs
+_PART_ARCS_SQL = f"""{_PART_EDGES_SQL},
+    dedges AS (
+        SELECT u AS src, v AS dst FROM edges
+        UNION ALL SELECT v, u FROM edges
+    )"""
 
 
 def part_triangle_stats(edges: DataFrame) -> DataFrame:
@@ -222,8 +248,7 @@ def part_triangle_stats(edges: DataFrame) -> DataFrame:
     """,
 )
 def triangle_count_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    edges = _basket_pairs(_order_baskets(spark, sf_dir)).distinct()
-    return part_triangle_stats(edges)
+    return part_triangle_stats(_part_edges(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------

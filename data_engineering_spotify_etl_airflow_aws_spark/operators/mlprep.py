@@ -836,13 +836,10 @@ def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     # downstream product - the tree grows ~8^3 copies of the decimal
     # moment arithmetic and codegen OOMs (measured). The checkpoint costs
     # one 36-column row and keeps the iteration a bounded projection.
-    cv = m.select(
-        *[
-            cov_expr(i, j).alias(f"c{i}_{j}")
-            for i in range(D)
-            for j in range(i, D)
-        ]
-    ).localCheckpoint()
+    cells = [
+        cov_expr(i, j).alias(f"c{i}_{j}") for i in range(D) for j in range(i, D)
+    ]
+    cv = caches.checkpoint(m.select(*cells))
 
     def c(i: int, j: int):
         a, b = min(i, j), max(i, j)

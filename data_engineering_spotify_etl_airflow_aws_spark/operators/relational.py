@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from .. import caches
 from ..functions import davg, dsum, oracle_davg, oracle_dsum, to_date_cascade
 from ..registry import query
 from ..tables import load_table
@@ -661,7 +662,7 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # through one task) but a 1-row agg broadcast back over the revenue
 # relation - the same scale-safe scalar-subquery pattern as recent_topk.
 # The revenue relation is |suppliers| rows (O(N) but ~1e-4 of lineitem);
-# it is MATERIALIZED once (localCheckpoint) before fanning into the max
+# it is MATERIALIZED once (caches.checkpoint) before fanning into the max
 # and join branches - without that, each branch re-runs the full
 # lineitem scan+agg (Catalyst does not auto-reuse the exchange across
 # these branch shapes; verified executed-plan, 0 ReusedExchange), so the
@@ -694,10 +695,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("l_suppkey", "l_extendedprice", "l_discount")
     )
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    rev = (
-        li.groupBy("l_suppkey")
-        .agg(dsum(disc_price, scale=4, alias="total_rev"))
-        .localCheckpoint()  # one lineitem scan serves both branches
+    # one lineitem scan serves both branches
+    rev = caches.checkpoint(
+        li.groupBy("l_suppkey").agg(dsum(disc_price, scale=4, alias="total_rev"))
     )
     top = rev.agg(F.max("total_rev").alias("_max_rev"))
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")

@@ -10,6 +10,8 @@ paths. Nothing in the operators hardcodes partition counts.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -60,6 +62,29 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
                 f"oracle parity would fail downstream"
             )
     return spark
+
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def session_shuffle_partitions(spark: SparkSession) -> int:
+    """The session's spark.sql.shuffle.partitions."""
+    return int(spark.conf.get(_SHUFFLE_PARTITIONS))
+
+
+@contextmanager
+def with_shuffle_partitions(spark: SparkSession, n: int) -> Iterator[None]:
+    """spark.sql.shuffle.partitions is n inside the block and the
+    session's own count again after it, also when the block fails. The
+    override is session-global: the block assumes it owns the session
+    (concurrent queries would need a session clone, which cross-session
+    DataFrames forbid)."""
+    prev = spark.conf.get(_SHUFFLE_PARTITIONS)
+    spark.conf.set(_SHUFFLE_PARTITIONS, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(_SHUFFLE_PARTITIONS, prev)
 
 
 def _read_cgroup_limit_file(path: str) -> int | None:
@@ -238,7 +263,7 @@ def get_spark(
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", sp)
+        .config(_SHUFFLE_PARTITIONS, sp)
         # local mode puts EVERY executor thread inside the driver JVM, so
         # the driver heap must be sized for the whole workload - the
         # unset default is 1g, which 32 threads exhaust mid-suite

@@ -65,6 +65,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
+from ..session import with_shuffle_partitions
+
 _CHUNK_ROOT = Path("/tmp/spark_graft_stream")
 
 EVENT_SCHEMA = (
@@ -250,10 +252,5 @@ def drain(
     )
     if state_partitions is None:
         return str(out), run_available_now(writer)
-    conf, key = stream.sparkSession.conf, "spark.sql.shuffle.partitions"
-    prev = conf.get(key)
-    conf.set(key, str(state_partitions))
-    try:
+    with with_shuffle_partitions(stream.sparkSession, state_partitions):
         return str(out), run_available_now(writer)
-    finally:
-        conf.set(key, prev)

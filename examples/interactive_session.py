@@ -3,9 +3,10 @@
   1. batch analytics via the query registry,
   2. continuous auto-ingest (the Snowpipe AUTO_INGEST analog) driven and
      introspected with pipe_status() - SHOW PIPES / DESC PIPE,
-  3. cache lifecycle: persisted operator relations are query-scoped -
-     building the next query through the registry releases them, and
-     caches.release_all() frees the last query's in one call.
+  3. cache lifecycle: persisted and checkpointed operator relations are
+     query-scoped - building the next query through the registry
+     releases them, and caches.release_all() frees the last query's in
+     one call.
 
 Run it directly (`python examples/interactive_session.py [sf_dir]`) or
 import and call main(spark, sf_dir) from a notebook/test with an

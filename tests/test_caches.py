@@ -1,19 +1,22 @@
-"""The query-scoped persist lifecycle (caches.py).
+"""The query-scoped persist and checkpoint lifecycle (caches.py).
 
 Every persisted relation goes through caches.persist() or
-caches.persist_when_scaled() and lands in ONE scope; building a query
+caches.persist_when_scaled(), every lineage cut through
+caches.checkpoint(), and all land in ONE scope; building a query
 through registry.QUERIES releases the previous query's relations first,
 while a direct call between operators keeps its caller's. Three checks:
 
-* persist-site parity - each query registers exactly as many relations
-  as when every operator module kept its own cache list (the table below
-  was recorded from that layout, forced gate, sf0.001), so no persist
-  site was dropped or added;
-* scope semantics - cross-family release through QUERIES, no release on
-  a direct (nested) call;
-* source lints - no package module but caches.py persists, unpersists
-  or keeps a module-level ``*_CACHE`` list, and none but caches.py and
-  tables.py probes scan splits or passes a hand-counted ``dup=``.
+* site parity - each query registers exactly as many persists as when
+  every operator module kept its own cache list (the table below was
+  recorded from that layout, forced gate, sf0.001), so no persist site
+  was dropped or added, and exactly as many checkpoints as its plan
+  cuts at sf0.001;
+* scope semantics - cross-family release through QUERIES (checkpoint
+  blocks included), no release on a direct (nested) call;
+* source lints - no package module but caches.py persists, unpersists,
+  checkpoints or keeps a module-level ``*_CACHE`` list, and none but
+  caches.py and tables.py probes scan splits or passes a hand-counted
+  ``dup=``.
 """
 
 from __future__ import annotations
@@ -21,6 +24,8 @@ from __future__ import annotations
 import ast
 import inspect
 import os
+
+import pytest
 
 import data_engineering_spotify_etl_airflow_aws_spark as engine
 from data_engineering_spotify_etl_airflow_aws_spark import caches, tables
@@ -30,17 +35,17 @@ from .conftest import SF_SMOKE
 
 _PKG_DIR = os.path.dirname(engine.__file__)
 
-# The operator modules that persist anything.
-_PERSISTING_MODULES = {
+# The operator modules that persist or checkpoint anything.
+_SCOPED_MODULES = {
     "clusters", "curation", "dedup", "extras", "filtering", "insights",
-    "mlprep", "similarity", "statistics", "temporal", "text", "tpch",
-    "windows",
+    "mlprep", "relational", "similarity", "statistics", "temporal", "text",
+    "tpch", "windows",
 }
 
 # Relations each query registers when built with
 # SPARK_GRAFT_FORCE_SCALE_PERSIST=1 at sf0.001, recorded from the
 # per-module cache lists this scope replaced. Every other query of
-# _PERSISTING_MODULES registers none.
+# _SCOPED_MODULES registers none.
 _PERSIST_SITES = {
     "ann_recall_eval": 1,
     "assoc_rules_lift": 2,
@@ -106,36 +111,72 @@ _PERSIST_SITES = {
 }
 
 
+# Checkpoints each query registers at sf0.001: one per lineage cut, per
+# round in the loops (dedup_clusters: the edge and vertex cuts plus one
+# per connected-components round, 2 rounds here). Every other query of
+# _SCOPED_MODULES registers none.
+_CHECKPOINT_SITES = {
+    "decile_lift_table": 1,
+    "dedup_clusters": 4,
+    "khop_part_reach": 3,
+    "label_propagation_communities": 3,
+    "ntile_price_deciles": 1,
+    "pack_token_sequences": 1,
+    "pagerank_trade_graph": 4,
+    "pca_power_iteration": 1,
+    "supplier_recs_fof": 1,
+    "tpch_q15_top_supplier": 1,
+}
+
+
 def _persisted(df) -> bool:
     level = df.storageLevel
     return level.useMemory or level.useDisk
 
 
+def _scope() -> tuple[list, list]:
+    """(persisted frames, checkpointed frames) of the query scope."""
+    return (
+        [df for df, is_checkpoint in caches._SCOPE if not is_checkpoint],
+        [df for df, is_checkpoint in caches._SCOPE if is_checkpoint],
+    )
+
+
+def _held_rdds(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _checkpoint_rdds(frames) -> set[int]:
+    return {df._jdf.logicalPlan().rdd().id() for df in frames}
+
+
 def test_persist_site_parity(spark, monkeypatch):
     """Building each query (forced gate, so every gated site engages)
-    leaves exactly the recorded number of relations in the scope, and
-    every one of them is really persisted."""
+    leaves exactly the recorded number of persists and checkpoints in
+    the scope, every persist really persisted and every checkpoint's
+    blocks really held."""
     engine.load_all_operators()
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", "1")
     names = [
         n for n, fn in QUERIES.items()
-        if fn.__module__.rsplit(".", 1)[-1] in _PERSISTING_MODULES
+        if fn.__module__.rsplit(".", 1)[-1] in _SCOPED_MODULES
     ]
-    assert set(_PERSIST_SITES) <= set(names)
+    assert set(_PERSIST_SITES) | set(_CHECKPOINT_SITES) <= set(names)
     got = {}
     try:
         for name in names:
             QUERIES[name](spark, SF_SMOKE)
-            got[name] = len(caches._SCOPE)
-            assert all(_persisted(df) for df in caches._SCOPE), name
+            persists, checkpoints = _scope()
+            got[name] = (len(persists), len(checkpoints))
+            assert all(map(_persisted, persists)), name
+            assert _checkpoint_rdds(checkpoints) <= _held_rdds(spark), name
     finally:
         caches.release_all()
-    drift = {
-        n: (got[n], _PERSIST_SITES.get(n, 0))
-        for n in names
-        if got[n] != _PERSIST_SITES.get(n, 0)
+    want = {
+        n: (_PERSIST_SITES.get(n, 0), _CHECKPOINT_SITES.get(n, 0)) for n in names
     }
-    assert drift == {}, "query: (registered, recorded)"
+    drift = {n: (got[n], want[n]) for n in names if got[n] != want[n]}
+    assert drift == {}, "query: ((persists, checkpoints) registered, recorded)"
 
 
 def test_query_scope_releases_across_families_but_not_nested(spark):
@@ -151,23 +192,30 @@ def test_query_scope_releases_across_families_but_not_nested(spark):
         # cross-family: the MinHash relations go when the (gated, not
         # engaged at sf0.001) KL query is built
         QUERIES["minhash_lsh_near_dup"](spark, SF_SMOKE)
-        minhash = list(caches._SCOPE)
+        minhash, checkpoints = _scope()
         assert len(minhash) == 2 and all(map(_persisted, minhash))
+        assert checkpoints == []
         QUERIES["kl_divergence_source_lang"](spark, SF_SMOKE)
         assert not any(map(_persisted, minhash))
 
         # nested: dedup_clusters calls ngram_jaccard_near_dup directly,
         # so the shingle base it persisted survives the whole build
         QUERIES["dedup_clusters"](spark, SF_SMOKE)
-        shingle_base = caches._SCOPE[0]
-        assert len(caches._SCOPE) == 3 and _persisted(shingle_base)
+        persists, checkpoints = _scope()
+        shingle_base = persists[0]
+        assert len(persists) == 3 and _persisted(shingle_base)
+        assert len(checkpoints) == _CHECKPOINT_SITES["dedup_clusters"]
         QUERIES["near_dup_recall_eval"](spark, SF_SMOKE)
-        shingle_base = caches._SCOPE[0]
-        assert len(caches._SCOPE) == 4 and _persisted(shingle_base)
+        persists, checkpoints = _scope()
+        shingle_base = persists[0]
+        assert len(persists) == 4 and _persisted(shingle_base)
+        assert checkpoints == []
         # a direct call adds to the scope instead of releasing it (its
         # shingle base has the same plan, so Spark reuses the cache)
         ngram_jaccard_near_dup(spark, SF_SMOKE)
-        assert len(caches._SCOPE) == 7 and _persisted(shingle_base)
+        persists, checkpoints = _scope()
+        assert len(persists) == 7 and _persisted(shingle_base)
+        assert checkpoints == []
     finally:
         caches.release_all()
     assert not _persisted(shingle_base)
@@ -181,6 +229,34 @@ def test_query_scope_releases_across_families_but_not_nested(spark):
     assert "def ngram_jaccard_near_dup" in inspect.getsource(wrapper)
 
 
+def test_next_query_frees_checkpoint_blocks(spark):
+    """Building the next query through QUERIES drops the previous
+    query's checkpoint blocks along with its persists, so no checkpoint
+    outlives its query; a frame kept over a released checkpoint fails
+    when it runs again instead of holding executor memory."""
+    engine.load_all_operators()
+    try:
+        pagerank = QUERIES["pagerank_trade_graph"](spark, SF_SMOKE)
+        pagerank_cuts = _checkpoint_rdds(_scope()[1])
+        assert len(pagerank_cuts) == 4
+        assert pagerank_cuts <= _held_rdds(spark)
+        pagerank.collect()
+
+        QUERIES["dedup_clusters"](spark, SF_SMOKE).collect()
+        dedup_cuts = _checkpoint_rdds(_scope()[1])
+        assert len(dedup_cuts) == _CHECKPOINT_SITES["dedup_clusters"]
+        assert dedup_cuts <= _held_rdds(spark)
+        assert not pagerank_cuts & _held_rdds(spark)
+
+        QUERIES["rollup_agg"](spark, SF_SMOKE).collect()
+        assert not (pagerank_cuts | dedup_cuts) & _held_rdds(spark)
+
+        with pytest.raises(Exception, match="[Cc]heckpoint block"):
+            pagerank.collect()
+    finally:
+        caches.release_all()
+
+
 def _lifecycle_violations(path: str) -> list[str]:
     with open(path) as f:
         tree = ast.parse(f.read())
@@ -189,7 +265,9 @@ def _lifecycle_violations(path: str) -> list[str]:
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr in ("persist", "unpersist", "cache")
+            and node.func.attr in (
+                "persist", "unpersist", "cache", "localCheckpoint", "checkpoint"
+            )
             and not (
                 isinstance(node.func.value, ast.Name)
                 and node.func.value.id == "caches"
@@ -242,10 +320,10 @@ def _package_violations(check, allowed=()) -> dict[str, list[str]]:
 
 
 def test_only_caches_module_persists():
-    """Persisting, unpersisting and cache lists belong to caches.py
-    alone; everywhere else persists through caches.persist() /
-    caches.persist_when_scaled() so the query scope releases it.
-    (localCheckpoint is out of scope: it needs no release.)"""
+    """Persisting, unpersisting, checkpointing and cache lists belong to
+    caches.py alone; everywhere else persists through caches.persist() /
+    caches.persist_when_scaled() and cuts lineage through
+    caches.checkpoint(), so the query scope releases it."""
     assert _package_violations(_lifecycle_violations, {caches.__file__}) == {}
 
 

@@ -442,7 +442,7 @@ def test_persist_when_scaled_gate_semantics(spark, monkeypatch, tmp_path):
         # persist() returns the same DataFrame object in PySpark, so the
         # observable is the storage level + scope registration
         assert out is df
-        assert caches._SCOPE == ([out] if engages else [])
+        assert caches._SCOPE == ([(out, False)] if engages else [])
         level = out.storageLevel
         assert (level.useMemory, level.useDisk) == (engages, engages)
         assert sorted(map(tuple, out.collect())) == plain
@@ -452,7 +452,7 @@ def test_persist_when_scaled_gate_semantics(spark, monkeypatch, tmp_path):
     # forced-gate hook engages regardless of the base
     monkeypatch.setenv("SPARK_GRAFT_FORCE_SCALE_PERSIST", "1")
     forced = caches.persist_when_scaled(fixture.select("lang"), fixture)
-    assert caches._SCOPE == [forced]
+    assert caches._SCOPE == [(forced, False)]
     assert forced.storageLevel.useMemory
     caches.release_all()
 

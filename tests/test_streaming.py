@@ -1133,17 +1133,18 @@ def _run_mechanism_sites(path: str) -> list[str]:
 
 
 def test_only_chunks_module_runs_streams():
-    """The availableNow drain, the state-partition override and the event
-    schema live in streaming/chunks.py alone: no other package module
-    triggers availableNow or spells the event schema, and no other
-    streaming module touches spark.sql.shuffle.partitions (operators that
-    narrow it for a batch shuffle are out of scope)."""
+    """The availableNow drain and the event schema live in
+    streaming/chunks.py alone: no other package module triggers
+    availableNow or spells the event schema. Every module but session.py
+    (whose with_shuffle_partitions is the one override, used by drain's
+    state partitions and the graph loops' edge-frame width) leaves
+    spark.sql.shuffle.partitions alone."""
     import os
 
+    from data_engineering_spotify_etl_airflow_aws_spark import session
     from data_engineering_spotify_etl_airflow_aws_spark.streaming import chunks
 
     pkg_dir = os.path.dirname(engine.__file__)
-    stream_dir = os.path.dirname(chunks.__file__)
     found = {}
     for root, _, files in os.walk(pkg_dir):
         for fname in files:
@@ -1152,11 +1153,13 @@ def test_only_chunks_module_runs_streams():
                 continue
             bad = [
                 b for b in _run_mechanism_sites(path)
-                if root == stream_dir or not b.endswith(_SP)
+                if path != session.__file__ or not b.endswith(_SP)
             ]
             if bad:
                 found[os.path.relpath(path, pkg_dir)] = bad
     assert found == {}
-    # ...and chunks.py holds exactly one copy of each
+    # ...chunks.py holds exactly one copy of each, session.py one key
     kinds = sorted(b.split(": ", 1)[1] for b in _run_mechanism_sites(chunks.__file__))
-    assert kinds == sorted(["availableNow", _SP, "event schema"])
+    assert kinds == sorted(["availableNow", "event schema"])
+    kinds = [b.split(": ", 1)[1] for b in _run_mechanism_sites(session.__file__)]
+    assert kinds == [_SP]
