@@ -238,10 +238,10 @@ def _persisted_rdd_ids(spark) -> set[int]:
 def test_daily_pipeline_example_end_to_end(spark, tmp_path):
     """examples/daily_pipeline.py - the reference's daily DAG as one
     script - must ingest exactly-once, land the star schema, and emit
-    all four analytics outputs from one parse of the inbox: at most 21
-    jobs on the calling thread, each Q count observed on its write, one
-    part file per date of the fact and per other output, and nothing left
-    persisted."""
+    all four analytics outputs from one parse of the inbox: exactly 21
+    jobs in the caller's job group (fewer means a worker thread dropped
+    the group), each Q count observed on its write, one part file per
+    date of the fact and per other output, and nothing left persisted."""
     import uuid
 
     daily_pipeline = _daily_pipeline_module()
@@ -254,7 +254,7 @@ def test_daily_pipeline_example_end_to_end(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 21
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 21
     assert _persisted_rdd_ids(spark) <= before
 
     assert out["songs_ingested"] == 150
@@ -295,3 +295,27 @@ def test_daily_pipeline_releases_its_persist_when_a_write_fails(
     with pytest.raises(RuntimeError, match="sink down"):
         daily_pipeline.main(spark, str(tmp_path / "run"))
     assert _persisted_rdd_ids(spark) <= before
+
+
+def test_daily_pipeline_reraises_a_failed_ingest_and_joins_its_workers(
+    spark, tmp_path, monkeypatch
+):
+    """The ingest runs on a worker thread; when it raises, main re-raises
+    it after every output has finished, leaves no RDD persisted by the
+    run and no worker thread alive."""
+    import threading
+
+    from data_engineering_spotify_etl_airflow_aws_spark.streaming import ingest
+
+    daily_pipeline = _daily_pipeline_module()
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("inbox unreachable")
+
+    monkeypatch.setattr(ingest, "ingest_songs_available_now", boom)
+    before = _persisted_rdd_ids(spark)
+    threads = threading.active_count()
+    with pytest.raises(RuntimeError, match="inbox unreachable"):
+        daily_pipeline.main(spark, str(tmp_path / "run"))
+    assert _persisted_rdd_ids(spark) <= before
+    assert threading.active_count() == threads
