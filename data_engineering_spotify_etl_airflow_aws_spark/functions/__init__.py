@@ -13,6 +13,11 @@ rounding - natively in Spark, through VARCHAR in the DuckDB oracle twins
 (oracle_dsum, oracle_exact_double) - bit-identical in both engines
 regardless of partitioning.
 
+Vectors. dot, l2_norm, cosine and the squared L2 distance sq_l2 fold
+left over the zipped arrays, in the order of their DuckDB twins
+(oracle_dot, oracle_norm, oracle_cosine, oracle_sq_l2) - sequential
+list_sum - so both engines produce the same doubles.
+
 Text vocabulary. The document operators (text, filtering, curation, dedup)
 share one tokenizer (tokens/ORACLE_TOKENS: lowercased [a-z0-9]+ runs), one
 STOPWORDS tuple and its hit count (stop_hits), one document quality score
@@ -157,11 +162,29 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
+def sq_l2(a: str, b: str) -> Column:
+    """Squared L2 distance between the array expressions a and b (SQL
+    text, e.g. slices): the same zip_with + left-fold shape as dot(), in
+    one F.expr (0D: an unsuffixed 0.0 is a decimal in Spark SQL)."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
+        " 0D, (x, y) -> x + y)"
+    )
+
+
 # DuckDB fragments matching the above fold order exactly (list_transform +
 # sequential list_sum): used by similarity/dedup oracles.
 def oracle_dot(a: str, b: str) -> str:
     # list_zip yields an unnamed struct in current DuckDB: index numerically
     return f"list_sum(list_transform(list_zip({a}, {b}), s -> s[1] * s[2]))"
+
+
+def oracle_sq_l2(a: str, b: str) -> str:
+    """DuckDB SQL fragment matching sq_l2()."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}),"
+        " s -> (s[1] - s[2]) * (s[1] - s[2])))"
+    )
 
 
 def oracle_norm(a: str) -> str:

@@ -53,7 +53,14 @@ from .. import caches
 from ..registry import query
 from ..session import session_shuffle_partitions, with_shuffle_partitions
 from ..tables import load_table
-from .dedup import _DUCK_H32, _DUCK_SHINGLE_BASE, _SPARK_H32, JACCARD_TAU, ngram_jaccard_near_dup
+from .dedup import (
+    _DUCK_H32,
+    _DUCK_JACCARD,
+    _DUCK_SHINGLE_BASE,
+    _SPARK_H32,
+    JACCARD_TAU,
+    ngram_jaccard_near_dup,
+)
 
 
 def _edge_frame_width(spark: SparkSession, n_edges: int):
@@ -162,9 +169,7 @@ def connected_components(
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM sh a JOIN sh b ON a.doc_id < b.doc_id
         WHERE a.n_sh > 0 AND b.n_sh > 0
-          AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                  / (a.n_sh + b.n_sh - len(list_intersect(a.sh, b.sh)))
-              >= {JACCARD_TAU}
+          AND {_DUCK_JACCARD} >= {JACCARD_TAU}
     ),
     edges AS (
         SELECT doc_a AS src, doc_b AS dst FROM pairs

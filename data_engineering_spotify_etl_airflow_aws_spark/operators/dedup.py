@@ -37,7 +37,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
@@ -150,6 +150,49 @@ def _shingle_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# --- the exact verify of a candidate pair: its shared-shingle count and
+# Jaccard ratio, one text per engine
+_COMMON = "size(array_intersect(sh_a, sh_b))"
+
+
+def _with_shingles(cand: DataFrame, sh: DataFrame, a: str, b: str) -> DataFrame:
+    """cand's (a, b) doc pairs joined to each doc's shingle set and size:
+    sh_a, n_a, sh_b, n_b."""
+
+    def side(doc: str, k: str) -> DataFrame:
+        return sh.select(
+            F.col("doc_id").alias(doc),
+            F.col("sh").alias(f"sh_{k}"),
+            F.col("n_sh").alias(f"n_{k}"),
+        )
+
+    return cand.join(side(a, "a"), a).join(side(b, "b"), b)
+
+
+def _jaccard_verified(
+    cand: DataFrame, sh: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """(a, b, n_common, jaccard) for the pairs of cand whose exact
+    Jaccard reaches JACCARD_TAU."""
+    return (
+        _with_shingles(cand, sh, a, b)
+        .selectExpr(
+            a,
+            b,
+            f"{_COMMON} AS n_common",
+            f"CAST({_COMMON} AS DOUBLE) / (n_a + n_b - {_COMMON}) AS jaccard",
+        )
+        .where(F.col("jaccard") >= JACCARD_TAU)
+    )
+
+
+# DuckDB twin over the shingle rows a and b
+_DUCK_COMMON = "len(list_intersect(a.sh, b.sh))"
+_DUCK_JACCARD = (
+    f"CAST({_DUCK_COMMON} AS DOUBLE) / (a.n_sh + b.n_sh - {_DUCK_COMMON})"
+)
+
+
 # ---------------------------------------------------------------------------
 # EXACT n-gram Jaccard near-dup pairs. Spark plan: prefix-filtered inverted
 # index (candidates from the frequency-ordered prefix self-join with
@@ -161,14 +204,9 @@ def _shingle_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH sh AS ({_DUCK_SHINGLE_BASE})
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           len(list_intersect(a.sh, b.sh)) AS n_common,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-               / (a.n_sh + b.n_sh - len(list_intersect(a.sh, b.sh))) AS jaccard
+           {_DUCK_COMMON} AS n_common, {_DUCK_JACCARD} AS jaccard
     FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-    WHERE a.n_sh > 0 AND b.n_sh > 0
-      AND CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (a.n_sh + b.n_sh - len(list_intersect(a.sh, b.sh)))
-          >= {JACCARD_TAU}
+    WHERE a.n_sh > 0 AND b.n_sh > 0 AND {_DUCK_JACCARD} >= {JACCARD_TAU}
     ORDER BY doc_a, doc_b
     """,
 )
@@ -250,30 +288,7 @@ def _ngram_pairs(sh: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    a = sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common.cast("double") / (F.col("n_a") + F.col("n_b") - common)
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            common.alias("n_common"),
-            jac.alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= JACCARD_TAU)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_verified(cand, sh).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -334,17 +349,11 @@ def _band_key_exprs(col: str = "mh") -> list[str]:
                     AND a.band_key = b.band_key
                     AND a.doc_id < b.doc_id
     )
-    SELECT doc_a, doc_b,
-           len(list_intersect(sa.sh, sb.sh)) AS n_common,
-           CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-               / (sa.n_sh + sb.n_sh - len(list_intersect(sa.sh, sb.sh)))
-               AS jaccard
+    SELECT doc_a, doc_b, {_DUCK_COMMON} AS n_common, {_DUCK_JACCARD} AS jaccard
     FROM cand
-    JOIN sig sa ON sa.doc_id = doc_a
-    JOIN sig sb ON sb.doc_id = doc_b
-    WHERE CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-              / (sa.n_sh + sb.n_sh - len(list_intersect(sa.sh, sb.sh)))
-          >= {JACCARD_TAU}
+    JOIN sig a ON a.doc_id = doc_a
+    JOIN sig b ON b.doc_id = doc_b
+    WHERE {_DUCK_JACCARD} >= {JACCARD_TAU}
     ORDER BY doc_a, doc_b
     """,
 )
@@ -379,25 +388,7 @@ def _minhash_pairs(sh: DataFrame) -> DataFrame:
         )
         .distinct()
     )
-    a = sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = common.cast("double") / (F.col("n_a") + F.col("n_b") - common)
-    return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_a", "doc_b", common.alias("n_common"), jac.alias("jaccard"))
-        .where(F.col("jaccard") >= JACCARD_TAU)
-        .orderBy("doc_a", "doc_b")
-    )
+    return _jaccard_verified(cand, sh).orderBy("doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -407,19 +398,19 @@ def _minhash_pairs(sh: DataFrame) -> DataFrame:
 # at scale buckets fingerprints on rotated byte slices (Hamming-ball probe).
 _SIMHASH_BITS = 32
 
-_DUCK_BIT_SUMS = ", ".join(
+# the bit sums and their assembly are one text both engines parse alike
+# (Spark SQL has >> too)
+_BIT_SUMS = [
     f"sum(CASE WHEN ((h >> {b}) & 1) = 1 THEN cnt ELSE -cnt END) AS s{b}"
     for b in range(_SIMHASH_BITS)
+]
+_ASSEMBLE = "CAST({} AS BIGINT)".format(
+    " + ".join(
+        f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)"
+        for b in range(_SIMHASH_BITS)
+    )
 )
-_DUCK_ASSEMBLE = " + ".join(
-    f"(CASE WHEN s{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(_SIMHASH_BITS)
-)
-
-
-@query(
-    "simhash_fingerprints",
-    oracle=f"""
-    WITH tok AS (
+_DUCK_SIMHASH = f"""tok AS (
         SELECT doc_id, t AS token, count(*) AS cnt
         FROM (SELECT doc_id, unnest({_OT}) AS t FROM documents) GROUP BY 1, 2
     ),
@@ -427,46 +418,36 @@ _DUCK_ASSEMBLE = " + ".join(
         SELECT doc_id, cnt, {_DUCK_H32.format(s='token')} AS h FROM tok
     ),
     bitsums AS (
-        SELECT doc_id, {_DUCK_BIT_SUMS} FROM hashed GROUP BY doc_id
+        SELECT doc_id, {", ".join(_BIT_SUMS)} FROM hashed GROUP BY doc_id
+    ),
+    fp AS (SELECT doc_id, {_ASSEMBLE} AS f FROM bitsums)"""
+
+
+def _simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, f): every document's 32-bit SimHash fingerprint."""
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.explode(tokens("text")).alias("token"))
+        .groupBy("doc_id", "token")
+        .agg(F.count("*").alias("cnt"))
+        .selectExpr("doc_id", "cnt", f"{_SPARK_H32.format(s='token')} AS h")
+        .groupBy("doc_id")
+        .agg(*[F.expr(e) for e in _BIT_SUMS])
+        .selectExpr("doc_id", f"{_ASSEMBLE} AS f")
     )
-    SELECT doc_id, CAST({_DUCK_ASSEMBLE} AS BIGINT) AS simhash32
-    FROM bitsums ORDER BY doc_id
+
+
+@query(
+    "simhash_fingerprints",
+    oracle=f"""
+    WITH {_DUCK_SIMHASH}
+    SELECT doc_id, f AS simhash32 FROM fp ORDER BY doc_id
     """,
 )
 def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    tok = (
-        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "doc_id",
-            "cnt",
-            F.expr(_SPARK_H32.format(s="token")).alias("h"),
-        )
-    )
-    bit_sums = [
-        F.sum(
-            F.when(
-                F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, F.col("cnt")
-            ).otherwise(-F.col("cnt"))
-        ).alias(f"s{b}")
-        for b in range(_SIMHASH_BITS)
-    ]
-    assembled = sum(
-        [
-            F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(_SIMHASH_BITS)
-        ],
-        F.lit(0),
-    )
-    return (
-        tok.groupBy("doc_id")
-        .agg(*bit_sums)
-        .select("doc_id", assembled.cast("bigint").alias("simhash32"))
-        # no output sort: one row per doc (full-table scale), driver hash
-        # is order-insensitive
-    )
+    # no output sort: one row per doc (full-table scale), driver hash is
+    # order-insensitive
+    return _simhash(spark, sf_dir).withColumnRenamed("f", "simhash32")
 
 
 # ---------------------------------------------------------------------------
@@ -716,17 +697,12 @@ _INC_H_DUCK = _DUCK_H32.format(s="concat('split-', CAST(doc_id AS VARCHAR))")
                     AND d.band_key = b.band_key
         WHERE d.is_delta AND NOT b.is_delta
     )
-    SELECT delta_doc, base_doc,
-           len(list_intersect(sd.sh, sb.sh)) AS n_common,
-           CAST(len(list_intersect(sd.sh, sb.sh)) AS DOUBLE)
-               / (sd.n_sh + sb.n_sh - len(list_intersect(sd.sh, sb.sh)))
-               AS jaccard
+    SELECT delta_doc, base_doc, {_DUCK_COMMON} AS n_common,
+           {_DUCK_JACCARD} AS jaccard
     FROM cand
-    JOIN sig sd ON sd.doc_id = delta_doc
-    JOIN sig sb ON sb.doc_id = base_doc
-    WHERE CAST(len(list_intersect(sd.sh, sb.sh)) AS DOUBLE)
-              / (sd.n_sh + sb.n_sh - len(list_intersect(sd.sh, sb.sh)))
-          >= {JACCARD_TAU}
+    JOIN sig a ON a.doc_id = delta_doc
+    JOIN sig b ON b.doc_id = base_doc
+    WHERE {_DUCK_JACCARD} >= {JACCARD_TAU}
     """,
 )
 def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -760,29 +736,7 @@ def incremental_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("delta_doc", "base_doc")
         .distinct()
     )
-    d = sh.select(
-        F.col("doc_id").alias("delta_doc"),
-        F.col("sh").alias("sh_d"),
-        F.col("n_sh").alias("n_d"),
-    )
-    b = sh.select(
-        F.col("doc_id").alias("base_doc"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    common = F.size(F.array_intersect("sh_d", "sh_b"))
-    jac = common.cast("double") / (F.col("n_d") + F.col("n_b") - common)
-    return (
-        cand.join(d, "delta_doc")
-        .join(b, "base_doc")
-        .select(
-            "delta_doc",
-            "base_doc",
-            common.alias("n_common"),
-            jac.alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= JACCARD_TAU)
-    )
+    return _jaccard_verified(cand, sh, "delta_doc", "base_doc")
 
 
 # ---------------------------------------------------------------------------
@@ -817,17 +771,13 @@ _CONT_TAU = 0.5
     oracle=f"""
     WITH sh AS ({_DUCK_SHINGLE_BASE})
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           len(list_intersect(a.sh, b.sh)) AS n_common,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / a.n_sh
-               AS cont_a_in_b,
-           CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / b.n_sh
-               AS cont_b_in_a
+           {_DUCK_COMMON} AS n_common,
+           CAST({_DUCK_COMMON} AS DOUBLE) / a.n_sh AS cont_a_in_b,
+           CAST({_DUCK_COMMON} AS DOUBLE) / b.n_sh AS cont_b_in_a
     FROM sh a JOIN sh b ON a.doc_id < b.doc_id
     WHERE a.n_sh > 0 AND b.n_sh > 0
-      AND greatest(
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / a.n_sh,
-            CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) / b.n_sh)
-          >= {_CONT_TAU}
+      AND greatest(CAST({_DUCK_COMMON} AS DOUBLE) / a.n_sh,
+                   CAST({_DUCK_COMMON} AS DOUBLE) / b.n_sh) >= {_CONT_TAU}
     """,
 )
 def containment_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -866,28 +816,14 @@ def containment_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    a = sh.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n_sh").alias("n_a"),
-    )
-    b = sh.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n_sh").alias("n_b"),
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    c_ab = common.cast("double") / F.col("n_a")
-    c_ba = common.cast("double") / F.col("n_b")
     return (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
+        _with_shingles(cand, sh, "doc_a", "doc_b")
+        .selectExpr(
             "doc_a",
             "doc_b",
-            common.alias("n_common"),
-            c_ab.alias("cont_a_in_b"),
-            c_ba.alias("cont_b_in_a"),
+            f"{_COMMON} AS n_common",
+            f"CAST({_COMMON} AS DOUBLE) / n_a AS cont_a_in_b",
+            f"CAST({_COMMON} AS DOUBLE) / n_b AS cont_b_in_a",
         )
         .where(
             F.greatest("cont_a_in_b", "cont_b_in_a") >= F.lit(_CONT_TAU)
@@ -921,18 +857,7 @@ _SH_TAU = 2
 @query(
     "simhash_hamming_pairs",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id, t AS token, count(*) AS cnt
-        FROM (SELECT doc_id, unnest({_OT}) AS t FROM documents) GROUP BY 1, 2
-    ),
-    hashed AS (
-        SELECT doc_id, cnt, {_DUCK_H32.format(s='token')} AS h FROM tok
-    ),
-    bitsums AS (
-        SELECT doc_id, {_DUCK_BIT_SUMS} FROM hashed GROUP BY doc_id
-    ),
-    fp AS (SELECT doc_id, CAST({_DUCK_ASSEMBLE} AS BIGINT) AS f
-           FROM bitsums)
+    WITH {_DUCK_SIMHASH}
     SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
            CAST(bit_count(xor(a.f, b.f)) AS BIGINT) AS hamming
     FROM fp a JOIN fp b ON a.doc_id < b.doc_id
@@ -940,36 +865,7 @@ _SH_TAU = 2
     """,
 )
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    tok = (
-        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-        .groupBy("doc_id", "token")
-        .agg(F.count("*").alias("cnt"))
-        .select(
-            "doc_id", "cnt", F.expr(_SPARK_H32.format(s="token")).alias("h")
-        )
-    )
-    bit_sums = [
-        F.sum(
-            F.when(
-                F.shiftright("h", b).bitwiseAND(F.lit(1)) == 1, F.col("cnt")
-            ).otherwise(-F.col("cnt"))
-        ).alias(f"s{b}")
-        for b in range(_SIMHASH_BITS)
-    ]
-    assembled = sum(
-        [
-            F.when(F.col(f"s{b}") > 0, F.lit(1 << b)).otherwise(F.lit(0))
-            for b in range(_SIMHASH_BITS)
-        ],
-        F.lit(0),
-    )
-    fp = caches.persist(
-        tok.groupBy("doc_id")
-        .agg(*bit_sums)
-        .select("doc_id", assembled.cast("bigint").alias("f")),
-        StorageLevel.MEMORY_AND_DISK,
-    )
+    fp = caches.persist(_simhash(spark, sf_dir), StorageLevel.MEMORY_AND_DISK)
     bands = fp.select(
         "doc_id",
         "f",
@@ -1233,8 +1129,6 @@ def golden_doc_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stats one semi-join-shaped aggregation over documents (doc_id-keyed),
 # and the output is a single row. Nothing new shuffles the corpus.
 def _impact_oracle() -> str:
-    from ..registry import ORACLES
-
     return f"""
     WITH pairs AS ({{pair_oracle}}),
     removed AS (SELECT DISTINCT doc_b AS doc_id FROM pairs),

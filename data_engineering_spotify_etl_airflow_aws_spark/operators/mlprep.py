@@ -26,13 +26,21 @@ a fixed bit-array domain, a bounded vocabulary cut).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
 from .. import caches
-from ..functions import ORACLE_TOKENS, oracle_cosine, tokens, vec_double
+from ..functions import (
+    ORACLE_TOKENS,
+    oracle_cosine,
+    oracle_exact_double,
+    tokens,
+    vec_double,
+)
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32, _SPARK_H32
@@ -675,40 +683,50 @@ def unigram_logprob_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # components; past that, shard the agg (e.g. by a hash bucket) and merge
 # the per-shard moments - the formula is associative in its sums.
 _COV_D = 8  # leading dims covered (full 64x64 = same plan, 2080 sums)
+_COV_CELLS = [(i, j) for i in range(_COV_D) for j in range(i, _COV_D)]
 
 
-def _cov_oracle() -> str:
-    from ..functions import oracle_exact_double
+def _cov_sql(elem: str, exact: str, to_double: Callable[[str], str]):
+    """The moment fragments as SQL text in one dialect: the quantizing
+    projection u0..u7 (elem: element {i}'s access, 1-based), the 45-sum
+    aggregate and cell(i, j), the covariance cell over it. exact is the
+    exact integer type, to_double its correctly rounded conversion. The
+    literals are exponent-form (1e9, 0.5e0): doubles in both engines,
+    where Spark SQL reads an unsuffixed 0.5 as a decimal.
 
-    cols = ", ".join(
-        f"CAST(floor(emb[{i + 1}] * 1000000000.0 + 0.5) AS HUGEINT) AS u{i}"
+    One exact-integer cast per component: sums of decimal(38,0) stay
+    decimal(38,0), and the decimal(38,0) products cap at decimal(38,0),
+    exact below 1e38 (per-row products are ~1e20, far inside)."""
+    u = [
+        f"CAST(floor({elem.format(i=i + 1)} * 1e9 + 0.5e0) AS {exact}) AS u{i}"
         for i in range(_COV_D)
-    )
-    sums = ", ".join(f"sum(u{i}) AS s{i}" for i in range(_COV_D))
-    psums = ", ".join(
-        f"sum(u{i} * u{j}) AS s{i}_{j}"
-        for i in range(_COV_D)
-        for j in range(i, _COV_D)
-    )
-    rows = " UNION ALL ".join(
-        f"SELECT {i} AS dim_i, {j} AS dim_j,"
-        f" ({oracle_exact_double(f'n * s{i}_{j} - s{i} * s{j}')}"
-        f" / {oracle_exact_double('n * (n - 1)')}) / 1e18 AS cov FROM m"
-        for i in range(_COV_D)
-        for j in range(i, _COV_D)
-    )
-    return f"""
+    ]
+    m = ["count(*) AS n"] + [f"sum(u{i}) AS s{i}" for i in range(_COV_D)]
+    m += [f"sum(u{i} * u{j}) AS s{i}_{j}" for i, j in _COV_CELLS]
+    den = to_double("n * (n - 1)")
+
+    def cell(i: int, j: int) -> str:
+        a, b = min(i, j), max(i, j)
+        num = to_double(f"CAST(n AS {exact}) * s{a}_{b} - s{a} * s{b}")
+        return f"{num} / {den} / 1e18"
+
+    return u, m, cell
+
+
+_U, _M, _CELL = _cov_sql(
+    "element_at(emb, {i})", "decimal(38,0)", lambda x: f"CAST({x} AS DOUBLE)"
+)
+_OU, _OM, _OCELL = _cov_sql("emb[{i}]", "HUGEINT", oracle_exact_double)
+_ORACLE_MOMENTS = f"""
     WITH u AS (
-        SELECT {cols}
+        SELECT {", ".join(_OU)}
         FROM (SELECT embedding::DOUBLE[] AS emb FROM embeddings)
     ),
-    m AS (SELECT CAST(count(*) AS HUGEINT) AS n, {sums}, {psums} FROM u)
-    {rows}
-    """
+    m AS (SELECT {", ".join(_OM)} FROM u)"""
 
 
-@query("embedding_covariance_matrix", oracle=_cov_oracle())
-def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The one-row moment relation m over the embeddings."""
     from ..tables import widen_small_scan
 
     v = widen_small_scan(
@@ -716,55 +734,23 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             vec_double("embedding").alias("emb")
         )
     )
-    # r13 (verdict ask #5): ONE decimal(38,0) cast per component in the
-    # projection replaces the 44 per-aggregate casts - sums of (38,0)
-    # stay (38,0), and the (38,0)x(38,0) products cap at (38,0) scale 0,
-    # exact below 1e38 (per-row products are ~1e20, far inside).
-    # A/B (min-of-3, interleaved, identical rows): 2.36s vs 2.61s at
-    # sf0.1 - evidence/ab_r13_decimal_cast.json.
-    u = v.select(
-        *[
-            F.floor(
-                F.element_at("emb", i + 1) * F.lit(1_000_000_000.0)
-                + F.lit(0.5)
-            )
-            .cast("decimal(38,0)")
-            .alias(f"u{i}")
-            for i in range(_COV_D)
-        ]
+    return v.selectExpr(*_U).selectExpr(*_M)
+
+
+@query(
+    "embedding_covariance_matrix",
+    oracle=_ORACLE_MOMENTS
+    + " UNION ALL ".join(
+        f" SELECT {i} AS dim_i, {j} AS dim_j, {_OCELL(i, j)} AS cov FROM m"
+        for i, j in _COV_CELLS
+    ),
+)
+def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    cells = ", ".join(
+        f"struct({i} AS dim_i, {j} AS dim_j, {_CELL(i, j)} AS cov)"
+        for i, j in _COV_CELLS
     )
-    aggs = [F.count("*").alias("n")]
-    aggs += [F.sum(F.col(f"u{i}")).alias(f"s{i}") for i in range(_COV_D)]
-    aggs += [
-        F.sum(F.col(f"u{i}") * F.col(f"u{j}")).alias(f"s{i}_{j}")
-        for i in range(_COV_D)
-        for j in range(i, _COV_D)
-    ]
-    m = u.agg(*aggs)
-    den = (F.col("n") * (F.col("n") - F.lit(1))).cast("double")
-    return m.select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("dim_i"),
-                        F.lit(j).alias("dim_j"),
-                        (
-                            (
-                                F.col("n").cast("decimal(38,0)")
-                                * F.col(f"s{i}_{j}")
-                                - F.col(f"s{i}") * F.col(f"s{j}")
-                            ).cast("double")
-                            / den
-                            / F.lit(1e18)
-                        ).alias("cov"),
-                    )
-                    for i in range(_COV_D)
-                    for j in range(i, _COV_D)
-                ]
-            )
-        )
-    )
+    return _moments(spark, sf_dir).selectExpr(f"inline(array({cells}))")
 
 
 # ---------------------------------------------------------------------------
@@ -784,177 +770,67 @@ def embedding_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Determinism: covariance cells convert from exact integer moments
 # exactly as embedding_covariance_matrix (one correctly rounded cast);
-# every later sum-of-8-products is written left-associated in BOTH
-# engines, so the IEEE sequence is identical; sqrt/divisions are single
-# ops.
-@query("pca_power_iteration")
+# the steps after them are one text both engines parse (_PCA_STEPS),
+# every sum-of-8-products left-associated, so the IEEE sequence is
+# identical; sqrt/divisions are single ops.
+def _c(i: int, j: int) -> str:
+    return f"c{min(i, j)}_{max(i, j)}"
+
+
+def _sum(terms) -> str:
+    return " + ".join(terms)
+
+
+_D = range(_COV_D)
+# the power-iteration steps v1, v2 and (eig, nrm, tr), one text each
+_PCA_STEPS = (
+    [f"{_c(i, 0)} AS v1_{i}" for i in _D],
+    [_sum(f"{_c(i, j)} * v1_{j}" for j in _D) + f" AS v2_{i}" for i in _D],
+    [
+        f"({_sum(f'v2_{i} * v1_{i}' for i in _D)})"
+        f" / ({_sum(f'v1_{i} * v1_{i}' for i in _D)}) AS eig",
+        f"sqrt({_sum(f'v2_{i} * v2_{i}' for i in _D)}) AS nrm",
+        f"{_sum(_c(i, i) for i in _D)} AS tr",
+    ],
+)
+
+
+@query(
+    "pca_power_iteration",
+    oracle=_ORACLE_MOMENTS
+    + f""",
+    cv AS (SELECT {", ".join(f"{_OCELL(i, j)} AS c{i}_{j}"
+                             for i, j in _COV_CELLS)} FROM m),
+    p1 AS (SELECT *, {", ".join(_PCA_STEPS[0])} FROM cv),
+    p2 AS (SELECT *, {", ".join(_PCA_STEPS[1])} FROM p1),
+    r AS (SELECT *, {", ".join(_PCA_STEPS[2])} FROM p2)
+    """
+    + " UNION ALL ".join(
+        f"SELECT {i} AS dim, v2_{i} / nrm AS loading,"
+        f" eig AS eigenvalue, eig / tr AS explained_share FROM r"
+        for i in _D
+    ),
+)
 def pca_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import widen_small_scan
-
-    D = _COV_D
-    v = widen_small_scan(
-        load_table(spark, sf_dir, "embeddings").select(
-            vec_double("embedding").alias("emb")
-        )
-    )
-    # shared decimal(38,0) cast in the projection (r13 ask #5 - see the
-    # covariance matrix above for the bound argument and the A/B)
-    u = v.select(
-        *[
-            F.floor(
-                F.element_at("emb", i + 1) * F.lit(1_000_000_000.0)
-                + F.lit(0.5)
-            )
-            .cast("decimal(38,0)")
-            .alias(f"u{i}")
-            for i in range(D)
-        ]
-    )
-    aggs = [F.count("*").alias("n")]
-    aggs += [F.sum(F.col(f"u{i}")).alias(f"s{i}") for i in range(D)]
-    aggs += [
-        F.sum(F.col(f"u{i}") * F.col(f"u{j}")).alias(f"s{i}_{j}")
-        for i in range(D)
-        for j in range(i, D)
-    ]
-    m = u.agg(*aggs)
-    den = (F.col("n") * (F.col("n") - F.lit(1))).cast("double")
-
-    def cov_expr(i: int, j: int):
-        a, b = min(i, j), max(i, j)
-        return (
-            (
-                F.col("n").cast("decimal(38,0)") * F.col(f"s{a}_{b}")
-                - F.col(f"s{a}") * F.col(f"s{b}")
-            ).cast("double")
-            / den
-            / F.lit(1e18)
-        )
-
     # materialize the ONE-ROW covariance relation: without the checkpoint
     # Catalyst's project collapsing re-inlines every cov cell into every
     # downstream product - the tree grows ~8^3 copies of the decimal
     # moment arithmetic and codegen OOMs (measured). The checkpoint costs
     # one 36-column row and keeps the iteration a bounded projection.
-    cells = [
-        cov_expr(i, j).alias(f"c{i}_{j}") for i in range(D) for j in range(i, D)
-    ]
-    cv = caches.checkpoint(m.select(*cells))
-
-    def c(i: int, j: int):
-        a, b = min(i, j), max(i, j)
-        return F.col(f"c{a}_{b}")
-
-    def dotsum(terms):
-        acc = terms[0]
-        for t in terms[1:]:
-            acc = acc + t
-        return acc
-
-    p1 = cv.select("*", *[c(i, 0).alias(f"v1_{i}") for i in range(D)])
-    p2 = p1.select(
-        "*",
-        *[
-            dotsum([c(i, j) * F.col(f"v1_{j}") for j in range(D)]).alias(
-                f"v2_{i}"
-            )
-            for i in range(D)
-        ],
-    )
-    r = p2.select(
-        "*",
-        (
-            dotsum([F.col(f"v2_{i}") * F.col(f"v1_{i}") for i in range(D)])
-            / dotsum(
-                [F.col(f"v1_{i}") * F.col(f"v1_{i}") for i in range(D)]
-            )
-        ).alias("eig"),
-        F.sqrt(
-            dotsum([F.col(f"v2_{i}") * F.col(f"v2_{i}") for i in range(D)])
-        ).alias("nrm"),
-        dotsum([c(i, i) for i in range(D)]).alias("tr"),
-    )
-    return r.select(
-        F.inline(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("dim"),
-                        (F.col(f"v2_{i}") / F.col("nrm")).alias("loading"),
-                        F.col("eig").alias("eigenvalue"),
-                        (F.col("eig") / F.col("tr")).alias(
-                            "explained_share"
-                        ),
-                    )
-                    for i in range(D)
-                ]
-            )
+    cv = caches.checkpoint(
+        _moments(spark, sf_dir).selectExpr(
+            *[f"{_CELL(i, j)} AS c{i}_{j}" for i, j in _COV_CELLS]
         )
     )
-
-
-def _pca_oracle() -> str:
-    from ..functions import oracle_exact_double
-
-    D = _COV_D
-    cols = ", ".join(
-        f"CAST(floor(emb[{i + 1}] * 1000000000.0 + 0.5) AS HUGEINT) AS u{i}"
-        for i in range(D)
+    r = cv
+    for step in _PCA_STEPS:
+        r = r.selectExpr("*", *step)
+    rows = ", ".join(
+        f"struct({i} AS dim, v2_{i} / nrm AS loading, eig AS eigenvalue,"
+        f" eig / tr AS explained_share)"
+        for i in _D
     )
-    sums = ", ".join(f"sum(u{i}) AS s{i}" for i in range(D))
-    psums = ", ".join(
-        f"sum(u{i} * u{j}) AS s{i}_{j}"
-        for i in range(D)
-        for j in range(i, D)
-    )
-
-    def cov(i: int, j: int) -> str:
-        a, b = min(i, j), max(i, j)
-        return (
-            f"(({oracle_exact_double(f'n * s{a}_{b} - s{a} * s{b}')}"
-            f" / {oracle_exact_double('n * (n - 1)')}) / 1e18)"
-        )
-
-    covs = ", ".join(
-        f"{cov(i, j)} AS c{i}_{j}" for i in range(D) for j in range(i, D)
-    )
-
-    def c(i: int, j: int) -> str:
-        a, b = min(i, j), max(i, j)
-        return f"c{a}_{b}"
-
-    v1s = ", ".join(f"{c(i, 0)} AS v1_{i}" for i in range(D))
-    v2s = ", ".join(
-        " + ".join(f"{c(i, j)} * v1_{j}" for j in range(D)) + f" AS v2_{i}"
-        for i in range(D)
-    )
-    eig_num = " + ".join(f"v2_{i} * v1_{i}" for i in range(D))
-    eig_den = " + ".join(f"v1_{i} * v1_{i}" for i in range(D))
-    nrm = " + ".join(f"v2_{i} * v2_{i}" for i in range(D))
-    trace = " + ".join(c(i, i) for i in range(D))
-    rows = " UNION ALL ".join(
-        f"SELECT {i} AS dim, v2_{i} / nrm AS loading,"
-        f" eig AS eigenvalue, eig / tr AS explained_share FROM r"
-        for i in range(D)
-    )
-    return f"""
-    WITH uu AS (
-        SELECT {cols}
-        FROM (SELECT embedding::DOUBLE[] AS emb FROM embeddings)
-    ),
-    m AS (SELECT CAST(count(*) AS HUGEINT) AS n, {sums}, {psums} FROM uu),
-    cv AS (SELECT {covs} FROM m),
-    p1 AS (SELECT *, {v1s} FROM cv),
-    p2 AS (SELECT *, {v2s} FROM p1),
-    r AS (SELECT *, ({eig_num}) / ({eig_den}) AS eig,
-                 sqrt({nrm}) AS nrm, ({trace}) AS tr FROM p2)
-    {rows}
-    """
-
-
-from ..registry import ORACLES as _ML_ORACLES  # noqa: E402
-
-_ML_ORACLES["pca_power_iteration"] = _pca_oracle()
+    return r.selectExpr(f"inline(array({rows}))")
 
 
 # ---------------------------------------------------------------------------

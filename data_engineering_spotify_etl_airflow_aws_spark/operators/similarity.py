@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from .. import caches
-from ..functions import cosine, oracle_cosine, vec_double
+from ..functions import cosine, oracle_cosine, oracle_sq_l2, sq_l2, vec_double
 from ..registry import query
 from ..tables import load_table
 from .dedup import _DUCK_H32, _SPARK_H32
@@ -775,25 +775,16 @@ _PQ_H_DUCK = _DUCK_H32.format(s="concat('pqc-', CAST(vec_id AS VARCHAR))")
 
 
 def _pq_sq_dist_spark(m: int) -> Column:
-    """Squared L2 distance between subspace m of emb and cb_emb:
-    zip_with + sequential left-fold, the functions.dot shape."""
+    """Squared L2 distance between subspace m of emb and cb_emb."""
     lo = m * _PQ_SUB + 1
-    a = F.slice("emb", lo, _PQ_SUB)
-    b = F.slice("cb_emb", lo, _PQ_SUB)
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+    return sq_l2(f"slice(emb, {lo}, {_PQ_SUB})", f"slice(cb_emb, {lo}, {_PQ_SUB})")
 
 
-def _pq_sq_dist_duck(m: int) -> str:
-    lo = m * _PQ_SUB
-    return (
-        f"list_sum(list_transform(range(1, {_PQ_SUB + 1}), "
-        f"i -> (a.emb[{lo} + i] - c.emb[{lo} + i])"
-        f" * (a.emb[{lo} + i] - c.emb[{lo} + i])))"
-    )
+def _pq_sq_dist_duck(m: int | str, a: str = "a.emb", b: str = "c.emb") -> str:
+    """DuckDB twin of _pq_sq_dist_spark over subspace m (a number or an
+    integer column) of the vectors a and b."""
+    lo, hi = f"{m} * {_PQ_SUB} + 1", f"{m} * {_PQ_SUB} + {_PQ_SUB}"
+    return oracle_sq_l2(f"list_slice({a}, {lo}, {hi})", f"list_slice({b}, {lo}, {hi})")
 
 
 def _pq_oracle() -> str:
@@ -950,11 +941,7 @@ _ADC_K = 5
 # IVF-PQ composition after it): one definition of the query set, the
 # codebook, the per-query LUT, and the exploded candidate codes.
 def _adc_shared_ctes() -> str:
-    lut_dist = (
-        "list_sum(list_transform(range(1, 9), "
-        "i -> (q.emb[m * 8 + i] - c.emb[m * 8 + i])"
-        " * (q.emb[m * 8 + i] - c.emb[m * 8 + i])))"
-    )
+    lut_dist = _pq_sq_dist_duck("m", "q.emb", "c.emb")
     return f"""pq AS ({_PQ_ENCODE_ARRAY_SQL}),
     v AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
     q AS (SELECT vec_id AS query_id, emb FROM v
@@ -973,22 +960,19 @@ def _adc_shared_ctes() -> str:
         SELECT q.query_id, mm.m, c.code,
                CAST(floor({lut_dist} * 1000000000 + 0.5) AS BIGINT) AS d_micro
         FROM q
-        CROSS JOIN (SELECT CAST(unnest(range(8)) AS INTEGER) AS m) mm
+        CROSS JOIN (SELECT CAST(unnest(range({_PQ_M})) AS INTEGER) AS m) mm
         CROSS JOIN cb c
     ),
     cand_codes AS (
         SELECT vec_id AS cand_id,
-               CAST(unnest(range(8)) AS INTEGER) AS m,
+               CAST(unnest(range({_PQ_M})) AS INTEGER) AS m,
                unnest(pq_code) AS code
         FROM pq
     )"""
 
 
 def _adc_oracle() -> str:
-    exact_dist = (
-        "list_sum(list_transform(range(1, 65), "
-        "i -> (q.emb[i] - v.emb[i]) * (q.emb[i] - v.emb[i])))"
-    )
+    exact_dist = oracle_sq_l2("q.emb", "v.emb")
     return f"""
     WITH {_adc_shared_ctes()},
     adc AS (
@@ -1100,13 +1084,7 @@ def pq_adc_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rnk") <= _ADC_K)
         .select("query_id", F.col("cand_id").alias("a_cand"))
     )
-    exact_dist = F.aggregate(
-        F.zip_with(
-            F.col("q_emb"), F.col("c_emb"), lambda x, y: (x - y) * (x - y)
-        ),
-        F.lit(0.0),
-        lambda acc, vv: acc + vv,
-    )
+    exact_dist = sq_l2("q_emb", "c_emb")
     cands = v.select(F.col("vec_id").alias("cand_id"), F.col("emb").alias("c_emb"))
     w_e = W.partitionBy("query_id").orderBy("dist", "cand_id")
     exact = (
@@ -1593,8 +1571,7 @@ _U9_SIL = "CAST(floor({v} * 1000000000.0 + 0.5) AS HUGEINT)"
     ),
     d AS (
         SELECT v.vec_id, v.label, c.clabel,
-               sqrt(list_sum(list_transform(list_zip(v.emb, c.cent),
-                   s -> (s[1] - s[2]) * (s[1] - s[2])))) AS dist
+               sqrt({oracle_sq_l2("v.emb", "c.cent")}) AS dist
         FROM e v CROSS JOIN cents c
     ),
     ab AS (
@@ -1646,17 +1623,7 @@ def simplified_silhouette_by_label(
         "vec_id",
         "label",
         "clabel",
-        F.sqrt(
-            F.aggregate(
-                F.zip_with(
-                    F.col("emb"),
-                    F.col("cent"),
-                    lambda x, y: (x - y) * (x - y),
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-        ).alias("dist"),
+        F.sqrt(sq_l2("emb", "cent")).alias("dist"),
     )
     ab = d.groupBy("vec_id", "label").agg(
         F.min(F.when(F.col("label") == F.col("clabel"), F.col("dist"))).alias(
@@ -1854,10 +1821,7 @@ _RA_H_D = _DUCK_H32.format(s="concat('ra:', CAST(vec_id AS VARCHAR))")
 
 def _ra_oracle() -> str:
     cos = _OCOS.replace("a.emb", "q.emb").replace("b.emb", "v.emb")
-    l2 = (
-        "list_sum(list_transform(list_zip(q.emb, v.emb), "
-        "s -> (s[1] - s[2]) * (s[1] - s[2])))"
-    )
+    l2 = oracle_sq_l2("q.emb", "v.emb")
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
     q AS (SELECT vec_id AS qid, emb FROM e
@@ -1964,15 +1928,7 @@ def cosine_vs_l2_rank_agreement(
             .cast("bigint")
             .alias("cs"),
             F.floor(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("qemb"),
-                        F.col("emb"),
-                        lambda x, y: (x - y) * (x - y),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
+                sq_l2("qemb", "emb")
                 * F.lit(1_000_000_000)
                 + F.lit(0.5)
             )

@@ -15,6 +15,15 @@ factor and reject plans containing
     FlatMapGroupsInPandas*), which appear as their own nodes and are not
     flagged.
 
+It also rejects any query whose optimized logical plan is not
+deterministic (an expression such as rand(), uuid() or
+monotonically_increasing_id() anywhere in it): task retry, executor
+loss and AQE re-planning recompute partitions, and only a deterministic
+plan recomputes the same rows. Blind spots: the plan upstream of a
+caches.checkpoint is a LogicalRDD leaf, so what fed the checkpoint is
+not walked; a streaming query's builder returns a batch read of its
+sink, so the inner plans of the streaming body are not walked either.
+
 Streaming queries execute a real micro-batch run inside their builder, so
 this sweep doubles as a cheap end-to-end smoke at sf0.001.
 """
@@ -68,6 +77,9 @@ _BOUNDING_NODES = ("Aggregate", "GlobalLimit", "Window", "Deduplicate")
 # broadcast hint whose subtree reaches a growing-table scan with no
 # bounding node fails CI.
 _KNOWN_UNBOUNDED_HINTS: set[str] = set()
+
+# queries allowed a non-deterministic optimized plan (none)
+_KNOWN_NONDETERMINISTIC: set[str] = set()
 
 
 def _node_offset(line: str) -> int:
@@ -129,6 +141,13 @@ def test_no_forbidden_plan_nodes(name, spark):
     plan = plans.executed_plan(df)
     hits = [node for node in _FORBIDDEN if node in plan]
     assert not hits, f"{name}: forbidden plan node(s) {hits}\n{plan[:2000]}"
+
+    optimized = df._jdf.queryExecution().optimizedPlan()
+    assert optimized.deterministic() or name in _KNOWN_NONDETERMINISTIC, (
+        f"{name}: non-deterministic optimized plan - a retried task or a "
+        f"re-planned stage may produce different rows\n"
+        f"{optimized.toString()[:2000]}"
+    )
 
     analyzed = df._jdf.queryExecution().analyzed().toString()
     unbounded = unbounded_broadcast_hints(analyzed)
